@@ -84,7 +84,7 @@ object Bench {
       try {
         if (t == "events") Tables.events(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        else spark.read.parquet(s"$sfDir/$t.parquet")
+        else graft.util.TinyParquet.openStore(spark, s"$sfDir/$t.parquet")
           .write.format("noop").mode("overwrite").save()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $t failed: ${e.getMessage}")

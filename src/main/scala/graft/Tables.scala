@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Loaders for the driver-generated testdata tables (TESTDATA.md). */
 object Tables {
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.util.TinyParquet.openStore(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")

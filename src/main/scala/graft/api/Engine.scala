@@ -207,12 +207,14 @@ final class Engine(
           knownFileCount = fieldCounts.get(f))
       }
     }
-    df = df.drop(Validator.RowNumCol)
-
     // load (S7/S8) — counters stay lazy; nothing runs until the caller
-    // acts on `merged` (or reads a counter)
+    // acts on `merged` (or reads a counter). The validator's row number
+    // rides along to here: it was drawn on the CSV scan, before every
+    // shuffle above, so it is the input order the last-wins dedup needs;
+    // the merge drops it
     val (target, _) = tables(uid)
-    val merged = Upsert.merge(target, df, upsertField, upsert)
+    val merged = Upsert.merge(target, df, upsertField, upsert,
+      orderCol = Some(Validator.RowNumCol))
     new ImportResult(
       merged = merged.merged,
       warnings = plan.warnings ++ relWarns,

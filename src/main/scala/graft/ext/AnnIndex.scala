@@ -62,7 +62,7 @@ object AnnIndex {
   // (hdfs://, s3a://) would answer "absent" and silently serve deleted rows
   private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] =
     if (graft.util.Hfs.exists(spark, tombstonesPath(dir)))
-      Some(spark.read.parquet(tombstonesPath(dir)))
+      Some(graft.util.TinyParquet.openStore(spark, tombstonesPath(dir)))
     else None
 
   /** Sequence number the NEXT maintenance write (append or delete) gets:
@@ -294,8 +294,9 @@ object AnnIndex {
     */
   def readPqAsOf(spark: SparkSession, dir: String, asOf: Option[Long]): PqModel = {
     val (m, sub, _, _) = readMeta(spark, dir)
-    PqModel(spark.read.parquet(s"$dir/codebooks"),
-      liveAsOf(spark, dir, spark.read.parquet(s"$dir/codes"), asOf).drop("__seq"),
+    PqModel(graft.util.TinyParquet.openStore(spark, s"$dir/codebooks"),
+      liveAsOf(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/codes"), asOf)
+        .drop("__seq"),
       m, sub)
   }
 
@@ -352,7 +353,8 @@ object AnnIndex {
   def readIvf(spark: SparkSession, dir: String): IvfIndex = {
     val (_, _, nlist, _) = readMeta(spark, dir)
     require(nlist > 0, s"$dir has no coarse quantizer (nlist=$nlist)")
-    IvfIndex(spark.read.parquet(s"$dir/coarse"), s"$dir/vectors", nlist, dir)
+    IvfIndex(graft.util.TinyParquet.openStore(spark, s"$dir/coarse"), s"$dir/vectors",
+      nlist, dir)
   }
 
   /** IVF-flat top-k against the persisted index: nprobe coarse clusters
@@ -385,7 +387,7 @@ object AnnIndex {
     val (probeRows, probes) = localized(probeClusters(q, index.coarse, nprobe))
     val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
     val vectors = liveOnly(spark, index.dir,
-      spark.read.parquet(index.vectorsPath)
+      graft.util.TinyParquet.openStore(spark, index.vectorsPath)
         .filter(col("__cluster").isin(probed.map(Int.box): _*))
         .filter(where))
     val scored = vectors
@@ -464,8 +466,8 @@ object AnnIndex {
   def readIvfPq(spark: SparkSession, dir: String): IvfPqIndex = {
     val (m, sub, nlist, residual) = readMeta(spark, dir)
     require(nlist > 0, s"$dir is a flat PQ index, not IVF×PQ (nlist=$nlist)")
-    IvfPqIndex(spark.read.parquet(s"$dir/coarse"),
-      spark.read.parquet(s"$dir/codebooks"), s"$dir/codes", m, sub, dir,
+    IvfPqIndex(graft.util.TinyParquet.openStore(spark, s"$dir/coarse"),
+      graft.util.TinyParquet.openStore(spark, s"$dir/codebooks"), s"$dir/codes", m, sub, dir,
       residual)
   }
 
@@ -528,7 +530,7 @@ object AnnIndex {
     val probes = probesFull.select(col("query_id"), col("__cluster"))
     val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
     val codes = liveAsOf(spark, index.dir,
-      spark.read.parquet(index.codesPath)
+      graft.util.TinyParquet.openStore(spark, index.codesPath)
         .filter(col("__cluster").isin(probed.map(Int.box): _*))
         .filter(where), asOf)
     val adc = codes
@@ -582,7 +584,7 @@ object AnnIndex {
       .select(col("query_id"), col("neighbor_id"))
       .join(q, Seq("query_id")) // attach the query vector (both tiny)
     val vectors = liveOnly(spark, index.dir,
-      spark.read.parquet(s"${index.dir}/vectors")
+      graft.util.TinyParquet.openStore(spark, s"${index.dir}/vectors")
         .filter(col("__cluster").isin(probed.map(Int.box): _*)))
       .select(col("__id").as("neighbor_id"), col("__vec"))
     val exact = vectors.join(broadcast(shortlist), Seq("neighbor_id"))
@@ -641,7 +643,8 @@ object AnnIndex {
 
   def readSq(spark: SparkSession, dir: String): SqIndex =
     SqIndex(readBounds(spark, dir),
-      liveOnly(spark, dir, spark.read.parquet(s"$dir/codes")).drop("__seq"), dir)
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/codes"))
+        .drop("__seq"), dir)
 
   /** SQ top-k against a persisted index (build once, query many). */
   def sqTopK(spark: SparkSession, dir: String, queries: DataFrame,
@@ -945,7 +948,7 @@ object AnnIndex {
       idCol: String, vecCol: String, k: Int, shortlist: Int = 50,
       where: Column = lit(true)): DataFrame = {
     val idx = readBq(spark, dir)
-    val stored = spark.read.parquet(idx.codesPath).filter(where)
+    val stored = graft.util.TinyParquet.openStore(spark, idx.codesPath).filter(where)
     Similarity.bqSearch(
       queries.select(qcol(idCol).cast("long").as("query_id"),
         qcol(vecCol).as("__qv"),
@@ -986,7 +989,7 @@ object AnnIndex {
       s"$dir is not a BQ index — each layout has its own compaction")
     val tmp = dir + ".compact-" + System.nanoTime()
     val live = requireLive(
-      liveOnly(spark, dir, spark.read.parquet(s"$dir/codes")), dir)
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/codes")), dir)
     writeMeta(spark, tmp, m = 0, sub = 0, nlist = -1, layout = "bq")
     graft.util.Hfs.writeString(spark, s"$tmp/_dim",
       readDim(spark, dir).toString)
@@ -1052,7 +1055,7 @@ object AnnIndex {
 
   def readIvfSq(spark: SparkSession, dir: String): IvfSqIndex = {
     val (_, _, nlist, _) = readMeta(spark, dir)
-    IvfSqIndex(spark.read.parquet(s"$dir/coarse"), readBounds(spark, dir),
+    IvfSqIndex(graft.util.TinyParquet.openStore(spark, s"$dir/coarse"), readBounds(spark, dir),
       s"$dir/codes", nlist, dir)
   }
 
@@ -1080,7 +1083,7 @@ object AnnIndex {
         .select(col("query_id"), col("__cluster")))
     val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
     val codes = liveOnly(spark, index.dir,
-      spark.read.parquet(index.codesPath)
+      graft.util.TinyParquet.openStore(spark, index.codesPath)
         .filter(col("__cluster").isin(probed.map(Int.box): _*))
         .filter(where))
     val scored = codes
@@ -1136,7 +1139,7 @@ object AnnIndex {
     // beats an index that silently becomes permanently empty)
     val live = requireLive(idx.codes, dir)
     writeMeta(spark, tmp, m = 0, sub = 0, nlist = -1, layout = "sq")
-    spark.read.parquet(s"$dir/bounds")
+    graft.util.TinyParquet.openStore(spark, s"$dir/bounds")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/bounds")
     live.withColumn("__seq", lit(0L))
       .write.mode("overwrite").parquet(s"$tmp/codes")
@@ -1153,12 +1156,12 @@ object AnnIndex {
     val tmp = dir + ".compact-" + System.nanoTime()
     val index = readIvfSq(spark, dir)
     val live = requireLive(
-      liveOnly(spark, dir, spark.read.parquet(index.codesPath))
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.codesPath))
         .withColumn("__seq", lit(0L))
         .select(col("__id"), col("__codes"), col("__seq"), col("__cluster")), dir)
     writeMeta(spark, tmp, m = 0, sub = 0, nlist = index.nlist, layout = "ivfsq")
     index.coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    spark.read.parquet(s"$dir/bounds")
+    graft.util.TinyParquet.openStore(spark, s"$dir/bounds")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/bounds")
     live.write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/codes")
     graft.operators.Upsert.swapDirs(tmp, dir)
@@ -1275,7 +1278,7 @@ object AnnIndex {
     val tmp = dir + ".compact-" + System.nanoTime()
     val index = readIvf(spark, dir)
     val live = requireLive(
-      liveOnly(spark, dir, spark.read.parquet(index.vectorsPath))
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.vectorsPath))
         .withColumn("__seq", lit(0L))
         .select(col("__id"), col("__vec"), col("__seq"), col("__cluster")), dir)
     writeMeta(spark, tmp, m = 0, sub = 0, index.nlist)
@@ -1295,7 +1298,7 @@ object AnnIndex {
     val tmp = dir + ".compact-" + System.nanoTime()
     val index = readIvfPq(spark, dir)
     val liveCodes = requireLive(
-      liveOnly(spark, dir, spark.read.parquet(index.codesPath))
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.codesPath))
         .withColumn("__seq", lit(0L))
         .select(col("__id"), col("__j"), col("__code"), col("__seq"), col("__cluster")),
       dir)
@@ -1305,7 +1308,7 @@ object AnnIndex {
     liveCodes.write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/codes")
     if (graft.util.Hfs.exists(spark, s"$dir/vectors"))
       // same tombstones govern both tables: codes non-empty ⇒ vectors too
-      liveOnly(spark, dir, spark.read.parquet(s"$dir/vectors"))
+      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/vectors"))
         .withColumn("__seq", lit(0L))
         .select(col("__id"), col("__vec"), col("__seq"), col("__cluster"))
         .write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/vectors")
@@ -1399,7 +1402,7 @@ object AnnIndex {
       table: String): DataFrame = {
     readTombstones(spark, dir) match {
       case None =>
-        spark.read.parquet(table).agg(count(lit(1)).as("__total"))
+        graft.util.TinyParquet.openStore(spark, table).agg(count(lit(1)).as("__total"))
           .select(col("__total"), col("__total").as("__live"))
       case Some(t) =>
         // total and live counted in ONE pass over the (id, seq)-pruned
@@ -1409,7 +1412,7 @@ object AnnIndex {
         val dead = t.groupBy(col("__id")).agg(max(col("__seq")).as("__tseq"))
         // pre-tombstone-layout tables have no __seq column (liveOnly
         // reads them as seq 0); mirror that here instead of throwing
-        val stored = spark.read.parquet(table)
+        val stored = graft.util.TinyParquet.openStore(spark, table)
         val seqCol =
           if (stored.columns.contains("__seq")) col("__seq") else lit(0L)
         stored.select(col("__id"), seqCol.as("__seq"))
@@ -1478,7 +1481,7 @@ object AnnIndex {
     val deltaDebt =
       if (readLayout(spark, dir) == "graph" &&
           graft.util.Hfs.exists(spark, s"$dir/delta")) {
-        val d = spark.read.parquet(s"$dir/delta").count()
+        val d = graft.util.TinyParquet.openStore(spark, s"$dir/delta").count()
         val (total, _) = storeCounts(spark, dir)
         if (total == 0L) 0.0 else d.toDouble / total
       } else 0.0
@@ -1763,7 +1766,7 @@ object AnnIndex {
       s"$dir has no vectors/ table — build with keepVectors = true " +
         "to enable recall measurement")
     val index = readIvfPq(spark, dir)
-    val live = liveOnly(spark, dir, spark.read.parquet(s"$dir/vectors"))
+    val live = liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/vectors"))
       .select(col("__id").as(idCol), col("__vec").as(vecCol))
     val q = queries.select(qcol(idCol), qcol(vecCol))
       .localCheckpoint(eager = true) // feeds reference AND serve
@@ -1801,7 +1804,7 @@ object AnnIndex {
     require(targetRecallQ >= 0L && targetRecallQ <= 1000000L,
       s"targetRecallQ out of [0, 1e6]: $targetRecallQ")
     val index = readIvf(spark, dir)
-    val live = liveOnly(spark, dir, spark.read.parquet(index.vectorsPath))
+    val live = liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.vectorsPath))
       .select(col("__id").as(idCol), col("__vec").as(vecCol))
     val q = queries.select(qcol(idCol), qcol(vecCol))
       .localCheckpoint(eager = true) // reused per candidate

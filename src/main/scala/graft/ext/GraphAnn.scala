@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Cols.qcol
 
@@ -9,7 +9,7 @@ import graft.functions.Cols.qcol
   * with a BUILD: a single-layer navigable neighbor graph ("NSW-lite" —
   * DiskANN/Vamana's serving shape without the hierarchy) persisted as
   * parquet, served by a fixed-width, fixed-depth BEAM SEARCH of
-  * iterative joins.
+  * iterative id lookups.
   *
   * Layout under `dir` (meta carries layout = "graph"):
   *   - `vectors/`   (__id, __vec)            — the corpus vectors;
@@ -28,13 +28,22 @@ import graft.functions.Cols.qcol
   * convergence tests; fixed depth makes the whole path replayable in a
   * second engine's SQL, which is how the x_knn_graph gate hash-pins it).
   *
-  * Scale shape: each hop is one join of the (queries × beamWidth)
-  * candidate frame — broadcast side — against the adjacency table, one
-  * join against the vectors table, one key-partitioned window. Serve
+  * Scale shape: the beam lives on the driver; each hop is ONE Spark
+  * job — a union of the `vectors/` and `adjacency/` scans filtered to
+  * the candidate ids not fetched yet — and the driver scores and ranks
+  * the candidates with the Column path's own arithmetic. A fetched row
+  * carries both the vector and the neighbour list of its id, so the
+  * next hop's expansion is already on the driver: a serve is hops + 1
+  * lookup jobs (entry points, then one per hop) plus the final ranking,
+  * which stays a lazy Spark plan. The driver's share is bounded by the
+  * batch, not the corpus: a hop takes in at most queries × beamWidth ×
+  * (degree + 1) rows — the candidate set a broadcast-join hop would
+  * ship from the driver anyway — and no id is fetched twice. Serve
   * cost is hops × beamWidth × degree vector reads per query,
   * INDEPENDENT of corpus size — the property that makes graph indexes
-  * the production high-recall family. The graph tables join by id, so a
-  * deployment buckets both by __id and the lookups co-locate.
+  * the production high-recall family. The graph tables are read by id,
+  * so a deployment sorts or buckets both by __id and the filtered scans
+  * skip row groups.
   *
   * Two builds, one layout: [[build]] is the exact top-`degree` neighbor
   * graph by brute force — deterministic and oracle-able, the right
@@ -349,74 +358,32 @@ object GraphAnn {
     // job on the serve path's construction.
     val entries = graft.util.TinyParquet.readRows(spark, s"$dir/entry")
       .map(_("entry").asInstanceOf[Long]).sorted
-    val v = spark.read.parquet(s"$dir/vectors")
+    val v = graft.util.TinyParquet.openStore(spark, s"$dir/vectors")
     // DiskANN-style lazy deletes: tombstoned nodes may still ROUTE (the
-    // beam traverses them — removing routers before consolidation
-    // punches navigation holes), but the FINAL ranking serves live ids
-    // only ([[AnnIndex.liveOnly]] — the same per-id tombstone broadcast
-    // every layout uses). [[compact]] is the consolidation.
+    // beam reads `vectors/` unfiltered — removing routers before
+    // consolidation punches navigation holes), but the FINAL ranking
+    // serves live ids only ([[AnnIndex.liveOnly]] — the same per-id
+    // tombstone broadcast every layout uses). [[compact]] is the
+    // consolidation.
     val vLive = AnnIndex.liveOnly(spark, dir, v)
-    val adj = spark.read.parquet(s"$dir/adjacency")
-    // serving path: checkpoints below are LAZY (eager = false) — the
-    // lineage cut and compute-once sharing are identical, but nothing
-    // blocks the driver before the caller's own action; the old eager
-    // form paid one synchronous job per hop (~the local job floor × 6
-    // hops at the deep operating point), pure scheduling dead time on a
-    // path whose graded artifact is serve latency
-    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
+    val adj = graft.util.TinyParquet.openStore(spark, s"$dir/adjacency")
+    val q0 = queries.select(qcol(idCol).cast("long").as("query_id"),
         qcol(vecCol).as("__qv"))
-      .localCheckpoint(eager = false) // re-joined every hop
-    // BOTH per-hop joins broadcast the beam/candidate side (queries ×
-    // beamWidth × degree rows — always tiny) into the corpus-sized
-    // stored tables: the vectors and adjacency tables never shuffle,
-    // hop cost is pointwise lookups — the property that makes the
-    // serve cost corpus-size-independent (plan-asserted)
-    def scoreTop(table: DataFrame, cands: DataFrame, width: Int,
-        excludeSelf: Boolean = false, dedupCands: Boolean = false): DataFrame = {
-      val scored0 = table
-        .join(broadcast(cands), cands("__nid") === table("__id"))
-        .drop("__id")
-        .join(broadcast(q), Seq("query_id"))
-        .select(col("query_id"), col("__nid"),
-          Similarity.cosine(col("__qv"), col("__vec")).as("cosine"))
-      val scored1 =
-        if (excludeSelf) scored0.filter(col("query_id") =!= col("__nid"))
-        else scored0
-      // hop calls: candidate ids arrive UNDEDUPED (the pre-r22 shape ran
-      // a distinct() BEFORE scoring — its own (query_id, __nid) exchange
-      // per hop, on top of the ranking window's). Dedup AFTER scoring
-      // instead, behind ONE query-keyed repartition: the groupBy's
-      // clustering requirement is satisfied by the query_id partitioning
-      // (subset rule), and so is the window's — one exchange per hop
-      // where there were two. Duplicate candidates score identical
-      // cosines off the same stored row, so max() IS the value; on a
-      // dup-generation store (bare re-append, no delete) the hop beam
-      // now admits one best-scored entry per id instead of spending two
-      // beam slots on the same id — a routing-only change; the FINAL
-      // ranking (dedupCands = false) keeps the documented
-      // two-generations-both-survive contract untouched.
-      val scored = if (dedupCands)
-        scored1.repartition(col("query_id"))
-          .groupBy(col("query_id"), col("__nid"))
-          .agg(max(col("cosine")).as("cosine"))
-      else scored1
-      Similarity.topKPerQuery(scored, "cosine", "__nid", width)
-    }
-    var beam = q.select(col("query_id"),
-      explode(array(entries.map(lit(_)): _*)).as("__nid"))
-    for (_ <- 1 to hops) {
-      val expanded = adj
-        .join(broadcast(beam), beam("__nid") === adj("__id"))
-        .select(col("query_id"), explode(col("__nbrs")).as("__nid"))
-        .unionByName(beam.select(col("query_id"), col("__nid")))
-      // checkpoint per hop: the iterative-join discipline (x_pagerank
-      // class) — lineage stays hop-sized, not hops-deep, and the TWO
-      // next-hop references (expansion join + the union keeping the
-      // beam itself) share one computed block instead of doubling the
-      // subplan per hop. Lazy: materializes inside the final action.
-      beam = scoreTop(v, expanded, beam0, dedupCands = true)
-        .select(col("query_id"), col("__nid"))
-        .localCheckpoint(eager = false)
+    val beam = new DriverBeam(v, adj, q0, beam0)
+    beam.fetch(entries, withQueries = true, withAdj = true)
+    var frontier: Map[Long, Seq[Long]] = beam.queryIds.map(_ -> entries).toMap
+    for (h <- 1 to hops) frontier = beam.hop(frontier, withAdj = h < hops)
+    // the query batch as it was read for scoring: the final ranking
+    // joins these rows instead of re-running the caller's plan
+    val q = spark.createDataFrame(
+      java.util.Arrays.asList(beam.queryRows: _*), q0.schema)
+    val beamFrame = {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(java.util.Arrays.asList(frontier.toSeq.sortBy(_._1)
+          .flatMap { case (qid, ids) => ids.map(n => Row(qid, n)) }: _*),
+        StructType(Seq(
+          StructField("query_id", LongType, q0.schema("query_id").nullable),
+          StructField("__nid", LongType))))
     }
     // fresh region: every LIVE delta row is a final candidate for every
     // query (exact — the delta's share of the store is priced by
@@ -429,21 +396,160 @@ object GraphAnn {
     // [[AnnIndex.liveOnly]] documents for every layout's append.
     val deltaPath = s"$dir/delta"
     val (finalCands, finalVecs) =
-      if (!graft.util.Hfs.exists(spark, deltaPath)) (beam, vLive)
+      if (!graft.util.Hfs.exists(spark, deltaPath)) (beamFrame, vLive)
       else {
+        // no checkpoint, not even a lazy one: it would prepare the plan
+        // now and start its broadcast jobs before the caller's action.
+        // The delta is small; its two uses read it twice
         val dLive = AnnIndex.liveOnly(spark, dir,
-            spark.read.parquet(deltaPath))
+            graft.util.TinyParquet.openStore(spark, deltaPath))
           .select(col("__id"), col("__vec"))
-          .localCheckpoint(eager = false) // candidate ids + scoring share it
-        val cands = beam.unionByName(
+        val cands = beamFrame.unionByName(
             q.select(col("query_id"))
               .crossJoin(broadcast(dLive.select(col("__id").as("__nid")))))
           .distinct()
         (cands, vLive.select(col("__id"), col("__vec")).unionByName(dLive))
       }
-    scoreTop(finalVecs, finalCands, k, excludeSelf = true)
+    // the final ranking stays lazy, in Spark: both candidate-side frames
+    // broadcast into the corpus-sized vector tables, which never shuffle
+    // (plan-asserted)
+    val scored = finalVecs
+      .join(broadcast(finalCands), finalCands("__nid") === finalVecs("__id"))
+      .drop("__id")
+      .join(broadcast(q), Seq("query_id"))
+      .select(col("query_id"), col("__nid"),
+        Similarity.cosine(col("__qv"), col("__vec")).as("cosine"))
+      .filter(col("query_id") =!= col("__nid"))
+    Similarity.topKPerQuery(scored, "cosine", "__nid", k)
       .withColumnRenamed("__nid", "neighbor_id")
   }
+
+  /** The beam's driver-side state for one [[topK]] call. Each graph node
+    * is fetched ONCE per serve — its vector rows and neighbour list
+    * together — by [[fetch]], one Spark job that unions the `vectors/`
+    * and `adjacency/` scans filtered to the ids not fetched yet. A hop
+    * then needs only the rows of the new neighbours: the neighbour lists
+    * of the beam it expands came along when the beam's members were
+    * fetched. Scoring and ranking run here, with Spark's arithmetic:
+    * the [[graft.plans.CosineSimilarity]] fold, `max` over an id's
+    * vector rows (nulls ignored, NaN greatest), and the rounded-4dp
+    * DESC NULLS LAST, id ASC order of `Similarity.topKPerQuery`.
+    *
+    * Footprint: a hop fetches at most queries × beam × (degree + 1)
+    * rows and no id twice per serve — batch-sized, never corpus-sized.
+    */
+  private final class DriverBeam(v: DataFrame, adj: DataFrame, q0: DataFrame,
+      width: Int) {
+    import scala.collection.mutable
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+
+    private def isFloat(df: DataFrame, c: String): Boolean =
+      df.schema(c).dataType match {
+        case ArrayType(FloatType, _) => true
+        case ArrayType(DoubleType, _) => false
+        case t => throw new IllegalArgumentException(
+          s"graph-ANN vectors must be array<float|double>, $c is ${t.simpleString}")
+      }
+    private val (vFloat, qFloat) = (isFloat(v, "__vec"), isFloat(q0, "__qv"))
+    // null elements read as 0, as the fold reads them off UnsafeArrayData
+    private def arrayData(s: scala.collection.Seq[Any], float: Boolean): ArrayData =
+      if (s == null) null
+      else if (float) ArrayData.toArrayData(s.map(x =>
+        if (x == null) 0f else x.asInstanceOf[Float]).toArray)
+      else ArrayData.toArrayData(s.map(x =>
+        if (x == null) 0.0 else x.asInstanceOf[Double]).toArray)
+
+    private val qVecs = mutable.LinkedHashMap.empty[Long, mutable.ArrayBuffer[ArrayData]]
+    private val vecs = mutable.HashMap.empty[Long, mutable.ArrayBuffer[ArrayData]]
+    private val nbrs = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
+    private val fetched = mutable.HashSet.empty[Long]
+    private val qRows = mutable.ArrayBuffer.empty[Row]
+
+    /** Query ids in first-seen order (null ids never match a join). */
+    def queryIds: Seq[Long] = qVecs.keys.toSeq
+    /** The query rows exactly as read, in `q0`'s schema. */
+    def queryRows: Seq[Row] = qRows.toSeq
+
+    /** One job: the vector rows (and, with `withAdj`, the neighbour
+      * lists) of `ids`, plus the query rows on the first call.
+      */
+    def fetch(ids: Seq[Long], withQueries: Boolean, withAdj: Boolean): Unit = {
+      val want = ids.filterNot(fetched).distinct
+      if (want.isEmpty && !withQueries) return
+      fetched ++= want
+      val hit = col("__id").isin(want: _*)
+      val parts =
+        Seq(v.filter(hit).select(lit(1).as("__k"), col("__id"), col("__vec"))) ++
+          (if (withAdj) Seq(adj.filter(hit)
+            .select(lit(2).as("__k"), col("__id"), col("__nbrs"))) else Nil) ++
+          (if (withQueries) Seq(q0.select(lit(0).as("__k"),
+            col("query_id").as("__id"), col("__qv"))) else Nil)
+      val rows = parts.reduce(_.unionByName(_, allowMissingColumns = true)).collect()
+      rows.foreach { r =>
+        val id = r.getAs[Any]("__id")
+        r.getAs[Int]("__k") match {
+          case 0 =>
+            val qv = r.getAs[scala.collection.Seq[Any]]("__qv")
+            qRows += Row(id, qv)
+            if (id != null)
+              qVecs.getOrElseUpdate(id.asInstanceOf[Long], mutable.ArrayBuffer.empty) +=
+                arrayData(qv, qFloat)
+          case 1 =>
+            vecs.getOrElseUpdate(id.asInstanceOf[Long], mutable.ArrayBuffer.empty) +=
+              arrayData(r.getAs[scala.collection.Seq[Any]]("__vec"), vFloat)
+          case _ =>
+            val ns = r.getAs[scala.collection.Seq[Any]]("__nbrs")
+            if (ns != null)
+              nbrs.getOrElseUpdate(id.asInstanceOf[Long], mutable.ArrayBuffer.empty) ++=
+                ns.collect { case n: Long => n }
+        }
+      }
+    }
+
+    /** One hop: per query, score beam ∪ neighbours(beam) and keep the
+      * `width` best. Ids without a vector row drop out (the inner join's
+      * rule); tombstoned ids stay — dead nodes route.
+      */
+    def hop(beam: Map[Long, Seq[Long]], withAdj: Boolean): Map[Long, Seq[Long]] = {
+      val cands = beam.map { case (qid, b) =>
+        qid -> (b ++ b.flatMap(n => nbrs.getOrElse(n, Nil))).distinct }
+      fetch(cands.values.flatten.toSeq.sorted, withQueries = false, withAdj)
+      cands.map { case (qid, cs) =>
+        val qvs = qVecs(qid)
+        qid -> cs.filter(vecs.contains)
+          .map(n => (n, round4(vecs(n).foldLeft(null: java.lang.Double) { (m, vv) =>
+            qvs.foldLeft(m)((m2, qv) => maxOf(m2,
+              if (qv == null || vv == null) null
+              else graft.plans.CosineSimilarity.eval(qv, qFloat, vv, vFloat)))
+          })))
+          .sortWith { case ((na, sa), (nb, sb)) =>
+            val c = if (sa == null) { if (sb == null) 0 else 1 }
+              else if (sb == null) -1
+              else sparkCompare(sb, sa)
+            if (c != 0) c < 0 else na < nb
+          }
+          .take(width).map(_._1)
+      }
+    }
+  }
+
+  /** Spark's double order: -0.0 equals 0.0, NaN equals NaN and sorts
+    * above every number.
+    */
+  private def sparkCompare(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** Spark's `max`: nulls ignored, in [[sparkCompare]] order. */
+  private def maxOf(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+    if (a == null) b else if (b == null) a
+    else if (sparkCompare(a, b) >= 0) a else b
+
+  /** Spark's `round(x, 4)` on a double; null stays null. */
+  private def round4(x: java.lang.Double): java.lang.Double =
+    if (x == null || x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP)
+      .doubleValue
 
   /** The fold's knob derivation: explicit positive values pass through;
     * 0 = auto — nlist = max(16, round(√n)) (the standard IVF sizing the
@@ -517,13 +623,13 @@ object GraphAnn {
     // reset with the new generation like every layout's compaction.
     if (graft.util.Hfs.exists(spark, s"$dir/delta")) {
       val live = AnnIndex.requireLive(
-        AnnIndex.liveOnly(spark, dir, spark.read.parquet(s"$dir/vectors"))
+        AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/vectors"))
           .select(col("__id"), col("__vec"))
           .unionByName(
-            AnnIndex.liveOnly(spark, dir, spark.read.parquet(s"$dir/delta"))
+            AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/delta"))
               .select(col("__id"), col("__vec")))
           .localCheckpoint(eager = true), dir)
-      val entry0 = spark.read.parquet(s"$dir/entry")
+      val entry0 = graft.util.TinyParquet.openStore(spark, s"$dir/entry")
       val degree0 = entry0.head().getInt(1)
       // the fold rebuilds with the STORE'S OWN wiring: an α-pruned
       // store stays α-pruned through every sweep-triggered fold (the
@@ -542,7 +648,7 @@ object GraphAnn {
       return
     }
     val live = AnnIndex.requireLive(
-      AnnIndex.liveOnly(spark, dir, spark.read.parquet(s"$dir/vectors"))
+      AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/vectors"))
         .select(col("__id"), col("__vec"))
         .localCheckpoint(eager = true), dir) // rewrite + repair + entry share it
     val tmp = dir + ".compact-" + System.nanoTime()
@@ -550,7 +656,7 @@ object GraphAnn {
       layout = "graph")
     live.write.mode("overwrite").parquet(s"$tmp/vectors")
     val liveIds = live.select(col("__id"))
-    val adj0 = spark.read.parquet(s"$dir/adjacency")
+    val adj0 = graft.util.TinyParquet.openStore(spark, s"$dir/adjacency")
       .localCheckpoint(eager = true) // edge explode + splice lookup share it
     val edges = adj0.join(liveIds, Seq("__id"), "left_semi")
       .select(col("__id").as("__src"), explode(col("__nbrs")).as("__dst"))
@@ -587,7 +693,7 @@ object GraphAnn {
       .distinct()
     // re-rank each node's candidates by cosine (the build's own rule)
     // and cut back to the stored degree — one key-partitioned window
-    val entry0 = spark.read.parquet(s"$dir/entry")
+    val entry0 = graft.util.TinyParquet.openStore(spark, s"$dir/entry")
     val degree0 = entry0.head().getInt(1)
     val alpha0 = readAlphaQ(entry0)
     val sv = live.select(col("__id").as("__src"), col("__vec").as("__sv"))
@@ -622,7 +728,7 @@ object GraphAnn {
     // [[buildFromIvf]] — loses only the seeds that died); if every entry
     // died, recompute the medoid over survivors (same rule as build).
     // Both collects are bounded by the entry-point count (≤ nlist).
-    val entriesAll = spark.read.parquet(s"$dir/entry")
+    val entriesAll = graft.util.TinyParquet.openStore(spark, s"$dir/entry")
       .select(col("entry")).collect().map(_.getLong(0)).sorted
     val liveEntrySet = live
       .filter(col("__id").isin(entriesAll.map(Long.box): _*))

@@ -41,7 +41,7 @@ object IncrementalComponents {
     * groupBy on id).
     */
   def read(spark: SparkSession, compsDir: String): DataFrame =
-    spark.read.parquet(compsDir)
+    graft.util.TinyParquet.openStore(spark, compsDir)
       .groupBy(col("id"))
       .agg(max_by(col("component"), col("__seq")).as("component"))
 
@@ -82,7 +82,7 @@ object IncrementalComponents {
     val (subEdges, seq) =
       if (!exists) (edges, 0L)
       else {
-        val stored = spark.read.parquet(compsDir)
+        val stored = graft.util.TinyParquet.openStore(spark, compsDir)
         val batchIds = edges.select(col("u").as("id"))
           .unionByName(edges.select(col("v").as("id"))).distinct()
         // labels the batch can touch: ≤ 2·|batch pairs| of them by
@@ -155,7 +155,8 @@ object IncrementalComponents {
     if (graft.util.Hfs.exists(spark, f))
       graft.util.Hfs.readString(spark, f).trim.toLong
     else
-      spark.read.parquet(compsDir).agg(max(col("__seq"))).head().getLong(0) + 1L
+      graft.util.TinyParquet.openStore(spark, compsDir).agg(max(col("__seq")))
+        .head().getLong(0) + 1L
   }
 
   /** In-memory union-find with path halving + union-by-min: every node

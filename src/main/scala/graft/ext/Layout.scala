@@ -86,7 +86,7 @@ object Layout {
     val mPath = s"$tableDir/_manifest"
     require(graft.util.Hfs.exists(spark, mPath),
       s"no manifest to append to at $tableDir — writeManifest first")
-    val existing = spark.read.parquet(mPath)
+    val existing = graft.util.TinyParquet.openStore(spark, mPath)
     val statsCols = existing.columns.collect {
       case c if c.startsWith("min_") => c.stripPrefix("min_") }.toSeq
     val keyCols = existing.columns.collect {
@@ -133,7 +133,7 @@ object Layout {
       pathContains: String): Unit = {
     val mPath = s"$tableDir/_manifest"
     if (!graft.util.Hfs.exists(spark, mPath)) return
-    val kept = spark.read.parquet(mPath)
+    val kept = graft.util.TinyParquet.openStore(spark, mPath)
       .filter(!col("__file").contains(pathContains))
       .localCheckpoint(eager = true) // read fully before the overwrite
     val tmp = s"$tableDir/.manifest-${System.nanoTime()}"
@@ -197,12 +197,12 @@ object Layout {
     */
   def manifestPrunedRead(spark: SparkSession, tableDir: String,
       keep: Column): (DataFrame, Int, Int) = {
-    val m = spark.read.parquet(s"$tableDir/_manifest")
+    val m = graft.util.TinyParquet.openStore(spark, s"$tableDir/_manifest")
     val total = m.select(col("__file")).count().toInt
     val files = m.filter(keep).select(col("__file"))
       .collect().map(_.getString(0))
     val df =
-      if (files.isEmpty) spark.read.parquet(tableDir).limit(0)
+      if (files.isEmpty) graft.util.TinyParquet.openStore(spark, tableDir).limit(0)
       else spark.read.option("basePath", tableDir).parquet(files.toSeq: _*)
     (df, files.length, total)
   }
@@ -223,7 +223,7 @@ object Layout {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(path).getLength
     val files = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(src).repartition(files)
+    graft.util.TinyParquet.openStore(spark, src).repartition(files)
       .write.mode("overwrite").parquet(dst)
     files
   }

@@ -73,7 +73,7 @@ object MaxSim {
     // vectors scan is row-pruned to candidate docs via the broadcast
     // semi-join, never corpus-wide
     val dt = AnnIndex.liveOnly(spark, indexDir,
-        spark.read.parquet(s"$indexDir/vectors")
+        graft.util.TinyParquet.openStore(spark, s"$indexDir/vectors")
           .filter(docWhere(expr(s"__id div $cap"))))
       .select(expr(s"__id div $cap").as("__doc"), col("__vec"))
       .join(broadcast(pairs.select(col("__doc")).distinct()), Seq("__doc"), "left_semi")

@@ -145,7 +145,7 @@ object ShardExport {
       .localCheckpoint(eager = true) // manifest + per-shard rewrites share it
     val m = manifestOf(a)
       .localCheckpoint(eager = true) // diff + publish share it
-    val old = spark.read.parquet(s"$dst/_manifest")
+    val old = graft.util.TinyParquet.openStore(spark, s"$dst/_manifest")
       .select(col("shard_id"), col("n_rows").as("__o_rows"),
         col("checksum").as("__o_ck"), col("min_key").as("__o_min"),
         col("max_key").as("__o_max"))
@@ -224,7 +224,7 @@ object ShardExport {
     * torn or tampered. One column-pruned scan of the shard table.
     */
   def verify(spark: SparkSession, dst: String): DataFrame = {
-    val data = spark.read.parquet(dst)
+    val data = graft.util.TinyParquet.openStore(spark, dst)
     val recomputed = manifestOf(data)
       .withColumnRenamed("n_rows", "actual_rows")
       .withColumnRenamed("checksum", "actual_checksum")
@@ -234,7 +234,7 @@ object ShardExport {
     // entirely, or an extra shard no manifest row names) is the WORST
     // tear, and a NULL comparison would let it escape both
     // filter(consistent) and filter(!consistent)
-    spark.read.parquet(s"$dst/_manifest")
+    graft.util.TinyParquet.openStore(spark, s"$dst/_manifest")
       .join(recomputed, Seq("shard_id"), "full")
       .withColumn("consistent",
         coalesce(

@@ -83,14 +83,14 @@ object StoreMaintenance {
         case "ivf" | "graph" => s"$dir/vectors"
         case _               => s"$dir/codes"
       }
-      val main = AnnIndex.liveOnly(spark, dir, spark.read.parquet(table))
+      val main = AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, table))
         .select(col("__id").cast("long").as("__id"))
       // a graph store's fresh region serves — its live ids are members
       val withDelta =
         if (AnnIndex.readLayout(spark, dir) == "graph" &&
             graft.util.Hfs.exists(spark, s"$dir/delta"))
           main.unionByName(
-            AnnIndex.liveOnly(spark, dir, spark.read.parquet(s"$dir/delta"))
+            AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/delta"))
               .select(col("__id").cast("long").as("__id")))
         else main
       withDelta.distinct()
@@ -98,13 +98,13 @@ object StoreMaintenance {
       val table =
         if (graft.util.Hfs.exists(spark, s"${ref.dir}/lens")) s"${ref.dir}/lens"
         else s"${ref.dir}/positions"
-      AnnIndex.liveOnly(spark, ref.dir, spark.read.parquet(table))
+      AnnIndex.liveOnly(spark, ref.dir, graft.util.TinyParquet.openStore(spark, table))
         .select(col("__id").cast("long").as("__id")).distinct()
     case "dedup" =>
       graft.streaming.DocStreams.dedupLiveIds(spark, ref.dir)
     case "shards" =>
       // column-pruned scan of the shard data files: doc membership only
-      spark.read.parquet(ref.dir)
+      graft.util.TinyParquet.openStore(spark, ref.dir)
         .select(col("doc_id").cast("long").as("__id")).distinct()
   }
 

@@ -123,12 +123,12 @@ object TextIndex {
     val idx = read(spark, dir)
     val tmp = dir + ".compact-" + System.nanoTime()
     val livePostings = AnnIndex.liveOnly(spark, dir,
-      spark.read.parquet(idx.postingsPath))
+      graft.util.TinyParquet.openStore(spark, idx.postingsPath))
     // the refuse-to-compact-to-empty guard every layout carries: an
     // all-tombstoned index is a rebuild-or-drop decision (a zero-row
     // parquet rewrite would leave an unreadable dir)
     val liveLens = AnnIndex.requireLive(
-      AnnIndex.liveOnly(spark, dir, spark.read.parquet(idx.lensPath)), dir)
+      AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, idx.lensPath)), dir)
     Seq(idx.parts).toDF("parts")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
     livePostings.withColumn("__seq", lit(0L))
@@ -165,7 +165,7 @@ object TextIndex {
     val dirs = pts.map(p => s"${idx.postingsPath}/__pt=$p")
       .filter(graft.util.Hfs.exists(spark, _))
     val stats = AnnIndex.liveAsOf(spark, dir,
-        spark.read.parquet(idx.lensPath), asOf)
+        graft.util.TinyParquet.openStore(spark, idx.lensPath), asOf)
       .agg(count(lit(1)).cast("double").as("__n"),
         avg(col("__len").cast("double")).as("__avg"))
     if (dirs.isEmpty)
@@ -392,7 +392,8 @@ object TextIndex {
     val parts = graft.util.TinyParquet.readOneRow(spark, s"$dir/meta")("parts").asInstanceOf[Int]
     val tmp = dir + ".compact-" + System.nanoTime()
     val live = AnnIndex.requireLive(
-      AnnIndex.liveOnly(spark, dir, spark.read.parquet(s"$dir/positions")), dir)
+      AnnIndex.liveOnly(spark, dir,
+        graft.util.TinyParquet.openStore(spark, s"$dir/positions")), dir)
     Seq(parts).toDF("parts")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
     live.withColumn("__seq", lit(0L))

@@ -253,6 +253,6 @@ object Unigram {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, dir: String): UnigramModel =
-    UnigramModel(spark.read.parquet(dir)
+    UnigramModel(graft.util.TinyParquet.openStore(spark, dir)
       .collect().map(r => r.getAs[String]("piece") -> r.getAs[Double]("lp")).toMap)
 }

@@ -42,7 +42,9 @@ object Exporter {
   /** N4: flatten a repeatable component (array of structs) into
     * `field.{i}.key` columns, i = 1..maxItems (reference is 1-based).
     * `maxItems` must be supplied (compute once via `maxArraySize`) so the
-    * projection stays plan-time static.
+    * projection stays plan-time static. Rows with fewer items leave the
+    * missing slots null: `try_element_at`, because `element_at` throws
+    * on an out-of-range index under ANSI.
     */
   def flattenRepeatableComponent(df: DataFrame, field: String, maxItems: Int): DataFrame = {
     val at = df.schema(field).dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
@@ -50,7 +52,8 @@ object Exporter {
     val keys = st.fieldNames.filter(k => k != "id" && !k.startsWith("__"))
     val cols = df.columns.filterNot(_ == field).map(qcol) ++
       (1 to maxItems).flatMap(i =>
-        keys.map(k => element_at(qcol(field), i).getField(k).as(s"$field.$i.$k")))
+        keys.map(k => try_element_at(qcol(field), lit(i)).getField(k)
+          .as(s"$field.$i.$k")))
     df.select(cols: _*)
   }
 

@@ -89,32 +89,45 @@ object Upsert {
   /** Deduplicate incoming rows by key, last occurrence wins. Hash-aggregate
     * max-by (the input-order id is the struct's leading field) instead of a
     * window: partial aggregation map-side, no per-partition sort.
+    *
+    * `orderCol` names a column that already holds the input order and is
+    * dropped from the result. It must be drawn before any wide transform:
+    * `monotonically_increasing_id()` drawn here, after the caller's
+    * shuffles, numbers rows in shuffle-output order, not in input order.
+    * Without it the id is drawn here, which is only right when
+    * `incoming` is still in input order.
     */
-  def dedupLastWins(incoming: DataFrame, key: String): DataFrame = {
-    val others = incoming.columns.filterNot(_ == key)
-    incoming
-      .withColumn(OrderCol, monotonically_increasing_id())
+  def dedupLastWins(incoming: DataFrame, key: String,
+      orderCol: Option[String] = None): DataFrame = {
+    val kept = incoming.columns.filterNot(c => orderCol.contains(c))
+    val others = kept.filterNot(_ == key)
+    orderCol.fold(incoming.withColumn(OrderCol, monotonically_increasing_id()))(c =>
+        incoming.withColumnRenamed(c, OrderCol))
       .groupBy(col(key))
       .agg(max(struct(col(OrderCol) +: others.map(col): _*)).as("__m"))
       .select(col(key) +: others.map(c => col("__m").getField(c).as(c)): _*)
       // restore original column order
-      .select(incoming.columns.map(col): _*)
+      .select(kept.map(col): _*)
   }
 
   /** Pure merge: returns the merged frame plus created/updated counts.
     * `upsert=false` reproduces plain insert (every incoming row appended,
-    * created = incoming count, reference :391-397).
+    * created = incoming count, reference :391-397). `orderCol`: the
+    * input-order column for the last-wins dedup ([[dedupLastWins]]);
+    * it never reaches the merged frame.
     */
-  def merge(target: DataFrame, incoming: DataFrame, key: String, upsert: Boolean): MergeResult = {
+  def merge(target: DataFrame, incoming: DataFrame, key: String, upsert: Boolean,
+      orderCol: Option[String] = None): MergeResult = {
     if (!upsert) {
-      new MergeResult(target.unionByName(incoming, allowMissingColumns = true),
-        () => (incoming.count(), 0L), targetDependentCounters = false)
+      val rows = orderCol.fold(incoming)(incoming.drop(_))
+      new MergeResult(target.unionByName(rows, allowMissingColumns = true),
+        () => (rows.count(), 0L), targetDependentCounters = false)
     } else {
       // The deduped frame feeds BOTH the anti-join probe and the union
       // branch. No cache: the anti-join probe is column-pruned to a
       // distinct-keys pass by the optimizer, so per action the heavy
       // upstream runs once full + once keys-only.
-      val deduped = dedupLastWins(incoming, key)
+      val deduped = dedupLastWins(incoming, key, orderCol)
       val kept = target.join(deduped.select(col(key)), Seq(key), "left_anti")
       new MergeResult(kept.unionByName(deduped, allowMissingColumns = true),
         () => {

@@ -41,22 +41,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val (lf, rf) = (elemIsFloat(left), elemIsFloat(right))
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else dot / denom
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.eval(a.asInstanceOf[ArrayData], elemIsFloat(left),
+      b.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
@@ -94,6 +81,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The interpreted fold, shared by [[nullSafeEval]] and driver-side
+    * scorers that must agree with the Column form bit for bit (the graph
+    * beam ranks on the driver): one pass, float elements widened to
+    * double, null on a length mismatch or a zero norm. `doGenCode` is
+    * the same arithmetic in generated Java.
+    */
+  def eval(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
+  }
+
   /** Column wrapper (classic API bridge). */
   def apply(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(

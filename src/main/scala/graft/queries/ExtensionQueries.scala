@@ -455,7 +455,7 @@ object ExtensionQueries {
         .write.mode("overwrite").parquet(s"$base/ref")
       java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
     }
-    s.read.parquet(s"$base/ref")
+    graft.util.TinyParquet.openStore(s, s"$base/ref")
   }
 
   private val minhashRuns = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2635,7 +2635,7 @@ object ExtensionQueries {
       |FROM c""".stripMargin) { (s, dir) =>
     val bpe = stageBpeModel(s, dir)
     val model = graft.ext.Bpe.BpeModel(
-      s.read.parquet(s"$bpe/merges").orderBy(col("rank"))
+      graft.util.TinyParquet.openStore(s, s"$bpe/merges").orderBy(col("rank"))
         .collect().map(r => (r.getAs[String]("lft"), r.getAs[String]("rgt")))
         .toVector)
     graft.ext.Bpe.chunkTokens(Tables.documents(s, dir), "doc_id", "text",
@@ -2977,7 +2977,7 @@ object ExtensionQueries {
       |FROM e""".stripMargin) { (s, dir) =>
     val bpe = stageBpeModel(s, dir)
     val model = graft.ext.Bpe.BpeModel(
-      s.read.parquet(s"$bpe/merges").orderBy(col("rank"))
+      graft.util.TinyParquet.openStore(s, s"$bpe/merges").orderBy(col("rank"))
         .collect().map(r => (r.getAs[String]("lft"), r.getAs[String]("rgt")))
         .toVector)
     graft.ext.Bpe.packSequences(Tables.documents(s, dir), "doc_id", "text",
@@ -3434,9 +3434,9 @@ object ExtensionQueries {
   val streamRecall = q("x_stream_recall",
     "SELECT true AS stream_recall_ok") { (s, dir) =>
     val idx = stageStreamRecall(s, dir)
-    val logged = s.read.parquet(s"$idx/recall_log")
+    val logged = graft.util.TinyParquet.openStore(s, s"$idx/recall_log")
       .select(col("batch_id"), col("hits"), col("possible"), col("recall_q"))
-    val expected = s.read.parquet(s"${idx}_expected")
+    val expected = graft.util.TinyParquet.openStore(s, s"${idx}_expected")
     logged.withColumn("__a", lit(1))
       .join(expected.withColumn("__b", lit(1)),
         Seq("batch_id", "hits", "possible", "recall_q"), "full")
@@ -3749,7 +3749,7 @@ object ExtensionQueries {
       |  FROM staged)
       |SELECT event_id, ts, user_id, event_type, value FROM final WHERE rn2 = 1""".stripMargin) {
     (s, dir) =>
-    s.read.parquet(upsertStreamRun(s, dir)._1)
+    graft.util.TinyParquet.openStore(s, upsertStreamRun(s, dir)._1)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
   }
 
@@ -3986,7 +3986,7 @@ object ExtensionQueries {
     def matches(asOf: Long, refPath: String, okCol: String) = {
       val served = graft.ext.TextIndex.bm25TopKIndexed(s, s"$idx/inv_maint",
         queries, "qid", "qtext", 10, asOf = Some(asOf))
-      val ref = s.read.parquet(refPath).withColumnRenamed("score", "__s2")
+      val ref = graft.util.TinyParquet.openStore(s, refPath).withColumnRenamed("score", "__s2")
       served.join(ref, Seq("query_id", "rank", "doc_id"), "full")
         .agg((count(lit(1)) === count(col("score")) &&
           count(lit(1)) === count(col("__s2")) &&
@@ -5382,7 +5382,7 @@ object ExtensionQueries {
     // the ceiling is staged with the index fleet (deterministic function
     // of the embeddings); the gate's timed cost is the 12 serve paths —
     // the part that is the measurement
-    val brute = s.read.parquet(s"$idx/recall_brute5")
+    val brute = graft.util.TinyParquet.openStore(s, s"$idx/recall_brute5")
     // each serve is an independent plan; the GRAPH serves additionally
     // pay their beam hops as SEQUENTIAL eager checkpoints inside topK
     // (6 + 3 hops ≈ 18 job rounds at the local job-latency floor), so
@@ -6172,7 +6172,7 @@ object ExtensionQueries {
       |SELECT query_id, rank, doc_id, round(m, 4) AS maxsim FROM r WHERE rank <= 5""".stripMargin) {
     (s, dir) =>
     val idx = stageAnnIndexes(s, dir)
-    val qt = s.read.parquet(s"$idx/maxsim_q")
+    val qt = graft.util.TinyParquet.openStore(s, s"$idx/maxsim_q")
     graft.ext.MaxSim.maxSimTopK(s, s"$idx/maxsim", qt,
       "qdoc", "__qtok", "__vec", k = 5, nprobe = 3, candPerToken = 8, cap = 64)
   }
@@ -6225,7 +6225,7 @@ object ExtensionQueries {
       |SELECT query_id, rank, doc_id, round(m, 4) AS maxsim FROM r WHERE rank <= 5""".stripMargin) {
     (s, dir) =>
     val idx = stageAnnIndexes(s, dir)
-    val qt = s.read.parquet(s"$idx/maxsim_q")
+    val qt = graft.util.TinyParquet.openStore(s, s"$idx/maxsim_q")
     graft.ext.MaxSim.maxSimTopK(s, s"$idx/maxsim", qt,
       "qdoc", "__qtok", "__vec", k = 5, nprobe = 3, candPerToken = 8, cap = 64,
       docWhere = d => d % 2 === 0)
@@ -6647,7 +6647,7 @@ object ExtensionQueries {
       // manifest reconcile (torn shards) — the one persisted artifact
       // family that was outside the fsck until r16
       () => StoreMaintenance.fsck(s,
-          s.read.parquet(s"$pt/packed").select(col("doc_id")),
+          graft.util.TinyParquet.openStore(s, s"$pt/packed").select(col("doc_id")),
           "doc_id",
           Seq(StoreRef("flagship_shards", "shards", s"$pt/shards")))
         .withColumn("scope", lit("flagship")),
@@ -6753,7 +6753,7 @@ object ExtensionQueries {
       |       CASE WHEN debt >= 0.1 THEN 0.0 ELSE debt END AS debt_after
       |FROM g""".stripMargin) { (s, dir) =>
     val f = stageSweepFixtures(s, dir)
-    s.read.parquet(s"$f/report")
+    graft.util.TinyParquet.openStore(s, s"$f/report")
   }
 
   /** The bounded corpus the cascading-delete gate forgets from: 64 docs
@@ -6924,7 +6924,8 @@ object ExtensionQueries {
             "vec_id", "embedding", 5)
           .withColumnRenamed("cosine_pq", "__s1")
           .withColumnRenamed("neighbor_id", "__id1")
-        served.join(s.read.parquet(s"$f/ref/ann"), Seq("query_id", "rank"), "full")
+        served.join(graft.util.TinyParquet.openStore(s, s"$f/ref/ann"),
+          Seq("query_id", "rank"), "full")
           .agg((count(lit(1)) === count(col("__s1")) &&
             count(lit(1)) === count(col("cosine_pq")) &&
             coalesce(max(when(col("__id1") =!= col("neighbor_id") ||
@@ -6938,7 +6939,7 @@ object ExtensionQueries {
         val servedBm = graft.ext.TextIndex.bm25TopKIndexed(s, s"$f/text_inv",
             qdf, "qid", "qtext", 10)
           .withColumnRenamed("score", "__s2")
-        servedBm.join(s.read.parquet(s"$f/ref/bm25"),
+        servedBm.join(graft.util.TinyParquet.openStore(s, s"$f/ref/bm25"),
             Seq("query_id", "rank", "doc_id"), "full")
           .agg((count(lit(1)) === count(col("__s2")) &&
             count(lit(1)) === count(col("score")) &&
@@ -6951,7 +6952,7 @@ object ExtensionQueries {
         val servedPh = graft.ext.TextIndex.phraseOccurrences(s,
             s"$f/text_pos", Seq("window", "merge"))
           .withColumnRenamed("n_occurrences", "__n1")
-        servedPh.join(s.read.parquet(s"$f/ref/phrase"), Seq("doc_id"), "full")
+        servedPh.join(graft.util.TinyParquet.openStore(s, s"$f/ref/phrase"), Seq("doc_id"), "full")
           .agg(coalesce(max(when(col("__n1").isNull || col("n_ref").isNull ||
               col("__n1") =!= col("n_ref"), 1).otherwise(0)) === 0, lit(true))
             .as("ok_phrase"))
@@ -6960,7 +6961,8 @@ object ExtensionQueries {
       () => {
         val servedPairs = graft.streaming.DocStreams.readPairs(s, s"$f/dedup_store")
           .withColumnRenamed("est_jaccard", "__e1")
-        servedPairs.join(s.read.parquet(s"$f/ref/pairs"), Seq("id_a", "id_b"), "full")
+        servedPairs.join(graft.util.TinyParquet.openStore(s, s"$f/ref/pairs"),
+          Seq("id_a", "id_b"), "full")
           .agg((count(lit(1)) === count(col("__e1")) &&
             count(lit(1)) === count(col("est_jaccard")) &&
             coalesce(max(abs(col("__e1") - col("est_jaccard"))) <= 1e-9, lit(true)))
@@ -6973,7 +6975,7 @@ object ExtensionQueries {
         val servedComps = graft.ext.IncrementalComponents.readWithNodes(s,
             s"$f/dedup_store/comps", survivors, "doc_id")
           .withColumnRenamed("component", "__c1")
-        servedComps.join(s.read.parquet(s"$f/ref/comps"), Seq("id"), "full")
+        servedComps.join(graft.util.TinyParquet.openStore(s, s"$f/ref/comps"), Seq("id"), "full")
           .agg(coalesce(max(when(col("__c1").isNull || col("component").isNull ||
               col("__c1") =!= col("component"), 1).otherwise(0)) === 0, lit(true))
             .as("ok_comps"))

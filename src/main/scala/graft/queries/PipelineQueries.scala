@@ -80,7 +80,7 @@ object PipelineQueries {
           seqLen = SeqLen, lrIters = LrIters))
       res.admitted.write.mode("overwrite").parquet(s"$tmp/admitted")
       res.packed.write.mode("overwrite").parquet(s"$tmp/packed")
-      graft.ext.ShardExport.export(s, s.read.parquet(s"$tmp/packed"),
+      graft.ext.ShardExport.export(s, graft.util.TinyParquet.openStore(s, s"$tmp/packed"),
         Shards, s"$tmp/shards")
       // incremental re-export fixture: a PRIOR generation (every
       // doc_id % 7 == 3 doc absent — a revocation-shaped delta) is
@@ -88,7 +88,7 @@ object PipelineQueries {
       // incrementally: only shards whose membership changed rewrite,
       // and x_shard_export_incr pins the resulting manifest against
       // the FULL re-export's oracle
-      val packedFull = s.read.parquet(s"$tmp/packed")
+      val packedFull = graft.util.TinyParquet.openStore(s, s"$tmp/packed")
       graft.ext.ShardExport.export(s,
         packedFull.filter(col("doc_id") % 7 =!= 3), Shards,
         s"$tmp/shards_incr")
@@ -225,7 +225,7 @@ object PipelineQueries {
        |SELECT doc_id, seq_id, doc_from, doc_to, seq_off FROM packed""".stripMargin) {
     (s, dir) =>
       val t = stagePretrain(s, dir)
-      s.read.parquet(s"$t/packed")
+      graft.util.TinyParquet.openStore(s, s"$t/packed")
         .select(col("doc_id"), col("seq_id"), col("doc_from"),
           col("doc_to"), col("seq_off"))
   }
@@ -253,7 +253,7 @@ object PipelineQueries {
        |       min(order_key) AS min_key, max(order_key) AS max_key
        |FROM sa GROUP BY 1""".stripMargin) { (s, dir) =>
     val t = stagePretrain(s, dir)
-    s.read.parquet(s"$t/shards/_manifest")
+    graft.util.TinyParquet.openStore(s, s"$t/shards/_manifest")
       .select(col("shard_id"), col("n_rows"), col("checksum"),
         col("min_key"), col("max_key"))
   }
@@ -302,7 +302,7 @@ object PipelineQueries {
       // path — a stale prior generation (the same revocation-shaped
       // delta the batch fixture uses) brought up to date incrementally,
       // so x_stream_shard_export pins stream → delta-export end to end
-      val packedStream = s.read.parquet(s"$tmp/packed")
+      val packedStream = graft.util.TinyParquet.openStore(s, s"$tmp/packed")
       graft.ext.ShardExport.export(s,
         packedStream.filter(col("doc_id") % 7 =!= 3), Shards,
         s"$tmp/shards_stream")
@@ -353,7 +353,7 @@ object PipelineQueries {
        |       min(order_key) AS min_key, max(order_key) AS max_key
        |FROM sa GROUP BY 1""".stripMargin) { (s, dir) =>
     val t = stagePretrain(s, dir)
-    s.read.parquet(s"$t/shards_incr/_manifest")
+    graft.util.TinyParquet.openStore(s, s"$t/shards_incr/_manifest")
       .select(col("shard_id"), col("n_rows"), col("checksum"),
         col("min_key"), col("max_key"))
   }
@@ -374,7 +374,7 @@ object PipelineQueries {
        |SELECT doc_id, seq_id, doc_from, doc_to, seq_off FROM packed""".stripMargin) {
     (s, dir) =>
       val t = stageCorpusAdmit(s, dir)
-      s.read.parquet(s"$t/packed")
+      graft.util.TinyParquet.openStore(s, s"$t/packed")
         .select(col("doc_id"), col("seq_id"), col("doc_from"),
           col("doc_to"), col("seq_off"))
   }
@@ -405,7 +405,7 @@ object PipelineQueries {
        |       min(order_key) AS min_key, max(order_key) AS max_key
        |FROM sa GROUP BY 1""".stripMargin) { (s, dir) =>
     val t = stageCorpusAdmit(s, dir)
-    s.read.parquet(s"$t/shards_stream/_manifest")
+    graft.util.TinyParquet.openStore(s, s"$t/shards_stream/_manifest")
       .select(col("shard_id"), col("n_rows"), col("checksum"),
         col("min_key"), col("max_key"))
   }

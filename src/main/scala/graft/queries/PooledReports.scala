@@ -145,7 +145,7 @@ object PooledReports {
     (s, dir) => {
       val p = s"${root(dir)}/$name"
       if (!graft.util.Hfs.exists(s, s"$p/_POOLED")) build(s, dir, name, fn)
-      s.read.parquet(p)
+      graft.util.TinyParquet.openStore(s, p)
     }
   }
 

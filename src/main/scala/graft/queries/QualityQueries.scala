@@ -825,7 +825,7 @@ object QualityQueries {
       |            ELSE (CAST(n_both AS DOUBLE) / n_kept)
       |                 * (63.0 * 1152921504606846976 / hk) END AS est_intersect
       |FROM g""".stripMargin) { (s, dir) =>
-    val d = s.read.parquet(s"${kmvAppendStore(s, dir)}/deltas")
+    val d = graft.util.TinyParquet.openStore(s, s"${kmvAppendStore(s, dir)}/deltas")
     def side(t: String) = d.filter(col("__g") === t).select(col("__h"))
     Sketch.kmvOverlapFromHashes(side("view"), side("click"), k = 64)
   }
@@ -868,7 +868,7 @@ object QualityQueries {
       |                 * (63.0 * 1152921504606846976 / hk) END AS est_intersect
       |FROM g""".stripMargin) { (s, dir) =>
     Sketch.kmvOverlapMatrixFromHashes(
-      s.read.parquet(s"${kmvAppendStore(s, dir)}/deltas")
+      graft.util.TinyParquet.openStore(s, s"${kmvAppendStore(s, dir)}/deltas")
         .select(col("__g"), col("__h")),
       k = 64)
   }
@@ -1103,7 +1103,7 @@ object QualityQueries {
 
   val streamScd2 = q("x_stream_scd2",
     "SELECT true AS stream_scd2_ok") { (s, dir) =>
-    val streamed = s.read.parquet(scd2Store(s, dir))
+    val streamed = graft.util.TinyParquet.openStore(s, scd2Store(s, dir))
     val batch = graft.ext.Scd2.intervals(Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
         "user_id", "ts", "event_id", "event_type")

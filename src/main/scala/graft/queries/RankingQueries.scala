@@ -789,7 +789,7 @@ object RankingQueries {
       |FROM events v JOIN events c
       |  ON v.user_id = c.user_id AND v.event_type = 'view' AND c.event_type = 'click'
       | AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR""".stripMargin) { (s, dir) =>
-    s.read.parquet(ssjStore(s, dir))
+    graft.util.TinyParquet.openStore(s, ssjStore(s, dir))
   }
 
   val all: Seq[QueryDef] =

@@ -129,7 +129,7 @@ object ScaleQueries {
       |FROM events WHERE event_type = 'click'
       |GROUP BY user_id""".stripMargin) { (s, dir) =>
     val tmp = stagePartitioned(s, dir)
-    s.read.parquet(tmp)
+    graft.util.TinyParquet.openStore(s, tmp)
       .filter(col("event_type") === "click")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
@@ -258,7 +258,7 @@ object ScaleQueries {
     */
   val layoutCompact = q("x_layout_compact",
     "SELECT doc_id, text, source FROM documents") { (s, dir) =>
-    s.read.parquet(stageCompacted(s, dir))
+    graft.util.TinyParquet.openStore(s, stageCompacted(s, dir))
   }
 
   /** Input prep (idempotent): orders z-order-clustered into 16 files on

@@ -181,7 +181,7 @@ object DocStreams {
     * resolve on everything the stream has seen.
     */
   def readAdmitted(spark: SparkSession, storeDir: String): DataFrame = {
-    val gated = spark.read.parquet(s"$storeDir/gated")
+    val gated = graft.util.TinyParquet.openStore(spark, s"$storeDir/gated")
       .select(col("doc_id").cast("long").as("doc_id")).distinct()
     val compsPath = s"$storeDir/comps"
     if (!graft.util.Hfs.exists(spark, compsPath)) gated
@@ -308,7 +308,7 @@ object DocStreams {
   ): graft.ext.Curation.PretrainResult = {
     import graft.ext.{Packing, Sampling}
     // at-least-once log: replayed rows are byte-identical — dedup on read
-    val state = spark.read.parquet(s"$storeDir/state").distinct()
+    val state = graft.util.TinyParquet.openStore(spark, s"$storeDir/state").distinct()
     val survivors = state
       .join(readAdmitted(spark, storeDir), Seq("doc_id"), "left_semi")
       .filter(col("decon_pass"))
@@ -517,7 +517,7 @@ object DocStreams {
     val pairsPath = s"$storeDir/pairs"
     if (graft.util.Hfs.exists(spark, pairsPath))
       subtractDeleted(spark, storeDir,
-          spark.read.parquet(pairsPath), Seq("id_a", "id_b"))
+          graft.util.TinyParquet.openStore(spark, pairsPath), Seq("id_a", "id_b"))
         .groupBy(col("id_a"), col("id_b"))
         .agg(aggScore(col(scoreCol)).as(scoreCol))
     else {
@@ -541,7 +541,7 @@ object DocStreams {
       rows: DataFrame, idCols: Seq[String]): DataFrame =
     if (!graft.util.Hfs.exists(spark, idTombstonesPath(storeDir))) rows
     else {
-      val t = spark.read.parquet(idTombstonesPath(storeDir))
+      val t = graft.util.TinyParquet.openStore(spark, idTombstonesPath(storeDir))
       idCols.foldLeft(rows)((acc, c) =>
         acc.join(broadcast(t), acc(c) === t("__id"), "left_anti"))
     }
@@ -746,11 +746,11 @@ object DocStreams {
     if (!graft.util.Hfs.exists(spark, sigsPath))
       spark.range(1).select(lit(0L).as("__total"), lit(0L).as("__live"))
     else if (!graft.util.Hfs.exists(spark, idTombstonesPath(storeDir)))
-      spark.read.parquet(sigsPath).agg(count(lit(1)).as("__total"))
+      graft.util.TinyParquet.openStore(spark, sigsPath).agg(count(lit(1)).as("__total"))
         .select(col("__total"), col("__total").as("__live"))
     else {
-      val t = spark.read.parquet(idTombstonesPath(storeDir)).distinct()
-      spark.read.parquet(sigsPath).select(col("__id"))
+      val t = graft.util.TinyParquet.openStore(spark, idTombstonesPath(storeDir)).distinct()
+      graft.util.TinyParquet.openStore(spark, sigsPath).select(col("__id"))
         .join(broadcast(t.withColumn("__dead", lit(1))), Seq("__id"), "left")
         .agg(count(lit(1)).as("__total"), count(col("__dead")).as("__dead_n"))
         .select(col("__total"),
@@ -768,11 +768,11 @@ object DocStreams {
     val sigs =
       if (!graft.util.Hfs.exists(spark, sigsPath))
         spark.range(0).select(col("id").as("__id"))
-      else spark.read.parquet(sigsPath)
+      else graft.util.TinyParquet.openStore(spark, sigsPath)
         .select(col("__id").cast("long").as("__id")).distinct()
     if (!graft.util.Hfs.exists(spark, idTombstonesPath(storeDir))) sigs
     else sigs.join(
-      spark.read.parquet(idTombstonesPath(storeDir))
+      graft.util.TinyParquet.openStore(spark, idTombstonesPath(storeDir))
         .select(col("__id").cast("long").as("__id")).distinct(),
       Seq("__id"), "left_anti")
   }
@@ -804,7 +804,7 @@ object DocStreams {
   private def scoreColOf(spark: SparkSession, storeDir: String): String = {
     val pairsPath = s"$storeDir/pairs"
     if (!graft.util.Hfs.exists(spark, pairsPath)) "est_jaccard"
-    else spark.read.parquet(pairsPath).columns
+    else graft.util.TinyParquet.openStore(spark, pairsPath).columns
       .filterNot(Set("id_a", "id_b")).head
   }
 
@@ -839,7 +839,7 @@ object DocStreams {
       // the id-tombstone log (takedowns) folds into the rewrite: dead
       // pairs/signatures are dropped physically and the log resets below
       val p = subtractDeleted(spark, storeDir,
-        spark.read.parquet(pairsPath), Seq("id_a", "id_b"))
+        graft.util.TinyParquet.openStore(spark, pairsPath), Seq("id_a", "id_b"))
       // score column by schema (est_jaccard or hamming): replay copies of
       // a pair carry identical scores, so `first` is deterministic
       val scoreCol = p.columns.filterNot(Set("id_a", "id_b")).head
@@ -858,7 +858,7 @@ object DocStreams {
         // hash-partitioned tasks each writing to every dir — the exact
         // tasks×parts small-file explosion this op removes)
         subtractDeleted(spark, storeDir,
-            spark.read.parquet(sigsPath), Seq("__id")).distinct()
+            graft.util.TinyParquet.openStore(spark, sigsPath), Seq("__id")).distinct()
           .repartition(parts, col("__pb"))
           .write.mode("overwrite").partitionBy("__pb").parquet(tmp)
         graft.operators.Upsert.swapDirs(tmp, sigsPath)
@@ -1608,6 +1608,6 @@ object DocStreams {
     * summed — (`d`, `b`, `n`), at most depth×width rows.
     */
   def readCmsCounters(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/deltas")
+    graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
       .groupBy(col("d"), col("b")).agg(sum(col("n")).as("n"))
 }

@@ -740,7 +740,7 @@ object EventStreams {
   def readKmvEstimates(spark: SparkSession, storeDir: String,
       groupCol: String, k: Int): DataFrame =
     graft.ext.Sketch.kmvFromHashes(
-      spark.read.parquet(s"$storeDir/deltas")
+      graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
         .select(col("__g").as(groupCol), col("__h")),
       groupCol, k)
 
@@ -869,7 +869,7 @@ object EventStreams {
     * [[graft.ext.Labels.weightedMajorityFromCounts]] consumes.
     */
   def readLabelCounts(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/deltas")
+    graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
       .groupBy(col("item"), col("annotator"), col("label"))
       .agg(sum(col("n")).as("n"))
 
@@ -941,7 +941,7 @@ object EventStreams {
             org.apache.spark.sql.types.StructField("__v", valueType)))))
     // EAGER deliberately (the quantileSelect r22 A/B lesson: the lazy
     // materialize-inside-the-agg fusion read slower, not faster)
-    val d = spark.read.parquet(s"$storeDir/deltas")
+    val d = graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
       .localCheckpoint(eager = true) // floor read + re-cut share it
     val minLevel = d.agg(coalesce(max(col("min_lvl")), lit(0)))
       .head().getInt(0)
@@ -1029,7 +1029,7 @@ object EventStreams {
     * [[graft.ext.Preference.bradleyTerryFromMatrix]] consumes.
     */
   def readWinMatrix(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/deltas")
+    graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
       .groupBy(col("item"), col("opp"))
       .agg(sum(col("n_games")).as("n_games"),
         sum(col("n_wins_vs_opp")).as("n_wins_vs_opp"))
@@ -1080,7 +1080,7 @@ object EventStreams {
     */
   def readScoreHistogram(spark: SparkSession, storeDir: String,
       groupCol: String): DataFrame =
-    spark.read.parquet(s"$storeDir/deltas")
+    graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
       .groupBy(col("__g").as(groupCol), col("__s"))
       .agg(sum(col("__np")).as("__np"), sum(col("__nn")).as("__nn"))
 
@@ -1122,7 +1122,7 @@ object EventStreams {
     // error (r13 ADVICE): substitute an empty current side
     val cur =
       if (graft.util.Hfs.exists(spark, s"$storeDir/deltas"))
-        spark.read.parquet(s"$storeDir/deltas")
+        graft.util.TinyParquet.openStore(spark, s"$storeDir/deltas")
           .groupBy(col("__g"), col("__b"))
           .agg(sum(col("__n")).as("__nc"), lit(0L).as("__nr"))
       else refCounts.limit(0).select(col("__g"), col("__b"),
@@ -1157,7 +1157,8 @@ object EventStreams {
         // empty table (Upsert.restoreIfCrashed doc)
         graft.operators.Upsert.restoreIfCrashed(tableDir)
         val target =
-          if (graft.util.Hfs.exists(spark, tableDir)) spark.read.parquet(tableDir)
+          if (graft.util.Hfs.exists(spark, tableDir))
+            graft.util.TinyParquet.openStore(spark, tableDir)
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         val r = graft.operators.Upsert.merge(target, batch.toDF(), key, upsert = true)

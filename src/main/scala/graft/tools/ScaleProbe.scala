@@ -102,7 +102,7 @@ object ScaleProbe {
       time(s"positional_build_x$m") {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pdir))
         graft.ext.TextIndex.buildPositional(d, "doc_id", "text", pdir)
-        spark.read.parquet(s"$pdir/positions").count()
+        graft.util.TinyParquet.openStore(spark, s"$pdir/positions").count()
       }
       time(s"phrase_query_x$m") {
         graft.ext.TextIndex.phraseOccurrences(spark, pdir,
@@ -236,10 +236,10 @@ object ScaleProbe {
             col("embedding").as("__vec"))
         graft.ext.AnnIndex.buildIvf(tokVecs, "__id", "__vec", mdir,
           nlist = 32, iters = 2)
-        spark.read.parquet(s"$mdir/vectors").count()
+        graft.util.TinyParquet.openStore(spark, s"$mdir/vectors").count()
       }
       time(s"maxsim_serve_x$m") {
-        val qt = spark.read.parquet(s"$mdir/vectors")
+        val qt = graft.util.TinyParquet.openStore(spark, s"$mdir/vectors")
           .filter(col("__id") < 3 * 64)
           .select((col("__id") + 10000000L).as("__qtok"),
             floor(col("__id") / 64).cast("long").as("qdoc"), col("__vec"))
@@ -372,14 +372,14 @@ object ScaleProbe {
           org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
           graft.ext.GraphAnn.build(em, "vec_id", "embedding", dir,
             degree = 10)
-          spark.read.parquet(s"$dir/adjacency").count()
+          graft.util.TinyParquet.openStore(spark, s"$dir/adjacency").count()
         }
         time(s"graph_build_ivf_x$m") {
           val dir = s"/tmp/graft_scaleprobe_graph/ivf_x$m"
           org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
           graft.ext.GraphAnn.buildFromIvf(em, "vec_id", "embedding", dir,
             degree = 10, nlist = nlist, nprobe = 6)
-          spark.read.parquet(s"$dir/adjacency").count()
+          graft.util.TinyParquet.openStore(spark, s"$dir/adjacency").count()
         }
       }
     }

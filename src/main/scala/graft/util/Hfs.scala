@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * SWAP protocol ([[graft.operators.Upsert.swapDirs]]) additionally needs
   * `ATOMIC_MOVE` and therefore still requires a local path — these helpers
   * widen the PROBES, not the swap guarantee.
+  *
+  * Listings serve footer-only schema reads too: [[sparkDataFiles]] lists
+  * a table the way Spark's file index does, so
+  * [[TinyParquet.openStore]] can read the schema from the same footer
+  * Spark's inference job would, without running that job.
   */
 object Hfs {
 
@@ -83,6 +88,33 @@ object Hfs {
     }
     walk(p)
     out.toSeq
+  }
+
+  /** The data files Spark's file index lists under a table directory,
+    * sorted by full path string — the order in which Spark's parquet
+    * schema inference takes the first footer. Mirrors `InMemoryFileIndex`:
+    * names starting with `.`, or with `_` unless they hold a `=` (a
+    * partition directory), are skipped at every level, as are
+    * `._COPYING_` files. None when the listing cannot be mirrored
+    * exactly, so the caller leaves the read to Spark: the path is absent
+    * or not a directory, a parquet summary file (`_metadata`,
+    * `_common_metadata`) is present, or a sub-directory is not a `k=v`
+    * partition directory. Cost is one filesystem listing, never a job —
+    * what [[TinyParquet.openStore]] needs for a footer-only schema read.
+    */
+  private[util] def sparkDataFiles(spark: SparkSession, path: String): Option[Seq[String]] = {
+    val (f, p) = fs(spark, path)
+    if (!f.exists(p) || !f.getFileStatus(p).isDirectory) return None
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    def walk(d: Path): Boolean = f.listStatus(d).forall { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_metadata") || n.startsWith("_common_metadata")) false
+      else if ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")) true
+      else if (st.isDirectory) n.contains("=") && walk(st.getPath)
+      else { out += st.getPath.toString; true }
+    }
+    if (walk(p)) Some(out.sorted.toSeq) else None
   }
 
   /** Rename within one filesystem (the Hadoop contract; fails across FSs). */

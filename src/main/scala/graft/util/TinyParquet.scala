@@ -5,10 +5,12 @@ import scala.collection.mutable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side reader for TINY parquet control tables (index metas, SQ
   * bounds, rotation matrices, graph entry points): a handful of rows of
@@ -31,8 +33,59 @@ import org.apache.spark.sql.SparkSession
   * types: int32/int64/float/double/boolean/string plus Spark's 3-level
   * list encoding of long/double elements. TinyParquetSpec pins
   * equivalence against `spark.read.parquet` for every shape in use.
+  *
+  * Footer-only schema reads ([[openStore]]) extend the same idea to
+  * corpus-sized stores: the rows stay on the Spark scan path, but the
+  * SCHEMA is read on the driver from one file footer. A bare
+  * `spark.read.parquet(path)` infers it with a one-task Spark job, a
+  * scheduling round trip paid on every store open of every serve leg
+  * before the caller's own action can start. OpenStoreSpec pins schema
+  * and row equivalence for every store shape in use.
   */
 object TinyParquet {
+
+  /** `spark.read.parquet(path)` without the schema-inference job: the
+    * schema comes from the footer of the file Spark's inference would
+    * pick ([[Hfs.sparkDataFiles]] — the first data file by full path,
+    * listed the way Spark's file index lists it), read on the driver,
+    * and is handed to `spark.read.schema(s).parquet(path)`. Partition
+    * columns are not in the footer; they are still inferred from the
+    * directory names, as in the plain read.
+    *
+    * Every case this cannot mirror exactly falls back to the plain read,
+    * so Spark answers (or raises its own error) as before: a path with
+    * nothing to read, summary files, `mergeSchema` on, a glob, a footer
+    * without Spark's schema. Reads that pass `basePath`, several paths
+    * or their own schema keep calling the reader directly.
+    */
+  def openStore(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark's parquet inference would return for `path`, read
+    * from one footer; None whenever [[openStore]] must fall back.
+    */
+  private[util] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+    if (merge || path.exists("{}[]*?\\".contains(_))) None
+    else Hfs.sparkDataFiles(spark, path).flatMap(_.headOption).flatMap { f =>
+      // Spark prefers the schema it wrote into the footer's key-value
+      // metadata over the parquet type tree (ParquetFileFormat
+      // .readSchemaFromFooter); a footer without it falls back
+      scala.util.Try {
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(f), spark.sessionState.newHadoopConf()))
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      }.toOption.flatten.flatMap(json =>
+        scala.util.Try(DataType.fromJson(json)).toOption.collect {
+          case st: StructType => st
+        })
+    }
+  }
 
   /** All rows of `path` (a parquet directory) as field-name → value
     * maps. A field that is NULL (or absent in a file's schema) is

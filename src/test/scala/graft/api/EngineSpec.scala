@@ -127,4 +127,77 @@ class EngineSpec extends SparkSpec {
     rows(0).getAs[String]("country.name") shouldBe "India"
     rows(1).getAs[String]("country.name") shouldBe null // miss ⇒ empty
   }
+
+  test("importCsv upsert: the last CSV occurrence wins across input partitions and shuffles") {
+    import org.apache.spark.sql.types._
+    val emptyPersons = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("fullName", StringType))))
+    val eng = new Engine(spark, Fixtures.registry, {
+      case "api::country.country" => (countryTable, "id")
+      case "api::person.person" => (emptyPersons, "fullName")
+    })
+    // 3,000 rows over 300 keys, each key's occurrences spread over the
+    // whole file; the multi-relation and the component assembly shuffle
+    // the rows before the dedup
+    val dir = java.nio.file.Files.createTempDirectory("graft_lastwins")
+    val csvPath = dir.resolve("people.csv")
+    val names = Seq("India", "United States", "China")
+    java.nio.file.Files.write(csvPath, ("fullName,address.street,countries\n" +
+      (0 until 3000).map(i => s"p${i % 300},v$i,\"${names(i % 3)}, ${names((i + 1) % 3)}\"")
+        .mkString("\n")).getBytes("UTF-8"))
+    spark.conf.get("spark.sql.shuffle.partitions").toInt should be >= 4
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    // keep every shuffle partition: coalesced into one, small data can
+    // come out of the shuffles in input order by accident
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val csv = spark.read.option("header", true).csv(csvPath.toString)
+      csv.rdd.getNumPartitions should be >= 4
+      for (run <- 1 to 3) withClue(s"run $run: ") {
+        val merged = eng.importCsv(csv, "api::person.person", upsert = true,
+            upsertField = "fullName").merged
+          .select($"fullName", $"address.street")
+          .as[(String, String)].collect().toMap
+        merged.size shouldBe 300
+        (0 until 300).foreach(k => merged(s"p$k") shouldBe s"v${2700 + k}")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+  }
+
+  test("exportCsv flattens ragged repeatable components under ANSI; missing slots are empty") {
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val stored = Seq(("P1", Seq("a")), ("P2", Seq("a", "b")), ("P3", Seq("a", "b", "c")))
+        .toDF("fullName", "streets")
+        .select($"fullName",
+          struct(lit("Main").as("street"), lit("NYC").as("city"), lit(1L).as("country"))
+            .as("address"),
+          transform($"streets", s => struct(s.as("street"), upper(s).as("city"),
+            lit(2L).as("country"))).as("stops"),
+          array(lit(1L)).as("countries"))
+      val eng = new Engine(spark, Fixtures.registry, {
+        case "api::country.country" => (countryTable, "id")
+        case "api::person.person" => (stored, "fullName")
+      })
+      val dir = java.nio.file.Files.createTempDirectory("graft_ragged").toString + "/out"
+      graft.operators.Exporter.writeCsv(eng.exportCsv("api::person.person"), dir)
+      val back = spark.read.option("header", true).option("escape", "\"").csv(dir)
+        .orderBy("fullName").collect()
+      back.map(_.getAs[String]("fullName")).toSeq shouldBe Seq("P1", "P2", "P3")
+      for ((r, n) <- back.zip(1 to 3); i <- 1 to 3) {
+        val street = Option(r.getAs[String](s"stops.$i.street"))
+        val city = Option(r.getAs[String](s"stops.$i.city"))
+        if (i <= n) {
+          street shouldBe Some(("abc")(i - 1).toString)
+          city shouldBe Some(("ABC")(i - 1).toString)
+        } else {
+          street shouldBe None
+          city shouldBe None
+        }
+      }
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
 }

@@ -435,4 +435,150 @@ class GraphAnnSpec extends SparkSpec {
         beamWidth = 4)
     }
   }
+
+  /** The Spark-side hop loop [[GraphAnn.topK]] ran before the beam moved
+    * to the driver, kept verbatim as the equivalence reference: per hop,
+    * broadcast joins of the beam into `adjacency/` and of the candidates
+    * into `vectors/`, a query-keyed dedup and the ranking window.
+    */
+  private def referenceTopK(dir: String, queries: org.apache.spark.sql.DataFrame,
+      idCol: String, vecCol: String, k: Int, beamWidth: Int,
+      hops: Int): org.apache.spark.sql.DataFrame = {
+    import graft.functions.Cols.qcol
+    val beam0 = math.max(beamWidth, k + 1)
+    val entries = graft.util.TinyParquet.readRows(spark, s"$dir/entry")
+      .map(_("entry").asInstanceOf[Long]).sorted
+    val v = spark.read.parquet(s"$dir/vectors")
+    val vLive = AnnIndex.liveOnly(spark, dir, v)
+    val adj = spark.read.parquet(s"$dir/adjacency")
+    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
+        qcol(vecCol).as("__qv"))
+      .localCheckpoint(eager = false)
+    def scoreTop(table: org.apache.spark.sql.DataFrame,
+        cands: org.apache.spark.sql.DataFrame, width: Int,
+        excludeSelf: Boolean = false, dedupCands: Boolean = false) = {
+      val scored0 = table
+        .join(broadcast(cands), cands("__nid") === table("__id"))
+        .drop("__id")
+        .join(broadcast(q), Seq("query_id"))
+        .select(col("query_id"), col("__nid"),
+          Similarity.cosine(col("__qv"), col("__vec")).as("cosine"))
+      val scored1 =
+        if (excludeSelf) scored0.filter(col("query_id") =!= col("__nid"))
+        else scored0
+      val scored = if (dedupCands)
+        scored1.repartition(col("query_id"))
+          .groupBy(col("query_id"), col("__nid"))
+          .agg(max(col("cosine")).as("cosine"))
+      else scored1
+      Similarity.topKPerQuery(scored, "cosine", "__nid", width)
+    }
+    var beam = q.select(col("query_id"),
+      explode(array(entries.map(lit(_)): _*)).as("__nid"))
+    for (_ <- 1 to hops) {
+      val expanded = adj
+        .join(broadcast(beam), beam("__nid") === adj("__id"))
+        .select(col("query_id"), explode(col("__nbrs")).as("__nid"))
+        .unionByName(beam.select(col("query_id"), col("__nid")))
+      beam = scoreTop(v, expanded, beam0, dedupCands = true)
+        .select(col("query_id"), col("__nid"))
+        .localCheckpoint(eager = false)
+    }
+    val deltaPath = s"$dir/delta"
+    val (finalCands, finalVecs) =
+      if (!graft.util.Hfs.exists(spark, deltaPath)) (beam, vLive)
+      else {
+        val dLive = AnnIndex.liveOnly(spark, dir,
+            spark.read.parquet(deltaPath))
+          .select(col("__id"), col("__vec"))
+          .localCheckpoint(eager = false)
+        val cands = beam.unionByName(
+            q.select(col("query_id"))
+              .crossJoin(broadcast(dLive.select(col("__id").as("__nid")))))
+          .distinct()
+        (cands, vLive.select(col("__id"), col("__vec")).unionByName(dLive))
+      }
+    scoreTop(finalVecs, finalCands, k, excludeSelf = true)
+      .withColumnRenamed("__nid", "neighbor_id")
+  }
+
+  // six seeded blobs of 40 points in 8 dims: enough nodes that beams of
+  // 5–12 over degree-6 graphs make real ranking decisions every hop
+  private def blobs(ids: Range, seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    val centers = Array.fill(6)(Array.fill(8)(rnd.nextGaussian().toFloat))
+    ids.map { i =>
+      val c = centers(i % 6)
+      (i.toLong, c.map(x => x + 0.35f * rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+  }
+
+  private def assertSameAsReference(dir: String, what: String): Unit = {
+    val base = blobs(0 until 240, 7L)
+    val queries = base.filter($"vec_id".isin(0L, 17L, 55L, 101L, 160L, 239L))
+      .unionByName(blobs(9001 until 9002, 11L))
+      // all-zero query: every cosine is null, so the ranking falls to ids
+      .unionByName(Seq((9002L, Array.fill(8)(0f))).toDF("vec_id", "embedding"))
+    for ((beamWidth, hops, k) <- Seq((8, 3, 5), (5, 1, 5), (12, 4, 10))) {
+      val got = GraphAnn.topK(spark, dir, queries, "vec_id", "embedding", k,
+        beamWidth, hops)
+      val want = referenceTopK(dir, queries, "vec_id", "embedding", k,
+        beamWidth, hops)
+      withClue(s"$what beamWidth=$beamWidth hops=$hops k=$k: ") {
+        got.schema shouldBe want.schema
+        val order = Seq("query_id", "rank", "neighbor_id").map(col)
+        got.orderBy(order: _*).collect().toSeq shouldBe
+          want.orderBy(order: _*).collect().toSeq
+      }
+    }
+  }
+
+  /** Fresh → append → delete → bare duplicate re-append, checked against
+    * the reference at every step.
+    */
+  private def assertLifecycle(dir: String): Unit = {
+    assertSameAsReference(dir, "fresh")
+    GraphAnn.append(spark, dir, blobs(300 until 312, 13L), "vec_id", "embedding")
+    assertSameAsReference(dir, "appended")
+    val entry = graft.util.TinyParquet.readRows(spark, s"$dir/entry")
+      .map(_("entry").asInstanceOf[Long]).min
+    AnnIndex.deleteIds(spark, dir,
+      Seq(entry, 1L, 18L, 56L, 302L).toDF("vec_id"), "vec_id")
+    assertSameAsReference(dir, "deleted")
+    // no delete first: two live generations of ids 17 and 305
+    GraphAnn.append(spark, dir, blobs(0 until 2, 17L)
+        .select(($"vec_id" * 288 + 17).as("vec_id"), $"embedding"),
+      "vec_id", "embedding")
+    assertSameAsReference(dir, "duplicate re-append")
+  }
+
+  test("driver beam == Spark-side reference: exact build (duplicate id, zero vector)") {
+    val dir = tmpDir("graft_graphann_eq_exact")
+    // id 3 stored twice: the hop scores it by the max over its rows
+    GraphAnn.build(blobs(0 until 240, 7L).unionByName(blobs(3 until 4, 5L))
+        .unionByName(Seq((240L, Array.fill(8)(0f))).toDF("vec_id", "embedding")),
+      "vec_id", "embedding", dir, degree = 6)
+    // route every fifth node to the zero vector: its cosine is null for
+    // every query, so each hop ranks null scores beside real ones
+    spark.read.parquet(s"$dir/adjacency")
+      .withColumn("__nbrs", when(col("__id") % 5 === 0,
+        array_union(col("__nbrs"), array(lit(240L)))).otherwise(col("__nbrs")))
+      .localCheckpoint(eager = true)
+      .write.mode("overwrite").parquet(s"$dir/adjacency")
+    assertLifecycle(dir)
+  }
+
+  test("driver beam == Spark-side reference: buildFromIvf") {
+    val dir = tmpDir("graft_graphann_eq_ivf")
+    GraphAnn.buildFromIvf(blobs(0 until 240, 7L), "vec_id", "embedding", dir,
+      degree = 6, nlist = 8, nprobe = 3)
+    assertLifecycle(dir)
+  }
+
+  test("driver beam == Spark-side reference: α-pruned buildFromIvf") {
+    val dir = tmpDir("graft_graphann_eq_alpha")
+    GraphAnn.buildFromIvf(blobs(0 until 240, 7L), "vec_id", "embedding", dir,
+      degree = 6, nlist = 8, nprobe = 3, alphaQ = 1200)
+    assertLifecycle(dir)
+  }
 }
