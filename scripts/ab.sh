@@ -16,7 +16,11 @@
 # Output: one line per run, then per end-to-end metric each side's median
 # [first quartile, third quartile], the change of the medians, the
 # parent's IQR, and how many pairs the change won (ties count for
-# neither side). Raw results go to $AB_WORK/results.tsv.
+# neither side). Then the answers: per seed, the two sides' `planted…`
+# report lines (the planted counts of the import workloads, `admitted=`
+# for `curation`) must be equal; it prints on how many seeds they are and
+# lists the seeds where they differ. Raw results go to
+# $AB_WORK/results.tsv, each run's output to $AB_WORK/logs/.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -58,8 +62,8 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$results" "$root/BENCHMARK.json" <<'EOF'
-import json, statistics, sys
+python3 - "$results" "$root/BENCHMARK.json" "$work/logs" <<'EOF'
+import json, os, statistics, sys
 
 rows = [l.rstrip("\n").split("\t", 2) for l in open(sys.argv[1]) if l.strip()]
 spec = json.load(open(sys.argv[2]))["end_to_end"]
@@ -92,4 +96,14 @@ for m in spec:
           f"A {ma:.3f} [{a1:.3f}, {a3:.3f}]  B {mb:.3f} [{b1:.3f}, {b3:.3f}]  "
           f"change {100 * (mb - ma) / ma:+.1f}%  parent IQR {a3 - a1:.3f}  "
           f"|diff| > IQR: {abs(mb - ma) > a3 - a1}  B wins {wins}/{len(pairs)} (losses {losses})")
+
+def answers(side, seed):
+    with open(os.path.join(sys.argv[3], f"{side}-{seed}.log")) as f:
+        return [l.rstrip("\n") for l in f if l.startswith("planted")]
+
+differ = [s for s in pairs if answers("A", s) != answers("B", s)]
+silent = sum(not answers("A", s) and not answers("B", s) for s in pairs)
+print(f"answers identical on {len(pairs) - len(differ)} of {len(pairs)} seeds"
+      + (f"; differ on seeds {' '.join(differ)}" if differ else "")
+      + (f" ({silent} seeds print no planted line on either side)" if silent else ""))
 EOF

@@ -11,7 +11,9 @@ import graft.functions.Cols.qcol
   * Each stage is one of the library's columnar operators; the composition
   * stays a declarative plan: a 100 TB corpus makes one scan for the
   * filters, one hash shuffle for exact dedup, and the banded LSH shuffles
-  * for near-dup — nothing quadratic, nothing driver-side.
+  * for near-dup — nothing quadratic. The one driver-side step is the
+  * near-dup resolve ([[Dedup.nearDuplicateLosers]]), and only when the
+  * candidate graph fits a broadcast.
   */
 object CorpusClean {
 
@@ -22,14 +24,6 @@ object CorpusClean {
       languages: Set[String] = Set("en"),
       dropNearDups: Boolean = false,
       nearDupJaccard: Double = 0.8,
-      /** Label-propagation round bound for duplicate-cluster assembly.
-        * Must exceed the largest near-dup cluster's DIAMETER —
-        * boilerplate-heavy corpora chain long (a≈b≈c≈…), and
-        * connectedComponents refuses loudly rather than emit
-        * silently-partial labels, so give long-chain corpora headroom
-        * here instead of letting the whole cleaning job throw.
-        */
-      componentMaxIter: Int = 20,
   )
 
   /** Quality + language gate as a single predicate (one scan). */
@@ -183,9 +177,6 @@ object CorpusClean {
     corpus.filter(!anyContaminated(TextAnalysis.shingleHashes(qcol(textCol), n)))
   }
 
-  /** Run the pipeline; returns surviving rows (canonical = min id for any
-    * duplicate group).
-    */
   /** Forensic companion to [[clean]] — "WHY was this document dropped":
     * one row per input document with each stage's verdict and the final
     * disposition (`verdict` = `kept` or the FIRST failing stage in
@@ -229,14 +220,11 @@ object CorpusClean {
           .select(qcol(idCol), qcol(textCol))
         val pairs = Dedup.minhashCandidates(survivors, idCol, textCol,
           minEstJaccard = cfg.nearDupJaccard)
-        val comp = Dedup.connectedComponents(survivors.select(qcol(idCol)),
-          idCol, pairs, maxIter = cfg.componentMaxIter)
-        val drops = comp.filter(col("id") =!= col("component"))
-          .select(col("id").as("__drop"), lit(true).as("__n0"))
+        val drops = Dedup.nearDuplicateLosers(pairs).withColumn("__n0", lit(true))
         exactFlagged.join(drops,
-            qcol(idCol).cast("long") === col("__drop"), "left")
+            qcol(idCol).cast("long") === col("__nid"), "left")
           .withColumn("__n", coalesce(col("__n0"), lit(false)))
-          .drop("__drop", "__n0")
+          .drop("__nid", "__n0")
       }
     withNear.select(qcol(idCol),
       col("__q").as("quality_ok"), col("__lang").as("lang_pred"),
@@ -249,6 +237,9 @@ object CorpusClean {
         .otherwise(lit("kept")).as("verdict"))
   }
 
+  /** Run the pipeline; returns surviving rows (canonical = min id for any
+    * duplicate group).
+    */
   def clean(df: DataFrame, idCol: String, textCol: String, cfg: Config = Config()): DataFrame = {
     val gated0 = df.filter(qualityPredicate(qcol(textCol), cfg))
     val gated =
@@ -263,11 +254,7 @@ object CorpusClean {
       // (a≈b, b≈c) depending on which pairs the LSH happened to emit
       val pairs = Dedup.minhashCandidates(exact, idCol, textCol,
         minEstJaccard = cfg.nearDupJaccard)
-      val comp = Dedup.connectedComponents(exact.select(qcol(idCol)), idCol, pairs,
-        maxIter = cfg.componentMaxIter)
-      val drops = comp.filter(col("id") =!= col("component"))
-        .select(col("id").as("__drop"))
-      exact.join(drops, qcol(idCol).cast("long") === col("__drop"), "left_anti")
+      Dedup.dropNearDuplicates(exact, idCol, pairs)
     }
   }
 }

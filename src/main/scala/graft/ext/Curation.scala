@@ -23,9 +23,10 @@ import graft.functions.Cols.qcol
   * CONTRACT: column flow (each stage consumes exactly the previous
   * stage's survivors), and single-execution staging — every
   * corpus-reducing stage is checkpoint-barriered, so the MANY internal
-  * actions of the later stages (the calibrator's histogram count + head,
-  * the component label iterations, the mix's stratum collect, the
-  * packer's prefix-sum totals) re-execute NOTHING upstream. Without the
+  * actions of the later stages (the near-dup resolve's edge checkpoint
+  * and bounded edge collect, the calibrator's histogram count + head,
+  * the mix's stratum collect, the packer's prefix-sum totals)
+  * re-execute NOTHING upstream. Without the
   * barriers a lazily-composed pipeline would re-run the full clean +
   * dedup + decontaminate chain once per downstream action — the
   * composition bug this module exists to prevent (CurationSpec asserts
@@ -36,7 +37,11 @@ import graft.functions.Cols.qcol
   * LR gradients, two-phase prefix sums); the composition adds one
   * checkpoint materialization per stage — linear passes over a
   * monotonically SHRINKING corpus, nothing quadratic, nothing
-  * driver-sized beyond each stage's own bounded state.
+  * driver-sized beyond each stage's own bounded state. The near-dup
+  * candidate graph is resolved on the driver when its edges fit
+  * `spark.sql.autoBroadcastJoinThreshold` (16 bytes an edge), else by
+  * distributed label propagation ([[Dedup.nearDuplicateLosers]]); that
+  * threshold bounds the driver's share.
   */
 object Curation {
 

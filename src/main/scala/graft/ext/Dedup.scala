@@ -43,26 +43,105 @@ object Dedup {
     * generator in this file feeds ([[minhashCandidates]],
     * [[simhashPairsFromSigs]], [[ngramJaccardPairs]],
     * [[embeddingCosinePairs]], or any user pair frame): cluster the
-    * pairs with [[connectedComponents]] (a≈b, b≈c collapse even when
+    * pairs into connected components (a≈b, b≈c collapse even when
     * a≉c directly), keep each cluster's canonical (minimum-id) member,
     * drop the rest.
     *
-    * Scale shape: the component computation runs over the TOUCHED ids
-    * only (pair endpoints — at production duplication rates a small
-    * fraction of the corpus), and the corpus itself is touched by exactly
-    * one anti-join against the loser set. Nothing corpus-sized enters
-    * the label iteration.
+    * Scale shape: the pairs are evaluated once and the graph is resolved
+    * by [[nearDuplicateLosers]] — on the driver when its edges fit a
+    * broadcast, else by distributed label propagation over the touched
+    * ids only (pair endpoints — at production duplication rates a small
+    * fraction of the corpus). The corpus itself is touched by exactly one
+    * anti-join against the loser set; nothing corpus-sized enters the
+    * resolve.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val nodes = pairs.select(col(aCol).cast("long").as("__nid"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("__nid")))
-      .distinct()
-    // connectedComponents normalizes its output columns to (id, component)
-    val losers = connectedComponents(nodes, "__nid", pairs, aCol, bCol)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("__nid"))
-    df.join(losers, qcol(idCol).cast("long") === col("__nid"), "left_anti")
+      aCol: String = "id_a", bCol: String = "id_b"): DataFrame =
+    df.join(nearDuplicateLosers(pairs, aCol, bCol),
+      qcol(idCol).cast("long") === col("__nid"), "left_anti")
+
+  /** The ids a keep-the-minimum-id resolve of a pair graph drops: every
+    * node whose connected component has a smaller id, one row each, as
+    * (`__nid`: long). [[dropNearDuplicates]] anti-joins with it;
+    * [[CorpusClean.cleanAudit]] flags it.
+    *
+    * The pairs are evaluated ONCE: projected to long `(a, b)` edges,
+    * minus rows with a null endpoint or a == b (a null never equi-joins
+    * and a self-loop moves no label, so neither makes a loser), and
+    * eagerly checkpointed. Where the graph is resolved depends on its
+    * size against `cap` = `spark.sql.autoBroadcastJoinThreshold` / 16
+    * (two longs per edge — the size Spark already lets the driver
+    * collect and broadcast):
+    *   - ≤ cap edges: one `limit(cap + 1)` collect (it scans partitions
+    *     incrementally, so a huge graph costs at most cap + 1 rows), then
+    *     union-find on the driver over primitive arrays. The losers come
+    *     back as a local relation: no further job before the caller's
+    *     action. The driver's share is bounded by the threshold.
+    *   - more than cap edges, or a threshold ≤ 0: [[connectedComponents]]
+    *     over the checkpointed edges, with nothing on the driver.
+    */
+  def nearDuplicateLosers(pairs: DataFrame, aCol: String = "id_a",
+      bCol: String = "id_b"): DataFrame = {
+    val spark = pairs.sparkSession
+    val edges = pairs
+      .select(qcol(aCol).cast("long").as("a"), qcol(bCol).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .localCheckpoint(eager = true) // the pairs' one evaluation
+    val cap = math.min(
+      org.apache.spark.sql.GraftSqlBridge.broadcastThreshold(spark) / 16,
+      Int.MaxValue - 1L).toInt
+    val small =
+      if (cap <= 0) None
+      else Some(edges.limit(cap + 1).collect()).filter(_.length <= cap)
+    small match {
+      case Some(rows) =>
+        spark.createDataset(minIdLosers(rows).toSeq)(
+          org.apache.spark.sql.Encoders.scalaLong).toDF("__nid")
+      case None =>
+        val nodes = edges.select(col("a").as("__nid"))
+          .unionByName(edges.select(col("b").as("__nid")))
+          .distinct()
+        // connectedComponents normalizes its output columns to (id, component)
+        connectedComponents(nodes, "__nid", edges, "a", "b")
+          .filter(col("id") =!= col("component"))
+          .select(col("id").as("__nid"))
+    }
+  }
+
+  /** Union-find over collected (a, b) long edges: every endpoint whose
+    * component root — its minimum id — is not itself. Nodes are indexed
+    * by binary search into the sorted distinct endpoints, so index order
+    * is id order and linking the larger root under the smaller keeps
+    * every root its component's minimum.
+    */
+  private def minIdLosers(edges: Array[org.apache.spark.sql.Row]): Array[Long] = {
+    val ends = new Array[Long](2 * edges.length)
+    var i = 0
+    while (i < edges.length) {
+      ends(2 * i) = edges(i).getLong(0)
+      ends(2 * i + 1) = edges(i).getLong(1)
+      i += 1
+    }
+    java.util.Arrays.sort(ends)
+    var m = 0
+    i = 0
+    while (i < ends.length) {
+      if (m == 0 || ends(i) != ends(m - 1)) { ends(m) = ends(i); m += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(ends, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x0: Int): Int = { // path halving
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { e =>
+      val ra = find(java.util.Arrays.binarySearch(ids, e.getLong(0)))
+      val rb = find(java.util.Arrays.binarySearch(ids, e.getLong(1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (0 until m).filter(k => find(k) != k).map(ids(_)).toArray
   }
 
   // ------------------------------------------------------------ minhash
@@ -447,31 +526,6 @@ object Dedup {
   }
 
   // ------------------------------------------------ duplicate clusters
-  /** Connected components over a candidate-pair graph — the final step of
-    * fuzzy dedup: MinHash/SimHash/Jaccard emit PAIRS, but a keep-one
-    * policy needs CLUSTERS (a≈b and b≈c must collapse to one canonical
-    * document even when a≉c directly).
-    *
-    * Min-label propagation: each node repeatedly adopts the smallest
-    * component label among itself and its neighbors, converging in
-    * O(graph diameter) rounds — near-dup clusters are dense and shallow,
-    * so a handful of rounds suffices (for adversarial long-chain graphs
-    * use the large-star/small-star contraction instead). Each round is
-    * one equi-join + one min-aggregate, lineage-cut with a
-    * `localCheckpoint` so the iteration count never stacks plans; the
-    * convergence probe is a count over the already-materialized blocks
-    * (carrying the previous label as a column) — no second execution of
-    * the round, nothing quadratic, no driver data.
-    *
-    * Output: (`id`, `component` = min node id reachable), one row per
-    * node of `nodes`; isolated nodes keep their own id.
-    *
-    * `maxIter` bounds the propagation ROUNDS INCLUDING the zero-change
-    * round that confirms convergence, so graphs of diameter < maxIter
-    * succeed; at the bound the result cannot be confirmed converged and
-    * is refused (conservative: a loud error, never silently-partial
-    * labels).
-    */
   /** EFFECTIVE dataset size under exact dedup — the accounting number a
     * training-data pipeline reports per source per snapshot: raw
     * doc/token counts beside the counts after collapsing exact-text
@@ -591,6 +645,31 @@ object Dedup {
       .agg(count(lit(1)).as("n_clusters"), sum(col("__n")).as("n_docs"))
       .select(col("__n").as("cluster_size"), col("n_clusters"), col("n_docs"))
 
+  /** Connected components over a candidate-pair graph — the final step of
+    * fuzzy dedup: MinHash/SimHash/Jaccard emit PAIRS, but a keep-one
+    * policy needs CLUSTERS (a≈b and b≈c must collapse to one canonical
+    * document even when a≉c directly).
+    *
+    * Min-label propagation: each node repeatedly adopts the smallest
+    * component label among itself and its neighbors, converging in
+    * O(graph diameter) rounds — near-dup clusters are dense and shallow,
+    * so a handful of rounds suffices (for adversarial long-chain graphs
+    * use the large-star/small-star contraction instead). Each round is
+    * one equi-join + one min-aggregate, lineage-cut with a
+    * `localCheckpoint` so the iteration count never stacks plans; the
+    * convergence probe is a count over the already-materialized blocks
+    * (carrying the previous label as a column) — no second execution of
+    * the round, nothing quadratic, no driver data.
+    *
+    * Output: (`id`, `component` = min node id reachable), one row per
+    * node of `nodes`; isolated nodes keep their own id.
+    *
+    * `maxIter` bounds the propagation ROUNDS INCLUDING the zero-change
+    * round that confirms convergence, so graphs of diameter < maxIter
+    * succeed; at the bound the result cannot be confirmed converged and
+    * is refused (conservative: a loud error, never silently-partial
+    * labels).
+    */
   def connectedComponents(
       nodes: DataFrame,
       idCol: String,

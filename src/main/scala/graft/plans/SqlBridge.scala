@@ -14,4 +14,10 @@ object GraftSqlBridge {
     */
   def cacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes, parsed as Spark
+    * parses it (≤ 0 = broadcasting disabled).
+    */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 }

@@ -231,4 +231,131 @@ class DedupSpec extends SparkSpec {
       Dedup.lshPlan(spark, jaccardThresholdQ = 1000000L)
     }
   }
+
+  // ------------------------------------------------ near-dup resolve
+  /** The resolve as it was before the single-pass rewrite: label
+    * propagation (escalating to star contraction) over the pair frame,
+    * read once for the nodes and once for the edges. Kept as the
+    * reference the rewrite must reproduce byte for byte.
+    */
+  private def referenceDropNearDuplicates(df: org.apache.spark.sql.DataFrame,
+      idCol: String, pairs: org.apache.spark.sql.DataFrame,
+      aCol: String = "id_a", bCol: String = "id_b"): org.apache.spark.sql.DataFrame = {
+    val nodes = pairs.select(col(aCol).cast("long").as("__nid"))
+      .unionByName(pairs.select(col(bCol).cast("long").as("__nid")))
+      .distinct()
+    val losers = Dedup.connectedComponents(nodes, "__nid", pairs, aCol, bCol)
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as("__nid"))
+    df.join(losers, col(idCol).cast("long") === col("__nid"), "left_anti")
+  }
+
+  private val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `body` once under the session's broadcast threshold (driver-side
+    * resolve) and once with broadcasting off (distributed resolve).
+    */
+  private def underBothThresholds(body: Boolean => Unit): Unit = {
+    body(true)
+    val saved = spark.conf.getOption(thresholdKey)
+    spark.conf.set(thresholdKey, "-1")
+    try body(false)
+    finally saved.fold(spark.conf.unset(thresholdKey))(spark.conf.set(thresholdKey, _))
+  }
+
+  private def numberedDocs(n: Int) =
+    (0L until n.toLong).map(i => (i, s"document $i")).toDF("doc_id", "text")
+
+  private def assertResolvesLikeReference(name: String,
+      df: org.apache.spark.sql.DataFrame, idCol: String,
+      pairs: org.apache.spark.sql.DataFrame): Unit = {
+    val want = referenceDropNearDuplicates(df, idCol, pairs)
+    val wantRows = want.collect().map(_.toString).sorted
+    underBothThresholds { driverSide =>
+      val got = Dedup.dropNearDuplicates(df, idCol, pairs)
+      withClue(s"$name (driver side = $driverSide): ") {
+        // the driver side's losers are a local relation; only the
+        // distributed side's plan reads checkpointed labels
+        got.queryExecution.optimizedPlan
+          .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) shouldBe !driverSide
+        got.schema shouldBe want.schema
+        got.collect().map(_.toString).sorted shouldBe wantRows
+      }
+    }
+  }
+
+  test("near-dup resolve: rows and schema identical to label propagation, both sides of the size test") {
+    Seq(3L, 17L, 2024L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(90)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      assertResolvesLikeReference(s"random graph seed $seed", numberedDocs(160), "doc_id",
+        edges.toDF("id_a", "id_b"))
+    }
+    assertResolvesLikeReference("duplicate and reversed pairs", numberedDocs(12), "doc_id",
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (5L, 3L), (3L, 5L), (4L, 3L), (9L, 8L), (8L, 9L))
+        .toDF("id_a", "id_b"))
+    assertResolvesLikeReference("self-loops", numberedDocs(12), "doc_id",
+      Seq((1L, 1L), (2L, 2L), (2L, 3L), (7L, 7L), (6L, 4L), (4L, 4L)).toDF("id_a", "id_b"))
+    assertResolvesLikeReference("null endpoints", numberedDocs(12), "doc_id",
+      Seq[(Option[Long], Option[Long])]((Some(1L), None), (None, Some(2L)),
+        (None, None), (Some(3L), Some(4L)), (Some(5L), None), (Some(6L), Some(5L)))
+        .toDF("id_a", "id_b"))
+    assertResolvesLikeReference("string ids cast to long",
+      Seq(("001", "a"), ("2", "b"), ("0003", "c"), ("4", "d"), ("10", "e"))
+        .toDF("doc_id", "text"), "doc_id",
+      Seq(("2", "0001"), ("03", "4"), ("10", "10")).toDF("id_a", "id_b"))
+    // diameter 63 > maxIter 20: the distributed side escalates to star
+    // contraction, the driver side needs no rounds at all
+    assertResolvesLikeReference("64-node path", numberedDocs(70), "doc_id",
+      new scala.util.Random(7).shuffle((0L until 63L).map(i => (i + 1, i)))
+        .toDF("id_a", "id_b"))
+    assertResolvesLikeReference("empty pair frame", numberedDocs(5), "doc_id",
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assertResolvesLikeReference("minhash candidates", docs, "doc_id",
+      Dedup.minhashCandidates(docs, "doc_id", "text", numHashes = 64, bands = 32,
+        shingleSize = 3, minEstJaccard = 0.3))
+  }
+
+  test("near-dup resolve evaluates the pair frame exactly once") {
+    // a row-counting UDF on the pairs' source ticks once per source row
+    // per evaluation (nondeterministic, so no rule may duplicate or move it)
+    val acc = spark.sparkContext.longAccumulator("pair_rows")
+    val tick = udf((x: Long) => { acc.add(1L); x }).asNondeterministic()
+    val pairs = spark.range(0L, 120L, 1L, 3)
+      .select(tick(col("id")).as("__i"))
+      .select(((col("__i") * 7) % 50).as("id_a"), ((col("__i") * 13 + 1) % 50).as("id_b"))
+    underBothThresholds { driverSide =>
+      acc.reset()
+      val kept = Dedup.dropNearDuplicates(numberedDocs(60), "doc_id", pairs)
+      kept.collect()
+      kept.count()
+      withClue(s"driver side = $driverSide: ") { acc.value shouldBe 120L }
+    }
+  }
+
+  test("near-dup resolve starts at most 3 jobs before the caller's action, whatever the diameter") {
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBridge.flushListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try body
+      finally {
+        org.apache.spark.GraftListenerBridge.flushListeners(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      jobs.get()
+    }
+    val path = (0L until 63L).map(i => (i, i + 1))
+    val star = (1L until 40L).map(i => (0L, i))
+    Seq("64-node path" -> path, "star" -> star).foreach { case (name, edges) =>
+      val pairs = edges.toDF("id_a", "id_b").localCheckpoint(eager = true)
+      val docs = numberedDocs(70).localCheckpoint(eager = true)
+      val n = jobsDuring { Dedup.dropNearDuplicates(docs, "doc_id", pairs) }
+      withClue(s"$name: ") { n should be <= 3 }
+    }
+  }
 }
