@@ -5,46 +5,51 @@ import org.apache.spark.sql.functions._
 import graft.functions.Cols.qcol
 import graft.ext.Similarity.{PqModel, pqLut, probeClusters, topKPerQuery}
 
-/** Persisted ANN indexes — the production shape of the PQ / IVF×PQ
-  * operators: build ONCE (train codebooks on a bounded sample, encode the
-  * full corpus in a single pass, lay the codes out on disk), then query
-  * many times against the stored tables. Two layouts:
+/** Persisted ANN indexes — the production shape of the quantized and
+  * clustered search operators: build ONCE (train quantizers on a bounded
+  * sample, encode the full corpus in a single pass, lay the rows out on
+  * disk), then query many times against the stored tables. Layouts, by
+  * the `layout` value in `meta`:
   *
-  *   - PQ index (`writePq`/`readPq`): codebooks + flat codes as parquet.
-  *     Query cost is a codes scan + broadcast ADC lookup — no training,
-  *     no vector arithmetic.
-  *   - IVF×PQ index (`buildIvfPq`/`readIvfPq`): adds coarse centroids and
-  *     writes the codes table PARTITIONED BY coarse cluster. The
-  *     per-query nprobe filter then becomes parquet PARTITION PRUNING —
-  *     only nprobe-ish of nlist directories are ever read, with no
-  *     corpus-sized cluster-attach join anywhere on the query path (at
-  *     100 TB that id-equi-join would shuffle the whole codes table per
-  *     query batch — the exact scan the IVF axis exists to avoid; the
-  *     one cluster attach happens at BUILD time instead, once).
+  *   - `pq`, `sq`, `bq`: flat codes (product, 8-bit scalar, 1-bit sign
+  *     sketch + exact vectors); a query scans the codes once.
+  *   - `ivf`, `ivfpq`, `ivfsq`: coarse centroids plus rows PARTITIONED BY
+  *     coarse cluster, so the per-query nprobe filter is parquet PARTITION
+  *     PRUNING — only nprobe-ish of nlist directories are read, and the
+  *     one cluster attach happens at BUILD time, never per query.
+  *   - `pcapq`, `opq`, `opqivfpq`: a stored rotation in front of a plain
+  *     `pq` (nested at `pq/`) or `ivfpq` (nested at `ivfpq/`) index that
+  *     holds the rows AND the tombstones; the root holds meta + rotation.
+  *   - `graph`: [[GraphAnn]]'s navigable-graph store.
   *
-  * Directory layout under `dir`:
+  * Directory layout under `dir` (each layout writes the subset it uses):
   * {{{
-  *   meta/       one row: m, sub (subvector width), nlist (-1 for flat PQ)
-  *   codebooks/  (__j, __cid, centroid)        — m·ksub rows
-  *   coarse/     (__cid, centroid)             — nlist rows (IVF×PQ only)
-  *   codes/      (__id, __j, __code, __seq)    — flat PQ
-  *               (__cluster=K/ …)              — IVF×PQ, cluster-partitioned
-  *   vectors/    (__id, __vec, __seq, __cluster=K/) — IVF-flat; also kept
-  *               by IVF×PQ when built with `keepVectors` (refine re-rank)
+  *   meta/       one row: m, sub, nlist (-1 = flat), residual, layout
+  *   codebooks/  (__j, __cid, centroid)        — PQ-coded layouts
+  *   coarse/     (__cid, centroid)             — the ivf* layouts
+  *   bounds/     (__pos, vmin, vmax)           — the SQ layouts
+  *   rotation/   (__i, __row)                  — rotated layouts' root
+  *   _dim        sketch width sidecar          — bq
+  *   codes/      (__id, …codes…, __seq[, __cluster=K/])
+  *   vectors/    (__id, __vec, __seq, __cluster=K/) — ivf; also ivfpq
+  *               built with `keepVectors` (refine re-rank)
+  *   pq/, ivfpq/ the nested index of a rotated layout
   *   tombstones/ (__id, __seq)                 — delete/update log
+  *   _next_seq   next maintenance sequence number ([[nextSeq]])
   * }}}
   *
   * Maintenance model (FAISS `remove_ids`/`add` semantics): every stored
   * row carries the maintenance sequence number `__seq` it was written at
   * (0 for the initial build). [[deleteIds]] appends (id, seq) tombstones;
   * a stored row is LIVE iff it was written AFTER the newest tombstone for
-  * its id, so delete → re-append (= [[updatePq]] etc.) supersedes the
+  * its id, so delete → re-append (= [[update]]) supersedes the
   * tombstone instead of being killed by it. Query paths subtract the
   * tombstone table through one broadcast join (the table is
-  * delete-volume-sized, not corpus-sized); [[rebuildPq]] and friends
-  * compact — the fresh generation carries no tombstones.
+  * delete-volume-sized, not corpus-sized); [[compact]] and [[rebuild]]
+  * publish a fresh generation that carries no tombstones. Every
+  * maintenance verb is written once, over the private layout table.
   *
-  * Concurrency: readers are safe against [[rebuildPq]]'s two-move swap,
+  * Concurrency: readers are safe against [[rebuild]]'s two-move swap,
   * but MAINTENANCE ops (append/delete/update) racing a rebuild of the
   * same index can land writes in the generation the swap is about to
   * discard — the caller must serialize maintenance against rebuilds of
@@ -91,15 +96,6 @@ object AnnIndex {
       .getOrElse(0L)
   }
 
-  /** Keep only live rows: a row is dead iff a tombstone for its id exists
-    * with tombstone seq >= row seq. One broadcast join against the per-id
-    * max of the tombstone table — nothing corpus-sized moves.
-    *
-    * NOT a newest-generation filter: two un-tombstoned generations of one
-    * id (a duplicate bare append) both survive — see the append docs for
-    * why that contract lives with the caller instead of a per-query
-    * corpus-wide max-seq shuffle here.
-    */
   /** Collect a BOUNDED-by-construction frame (probe selections: queries
     * × nprobe rows) and re-attach it as a LOCAL relation: the one
     * returned collect job replaces the old eager-checkpoint + collect
@@ -114,6 +110,15 @@ object AnnIndex {
     (rows, local)
   }
 
+  /** Keep only live rows: a row is dead iff a tombstone for its id exists
+    * with tombstone seq >= row seq. One broadcast join against the per-id
+    * max of the tombstone table — nothing corpus-sized moves.
+    *
+    * NOT a newest-generation filter: two un-tombstoned generations of one
+    * id (a duplicate bare append) both survive — see the append docs for
+    * why that contract lives with the caller instead of a per-query
+    * corpus-wide max-seq shuffle here.
+    */
   private[ext] def liveOnly(spark: SparkSession, dir: String, rows: DataFrame): DataFrame =
     liveAsOf(spark, dir, rows, None)
 
@@ -154,48 +159,83 @@ object AnnIndex {
     }
   }
 
+  // ------------------------------------------------------- layout table
+  /** The storage decisions one layout makes — everything the maintenance
+    * verbs ([[append]], [[update]], [[applyDiff]], [[compact]],
+    * [[deleteIds]], the debt/health counters) need to know about it:
+    *
+    *   - `nested`: the sub-directory that holds a composed layout's row
+    *     tables AND tombstones ([[storeDir]]);
+    *   - `rows`: the row tables, primary first (the one debt, health and
+    *     fsck measure), each with whether it is `__cluster`-partitioned;
+    *   - `frozen`: side tables and sidecars [[compact]] carries verbatim;
+    *   - `encode`: the frozen-quantizer append of new rows.
+    */
+  private final case class Layout(nested: Option[String] = None,
+      rows: Seq[(String, Boolean)] = Nil, frozen: Seq[String] = Nil,
+      encode: (SparkSession, String, DataFrame, String, String) => Unit)
+
+  private val layouts: Map[String, Layout] = Map(
+    "pq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("codebooks"),
+      encode = appendPq),
+    "ivf" -> Layout(rows = Seq("vectors" -> true), frozen = Seq("coarse"),
+      encode = appendIvf),
+    "ivfpq" -> Layout(rows = Seq("codes" -> true, "vectors" -> true),
+      frozen = Seq("coarse", "codebooks"), encode = appendIvfPq),
+    "sq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("bounds"),
+      encode = appendSq),
+    "ivfsq" -> Layout(rows = Seq("codes" -> true),
+      frozen = Seq("coarse", "bounds"), encode = appendIvfSq),
+    "bq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("_dim"),
+      encode = appendBq),
+    "pcapq" -> Layout(nested = Some("pq"), encode = appendRotated),
+    "opq" -> Layout(nested = Some("pq"), encode = appendRotated),
+    "opqivfpq" -> Layout(nested = Some("ivfpq"), encode = appendRotated),
+    // compaction is GraphAnn's own (edge repair / fresh-region fold)
+    "graph" -> Layout(rows = Seq("vectors" -> false), encode = GraphAnn.append))
+
+  private def layoutOf(spark: SparkSession, dir: String): (String, Layout) = {
+    val name = readLayout(spark, dir)
+    (name, layouts.getOrElse(name, throw new IllegalStateException(
+      s"$dir has unknown index layout '$name'")))
+  }
+
+  /** The directory that OWNS a store's row tables and tombstone log: a
+    * composed layout's nested index, every other store's root. Every
+    * delete, compaction and measurement routes through here — tombstones
+    * written at a composed ROOT would be subtracted by nothing and the
+    * "deleted" rows would keep being served silently. Also the identity a
+    * caller fanning a delete across MANY stores (CascadeDelete) compares,
+    * so two passed roots cannot resolve to one physical store unnoticed.
+    *
+    * One existence probe plus one driver-side meta read (TinyParquet —
+    * no Spark job). Schema-tolerant: [[deleteIds]] also serves NON-ANN
+    * tombstone consumers (the inverted text index) whose meta has another
+    * shape; only a composed layout reroutes.
+    */
+  private[ext] def storeDir(spark: SparkSession, dir: String): String =
+    if (!graft.util.Hfs.exists(spark, s"$dir/meta")) dir
+    else graft.util.TinyParquet.readOneRow(spark, s"$dir/meta").get("layout")
+      .flatMap(l => layouts.get(l.asInstanceOf[String])).flatMap(_.nested)
+      .fold(dir)(n => s"$dir/$n")
+
+  /** Path of the primary row table of a table-owning `dir` ([[storeDir]])
+    * whose layout is `layout`; `codes` for layouts outside the table.
+    */
+  private[ext] def primaryTable(dir: String, layout: String): String =
+    s"$dir/${layouts.get(layout).flatMap(_.rows.headOption).fold("codes")(_._1)}"
+
   /** Delete ids from a persisted index (any layout) by appending
     * tombstones — the FAISS `remove_ids` maintenance op, O(|ids|): no
     * codes/vectors file is rewritten; the query path subtracts the
-    * tombstone table via one broadcast join and the next rebuild
-    * compacts. Deleting an absent id is a harmless no-op tombstone.
-    *
-    * A PCA-PQ ROOT delegates to its nested `dir/pq` (where the query
-    * path reads liveness) — tombstones written at the root would be
-    * subtracted by nothing and the "deleted" rows would keep being
-    * served silently, which is how every wrong layout routing here
-    * must fail: loudly or not at all.
+    * tombstone table via one broadcast join and the next compaction
+    * drops them. Deleting an absent id is a harmless no-op tombstone.
+    * Composed roots route to their nested index ([[storeDir]]); the
+    * routing runs no Spark job.
     */
-  /** The directory that OWNS a store's tombstone log: composed layouts
-    * (pcapq/opq → nested pq; opqivfpq → nested ivfpq) keep their tables
-    * and tombstones in the nested index, everything else owns its root.
-    * This is the routing [[deleteIds]] applies — exposed so a caller
-    * fanning a delete across MANY stores (CascadeDelete) can prove two
-    * passed roots do not silently resolve to the same physical store.
-    */
-  private[graft] def tombstoneOwnerDir(spark: SparkSession,
-      dir: String): String = {
-    if (graft.util.Hfs.exists(spark, s"$dir/meta")) {
-      // schema-tolerant sniff: deleteIds also serves NON-ANN tombstone
-      // consumers (the inverted text index) whose meta has a different
-      // shape — only an explicit composed layout reroutes. Driver-side
-      // tiny read (TinyParquet): a one-row control table is not worth a
-      // Spark job's scheduling round trip.
-      val m = graft.util.TinyParquet.readOneRow(spark, s"$dir/meta")
-      m.get("layout").foreach { l =>
-        if (Set("pcapq", "opq")(l.asInstanceOf[String]))
-          return tombstoneOwnerDir(spark, s"$dir/pq")
-        if (l == "opqivfpq")
-          return tombstoneOwnerDir(spark, s"$dir/ivfpq")
-      }
-    }
-    dir
-  }
-
   def deleteIds(spark: SparkSession, dir: String, ids: DataFrame, idCol: String): Unit = {
-    val owner = tombstoneOwnerDir(spark, dir)
-    if (owner != dir) return deleteIds(spark, owner, ids, idCol)
-    val seq = nextSeq(spark, dir)
+    val owner = storeDir(spark, dir)
+    val seq = nextSeq(spark, owner)
     val dead = ids.select(qcol(idCol).cast("long").as("__id")).distinct()
       .localCheckpoint(eager = true) // consumed by the emptiness probe AND the write
     // sidecar FIRST, tombstones second (the IncrementalComponents crash
@@ -207,9 +247,9 @@ object AnnIndex {
     // path, and skipping the bump keeps the sidecar numbering
     // byte-identical to it in every history.
     if (!dead.isEmpty)
-      graft.util.Hfs.writeString(spark, s"$dir/_next_seq", (seq + 1L).toString)
+      graft.util.Hfs.writeString(spark, s"$owner/_next_seq", (seq + 1L).toString)
     dead.withColumn("__seq", lit(seq))
-      .write.mode("append").parquet(tombstonesPath(dir))
+      .write.mode("append").parquet(tombstonesPath(owner))
   }
 
   /** A loaded IVF×PQ index: coarse centroids + codebooks in hand, codes
@@ -653,7 +693,7 @@ object AnnIndex {
     Similarity.sqTopKWithCodes(queries, idCol, vecCol, idx.bounds, idx.codes, k)
   }
 
-  /** [[appendPq]] for the SQ layout: encode against the FROZEN bounds.
+  /** [[append]] for the SQ layout: encode against the FROZEN bounds.
     * Appended vectors outside the trained per-dimension range CLAMP —
     * the analytic error bound covers build-corpus rows only; rebuild on
     * the usual cadence (same caller contract as every append, including
@@ -670,31 +710,29 @@ object AnnIndex {
       .write.mode("append").parquet(s"$dir/codes")
   }
 
-  /** [[rebuildPq]] for the SQ layout (fresh bounds, swap-published). */
-  def rebuildSq(corpus: DataFrame, idCol: String, vecCol: String, dir: String): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildSq(corpus, idCol, vecCol, tmp)
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  // --------------------------------------------------- PCA-rotated PQ
-  /** PCA-rotated product quantization — the FAISS
-    * `IndexPreTransform(PCAMatrix, IndexPQ)` composition: an
-    * uncentered-PCA rotation ([[Similarity.pcaRotation]] — a pure
-    * rotation, so cosine is preserved EXACTLY) persisted beside a
-    * standard flat-PQ index over the ROTATED corpus, nested at
-    * `dir/pq`. Rotation compacts energy into the leading dimensions, so
-    * the equal-width subspace split the PQ makes is better conditioned
-    * — the classic OPQ initialization, without OPQ's alternating
-    * optimization.
+  // --------------------------------------------------- rotated layouts
+  /** The rotated layouts — a stored rotation in front of a plain
+    * PQ-coded index nested under the root, the FAISS
+    * `IndexPreTransform(rotation, index)` composition. The rotation is a
+    * pure rotation, so cosine is preserved EXACTLY; it compacts energy
+    * into the leading dimensions, so the equal-width subspace split the
+    * PQ makes is better conditioned:
     *
-    * Maintenance DELEGATES to the wrapped index exactly as in FAISS:
-    * append/update/CDC rotate the batch and forward (frozen rotation +
-    * frozen codebooks — same drift contract as every append), deletes
-    * and compaction act on `dir/pq` directly (it is a plain PQ index;
-    * `tombstoneDebt`/`compactIfNeeded` on `dir/pq` route as "pq").
+    *   - `pcapq` ([[buildPcaPq]]): uncentered-PCA rotation
+    *     ([[Similarity.pcaRotation]]) + flat PQ at `dir/pq` — the classic
+    *     OPQ initialization, without OPQ's alternating optimization;
+    *   - `opq` ([[buildOpq]]): the [[Similarity.opqRotation]]
+    *     alternating-minimization rotation + flat PQ at `dir/pq`;
+    *   - `opqivfpq` ([[buildOpqIvfPq]]): the OPQ rotation + IVF×PQ at
+    *     `dir/ivfpq` — the FAISS production string `OPQm,IVFnlist,PQm`.
+    *
+    * Maintenance DELEGATES to the nested index exactly as in FAISS:
+    * [[append]]/[[update]]/[[applyDiff]] rotate the batch and forward
+    * (frozen rotation + frozen quantizers — same drift contract as every
+    * append); deletes, compaction and the debt/health counters act on the
+    * nested index ([[storeDir]]). `pqDir` is that nested index.
     */
-  final case class PcaPqIndex(rotation: Array[Array[Double]], pqDir: String,
+  final case class RotatedIndex(rotation: Array[Array[Double]], pqDir: String,
       dir: String)
 
   private def writeRotation(spark: SparkSession, dir: String,
@@ -711,108 +749,79 @@ object AnnIndex {
       .map(_("__row").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double]).toArray)
       .toArray
 
+  /** `rows` rotated by `r`, as (`__rid`, `__rvec`) — the id/vector pair
+    * every rotated build, query and append hands to the nested index.
+    */
+  private def rotate(rows: DataFrame, idCol: String, vecCol: String,
+      r: Array[Array[Double]]): DataFrame =
+    rows.select(qcol(idCol).as("__rid"),
+      Similarity.rotateExpr(qcol(vecCol), r).as("__rvec"))
+
+  /** Write a rotated root (meta + rotation) and return the rotated corpus
+    * the caller builds the nested index from.
+    */
+  private def rotatedRoot(corpus: DataFrame, idCol: String, vecCol: String,
+      dir: String, layout: String, r: Array[Array[Double]]): DataFrame = {
+    writeMeta(corpus.sparkSession, dir, m = 0, sub = 0, nlist = -1, layout = layout)
+    writeRotation(corpus.sparkSession, dir, r)
+    rotate(corpus, idCol, vecCol, r)
+  }
+
   def buildPcaPq(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, dim: Int, m: Int, ksub: Int, iters: Int = 2,
       maxTrainRows: Int = 0): Unit = {
-    val spark = corpus.sparkSession
     val r = Similarity.pcaRotation(corpus, idCol, vecCol, dim,
       maxTrainRows = if (maxTrainRows > 0) maxTrainRows else 4096)
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = "pcapq")
-    writeRotation(spark, dir, r)
-    buildPq(corpus.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), r).as("__rvec")),
+    buildPq(rotatedRoot(corpus, idCol, vecCol, dir, "pcapq", r),
       "__rid", "__rvec", s"$dir/pq", m, ksub, iters)
   }
 
-  def readPcaPq(spark: SparkSession, dir: String): PcaPqIndex = {
-    require(readLayout(spark, dir) == "pcapq",
-      s"$dir is not a PCA-PQ index — each layout has its own reader")
-    PcaPqIndex(readRotation(spark, dir), s"$dir/pq", dir)
-  }
-
-  /** PCA-PQ top-k: queries rotated against the stored matrix, then the
-    * standard persisted-PQ ADC path over the rotated codes. `where`
-    * filters the stored codes pre-scoring ([[pqTopK]]'s contract —
-    * rotation touches vectors, not ids, so id predicates pass through
-    * unchanged).
-    */
-  def pcaPqTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      where: Column = lit(true)): DataFrame = {
-    val idx = readPcaPq(spark, dir)
-    pqTopK(spark, idx.pqDir,
-      queries.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
-      "__rid", "__rvec", k, where)
-  }
-
-  // ------------------------------------------------------------- OPQ
-  /** OPQ index (FAISS `OPQMatrix` + `IndexPreTransform` composition):
-    * the [[Similarity.opqRotation]] alternating-minimization rotation —
-    * the transform PCA-PQ only approximates — persisted in the same
-    * rotation + nested-PQ layout as PCA-PQ, so serving, maintenance and
-    * compaction all reuse that machinery. Final codebooks are retrained
-    * DISTRIBUTED over the full rotated corpus (the [[buildPcaPq]]
-    * discipline); the driver-sample codebooks exist only inside the
-    * rotation's training loop.
+  /** Final codebooks are retrained DISTRIBUTED over the full rotated
+    * corpus (the [[buildPcaPq]] discipline); the driver-sample codebooks
+    * exist only inside the rotation's training loop.
     */
   def buildOpq(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, dim: Int, m: Int, ksub: Int, iters: Int = 2,
       opqIters: Int = 3, maxTrainRows: Int = 0): Unit = {
-    val spark = corpus.sparkSession
     val r = Similarity.opqRotation(corpus, idCol, vecCol, dim, m, ksub,
       opqIters, maxTrainRows = if (maxTrainRows > 0) maxTrainRows else 1024)
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = "opq")
-    writeRotation(spark, dir, r)
-    buildPq(corpus.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), r).as("__rvec")),
+    buildPq(rotatedRoot(corpus, idCol, vecCol, dir, "opq", r),
       "__rid", "__rvec", s"$dir/pq", m, ksub, iters)
   }
 
-  def readOpq(spark: SparkSession, dir: String): PcaPqIndex = {
-    require(readLayout(spark, dir) == "opq",
-      s"$dir is not an OPQ index — each layout has its own reader")
-    PcaPqIndex(readRotation(spark, dir), s"$dir/pq", dir)
-  }
-
-  /** OPQ top-k — identical query path to [[pcaPqTopK]] under the OPQ
-    * rotation: rotate queries, ADC over the nested PQ index.
-    */
-  def opqTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      where: Column = lit(true)): DataFrame = {
-    val idx = readOpq(spark, dir)
-    pqTopK(spark, idx.pqDir,
-      queries.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
-      "__rid", "__rvec", k, where)
-  }
-
-  /** OPQ × IVF-PQ — the FAISS production index string
-    * (`OPQm,IVFnlist,PQm`): the learned rotation in front of the
-    * cluster-partitioned codes layout, so the serving path composes
-    * BOTH scale levers — nprobe partition pruning AND the
-    * rotation-conditioned quantizer. Coarse centroids and codebooks
-    * train in the ROTATED space; queries rotate once, then ride the
-    * standard IVF-PQ pruned ADC path.
+  /** The serving path composes BOTH scale levers — nprobe partition
+    * pruning AND the rotation-conditioned quantizer. Coarse centroids and
+    * codebooks train in the ROTATED space; queries rotate once, then ride
+    * the standard IVF-PQ pruned ADC path.
     */
   def buildOpqIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, dim: Int, nlist: Int, m: Int, ksub: Int, iters: Int = 2,
       opqIters: Int = 3, maxTrainRows: Int = 0): Unit = {
-    val spark = corpus.sparkSession
     val r = Similarity.opqRotation(corpus, idCol, vecCol, dim, m, ksub,
       opqIters, maxTrainRows = if (maxTrainRows > 0) maxTrainRows else 1024)
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = "opqivfpq")
-    writeRotation(spark, dir, r)
-    buildIvfPq(corpus.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), r).as("__rvec")),
+    buildIvfPq(rotatedRoot(corpus, idCol, vecCol, dir, "opqivfpq", r),
       "__rid", "__rvec", s"$dir/ivfpq", nlist, m, ksub, iters)
   }
 
-  def readOpqIvfPq(spark: SparkSession, dir: String): PcaPqIndex = {
-    require(readLayout(spark, dir) == "opqivfpq",
-      s"$dir is not an OPQ×IVF-PQ index — each layout has its own reader")
-    PcaPqIndex(readRotation(spark, dir), s"$dir/ivfpq", dir)
+  /** Load any rotated layout: its rotation and nested index dir. */
+  def readRotated(spark: SparkSession, dir: String): RotatedIndex = {
+    val nested = layouts.get(readLayout(spark, dir)).flatMap(_.nested)
+    require(nested.isDefined, s"$dir is not a rotated index (pcapq/opq/opqivfpq)")
+    RotatedIndex(readRotation(spark, dir), s"$dir/${nested.get}", dir)
+  }
+
+  /** Top-k over a rotated flat-PQ index (`pcapq` or `opq`): queries
+    * rotated against the stored matrix, then the standard persisted-PQ
+    * ADC path over the rotated codes. `where` filters the stored codes
+    * pre-scoring ([[pqTopK]]'s contract — rotation touches vectors, not
+    * ids, so id predicates pass through unchanged).
+    */
+  def rotatedPqTopK(spark: SparkSession, dir: String, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      where: Column = lit(true)): DataFrame = {
+    val idx = readRotated(spark, dir)
+    pqTopK(spark, idx.pqDir, rotate(queries, idCol, vecCol, idx.rotation),
+      "__rid", "__rvec", k, where)
   }
 
   /** Rotate queries against the stored matrix, then the partition-pruned
@@ -821,76 +830,20 @@ object AnnIndex {
   def opqIvfPqTopK(spark: SparkSession, dir: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       where: Column = lit(true)): DataFrame = {
-    val idx = readOpqIvfPq(spark, dir)
+    val idx = readRotated(spark, dir)
     ivfPqTopK(spark, readIvfPq(spark, idx.pqDir),
-      queries.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
+      rotate(queries, idCol, vecCol, idx.rotation),
       "__rid", "__rvec", k, nprobe, where)
   }
 
-  /** [[appendIvfPq]] through the OPQ rotation (frozen rotation, coarse
-    * quantizer and codebooks).
+  /** The rotated layouts' [[append]]: rotate through the frozen rotation
+    * and forward to the nested index's own append.
     */
-  def appendOpqIvfPq(spark: SparkSession, dir: String, rows: DataFrame,
+  private def appendRotated(spark: SparkSession, dir: String, rows: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    val idx = readOpqIvfPq(spark, dir)
-    appendIvfPq(spark, idx.pqDir,
-      rows.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
+    val idx = readRotated(spark, dir)
+    append(spark, idx.pqDir, rotate(rows, idCol, vecCol, idx.rotation),
       "__rid", "__rvec")
-  }
-
-  /** [[appendPq]] through the OPQ rotation (frozen rotation + codebooks). */
-  def appendOpq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val idx = readOpq(spark, dir)
-    appendPq(spark, idx.pqDir,
-      rows.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
-      "__rid", "__rvec")
-  }
-
-  /** [[appendPq]] through the rotation (frozen rotation + codebooks). */
-  def appendPcaPq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val idx = readPcaPq(spark, dir)
-    appendPq(spark, idx.pqDir,
-      rows.select(qcol(idCol).as("__rid"),
-        Similarity.rotateExpr(qcol(vecCol), idx.rotation).as("__rvec")),
-      "__rid", "__rvec")
-  }
-
-  def deletePcaPq(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): Unit =
-    deleteIds(spark, s"$dir/pq", ids, idCol)
-
-  def updatePcaPq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deletePcaPq(spark, dir, rows, idCol)
-    appendPcaPq(spark, dir, rows, idCol, vecCol)
-  }
-
-  def applyDiffPcaPq(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deletePcaPq(spark, dir, dels, keyCol)
-    appendPcaPq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** Compaction delegates to the wrapped PQ index (rotation untouched —
-    * it has no per-row state).
-    */
-  def compactPcaPq(spark: SparkSession, dir: String): Unit = {
-    require(readLayout(spark, dir) == "pcapq",
-      s"$dir is not a PCA-PQ index — each layout has its own compaction")
-    compactPq(spark, s"$dir/pq")
-  }
-
-  def rebuildPcaPq(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, dim: Int, m: Int, ksub: Int, iters: Int = 2): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildPcaPq(corpus, idCol, vecCol, tmp, dim, m, ksub, iters)
-    graft.operators.Upsert.swapDirs(tmp, dir)
   }
 
   // ------------------------------------------------------------ flat BQ
@@ -936,8 +889,8 @@ object AnnIndex {
     * (__id, __sig) columns, exact cosine rescore of the shortlist from
     * the same table's __vec column — [[Similarity.binarySketchTopK]]
     * semantics over the build-once layout, tombstones subtracted.
-    */
-  /** `where`: FILTERED binary-quantized search — the [[ivfTopK]]
+    *
+    * `where`: FILTERED binary-quantized search — the [[ivfTopK]]
     * predicate contract on this layout's stored columns (`__id`,
     * `__sig`, `__vec`): applied inside BOTH column-pruned scans (the
     * hamming pass and the exact rescore read the same filtered live
@@ -960,7 +913,7 @@ object AnnIndex {
       k, shortlist)
   }
 
-  /** [[appendPq]] for the BQ layout — nothing is trained, so append ==
+  /** [[append]] for the BQ layout — nothing is trained, so append ==
     * rebuild exactly (no quantization drift; same duplicate-id caller
     * contract as every append).
     */
@@ -972,46 +925,6 @@ object AnnIndex {
         Similarity.signSketch(qcol(vecCol), dim).as("__sig"),
         qcol(vecCol).as("__vec"), lit(seq).as("__seq"))
       .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  def updateBq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deleteIds(spark, dir, rows, idCol)
-    appendBq(spark, dir, rows, idCol, vecCol)
-  }
-
-  /** [[compactPq]] for the BQ layout: live rows rewritten (sketches are
-    * parameter-free — carried as stored), swap-published, tombstone log
-    * reset; all-dead refusal as in every layout.
-    */
-  def compactBq(spark: SparkSession, dir: String): Unit = {
-    require(readLayout(spark, dir) == "bq",
-      s"$dir is not a BQ index — each layout has its own compaction")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val live = requireLive(
-      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/codes")), dir)
-    writeMeta(spark, tmp, m = 0, sub = 0, nlist = -1, layout = "bq")
-    graft.util.Hfs.writeString(spark, s"$tmp/_dim",
-      readDim(spark, dir).toString)
-    live.withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[applyDiffIvfPq]] for the BQ layout. */
-  def applyDiffBq(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deleteIds(spark, dir, dels, keyCol)
-    appendBq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** [[rebuildPq]] for the BQ layout. */
-  def rebuildBq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      dim: Int): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildBq(corpus, idCol, vecCol, tmp, dim)
-    graft.operators.Upsert.swapDirs(tmp, dir)
   }
 
   // --------------------------------------------------------- IVF × SQ8
@@ -1096,7 +1009,7 @@ object AnnIndex {
     topKPerQuery(scored, "cosine_sq", "neighbor_id", k)
   }
 
-  /** [[appendPq]] for the IVF×SQ layout: assign against the FROZEN
+  /** [[append]] for the IVF×SQ layout: assign against the FROZEN
     * coarse centroids, encode against the FROZEN bounds, append into the
     * cluster partitions (same clamp caveat as [[appendSq]]).
     */
@@ -1112,143 +1025,44 @@ object AnnIndex {
       .write.mode("append").partitionBy("__cluster").parquet(s"$dir/codes")
   }
 
-  /** [[updatePq]] for the SQ layouts. */
-  def updateSq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deleteIds(spark, dir, rows, idCol)
-    appendSq(spark, dir, rows, idCol, vecCol)
-  }
-
-  def updateIvfSq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deleteIds(spark, dir, rows, idCol)
-    appendIvfSq(spark, dir, rows, idCol, vecCol)
-  }
-
-  /** [[compactPq]] for the SQ layout: bounds carried frozen, live codes
-    * rewritten, swap-published, tombstone log reset.
+  // ------------------------------------------- compaction / rebuild
+  /** Compact an index WITHOUT retraining (any layout): rewrite every row
+    * table to its live view (tombstoned and superseded generations
+    * physically dropped, sequence numbers reset to 0, cluster
+    * partitioning kept), carry the frozen side tables and sidecars over
+    * byte-for-byte, and install the result through the same two-move
+    * swap as [[rebuild]] — so readers never see a half-compacted index
+    * and the tombstone log (and `_next_seq`) reset with the new
+    * generation. This is the cheap delete-debt reclaim (one rows pass, no
+    * training, quantization quality unchanged — exactly FAISS
+    * `remove_ids`' physical rewrite); [[rebuild]] remains the quality
+    * reset. Composed roots compact their nested index ([[storeDir]]);
+    * graph stores route to [[GraphAnn.compact]]. An unknown or missing
+    * layout and an all-dead primary table ([[requireLive]]) refuse before
+    * anything is written. Serialize against other maintenance like any
+    * rebuild (object doc).
     */
-  def compactSq(spark: SparkSession, dir: String): Unit = {
-    require(readLayout(spark, dir) == "sq",
-      s"$dir is not a flat SQ index — each layout has its own compaction")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val idx = readSq(spark, dir)
-    // same refusal as the clustered layouts: compacting a fully-tombstoned
-    // index to an empty codes table is a rebuild-or-drop decision, not a
-    // compaction (the flat write keeps a schema file, but uniformity here
-    // beats an index that silently becomes permanently empty)
-    val live = requireLive(idx.codes, dir)
-    writeMeta(spark, tmp, m = 0, sub = 0, nlist = -1, layout = "sq")
-    graft.util.TinyParquet.openStore(spark, s"$dir/bounds")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/bounds")
-    live.withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[compactSq]] for the IVF×SQ layout (clustered — [[requireLive]]
-    * refuses the all-dead degenerate write like the other partitioned
-    * layouts).
-    */
-  def compactIvfSq(spark: SparkSession, dir: String): Unit = {
-    require(readLayout(spark, dir) == "ivfsq",
-      s"$dir is not an IVF×SQ index — each layout has its own compaction")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val index = readIvfSq(spark, dir)
-    val live = requireLive(
-      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.codesPath))
-        .withColumn("__seq", lit(0L))
-        .select(col("__id"), col("__codes"), col("__seq"), col("__cluster")), dir)
-    writeMeta(spark, tmp, m = 0, sub = 0, nlist = index.nlist, layout = "ivfsq")
-    index.coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    graft.util.TinyParquet.openStore(spark, s"$dir/bounds")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/bounds")
-    live.write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/codes")
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[applyDiffIvfPq]] for the SQ layouts. */
-  def applyDiffSq(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deleteIds(spark, dir, dels, keyCol)
-    appendSq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  def applyDiffIvfSq(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deleteIds(spark, dir, dels, keyCol)
-    appendIvfSq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** [[rebuildPq]] for the IVF×SQ layout. */
-  def rebuildIvfSq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      nlist: Int, iters: Int = 2, maxTrainRows: Int = 0): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildIvfSq(corpus, idCol, vecCol, tmp, nlist, iters, maxTrainRows)
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  // ------------------------------------------------------ atomic rebuild
-  /** Atomic index REBUILD: the periodic retrain that resets append
-    * drift. The new generation builds in a sibling temp directory, then
-    * replaces `dir` through the two-move swap protocol the table
-    * upserts already use ([[graft.operators.Upsert.swapDirs]]) — a
-    * concurrent reader holds either the old generation or the new one,
-    * never a half-written index (the plain builders' in-place overwrite
-    * of meta/codebooks/codes is NOT safe under concurrent reads). The
-    * swap also COMPACTS: tombstones and superseded code generations
-    * vanish with the old directory. Maintenance writers must not race
-    * the swap (object doc).
-    */
-  def rebuildPq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      m: Int, ksub: Int, iters: Int = 2, maxTrainRows: Int = 0): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildPq(corpus, idCol, vecCol, tmp, m, ksub, iters, maxTrainRows)
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[rebuildPq]] for the IVF-flat layout. */
-  def rebuildIvf(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      nlist: Int, iters: Int = 2, maxTrainRows: Int = 0): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildIvf(corpus, idCol, vecCol, tmp, nlist, iters, maxTrainRows)
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[rebuildPq]] for the IVF×PQ layout. */
-  def rebuildIvfPq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      nlist: Int, m: Int, ksub: Int, iters: Int = 2,
-      maxTrainRows: Int = 0): Unit = {
-    val tmp = dir + ".build-" + System.nanoTime()
-    buildIvfPq(corpus, idCol, vecCol, tmp, nlist, m, ksub, iters, maxTrainRows)
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  // ------------------------------------------------------------ compaction
-  /** Compact a flat-PQ index WITHOUT retraining: rewrite the codes table
-    * to its live view (tombstoned and superseded generations physically
-    * dropped, sequence numbers reset) and install the result through the
-    * same two-move swap as [[rebuildPq]] — so readers never see a
-    * half-compacted index and the tombstone log resets with the new
-    * generation. Codebooks are carried over FROZEN: this is the cheap
-    * delete-debt reclaim (one codes pass, no training, quantization
-    * quality unchanged — exactly FAISS `remove_ids`' physical rewrite);
-    * [[rebuildPq]] remains the quality reset. Serialize against other
-    * maintenance like any rebuild (object doc).
-    */
-  def compactPq(spark: SparkSession, dir: String): Unit = {
-    val layout = readLayout(spark, dir)
-    require(layout == "pq",
-      s"$dir is not a flat PQ index (layout=$layout) — each layout has its " +
-        "own compaction; compacting with the wrong op would silently drop " +
-        "the other layout's tables")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val live = readPq(spark, dir) // the live view, seq reset by writePq
-    requireLive(live.codes, dir) // all-dead = rebuild-or-drop, same as compactSq
-    writePq(live, tmp)
-    graft.operators.Upsert.swapDirs(tmp, dir)
+  def compact(spark: SparkSession, dir: String): Unit = {
+    val owner = storeDir(spark, dir)
+    val (name, layout) = layoutOf(spark, owner)
+    if (name == "graph") return GraphAnn.compact(spark, owner)
+    val (m, sub, nlist, residual) = readMeta(spark, owner)
+    val live = layout.rows.collect {
+      case (t, clustered) if graft.util.Hfs.exists(spark, s"$owner/$t") =>
+        (t, clustered, liveOnly(spark, owner,
+          graft.util.TinyParquet.openStore(spark, s"$owner/$t"))
+          .withColumn("__seq", lit(0L)))
+    }
+    // the same tombstones govern every row table: primary live ⇒ all live
+    requireLive(live.head._3, owner)
+    val tmp = owner + ".compact-" + System.nanoTime()
+    writeMeta(spark, tmp, m, sub, nlist, residual, name)
+    layout.frozen.foreach(f => graft.util.Hfs.copy(spark, s"$owner/$f", s"$tmp/$f"))
+    live.foreach { case (t, clustered, rows) =>
+      val w = rows.write.mode("overwrite")
+      (if (clustered) w.partitionBy("__cluster") else w).parquet(s"$tmp/$t")
+    }
+    graft.operators.Upsert.swapDirs(tmp, owner)
   }
 
   /** Refuse to compact a clustered layout down to ZERO live rows: an
@@ -1269,55 +1083,27 @@ object AnnIndex {
     live
   }
 
-  /** [[compactPq]] for the IVF-flat layout: coarse centroids carried
-    * frozen, live vectors rewritten into their cluster partitions.
+  /** Atomic index REBUILD: the periodic retrain that resets append
+    * drift. `build` writes the new generation into the sibling temp
+    * directory it is given (any builder, e.g.
+    * `rebuild(dir)(buildPq(corpus, "id", "vec", _, m, ksub))`), which
+    * then replaces `dir` through the two-move swap protocol the table
+    * upserts already use ([[graft.operators.Upsert.swapDirs]]) — a
+    * concurrent reader holds either the old generation or the new one,
+    * never a half-written index (the plain builders' in-place overwrite
+    * is NOT safe under concurrent reads). The swap also COMPACTS:
+    * tombstones and superseded generations vanish with the old
+    * directory. Maintenance writers must not race the swap (object doc).
     */
-  def compactIvf(spark: SparkSession, dir: String): Unit = {
-    require(readLayout(spark, dir) == "ivf",
-      s"$dir is not an IVF-flat index — each layout has its own compaction")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val index = readIvf(spark, dir)
-    val live = requireLive(
-      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.vectorsPath))
-        .withColumn("__seq", lit(0L))
-        .select(col("__id"), col("__vec"), col("__seq"), col("__cluster")), dir)
-    writeMeta(spark, tmp, m = 0, sub = 0, index.nlist)
-    index.coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    live.write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/vectors")
-    graft.operators.Upsert.swapDirs(tmp, dir)
-  }
-
-  /** [[compactPq]] for the IVF×PQ layout: coarse + codebooks carried
-    * frozen, live codes (and refine vectors, when kept) rewritten into
-    * their cluster partitions.
-    */
-  def compactIvfPq(spark: SparkSession, dir: String): Unit = {
-    val (m, sub, nlist, residual) = readMeta(spark, dir)
-    require(readLayout(spark, dir) == "ivfpq",
-      s"$dir is not an IVF×PQ index — each layout has its own compaction")
-    val tmp = dir + ".compact-" + System.nanoTime()
-    val index = readIvfPq(spark, dir)
-    val liveCodes = requireLive(
-      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, index.codesPath))
-        .withColumn("__seq", lit(0L))
-        .select(col("__id"), col("__j"), col("__code"), col("__seq"), col("__cluster")),
-      dir)
-    writeMeta(spark, tmp, m, sub, nlist, residual)
-    index.coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
-    index.codebooks.write.mode("overwrite").parquet(s"$tmp/codebooks")
-    liveCodes.write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/codes")
-    if (graft.util.Hfs.exists(spark, s"$dir/vectors"))
-      // same tombstones govern both tables: codes non-empty ⇒ vectors too
-      liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/vectors"))
-        .withColumn("__seq", lit(0L))
-        .select(col("__id"), col("__vec"), col("__seq"), col("__cluster"))
-        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$tmp/vectors")
+  def rebuild(dir: String)(build: String => Unit): Unit = {
+    val tmp = dir + ".build-" + System.nanoTime()
+    build(tmp)
     graft.operators.Upsert.swapDirs(tmp, dir)
   }
 
   // ------------------------------------------------------ tombstone debt
   /** Dead-row fraction of the index's primary table (codes, or vectors
-    * for IVF-flat): rows superseded by a tombstone or a newer generation,
+    * for IVF-flat and graph): rows superseded by a tombstone or a newer generation,
     * divided by all stored rows. 0.0 with no tombstone log (short-circuit
     * — nothing is scanned); otherwise one pass over the stored table
     * (column-pruned to id/seq) at MAINTENANCE time, which is where this
@@ -1327,8 +1113,8 @@ object AnnIndex {
     * Why measure at all: the tombstone broadcast and the dead rows
     * scanned-then-dropped on every query both grow with delete volume,
     * unbounded between rebuilds — debt is the number that says when the
-    * cheap reclaim ([[compactPq]]/Ivf/IvfPq: one rewrite, codebooks
-    * frozen) pays for itself.
+    * cheap reclaim ([[compact]]: one rewrite, quantizers frozen) pays
+    * for itself.
     */
   def tombstoneDebt(spark: SparkSession, dir: String): Double = {
     val (total, live) = storeCounts(spark, dir)
@@ -1355,22 +1141,11 @@ object AnnIndex {
     * The eager tuple form above keeps the policy callers' contract.
     */
   private def storeCountsDf(spark: SparkSession, dir: String): DataFrame = {
-    // composed layouts keep their tables AND tombstones in the nested
-    // index (deletes delegate) — route to the table-owning level the
-    // same way liveIds/compactIfNeeded do, so healthReport/sweep/fsck
-    // on a composed ROOT measure the store that actually serves
-    val owner = readLayout(spark, dir) match {
-      case "pcapq" | "opq" => s"$dir/pq"
-      case "opqivfpq"      => s"$dir/ivfpq"
-      case _               => dir
-    }
+    // healthReport/sweep/fsck on a composed ROOT measure the store that
+    // actually serves
+    val owner = storeDir(spark, dir)
     val ownerLayout = readLayout(spark, owner) // one meta read, reused
-    val table = ownerLayout match {
-      // vector-table layouts (IVF-flat, graph) have no codes table
-      case "ivf" | "graph" => s"$owner/vectors"
-      case _               => s"$owner/codes"
-    }
-    val main = tableCountsDf(spark, owner, table)
+    val main = tableCountsDf(spark, owner, primaryTable(owner, ownerLayout))
     // a graph store's fresh region ([[GraphAnn.append]]) is part of the
     // served set — debt/health that ignored it would under-price the
     // store the sweep maintains
@@ -1430,8 +1205,7 @@ object AnnIndex {
     * numerators plus one division, so the report reproduces bit-for-bit
     * (hash-matchable against a replay over the stored tables). Each
     * layout costs one metadata-light scan; nothing corpus-sized moves.
-    * PCA-PQ callers pass the nested `dir/pq` (the table-owning level,
-    * same as its maintenance entry points).
+    * Composed roots report their nested index ([[storeDir]]).
     */
   def healthReport(spark: SparkSession, layouts: Seq[(String, String)]): DataFrame = {
     require(layouts.nonEmpty, "no layouts to report")
@@ -1457,7 +1231,7 @@ object AnnIndex {
   }
 
   /** The compaction POLICY: measure [[tombstoneDebt]] and, at or above
-    * `threshold`, route to the layout's compaction; returns whether a
+    * `threshold`, run [[compact]]; returns whether a
     * compaction ran. The 0.25 default reclaims when a quarter of every
     * scan is dead weight — well before typical delete volumes threaten
     * broadcast limits — while letting steady low-rate deletes accumulate
@@ -1488,31 +1262,20 @@ object AnnIndex {
     if (tombstoneDebt(spark, dir) < threshold && deltaDebt < threshold)
       false
     else {
-      readLayout(spark, dir) match {
-        case "pq"    => compactPq(spark, dir)
-        case "ivf"   => compactIvf(spark, dir)
-        case "ivfpq" => compactIvfPq(spark, dir)
-        case "sq"    => compactSq(spark, dir)
-        case "ivfsq" => compactIvfSq(spark, dir)
-        case "bq"    => compactBq(spark, dir)
-        // pcapq keeps its tombstones in the nested dir/pq (deletes
-        // delegate), so debt at the OUTER dir is structurally 0 — the
-        // route exists so a future outer-level tombstone writer cannot
-        // turn a compaction request into an unknown-layout error
-        case "pcapq" => compactPcaPq(spark, dir)
-        case "opq"   => compactPq(spark, s"$dir/pq")
-        case "opqivfpq" => compactIvfPq(spark, s"$dir/ivfpq")
-        case "graph" => GraphAnn.compact(spark, dir)
-        case other => throw new IllegalStateException(
-          s"$dir has unknown index layout '$other'")
-      }
+      // a composed root's debt is its nested index's ([[storeDir]]), and
+      // so is the compaction
+      compact(spark, dir)
       true
     }
   }
 
   // ----------------------------------------------------- incremental append
-  /** Append new corpus rows to a persisted index WITHOUT retraining —
-    * the maintenance operation between periodic rebuilds. Codebooks
+  /** Append new corpus rows to a persisted index (any layout) WITHOUT
+    * retraining — the maintenance operation between periodic rebuilds.
+    * Dispatches on the stored layout to its encoder ([[appendPq]],
+    * [[appendIvf]], [[appendIvfPq]], [[appendSq]], [[appendIvfSq]],
+    * [[appendBq]], [[GraphAnn.append]]); rotated layouts rotate the batch
+    * and forward to their nested index. Codebooks
     * (and for the IVF layouts the coarse quantizer) are FROZEN: new
     * vectors are assigned/encoded against the stored tables and their
     * codes/vectors appended to the on-disk layout (parquet append
@@ -1527,14 +1290,21 @@ object AnnIndex {
     * must serialize maintenance against rebuilds of the same index
     * (object doc).
     *
-    * Re-adding an id that is already live MUST go through [[updatePq]] /
-    * [[updateIvfPq]] (tombstone + re-append), NEVER a bare append:
+    * Re-adding an id that is already live MUST go through [[update]]
+    * (tombstone + re-append), NEVER a bare append:
     * liveness only subtracts TOMBSTONED generations ([[liveOnly]]), so a
     * duplicate append leaves two live generations of the id — the raw
     * ADC sum then double-counts its per-subspace partials (a corrupt,
     * inflated score) and the residual path emits duplicate neighbor
     * rows. Guarding this inside append would cost a corpus semi-join per
     * batch; FAISS `add_with_ids` makes the same caller-owns-it trade.
+    */
+  def append(spark: SparkSession, dir: String, rows: DataFrame,
+      idCol: String, vecCol: String): Unit =
+    layoutOf(spark, dir)._2.encode(spark, dir, rows, idCol, vecCol)
+
+  /** [[append]] for the flat-PQ layout: encode against the frozen
+    * codebooks.
     */
   def appendPq(spark: SparkSession, dir: String, rows: DataFrame,
       idCol: String, vecCol: String): Unit = {
@@ -1545,7 +1315,7 @@ object AnnIndex {
       .write.mode("append").parquet(s"$dir/codes")
   }
 
-  /** [[appendPq]] for the IVF-flat layout: assign against the frozen
+  /** [[append]] for the IVF-flat layout: assign against the frozen
     * coarse centroids, append into the cluster partitions.
     */
   def appendIvf(spark: SparkSession, dir: String, rows: DataFrame,
@@ -1558,7 +1328,7 @@ object AnnIndex {
       .write.mode("append").partitionBy("__cluster").parquet(index.vectorsPath)
   }
 
-  /** [[appendPq]] for the IVF×PQ layout: frozen coarse quantizer AND
+  /** [[append]] for the IVF×PQ layout: frozen coarse quantizer AND
     * frozen codebooks; one assign + one encode of the new rows, appended
     * into the cluster partitions. An index built with `keepVectors` also
     * gets the rows' exact vectors appended, so the refine path stays
@@ -1636,35 +1406,21 @@ object AnnIndex {
   }
 
   // ------------------------------------------------------ delete / update
-  /** Update (re-embed) existing rows in a persisted flat-PQ index:
+  /** Update (re-embed) existing rows in a persisted index (any layout):
     * tombstone the old generation, then re-encode the new rows against
-    * the frozen codebooks — the delete's sequence number supersedes the
-    * old code rows and the re-append lands one past it, so exactly the
-    * new encoding is live (FAISS has no in-place update either;
-    * remove_ids + add is the documented recipe). Rows whose id was never
-    * indexed insert cleanly (their tombstone kills nothing).
+    * the frozen quantizers ([[append]]) — the delete's sequence number
+    * supersedes the old rows and the re-append lands one past it, so
+    * exactly the new encoding is live (FAISS has no in-place update
+    * either; remove_ids + add is the documented recipe). A re-embedded
+    * row may move to a DIFFERENT coarse cluster; the old cluster's stale
+    * rows are dead via the tombstone, so partition pruning stays correct.
+    * Rows whose id was never indexed insert cleanly (their tombstone
+    * kills nothing).
     */
-  def updatePq(spark: SparkSession, dir: String, rows: DataFrame,
+  def update(spark: SparkSession, dir: String, rows: DataFrame,
       idCol: String, vecCol: String): Unit = {
     deleteIds(spark, dir, rows, idCol)
-    appendPq(spark, dir, rows, idCol, vecCol)
-  }
-
-  /** [[updatePq]] for the IVF-flat layout. */
-  def updateIvf(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deleteIds(spark, dir, rows, idCol)
-    appendIvf(spark, dir, rows, idCol, vecCol)
-  }
-
-  /** [[updatePq]] for the IVF×PQ layout. A re-embedded row may move to a
-    * DIFFERENT coarse cluster; the old cluster's stale codes are dead via
-    * the tombstone, so partition pruning stays correct.
-    */
-  def updateIvfPq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    deleteIds(spark, dir, rows, idCol)
-    appendIvfPq(spark, dir, rows, idCol, vecCol)
+    append(spark, dir, rows, idCol, vecCol)
   }
 
   /** Split a [[graft.operators.Upsert.snapshotDiff]] CDC frame (`change`
@@ -1684,32 +1440,16 @@ object AnnIndex {
     (dels, upserts)
   }
 
-  /** Apply a snapshotDiff CDC frame to a persisted IVF×PQ index — the
-    * snapshotDiff → index maintenance loop: deletes tombstone, updates
-    * tombstone + re-encode, inserts append. `rows` must carry the new
-    * embeddings for the insert/update keys.
+  /** Apply a snapshotDiff CDC frame to a persisted index (any layout) —
+    * the snapshotDiff → index maintenance loop: deletes tombstone,
+    * updates tombstone + re-encode, inserts append. `rows` must carry the
+    * new embeddings for the insert/update keys.
     */
-  def applyDiffIvfPq(spark: SparkSession, dir: String, diff: DataFrame,
+  def applyDiff(spark: SparkSession, dir: String, diff: DataFrame,
       keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
     val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
     deleteIds(spark, dir, dels, keyCol)
-    appendIvfPq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** [[applyDiffIvfPq]] for the flat-PQ layout. */
-  def applyDiffPq(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deleteIds(spark, dir, dels, keyCol)
-    appendPq(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** [[applyDiffIvfPq]] for the IVF-flat layout. */
-  def applyDiffIvf(spark: SparkSession, dir: String, diff: DataFrame,
-      keyCol: String, rows: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
-    deleteIds(spark, dir, dels, keyCol)
-    appendIvf(spark, dir, upserts, idCol, vecCol)
+    append(spark, dir, upserts, idCol, vecCol)
   }
 
   /** Build-and-query convenience for tests/gates: stages the index under
@@ -1724,35 +1464,6 @@ object AnnIndex {
   }
 
   // --------------------------------------------------- recall reporting
-  /** Measured serving-quality report: recall@k and rank agreement of
-    * each served ANN layout against a reference (brute-force) top-k, at
-    * the layouts' OPERATING parameters — the number a production vector
-    * -store dashboard tracks per index build (the mechanics gates prove
-    * full-probe == brute; this measures what the approximation actually
-    * costs at the nprobe/shortlist a user runs).
-    *
-    * `results` are (layout name, served top-k frame) pairs and
-    * `reference` the exact top-k, all in the standard ranked shape
-    * (`query_id`, `rank`, `neighbor_id`, score) that every topK
-    * operator here emits; rows with rank > k are ignored so callers can
-    * pass wider frames.
-    *
-    * Metrics are INTEGER-NUMERATOR by design (the hash-match
-    * discipline): `hits` = |served ∩ reference| and `rank_footrule` =
-    * Σ |rank_served − rank_ref| over the intersection (Spearman's
-    * footrule restricted to shared neighbors — 0 iff the shared lists
-    * agree in order) are exact counts, and `recall_at_k` = hits /
-    * possible is ONE IEEE division of those counts, so the whole row
-    * reproduces bit-for-bit in any engine.
-    *
-    * Scale shape: per layout one (query_id, neighbor_id)-keyed join of
-    * two (n_queries × k)-sized frames plus a scalar aggregate — nothing
-    * corpus-sized; the report costs less than any single search it
-    * measures.
-    *
-    * Output: (`layout`, `k`, `n_queries`, `possible`, `hits`,
-    * `recall_at_k`, `rank_footrule`), one row per layout in input order.
-    */
   /** Measured recall@k of the served IVF×PQ path against the index's
     * OWN live exact vectors (requires a `keepVectors = true` build) —
     * the counter pair a recall monitor logs: (hits, possible). Integer
@@ -1833,6 +1544,35 @@ object AnnIndex {
     }.reduce(_ unionByName _)
   }
 
+  /** Measured serving-quality report: recall@k and rank agreement of
+    * each served ANN layout against a reference (brute-force) top-k, at
+    * the layouts' OPERATING parameters — the number a production vector
+    * -store dashboard tracks per index build (the mechanics gates prove
+    * full-probe == brute; this measures what the approximation actually
+    * costs at the nprobe/shortlist a user runs).
+    *
+    * `results` are (layout name, served top-k frame) pairs and
+    * `reference` the exact top-k, all in the standard ranked shape
+    * (`query_id`, `rank`, `neighbor_id`, score) that every topK
+    * operator here emits; rows with rank > k are ignored so callers can
+    * pass wider frames.
+    *
+    * Metrics are INTEGER-NUMERATOR by design (the hash-match
+    * discipline): `hits` = |served ∩ reference| and `rank_footrule` =
+    * Σ |rank_served − rank_ref| over the intersection (Spearman's
+    * footrule restricted to shared neighbors — 0 iff the shared lists
+    * agree in order) are exact counts, and `recall_at_k` = hits /
+    * possible is ONE IEEE division of those counts, so the whole row
+    * reproduces bit-for-bit in any engine.
+    *
+    * Scale shape: per layout one (query_id, neighbor_id)-keyed join of
+    * two (n_queries × k)-sized frames plus a scalar aggregate — nothing
+    * corpus-sized; the report costs less than any single search it
+    * measures.
+    *
+    * Output: (`layout`, `k`, `n_queries`, `possible`, `hits`,
+    * `recall_at_k`, `rank_footrule`), one row per layout in input order.
+    */
   def recallReport(results: Seq[(String, DataFrame)], reference: DataFrame,
       k: Int): DataFrame = {
     require(results.nonEmpty, "no layouts to report")

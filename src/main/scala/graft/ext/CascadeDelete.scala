@@ -103,13 +103,13 @@ object CascadeDelete {
     // race (AnnIndex.deleteIds does a non-atomic read-modify-write of
     // _next_seq; a misordered seq kills a later append). The contract
     // is ENFORCED, not assumed: ANN roots resolve through the composed-
-    // layout rerouting deleteIds itself applies (a pcapq/opq root and
-    // its nested pq dir are the SAME physical store), and the resolved
-    // set must be pairwise distinct and non-nested across all four
-    // target families.
+    // layout routing deleteIds itself applies (AnnIndex.storeDir: a
+    // pcapq/opq root and its nested pq dir are the SAME physical
+    // store), and the resolved set must be pairwise distinct and
+    // non-nested across all four target families.
     locally {
       val resolved: Seq[String] =
-        targets.annIndexes.map(d => AnnIndex.tombstoneOwnerDir(spark, d)) ++
+        targets.annIndexes.map(d => AnnIndex.storeDir(spark, d)) ++
         targets.textIndexes ++ targets.dedupStores ++
         targets.quantileStores.map(_.storeDir)
       val ds = resolved.map(_.replaceAll("/+$", ""))

@@ -52,42 +52,21 @@ object StoreMaintenance {
     (r.getLong(0), r.getLong(1), r.getDouble(2))
   }
 
-  /** Sweep the fleet: per store, debt at or above `threshold` routes to
-    * that family's compaction ([[AnnIndex.compactIfNeeded]] /
-    * [[TextIndex.compactIfNeeded]] /
-    * [[graft.streaming.DocStreams.compactDedupStore]]); the report row
-    * carries before/after counts so the caller can both audit the
-    * decision (debt_before vs threshold) and verify the rewrite did its
-    * job (total_after == live_before, debt_after == 0 for every
-    * compacted store). Same caller contract as each per-store policy:
-    * serialize the sweep against appends/streams on the same stores.
-    * The degenerate fully-tombstoned store still refuses to compact
-    * (each family's requireLive guard) — a rebuild-or-drop decision the
-    * sweep propagates loudly rather than masking.
-    */
   /** Live DISTINCT-id view of one store under its family's tombstone
     * semantics — the membership [[fsck]] audits. One narrow scan +
     * the per-id tombstone broadcast; ids only, never payload columns.
     */
   private def liveIds(spark: SparkSession, ref: StoreRef): DataFrame = ref.kind match {
     case "ann" =>
-      // composed layouts keep their tables (and tombstones) in the
-      // nested index — route like compactIfNeeded does, so an fsck of
-      // an OPQ/PCA-PQ ROOT audits the store that actually serves
-      val dir = AnnIndex.readLayout(spark, ref.dir) match {
-        case "pcapq" | "opq" => s"${ref.dir}/pq"
-        case "opqivfpq" => s"${ref.dir}/ivfpq"
-        case _ => ref.dir
-      }
-      val table = AnnIndex.readLayout(spark, dir) match {
-        case "ivf" | "graph" => s"$dir/vectors"
-        case _               => s"$dir/codes"
-      }
-      val main = AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, table))
+      // an fsck of a composed ROOT audits the store that actually serves
+      val dir = AnnIndex.storeDir(spark, ref.dir)
+      val layout = AnnIndex.readLayout(spark, dir)
+      val main = AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark,
+          AnnIndex.primaryTable(dir, layout)))
         .select(col("__id").cast("long").as("__id"))
       // a graph store's fresh region serves — its live ids are members
       val withDelta =
-        if (AnnIndex.readLayout(spark, dir) == "graph" &&
+        if (layout == "graph" &&
             graft.util.Hfs.exists(spark, s"$dir/delta"))
           main.unionByName(
             AnnIndex.liveOnly(spark, dir, graft.util.TinyParquet.openStore(spark, s"$dir/delta"))
@@ -168,6 +147,19 @@ object StoreMaintenance {
     }).reduce(_ unionByName _)
   }
 
+  /** Sweep the fleet: per store, debt at or above `threshold` routes to
+    * that family's compaction ([[AnnIndex.compactIfNeeded]] /
+    * [[TextIndex.compactIfNeeded]] /
+    * [[graft.streaming.DocStreams.compactDedupStore]]); the report row
+    * carries before/after counts so the caller can both audit the
+    * decision (debt_before vs threshold) and verify the rewrite did its
+    * job (total_after == live_before, debt_after == 0 for every
+    * compacted store). Same caller contract as each per-store policy:
+    * serialize the sweep against appends/streams on the same stores.
+    * The degenerate fully-tombstoned store still refuses to compact
+    * (each family's requireLive guard) — a rebuild-or-drop decision the
+    * sweep propagates loudly rather than masking.
+    */
   def sweep(spark: SparkSession, stores: Seq[StoreRef],
       threshold: Double = 0.25): DataFrame = {
     require(stores.nonEmpty, "no stores to sweep")

@@ -57,7 +57,7 @@ object ExtensionQueries {
     // change to the staging recipe below (index layout, geometry, the
     // append/delete fixture splits) must bump it, or an old staged /tmp
     // index would silently gate the new code against the old layout
-    val done = new java.io.File(s"$tmp/_INDEX_DONE_v18a_bitextivf")
+    val done = new java.io.File(s"$tmp/_INDEX_DONE_v19_annlayout")
     if (done.exists()) return tmp
     // a stale generation (older marker or half-built) must not leak files
     // (e.g. append-mode tombstones) into the fresh build
@@ -263,7 +263,7 @@ object ExtensionQueries {
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
         AnnIndex.deleteIds(s, s"$tmp/bq_maint16",
           emb16.filter(col("vec_id").isin(3, 11)), "vec_id")
-        AnnIndex.updateBq(s, s"$tmp/bq_maint16",
+        AnnIndex.update(s, s"$tmp/bq_maint16",
           emb16.filter(col("vec_id") === 6), "vec_id", "embedding")
       }),
       // the small gate indexes over the 16-vector sub-corpus: lossless
@@ -303,12 +303,12 @@ object ExtensionQueries {
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
         AnnIndex.deleteIds(s, s"$tmp/ivfpq_del16",
           emb16.filter(col("vec_id").isin(3, 11)), "vec_id")
-        AnnIndex.updateIvfPq(s, s"$tmp/ivfpq_del16",
+        AnnIndex.update(s, s"$tmp/ivfpq_del16",
           emb16.filter(col("vec_id") === 6), "vec_id", "embedding")
       }),
       // the SAME delete/update history on the flat-PQ layout, driven
       // through the CDC entry point: one snapshotDiff-shaped frame
-      // (delete {3, 11}, update {6}) routed by applyDiffPq — the
+      // (delete {3, 11}, update {6}) routed by applyDiff — the
       // x_knn_pq_delete gate pins both layouts against one
       // frozen-codebook reference encode
       "pq_del16" -> (() => {
@@ -316,7 +316,7 @@ object ExtensionQueries {
           m = 8, ksub = 8, iters = 1, modelIn = Some(pqm8))
         AnnIndex.appendPq(s, s"$tmp/pq_del16",
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
-        AnnIndex.applyDiffPq(s, s"$tmp/pq_del16",
+        AnnIndex.applyDiff(s, s"$tmp/pq_del16",
           emb16.filter(col("vec_id").isin(3, 11))
             .select(col("vec_id"), lit("delete").as("change"))
             .unionByName(emb16.filter(col("vec_id") === 6)
@@ -1631,7 +1631,7 @@ object ExtensionQueries {
           .localCheckpoint(eager = true)
       },
       // the flat-PQ fixture carries the same history applied through the
-      // CDC entry point (applyDiffPq); same frozen-codebook reference
+      // CDC entry point (applyDiff); same frozen-codebook reference
       // discipline
       () => {
         val pqModel = AnnIndex.readPq(s, s"$idx/pq_del16")
@@ -4589,7 +4589,7 @@ object ExtensionQueries {
       |SELECT query_id, rank, neighbor_id, cosine_pq FROM ranked WHERE rank <= 5""".stripMargin) {
     (s, dir) =>
       val idx = stageAnnIndexes(s, dir)
-      AnnIndex.pcaPqTopK(s, s"$idx/pcapq",
+      AnnIndex.rotatedPqTopK(s, s"$idx/pcapq",
         Tables.embeddings(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", 5)
   }
@@ -4637,7 +4637,7 @@ object ExtensionQueries {
       |SELECT query_id, rank, neighbor_id, cosine_pq FROM ranked WHERE rank <= 5""".stripMargin) {
     (s, dir) =>
       val idx = stageAnnIndexes(s, dir)
-      AnnIndex.opqTopK(s, s"$idx/opq",
+      AnnIndex.rotatedPqTopK(s, s"$idx/opq",
         Tables.embeddings(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", 5)
   }
@@ -4710,7 +4710,7 @@ object ExtensionQueries {
   val knnPcaPqIsometry =
     q("x_knn_pcapq_isometry", "SELECT true AS isometry_ok") { (s, dir) =>
       val idx = stageAnnIndexes(s, dir)
-      val r = AnnIndex.readPcaPq(s, s"$idx/pcapq").rotation
+      val r = AnnIndex.readRotated(s, s"$idx/pcapq").rotation
       val emb = Tables.embeddings(s, dir)
       val rot = emb.select(col("vec_id"),
         Similarity.rotateExpr(col("embedding"), r).as("embedding"))
@@ -4943,7 +4943,7 @@ object ExtensionQueries {
       |SELECT query_id, rank, neighbor_id, cosine_pq FROM ranked WHERE rank <= 5""".stripMargin) {
     (s, dir) =>
       val idx = stageAnnIndexes(s, dir)
-      AnnIndex.pcaPqTopK(s, s"$idx/pcapq",
+      AnnIndex.rotatedPqTopK(s, s"$idx/pcapq",
         Tables.embeddings(s, dir).filter(col("vec_id") < 5),
         "vec_id", "embedding", 5,
         where = pmod(col("__id"), lit(2)) === 0)
@@ -5400,9 +5400,9 @@ object ExtensionQueries {
         queries, "vec_id", "embedding", 5, nprobe = 4)),
       "bq" -> (() => AnnIndex.bqTopK(s, s"$idx/bq", queries, "vec_id", "embedding", 5,
         shortlist = 50)),
-      "pcapq" -> (() => AnnIndex.pcaPqTopK(s, s"$idx/pcapq", queries,
+      "pcapq" -> (() => AnnIndex.rotatedPqTopK(s, s"$idx/pcapq", queries,
         "vec_id", "embedding", 5)),
-      "opq" -> (() => AnnIndex.opqTopK(s, s"$idx/opq", queries,
+      "opq" -> (() => AnnIndex.rotatedPqTopK(s, s"$idx/opq", queries,
         "vec_id", "embedding", 5)),
       "graph" -> (() => graft.ext.GraphAnn.topK(s, s"$idx/graph", queries,
         "vec_id", "embedding", 5, beamWidth = 16, hops = 6)),

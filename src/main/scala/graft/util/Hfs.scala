@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * access consistent on every scheme (local paths resolve to the local FS
   * and behave exactly as before).
   *
-  * Mutation helpers (`touch`, `delete`, `rename`) cover the maintenance
-  * markers and staged-generation publishes. NOTE `rename` is only atomic
+  * Mutation helpers (`touch`, `delete`, `rename`, `copy`) cover the
+  * maintenance markers and staged-generation publishes. NOTE `rename` is only atomic
   * where the underlying store's rename is (local FS, HDFS); the index
   * SWAP protocol ([[graft.operators.Upsert.swapDirs]]) additionally needs
   * `ATOMIC_MOVE` and therefore still requires a local path — these helpers
@@ -121,6 +121,16 @@ object Hfs {
   def rename(spark: SparkSession, src: String, dst: String): Boolean = {
     val (f, s) = fs(spark, src)
     f.rename(s, new Path(dst))
+  }
+
+  /** Recursive copy of a file or directory within its filesystem; throws
+    * when `src` is absent or `dst` exists. Carries a frozen side table or
+    * sidecar into a new index generation byte-for-byte, with no Spark job.
+    */
+  def copy(spark: SparkSession, src: String, dst: String): Unit = {
+    val (f, s) = fs(spark, src)
+    org.apache.hadoop.fs.FileUtil.copy(f, s, f, new Path(dst), false, conf(spark))
+    ()
   }
 
   /** Create a directory and its parents (no-op when present). */

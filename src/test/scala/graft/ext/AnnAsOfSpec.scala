@@ -28,7 +28,7 @@ class AnnAsOfSpec extends SparkSpec {
     AnnIndex.appendPq(spark, dir, base.filter(col("vec_id") >= 8),
       "vec_id", "embedding")
     AnnIndex.deleteIds(spark, dir, Seq(3L, 11L).toDF("vec_id"), "vec_id")
-    AnnIndex.updatePq(spark, dir, vecs(Seq(6L), 99), "vec_id", "embedding")
+    AnnIndex.update(spark, dir, vecs(Seq(6L), 99), "vec_id", "embedding")
   }
 
   private def liveIds(dir: String, asOf: Option[Long]): Set[Long] =

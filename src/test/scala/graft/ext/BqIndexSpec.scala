@@ -55,7 +55,7 @@ class BqIndexSpec extends SparkSpec {
     val dir = tmpDir("bqdel")
     AnnIndex.buildBq(c, "vec_id", "embedding", dir, dim = 64)
     AnnIndex.deleteIds(spark, dir, c.filter($"vec_id" >= 20), "vec_id")
-    AnnIndex.updateBq(spark, dir, c.filter($"vec_id" === 5), "vec_id", "embedding")
+    AnnIndex.update(spark, dir, c.filter($"vec_id" === 5), "vec_id", "embedding")
     val q = c.filter($"vec_id" < 2)
     val live = c.filter($"vec_id" < 20)
     val expected = topMap(
@@ -78,7 +78,7 @@ class BqIndexSpec extends SparkSpec {
       .select($"vec_id", lit("delete").as("change"))
       .unionByName(c.filter($"vec_id" === 7)
         .select($"vec_id", lit("update").as("change")))
-    AnnIndex.applyDiffBq(spark, dir, diff, "vec_id", c, "vec_id", "embedding")
+    AnnIndex.applyDiff(spark, dir, diff, "vec_id", c, "vec_id", "embedding")
     val q = c.filter($"vec_id" === 0)
     val live = c.filter(!$"vec_id".isin(1, 2))
     topMap(AnnIndex.bqTopK(spark, dir, q, "vec_id", "embedding", 5,
@@ -93,7 +93,5 @@ class BqIndexSpec extends SparkSpec {
     AnnIndex.buildSq(c, "vec_id", "embedding", dir)
     an[IllegalArgumentException] should be thrownBy
       AnnIndex.readBq(spark, dir)
-    an[IllegalArgumentException] should be thrownBy
-      AnnIndex.compactBq(spark, dir)
   }
 }

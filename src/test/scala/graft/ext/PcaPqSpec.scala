@@ -62,7 +62,7 @@ class PcaPqSpec extends SparkSpec {
     val dir = tmpDir("graft_opq")
     AnnIndex.buildOpq(c, "vec_id", "embedding", dir, dim = 16, m = 4,
       ksub = 16, iters = 1, opqIters = 2)
-    val served = AnnIndex.opqTopK(spark, dir, c.filter($"vec_id" < 3),
+    val served = AnnIndex.rotatedPqTopK(spark, dir, c.filter($"vec_id" < 3),
         "vec_id", "embedding", 5)
       .select("query_id", "rank", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -73,13 +73,13 @@ class PcaPqSpec extends SparkSpec {
     served shouldBe brute
     // delete routes through the nested pq; the deleted id stops serving
     AnnIndex.deleteIds(spark, dir, Seq(7L).toDF("vec_id"), "vec_id")
-    AnnIndex.opqTopK(spark, dir, c.filter($"vec_id" < 3),
+    AnnIndex.rotatedPqTopK(spark, dir, c.filter($"vec_id" < 3),
         "vec_id", "embedding", 5)
       .select("neighbor_id").as[Long].collect() should not contain 7L
     // append through the frozen rotation + codebooks re-serves it
-    AnnIndex.appendOpq(spark, dir, c.filter($"vec_id" === 7),
+    AnnIndex.append(spark, dir, c.filter($"vec_id" === 7),
       "vec_id", "embedding")
-    AnnIndex.opqTopK(spark, dir, c.filter($"vec_id" < 3),
+    AnnIndex.rotatedPqTopK(spark, dir, c.filter($"vec_id" < 3),
         "vec_id", "embedding", 16)
       .select("neighbor_id").as[Long].collect() should contain(7L)
   }
@@ -105,7 +105,7 @@ class PcaPqSpec extends SparkSpec {
         "vec_id", "embedding", 5, nprobe = 4)
       .select("neighbor_id").as[Long].collect() should not contain 9L
     // append through the frozen rotation + quantizers re-serves it
-    AnnIndex.appendOpqIvfPq(spark, dir, c.filter($"vec_id" === 9),
+    AnnIndex.append(spark, dir, c.filter($"vec_id" === 9),
       "vec_id", "embedding")
     AnnIndex.opqIvfPqTopK(spark, dir, c.filter($"vec_id" < 3),
         "vec_id", "embedding", 16, nprobe = 4)
@@ -152,22 +152,22 @@ class PcaPqSpec extends SparkSpec {
     AnnIndex.buildPcaPq(c, "vec_id", "embedding", dir, dim = 16, m = 4,
       ksub = 16, iters = 1)
     val q = c.filter($"vec_id" < 2)
-    val served = AnnIndex.pcaPqTopK(spark, dir, q, "vec_id", "embedding", 5)
+    val served = AnnIndex.rotatedPqTopK(spark, dir, q, "vec_id", "embedding", 5)
     val brute = Similarity.bruteForceTopK(q, c, "vec_id", "embedding", 5)
     served.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet shouldBe
       brute.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // delete two ids through the wrapper; served must equal brute on the live set
-    AnnIndex.deletePcaPq(spark, dir, c.filter($"vec_id".isin(7, 9)), "vec_id")
+    AnnIndex.deleteIds(spark, dir, c.filter($"vec_id".isin(7, 9)), "vec_id")
     val live = c.filter(!$"vec_id".isin(7, 9))
-    val served2 = AnnIndex.pcaPqTopK(spark, dir, q, "vec_id", "embedding", 5)
+    val served2 = AnnIndex.rotatedPqTopK(spark, dir, q, "vec_id", "embedding", 5)
     served2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet shouldBe
       Similarity.bruteForceTopK(q, live, "vec_id", "embedding", 5)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     // debt/compaction act on the nested plain-pq index
     AnnIndex.tombstoneDebt(spark, s"$dir/pq") should be > 0.0
-    AnnIndex.compactPcaPq(spark, dir)
+    AnnIndex.compact(spark, dir)
     AnnIndex.tombstoneDebt(spark, s"$dir/pq") shouldBe 0.0
-    AnnIndex.pcaPqTopK(spark, dir, q, "vec_id", "embedding", 5)
+    AnnIndex.rotatedPqTopK(spark, dir, q, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet shouldBe
       served2.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
   }
@@ -181,7 +181,7 @@ class PcaPqSpec extends SparkSpec {
     // routing this wrote root tombstones nothing ever subtracted and the
     // deleted rows kept being served
     AnnIndex.deleteIds(spark, dir, c.filter($"vec_id".isin(7, 9)), "vec_id")
-    val servedIds = AnnIndex.pcaPqTopK(spark, dir,
+    val servedIds = AnnIndex.rotatedPqTopK(spark, dir,
         c.filter($"vec_id" < 2), "vec_id", "embedding", 16)
       .select(col("neighbor_id")).distinct().as[Long].collect().toSet
     servedIds should not contain 7L
@@ -212,10 +212,10 @@ class PcaPqSpec extends SparkSpec {
     val dir = tmpDir("pcapqapp")
     AnnIndex.buildPcaPq(c.filter($"vec_id" < 12), "vec_id", "embedding", dir,
       dim = 16, m = 4, ksub = 12, iters = 1)
-    AnnIndex.appendPcaPq(spark, dir, c.filter($"vec_id" >= 12),
+    AnnIndex.append(spark, dir, c.filter($"vec_id" >= 12),
       "vec_id", "embedding")
     val q = c.filter($"vec_id" < 2)
-    val idx = AnnIndex.readPcaPq(spark, dir)
+    val idx = AnnIndex.readRotated(spark, dir)
     // reference: one-shot encode of the FULL rotated corpus against the
     // stored (frozen) codebooks
     val rotAll = c.select(col("vec_id"),
@@ -228,7 +228,7 @@ class PcaPqSpec extends SparkSpec {
       Similarity.PqModel(model.centroids,
         Similarity.pqEncode(rotAll, "vec_id", "rv", model.centroids,
           model.m, model.sub), model.m, model.sub), 5)
-    topMap(AnnIndex.pcaPqTopK(spark, dir, q, "vec_id", "embedding", 5),
+    topMap(AnnIndex.rotatedPqTopK(spark, dir, q, "vec_id", "embedding", 5),
       "cosine_pq") shouldBe topMap(ref, "cosine_pq")
   }
 }

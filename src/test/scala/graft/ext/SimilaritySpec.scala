@@ -192,7 +192,7 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("__id", "__j").collect().toSeq shouldBe
       expect.select("__id", "__j", "__code").orderBy("__id", "__j").collect().toSeq
     // compaction carries the residual flag and the served ranking
-    AnnIndex.compactIvfPq(spark, dir)
+    AnnIndex.compact(spark, dir)
     val compacted = AnnIndex.readIvfPq(spark, dir)
     compacted.residual shouldBe true
     AnnIndex.ivfPqTopK(spark, compacted, corpus.filter($"vec_id" === 0),
@@ -204,17 +204,20 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
     val a = corpus.filter($"vec_id" < 3)
     // first rebuild: target doesn't exist yet — plain install
-    AnnIndex.rebuildPq(a, "vec_id", "embedding", dir, m = 2, ksub = 3, iters = 1)
+    AnnIndex.rebuild(dir)(
+      AnnIndex.buildPq(a, "vec_id", "embedding", _, m = 2, ksub = 3, iters = 1))
     AnnIndex.readPq(spark, dir).codes.select("__id").distinct().count() shouldBe 3
     // second rebuild over the full corpus replaces the generation atomically
-    AnnIndex.rebuildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
+    AnnIndex.rebuild(dir)(
+      AnnIndex.buildPq(corpus, "vec_id", "embedding", _, m = 2, ksub = 5, iters = 1))
     AnnIndex.readPq(spark, dir).codes.select("__id").distinct().count() shouldBe 5
     new java.io.File(dir + ".bak").exists() shouldBe false
     // crashed-swap state (dir gone, .bak holds the only index): the next
     // rebuild restores it before swapping — never deletes the only copy
     java.nio.file.Files.move(java.nio.file.Paths.get(dir),
       java.nio.file.Paths.get(dir + ".bak"))
-    AnnIndex.rebuildPq(a, "vec_id", "embedding", dir, m = 2, ksub = 3, iters = 1)
+    AnnIndex.rebuild(dir)(
+      AnnIndex.buildPq(a, "vec_id", "embedding", _, m = 2, ksub = 3, iters = 1))
     AnnIndex.readPq(spark, dir).codes.select("__id").distinct().count() shouldBe 3
     new java.io.File(dir + ".bak").exists() shouldBe false
   }
@@ -298,7 +301,7 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     // re-embed id 2 with a different vector (near id 0's direction)
     val newRow = Seq((2L, Array(0.95f, 0.05f))).toDF("vec_id", "embedding")
-    AnnIndex.updatePq(spark, dir, newRow, "vec_id", "embedding")
+    AnnIndex.update(spark, dir, newRow, "vec_id", "embedding")
     val model = AnnIndex.readPq(spark, dir)
     // one live generation: m code rows for the updated id, not 2m
     model.codes.filter($"__id" === 2L).count() shouldBe 2
@@ -319,10 +322,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("rebuild compacts tombstones: the fresh generation serves deleted ids again") {
     val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
-    AnnIndex.rebuildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
+    AnnIndex.rebuild(dir)(
+      AnnIndex.buildPq(corpus, "vec_id", "embedding", _, m = 2, ksub = 5, iters = 1))
     AnnIndex.deleteIds(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
     new java.io.File(s"$dir/tombstones").exists() shouldBe true
-    AnnIndex.rebuildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
+    AnnIndex.rebuild(dir)(
+      AnnIndex.buildPq(corpus, "vec_id", "embedding", _, m = 2, ksub = 5, iters = 1))
     new java.io.File(s"$dir/tombstones").exists() shouldBe false
     AnnIndex.readPq(spark, dir).codes.select("__id").distinct().count() shouldBe 5
   }
@@ -393,7 +398,7 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.compactIfNeeded(spark, dir) shouldBe false
     AnnIndex.tombstoneDebt(spark, dir) shouldBe 0.2 +- 1e-9 // unchanged — no compaction ran
     // an update adds a superseded generation: 12 rows stored, 4 dead
-    AnnIndex.updatePq(spark, dir,
+    AnnIndex.update(spark, dir,
       Seq((2L, Array(0.95f, 0.05f))).toDF("vec_id", "embedding"), "vec_id", "embedding")
     AnnIndex.tombstoneDebt(spark, dir) shouldBe (1.0 / 3) +- 1e-9
     val before = AnnIndex.pqTopK(spark, dir, corpus.filter($"vec_id" === 0),
@@ -467,12 +472,12 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     AnnIndex.deleteIds(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
     // re-embed id 2: two generations on disk, one live
-    AnnIndex.updatePq(spark, dir, Seq((2L, Array(0.95f, 0.05f))).toDF("vec_id", "embedding"),
+    AnnIndex.update(spark, dir, Seq((2L, Array(0.95f, 0.05f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding")
     val before = AnnIndex.pqTopK(spark, dir, corpus.filter($"vec_id" === 0),
       "vec_id", "embedding", 4).orderBy("rank").collect().toSeq
     spark.read.parquet(s"$dir/codes").count() shouldBe 12 // 5 built + 1 updated gen, x m=2
-    AnnIndex.compactPq(spark, dir)
+    AnnIndex.compact(spark, dir)
     // physically reduced to the live 4 ids, tombstones gone, ranking identical
     spark.read.parquet(s"$dir/codes").count() shouldBe 8
     new java.io.File(s"$dir/tombstones").exists() shouldBe false
@@ -489,7 +494,7 @@ class SimilaritySpec extends SparkSpec {
     val ivfBefore = AnnIndex.ivfPqTopK(spark, AnnIndex.readIvfPq(spark, dir2),
       corpus.filter($"vec_id" === 0), "vec_id", "embedding", 3, nprobe = 2)
       .orderBy("rank").collect().toSeq
-    AnnIndex.compactIvfPq(spark, dir2)
+    AnnIndex.compact(spark, dir2)
     new java.io.File(s"$dir2/tombstones").exists() shouldBe false
     spark.read.parquet(s"$dir2/vectors").count() shouldBe 4
     AnnIndex.ivfPqTopK(spark, AnnIndex.readIvfPq(spark, dir2),
@@ -499,7 +504,7 @@ class SimilaritySpec extends SparkSpec {
     val dir3 = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir3, nlist = 2, iters = 1)
     AnnIndex.deleteIds(spark, dir3, Seq(1L).toDF("vec_id"), "vec_id")
-    AnnIndex.compactIvf(spark, dir3)
+    AnnIndex.compact(spark, dir3)
     new java.io.File(s"$dir3/tombstones").exists() shouldBe false
     spark.read.parquet(s"$dir3/vectors").count() shouldBe 4
     val bruteDel = Similarity.bruteForceTopK(corpus.filter($"vec_id" === 0),
@@ -515,10 +520,6 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", s"$base/ivfpq",
       nlist = 2, m = 2, ksub = 5, iters = 1, keepVectors = true)
     AnnIndex.buildPq(corpus, "vec_id", "embedding", s"$base/pq", m = 2, ksub = 5, iters = 1)
-    // the wrong compactor must refuse loudly, never silently drop tables
-    an[IllegalArgumentException] should be thrownBy AnnIndex.compactPq(spark, s"$base/ivfpq")
-    an[IllegalArgumentException] should be thrownBy AnnIndex.compactIvf(spark, s"$base/ivfpq")
-    an[IllegalArgumentException] should be thrownBy AnnIndex.compactIvfPq(spark, s"$base/pq")
     new java.io.File(s"$base/ivfpq/codes").exists() shouldBe true
     new java.io.File(s"$base/ivfpq/codebooks").exists() shouldBe true
     // delete EVERYTHING: compacting a clustered layout to zero rows is
@@ -526,7 +527,7 @@ class SimilaritySpec extends SparkSpec {
     // leaves the index intact and still serving (empty results)
     AnnIndex.deleteIds(spark, s"$base/ivfpq", corpus.select("vec_id"), "vec_id")
     an[IllegalArgumentException] should be thrownBy
-      AnnIndex.compactIvfPq(spark, s"$base/ivfpq")
+      AnnIndex.compact(spark, s"$base/ivfpq")
     val index = AnnIndex.readIvfPq(spark, s"$base/ivfpq")
     AnnIndex.ivfPqTopK(spark, index, corpus.filter($"vec_id" === 0),
       "vec_id", "embedding", 3, nprobe = 2).collect() shouldBe empty
@@ -542,14 +543,14 @@ class SimilaritySpec extends SparkSpec {
     // decision) — the refusal leaves the index intact, serving empty,
     // and a later re-append still supersedes the tombstones
     AnnIndex.deleteIds(spark, s"$base/pq", corpus.select("vec_id"), "vec_id")
-    an[IllegalArgumentException] should be thrownBy AnnIndex.compactPq(spark, s"$base/pq")
+    an[IllegalArgumentException] should be thrownBy AnnIndex.compact(spark, s"$base/pq")
     AnnIndex.readPq(spark, s"$base/pq").codes.count() shouldBe 0
     AnnIndex.appendPq(spark, s"$base/pq",
       corpus.filter($"vec_id" < 2), "vec_id", "embedding")
     AnnIndex.readPq(spark, s"$base/pq").codes.select("__id").distinct().count() shouldBe 2
     // after the re-append the index has live rows again — compaction now
     // proceeds and keeps exactly the live view
-    AnnIndex.compactPq(spark, s"$base/pq")
+    AnnIndex.compact(spark, s"$base/pq")
     AnnIndex.readPq(spark, s"$base/pq").codes.select("__id").distinct().count() shouldBe 2
   }
 
@@ -563,7 +564,7 @@ class SimilaritySpec extends SparkSpec {
     // derive a sequence number
     val diff = Seq((5L, "insert")).toDF("vec_id", "change")
     val newRows = Seq((5L, Array(0.5f, 0.8f))).toDF("vec_id", "embedding")
-    AnnIndex.applyDiffIvfPq(spark, dir, diff, "vec_id", newRows, "vec_id", "embedding")
+    AnnIndex.applyDiff(spark, dir, diff, "vec_id", newRows, "vec_id", "embedding")
     // all 6 ids served; later maintenance ops keep working too
     AnnIndex.deleteIds(spark, dir, Seq(5L).toDF("vec_id"), "vec_id")
     val index = AnnIndex.readIvfPq(spark, dir)
@@ -580,7 +581,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "change")
     val newRows = Seq((2L, Array(0.95f, 0.05f)), (5L, Array(0.5f, 0.8f)))
       .toDF("vec_id", "embedding")
-    AnnIndex.applyDiffIvfPq(spark, dir, diff, "vec_id", newRows, "vec_id", "embedding")
+    AnnIndex.applyDiff(spark, dir, diff, "vec_id", newRows, "vec_id", "embedding")
     val index = AnnIndex.readIvfPq(spark, dir)
     val post = corpus.filter($"vec_id" =!= 1L && $"vec_id" =!= 2L).unionByName(newRows)
     val served = AnnIndex.ivfPqTopK(spark, index, corpus.filter($"vec_id" === 0),
@@ -596,7 +597,7 @@ class SimilaritySpec extends SparkSpec {
     // probes must serve brute force over the post-diff corpus
     val dirIvf = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dirIvf, nlist = 2, iters = 1)
-    AnnIndex.applyDiffIvf(spark, dirIvf, diff, "vec_id", newRows, "vec_id", "embedding")
+    AnnIndex.applyDiff(spark, dirIvf, diff, "vec_id", newRows, "vec_id", "embedding")
     val servedIvf = AnnIndex.ivfTopK(spark, AnnIndex.readIvf(spark, dirIvf),
       corpus.filter($"vec_id" === 0), "vec_id", "embedding", 4, nprobe = 2)
       .orderBy("rank").collect().toSeq

@@ -130,7 +130,7 @@ class SqIndexSpec extends SparkSpec {
     // update id 10 with id 11's embedding: exactly the new encode is live
     val newRow = c.filter($"vec_id" === 11L)
       .select(lit(10L).as("vec_id"), $"embedding")
-    AnnIndex.updateSq(spark, s"$base/sq", newRow, "vec_id", "embedding")
+    AnnIndex.update(spark, s"$base/sq", newRow, "vec_id", "embedding")
     val idx = AnnIndex.readSq(spark, s"$base/sq")
     idx.codes.filter($"__id" === 10L).count() shouldBe 1
     val c10 = idx.codes.filter($"__id" === 10L)
@@ -151,7 +151,7 @@ class SqIndexSpec extends SparkSpec {
       .toDF("vec_id", "change")
     val rows = c.filter($"vec_id" >= 24)
       .unionByName(c.filter($"vec_id" === 7L).select(lit(6L).as("vec_id"), $"embedding"))
-    AnnIndex.applyDiffIvfSq(spark, s"$base/ivfsq", diff, "vec_id",
+    AnnIndex.applyDiff(spark, s"$base/ivfsq", diff, "vec_id",
       rows, "vec_id", "embedding")
     val afterDiff = AnnIndex.ivfSqTopK(spark,
         AnnIndex.readIvfSq(spark, s"$base/ivfsq"),
@@ -162,7 +162,7 @@ class SqIndexSpec extends SparkSpec {
     // debt = 7 dead of 33 stored rows (< 0.25): not compacted yet
     AnnIndex.compactIfNeeded(spark, s"$base/ivfsq") shouldBe false
     // compaction must not change served results
-    AnnIndex.compactIvfSq(spark, s"$base/ivfsq")
+    AnnIndex.compact(spark, s"$base/ivfsq")
     AnnIndex.tombstoneDebt(spark, s"$base/ivfsq") shouldBe 0.0
     val afterCompact = AnnIndex.ivfSqTopK(spark,
         AnnIndex.readIvfSq(spark, s"$base/ivfsq"),
@@ -170,9 +170,6 @@ class SqIndexSpec extends SparkSpec {
       .select($"rank", $"neighbor_id", $"cosine_sq")
       .as[(Int, Long, Double)].collect().toSeq
     afterCompact shouldBe afterDiff
-    // a wrong-layout compaction refuses loudly
-    an[IllegalArgumentException] should be thrownBy
-      AnnIndex.compactPq(spark, s"$base/ivfsq")
   }
 
   test("pre-layout meta derives its kind from (m, nlist) — old indexes still route") {
