@@ -6,6 +6,19 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump AND the oracle
+    // json to the named queries (unset at the driver — full battery); with
+    // SPARK_GRAFT_SKIP_PREP=1 the named gates stage only the fixtures they
+    // touch. A name that is no query refuses the run instead of dumping
+    // nothing.
+    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    def pick[T](m: Map[String, T]): Map[String, T] =
+      only.fold(m)(f => m.filter { case (k, _) => f(k) })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -38,12 +51,6 @@ object Verify {
         System.err.println(s"[verify] pooled reports failed: ${e.getMessage}")
       }
     }
-    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump AND the oracle
-    // json to the named queries (unset at the driver — full battery)
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def pick[T](m: Map[String, T]): Map[String, T] =
-      only.fold(m)(f => m.filter { case (k, _) => f(k) })
     pick(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -66,114 +73,49 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // placeholder resolution: oracles that replay against the PERSISTED
-    // ANN index tables (the kmeans training is not SQL, the query path
-    // given the stored centroids is) carry __GRAFT_ANNIDX__. The staged
-    // index lives under /tmp, but the only filesystem location the
-    // DuckDB comparator PROVABLY sees is this dump dir (it reads the
-    // parquet dumps from it) — so the index tables those oracles read
-    // are copied INTO the dump and the placeholder resolves there.
-    // oracleSql is a static map and cannot know either path itself.
+    // placeholder resolution: oracles that replay against PERSISTED
+    // fixture stores (ANN index tables — the kmeans training is not SQL,
+    // the query path given the stored centroids is — tokenizer models,
+    // maintained text/cascade stores, the pretraining artifacts) carry a
+    // __GRAFT_<X>__/<sub> reference. The staged fixture lives under
+    // /tmp, but the only filesystem location the DuckDB comparator
+    // PROVABLY sees is this dump dir (it reads the parquet dumps from
+    // it) — so each referenced <sub> of the fixture's staging root is
+    // copied INTO the dump and the placeholder resolves there. oracleSql
+    // is a static map and cannot know either path itself.
     // DOT-PREFIXED on purpose: the copied tables carry array-typed
     // centroid columns, and the driver's frame-diff (which enumerates
     // dump subdirectories and pandas-sorts every readable one) chokes
     // on ndarray cells — `_annidx` polluted r11/r12's CORRECTNESS with
-    // a spurious err row. Python glob('*') skips dot-entries, so
-    // `.annidx` stays readable to DuckDB (absolute path in the oracle
-    // SQL) but invisible to the dump enumeration.
-    val annSrc = "/tmp/graft_annindex/" + graft.queries.Staging.tag(sfDir)
-    val annIdx = s"$outDir/.annidx"
-    try {
-      val dst = new java.io.File(annIdx)
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      Seq("ivf", "pq", "ivfpq", "ivfsq", "bq", "pcapq",
-          "pq_del16", "bq_maint16", "ivfpq_del16", "maxsim", "maxsim_q",
-          "opq", "opqivf", "graph", "graphivf", "graphdelta",
-          "graphalpha", "ivf_bx", "ivf_by").foreach { layout =>
-        val from = new java.io.File(s"$annSrc/$layout")
-        if (from.isDirectory)
-          org.apache.commons.io.FileUtils.copyDirectory(from,
-            new java.io.File(dst, layout))
+    // a spurious err row. Python glob('*') skips dot-entries, so the
+    // copies stay readable to DuckDB (absolute path in the oracle SQL)
+    // but invisible to the dump enumeration.
+    val fixtures = Seq(
+      "__GRAFT_ANNIDX__" -> ("annindex", ".annidx"),
+      "__GRAFT_BPE__" -> ("bpe", ".bpe"),
+      "__GRAFT_UNI__" -> ("unigram", ".unigram"),
+      "__GRAFT_TEXTIDX__" -> ("textindex", ".textidx"),
+      "__GRAFT_CASCADE__" -> ("cascade", ".cascade"),
+      "__GRAFT_PRETRAIN__" -> ("pretrain", ".pretrain"))
+    val oracles = pick(SparkEntry.oracleSql)
+    val resolved = fixtures.foldLeft(oracles) { case (m, (ph, (family, dot))) =>
+      val dst = s"$outDir/$dot"
+      try {
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dst))
+        val subs = oracles.values.flatMap(v =>
+          s"$ph/(\\w+)".r.findAllMatchIn(v).map(_.group(1))).toSet
+        val src = graft.queries.Staging.root(family, sfDir)
+        subs.foreach { sub =>
+          val from = new java.io.File(src, sub)
+          if (from.isDirectory)
+            org.apache.commons.io.FileUtils.copyDirectory(from, new java.io.File(dst, sub))
+        }
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $family copy failed: ${e.getMessage}")
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] index copy failed: ${e.getMessage}")
+      m.map { case (k, v) => k -> v.replace(ph, dst) }
     }
-    // same contract for the staged BPE merges table (the trained
-    // tokenizer artifact behind x_text_chunks_bpe's encoding replay)
-    val bpeSrc = "/tmp/graft_bpe/" + graft.queries.Staging.tag(sfDir)
-    val bpeIdx = s"$outDir/.bpe"
-    try {
-      val dst = new java.io.File(bpeIdx)
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      val from = new java.io.File(s"$bpeSrc/merges")
-      if (from.isDirectory)
-        org.apache.commons.io.FileUtils.copyDirectory(from,
-          new java.io.File(dst, "merges"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] bpe copy failed: ${e.getMessage}")
-    }
-    // same contract for the text-index maintenance fixture and the
-    // cascade fixture's stores (x_store_health replays their tombstone
-    // liveness): whole sub-stores copied under dot-dirs
-    val tiSrc = "/tmp/graft_textindex/" + graft.queries.Staging.tag(sfDir)
-    val tiIdx = s"$outDir/.textidx"
-    val cSrc = "/tmp/graft_cascade/" + graft.queries.Staging.tag(sfDir)
-    val cIdx = s"$outDir/.cascade"
-    try {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tiIdx))
-      Seq("inv", "inv_maint").foreach { d =>
-        val from = new java.io.File(s"$tiSrc/$d")
-        if (from.isDirectory)
-          org.apache.commons.io.FileUtils.copyDirectory(from,
-            new java.io.File(tiIdx, d))
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cIdx))
-      Seq("text_inv", "text_pos", "dedup_store", "ann_pq").foreach { d =>
-        val from = new java.io.File(s"$cSrc/$d")
-        if (from.isDirectory)
-          org.apache.commons.io.FileUtils.copyDirectory(from,
-            new java.io.File(cIdx, d))
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] store-health copy failed: ${e.getMessage}")
-    }
-    // same contract for the staged unigram vocabulary (the trained
-    // SentencePiece-style artifact behind x_text_unigram_count's replay)
-    val uniSrc = "/tmp/graft_unigram/" + graft.queries.Staging.tag(sfDir)
-    val uniIdx = s"$outDir/.unigram"
-    try {
-      val dst = new java.io.File(uniIdx)
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      val from = new java.io.File(s"$uniSrc/vocab")
-      if (from.isDirectory)
-        org.apache.commons.io.FileUtils.copyDirectory(from,
-          new java.io.File(dst, "vocab"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] unigram copy failed: ${e.getMessage}")
-    }
-    // same contract for the staged pretraining artifacts (the packed
-    // table + exported shard set behind x_store_fsck's shard-store row)
-    val ptSrc = "/tmp/graft_pretrain/" + graft.queries.Staging.tag(sfDir)
-    val ptIdx = s"$outDir/.pretrain"
-    try {
-      val dst = new java.io.File(ptIdx)
-      org.apache.commons.io.FileUtils.deleteDirectory(dst)
-      Seq("packed", "shards").foreach { d =>
-        val from = new java.io.File(s"$ptSrc/$d")
-        if (from.isDirectory)
-          org.apache.commons.io.FileUtils.copyDirectory(from,
-            new java.io.File(dst, d))
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] pretrain copy failed: ${e.getMessage}")
-    }
-    val json = pick(SparkEntry.oracleSql)
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_ANNIDX__", annIdx)
-        .replace("__GRAFT_BPE__", bpeIdx)
-        .replace("__GRAFT_UNI__", uniIdx)
-        .replace("__GRAFT_TEXTIDX__", tiIdx)
-        .replace("__GRAFT_CASCADE__", cIdx)
-        .replace("__GRAFT_PRETRAIN__", ptIdx))}" }
+    val json = resolved.map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

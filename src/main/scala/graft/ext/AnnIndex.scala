@@ -1140,7 +1140,14 @@ object AnnIndex {
     * (r21 baseline: x_index_health 118 stages / 3.1 s wall at 1.3 cpu-s).
     * The eager tuple form above keeps the policy callers' contract.
     */
-  private def storeCountsDf(spark: SparkSession, dir: String): DataFrame = {
+  private def storeCountsDf(spark: SparkSession, dir: String): DataFrame =
+    storeCountsWithDeltaDf(spark, dir).select(col("__total"), col("__live"))
+
+  /** [[storeCountsDf]] plus `__delta`, the row count of a graph store's
+    * fresh region (0 without one) — everything the compaction policy
+    * prices, in one frame.
+    */
+  private def storeCountsWithDeltaDf(spark: SparkSession, dir: String): DataFrame = {
     // healthReport/sweep/fsck on a composed ROOT measure the store that
     // actually serves
     val owner = storeDir(spark, dir)
@@ -1155,8 +1162,8 @@ object AnnIndex {
         .select(col("__total").as("__dt"), col("__live").as("__dl"))
       main.crossJoin(d) // 1×1: counter rows, never data
         .select((col("__total") + col("__dt")).as("__total"),
-          (col("__live") + col("__dl")).as("__live"))
-    } else main
+          (col("__live") + col("__dl")).as("__live"), col("__dt").as("__delta"))
+    } else main.withColumn("__delta", lit(0L))
   }
 
   /** [[storeCounts]] with the main table named explicitly — shared with
@@ -1250,16 +1257,12 @@ object AnnIndex {
     // share of the store crosses the same threshold — without this, a
     // pure-append workload (zero tombstones, debt 0) would grow the
     // delta unboundedly, and live delta rows in the denominator would
-    // even DILUTE tombstone debt away from the trigger. One row count
-    // of the (append-batch-file-sized) delta when present.
-    val deltaDebt =
-      if (readLayout(spark, dir) == "graph" &&
-          graft.util.Hfs.exists(spark, s"$dir/delta")) {
-        val d = graft.util.TinyParquet.openStore(spark, s"$dir/delta").count()
-        val (total, _) = storeCounts(spark, dir)
-        if (total == 0L) 0.0 else d.toDouble / total
-      } else 0.0
-    if (tombstoneDebt(spark, dir) < threshold && deltaDebt < threshold)
+    // even DILUTE tombstone debt away from the trigger. Both debts come
+    // from one counter frame: total, live and delta rows in one action.
+    val r = storeCountsWithDeltaDf(spark, dir).head()
+    val (total, live, delta) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    def share(n: Long): Double = if (total == 0L) 0.0 else n.toDouble / total
+    if (share(total - live) < threshold && share(delta) < threshold)
       false
     else {
       // a composed root's debt is its nested index's ([[storeDir]]), and

@@ -37,38 +37,25 @@ object CoverageQueries {
     * that must be filtered out.
     */
   /** Input prep (idempotent): one archive per document source bucket,
-    * deterministic content keyed by the staging fingerprint; a `_STAGED`
-    * marker written after the last archive closes guards against reusing
-    * a partial build.
+    * deterministic content keyed by the staging fingerprint.
     */
-  def stageZips(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val zipDir = s"/tmp/graft_zips/${Staging.tag(dir)}"
-    if (new java.io.File(s"$zipDir/_STAGED").exists()) return zipDir
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-      .collect() // input prep only: materialize the small doc set into archives
-    val byed = docs.groupBy(_.getAs[String]("source"))
-    val d = new java.io.File(zipDir)
-    if (d.exists()) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(d.toPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    d.mkdirs()
-    byed.foreach { case (src, rows) =>
-      val zos = new java.util.zip.ZipOutputStream(
-        new java.io.FileOutputStream(s"$zipDir/$src.zip"))
-      zos.putNextEntry(new java.util.zip.ZipEntry(s"__MACOSX/junk_$src"))
-      zos.write("junk".getBytes); zos.closeEntry()
-      rows.sortBy(_.getAs[Long]("doc_id")).foreach { r =>
-        zos.putNextEntry(new java.util.zip.ZipEntry(s"doc${r.getAs[Long]("doc_id")}.txt"))
-        zos.write(r.getAs[String]("text").getBytes("UTF-8"))
-        zos.closeEntry()
+  def stageZips(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Staging.once("zips", dir) { zipDir =>
+      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
+        .collect() // input prep only: materialize the small doc set into archives
+      docs.groupBy(_.getAs[String]("source")).foreach { case (src, rows) =>
+        val zos = new java.util.zip.ZipOutputStream(
+          new java.io.FileOutputStream(s"$zipDir/$src.zip"))
+        zos.putNextEntry(new java.util.zip.ZipEntry(s"__MACOSX/junk_$src"))
+        zos.write("junk".getBytes); zos.closeEntry()
+        rows.sortBy(_.getAs[Long]("doc_id")).foreach { r =>
+          zos.putNextEntry(new java.util.zip.ZipEntry(s"doc${r.getAs[Long]("doc_id")}.txt"))
+          zos.write(r.getAs[String]("text").getBytes("UTF-8"))
+          zos.closeEntry()
+        }
+        zos.close()
       }
-      zos.close()
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$zipDir/_STAGED"), "ok")
-    zipDir
-  }
 
   val s5ZipScan = q("s5_zip_scan",
     """SELECT 'doc' || CAST(doc_id AS VARCHAR) || '.txt' AS name,

@@ -157,54 +157,37 @@ object EngineQueries {
     * entries derived from the documents table, plus system junk and
     * root-level strays that the pipeline must ignore.
     */
-  def stageMediaZip(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val zipDir = s"/tmp/graft_mediazip/${Staging.tag(dir)}"
-    // deterministic content per sf dir — reuse across the queries that
-    // share it instead of rebuilding (input prep, not pipeline work)
-    if (new java.io.File(s"$zipDir/media.zip").exists()) return zipDir
-    val d = new java.io.File(zipDir)
-    if (d.exists()) {
+  def stageMediaZip(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Staging.once("mediazip", dir) { zipDir =>
+      // fixture staging, not a query path: the archive is an inherently
+      // LOCAL artifact (it mirrors the reference's uploaded zip), so entry
+      // names stream through the driver via toLocalIterator — one
+      // partition resident at a time, never the corpus — behind a loud cap
+      // that sizes the FIXTURE (a 100k-entry zip is already implausible as
+      // a test upload). Do not copy this shape into a query path.
+      val idDf = Tables.documents(s, dir).select(col("doc_id"))
+        .orderBy(col("doc_id"))
+      val n = idDf.count()
+      require(n <= 100000,
+        s"media-zip fixture staging caps at 100k entries, got $n")
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(d.toPath).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      val ids = idDf.toLocalIterator().asScala.map(_.getLong(0))
+      val zos = new java.util.zip.ZipOutputStream(
+        new java.io.FileOutputStream(s"$zipDir/media.zip"))
+      def put(name: String): Unit = {
+        zos.putNextEntry(new java.util.zip.ZipEntry(name))
+        zos.write(name.getBytes("UTF-8")); zos.closeEntry()
+      }
+      put("__MACOSX/._junk") // system — dropped by the scan
+      put(".DS_Store")       // dotfile — dropped by the scan
+      put("stray.txt")       // root-level — ignored (depth < 2)
+      put("notes/readme.txt") // unbucketed folder — dropped in structured mode
+      ids.foreach { i =>
+        if (i % 2 == 0) put(s"image/K${i}_1.png")
+        if (i % 3 == 0) put(s"document/K$i.pdf")
+      }
+      zos.close()
     }
-    d.mkdirs()
-    // fixture staging, not a query path: the archive is an inherently
-    // LOCAL artifact (it mirrors the reference's uploaded zip), so entry
-    // names stream through the driver via toLocalIterator — one
-    // partition resident at a time, never the corpus — behind a loud cap
-    // that sizes the FIXTURE (a 100k-entry zip is already implausible as
-    // a test upload). Do not copy this shape into a query path.
-    val idDf = Tables.documents(s, dir).select(col("doc_id"))
-      .orderBy(col("doc_id"))
-    val n = idDf.count()
-    require(n <= 100000,
-      s"media-zip fixture staging caps at 100k entries, got $n")
-    import scala.jdk.CollectionConverters._
-    val ids = idDf.toLocalIterator().asScala.map(_.getLong(0))
-    // write to a temp name and rename after close: the reuse check above
-    // keys on media.zip existing, which must imply a COMPLETE archive
-    val tmpZip = s"$zipDir/media.zip.tmp"
-    val zos = new java.util.zip.ZipOutputStream(
-      new java.io.FileOutputStream(tmpZip))
-    def put(name: String): Unit = {
-      zos.putNextEntry(new java.util.zip.ZipEntry(name))
-      zos.write(name.getBytes("UTF-8")); zos.closeEntry()
-    }
-    put("__MACOSX/._junk") // system — dropped by the scan
-    put(".DS_Store")       // dotfile — dropped by the scan
-    put("stray.txt")       // root-level — ignored (depth < 2)
-    put("notes/readme.txt") // unbucketed folder — dropped in structured mode
-    ids.foreach { i =>
-      if (i % 2 == 0) put(s"image/K${i}_1.png")
-      if (i % 3 == 0) put(s"document/K$i.pdf")
-    }
-    zos.close()
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmpZip),
-      java.nio.file.Paths.get(s"$zipDir/media.zip"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    zipDir
-  }
 
   private val mediaIdsSql =
     """files AS (

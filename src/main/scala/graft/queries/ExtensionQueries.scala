@@ -33,15 +33,23 @@ object ExtensionQueries {
         concat(col("text"), lit(" zzvariant")).as("text")))
   }
 
-  /** Stage a frame to parquet once per (path, content-version): the staged
-    * inputs are deterministic per sf dir, so re-runs skip the rewrite
-    * (input prep, not pipeline work). `_SUCCESS` marks a completed write.
+  private def streamEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+
+  /** The events spool the file-source stream gates read — files that, in
+    * production, exist because events ARRIVED (input prep, not pipeline
+    * work).
     */
-  private def stageOnce(df: => DataFrame, tmp: String): String = {
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
-      df.write.mode("overwrite").parquet(tmp)
-    tmp
-  }
+  private[queries] def eventSpool(s: SparkSession, dir: String): String =
+    Staging.once("stream", dir)(streamEvents(s, dir).write.mode("overwrite").parquet(_))
+
+  /** [[eventSpool]] with every event delivered twice (planted replays). */
+  private def replaySpool(s: SparkSession, dir: String): String =
+    Staging.once("stream_dup", dir) { root =>
+      val ev = streamEvents(s, dir)
+      ev.unionByName(ev).write.mode("overwrite").parquet(root)
+    }
 
   /** Input prep (idempotent): the persisted ANN indexes over the
     * embeddings table — the build-once/query-many production shape. The
@@ -51,18 +59,10 @@ object ExtensionQueries {
     * partition pruning (`x_knn_ivfpq`). Geometry mirrors the queries:
     * m=8, ksub=16, iters=2, nlist=16 over the 64-dim embeddings.
     */
-  def stageAnnIndexes(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_annindex/${Staging.tag(dir)}"
-    // the marker name carries a FIXTURE VERSION + the build geometry: any
-    // change to the staging recipe below (index layout, geometry, the
-    // append/delete fixture splits) must bump it, or an old staged /tmp
-    // index would silently gate the new code against the old layout
-    val done = new java.io.File(s"$tmp/_INDEX_DONE_v19_annlayout")
-    if (done.exists()) return tmp
-    // a stale generation (older marker or half-built) must not leak files
-    // (e.g. append-mode tombstones) into the fresh build
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
+  def stageAnnIndexes(s: SparkSession, dir: String): String =
+    Staging.once("annindex", dir)(buildAnnIndexes(s, dir, _))
+
+  private def buildAnnIndexes(s: SparkSession, dir: String, tmp: String): Unit = {
     // per-fixture wall attribution for the cold-staging budget, opt-in
     // (SPARK_GRAFT_STAGE_TIMING=1) so tuning rounds see WHICH build to cut
     val timeIt = sys.env.get("SPARK_GRAFT_STAGE_TIMING").contains("1")
@@ -324,8 +324,6 @@ object ExtensionQueries {
           "vec_id", emb16, "vec_id", "embedding")
       }))
     }
-    done.createNewFile()
-    tmp
   }
 
   /** Input prep (idempotent): the persisted inverted text index over the
@@ -333,52 +331,44 @@ object ExtensionQueries {
     * the ANN indexes — plus its maintenance fixture (build even half,
     * append odd half, tombstone %20, update doc 7).
     */
-  def stageTextIndex(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_textindex/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_INDEX_DONE_v2_asof_refs")
-    if (done.exists()) return tmp
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .localCheckpoint(eager = true) // consumed by both builds + maintenance
-    graft.streaming.StreamConf.withWidth(s, 4) {
-      graft.ext.TextIndex.build(docs, "doc_id", "text", s"$tmp/inv", parts = 8)
-      graft.ext.TextIndex.build(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", s"$tmp/inv_maint", parts = 8)
-      graft.ext.TextIndex.appendDocs(s, s"$tmp/inv_maint",
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-      graft.ext.TextIndex.deleteDocs(s, s"$tmp/inv_maint",
-        docs.filter(col("doc_id") % 20 === 0), "doc_id")
-      graft.ext.TextIndex.updateDocs(s, s"$tmp/inv_maint",
-        docs.filter(col("doc_id") === 7), "doc_id", "text")
+  def stageTextIndex(s: SparkSession, dir: String): String =
+    Staging.once("textindex", dir) { tmp =>
+      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+        .localCheckpoint(eager = true) // consumed by both builds + maintenance
+      graft.streaming.StreamConf.withWidth(s, 4) {
+        graft.ext.TextIndex.build(docs, "doc_id", "text", s"$tmp/inv", parts = 8)
+        graft.ext.TextIndex.build(docs.filter(col("doc_id") % 2 === 0),
+          "doc_id", "text", s"$tmp/inv_maint", parts = 8)
+        graft.ext.TextIndex.appendDocs(s, s"$tmp/inv_maint",
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+        graft.ext.TextIndex.deleteDocs(s, s"$tmp/inv_maint",
+          docs.filter(col("doc_id") % 20 === 0), "doc_id")
+        graft.ext.TextIndex.updateDocs(s, s"$tmp/inv_maint",
+          docs.filter(col("doc_id") === 7), "doc_id", "text")
+      }
+      // x_text_asof's two FROM-SCRATCH BM25 references, staged beside the
+      // index (deterministic functions of the corpus + the maintenance
+      // history above — the x_stream_recall discipline): the gate reads
+      // and compares instead of paying two full batch scorers per rep
+      import s.implicits._
+      val asofQueries = Seq((0L, "window merge scan"),
+        (1L, "fast customer join"), (2L, "stream batch value"))
+        .toDF("qid", "qtext")
+      TextSearch.bm25TopK(docs.filter(col("doc_id") % 20 =!= 0),
+          "doc_id", "text", asofQueries, "qid", "qtext", 10)
+        .write.mode("overwrite").parquet(s"$tmp/asof_ref0")
+      TextSearch.bm25TopK(
+          docs.filter(col("doc_id") % 20 =!= 0 && col("doc_id") =!= 7),
+          "doc_id", "text", asofQueries, "qid", "qtext", 10)
+        .write.mode("overwrite").parquet(s"$tmp/asof_ref1")
     }
-    // x_text_asof's two FROM-SCRATCH BM25 references, staged beside the
-    // index (deterministic functions of the corpus + the maintenance
-    // history above — the x_stream_recall discipline): the gate reads
-    // and compares instead of paying two full batch scorers per rep
-    import s.implicits._
-    val asofQueries = Seq((0L, "window merge scan"),
-      (1L, "fast customer join"), (2L, "stream batch value"))
-      .toDF("qid", "qtext")
-    TextSearch.bm25TopK(docs.filter(col("doc_id") % 20 =!= 0),
-        "doc_id", "text", asofQueries, "qid", "qtext", 10)
-      .write.mode("overwrite").parquet(s"$tmp/asof_ref0")
-    TextSearch.bm25TopK(
-        docs.filter(col("doc_id") % 20 =!= 0 && col("doc_id") =!= 7),
-        "doc_id", "text", asofQueries, "qid", "qtext", 10)
-      .write.mode("overwrite").parquet(s"$tmp/asof_ref1")
-    done.createNewFile()
-    tmp
-  }
 
   /** Input prep (idempotent): the streaming spool dirs — files that, in
     * production, exist because events ARRIVED, not because the engine ran.
     */
   def stageStreams(s: SparkSession, dir: String): Unit = {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    stageOnce(ev, s"/tmp/graft_stream/${Staging.tag(dir)}")
-    stageOnce(ev.unionByName(ev), s"/tmp/graft_stream_dup/${Staging.tag(dir)}")
+    eventSpool(s, dir)
+    replaySpool(s, dir)
     stageSessionSpool(s, dir)
     stageUpsertSpool(s, dir)
     stageDocSpool(s, dir) // shared by the minhash, simhash AND components gates
@@ -398,19 +388,14 @@ object ExtensionQueries {
     * documents arrived; only arrival order is synthesized, via per-file
     * mtimes).
     */
-  def stageDocSpool(s: SparkSession, dir: String, nSlices: Int = 2): String = {
-    val tmp = s"/tmp/graft_stream_docs/${Staging.tag(dir)}_n$nSlices"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    val docs = docsWithVariants(s, dir).localCheckpoint(eager = true)
-    new java.io.File(tmp).mkdirs()
-    (0 until nSlices).foreach { i =>
-      stageSpoolFile(
-        docs.filter(pmod(xxhash64(col("doc_id")), lit(nSlices)) === i), tmp, i)
+  def stageDocSpool(s: SparkSession, dir: String, nSlices: Int = 2): String =
+    Staging.once("stream_docs", dir, s"_n$nSlices") { tmp =>
+      val docs = docsWithVariants(s, dir).localCheckpoint(eager = true)
+      (0 until nSlices).foreach { i =>
+        stageSpoolFile(
+          docs.filter(pmod(xxhash64(col("doc_id")), lit(nSlices)) === i), tmp, i)
+      }
     }
-    done.createNewFile()
-    tmp
-  }
 
   /** One incremental-MinHash stream run shared by the `x_stream_dedup_minhash`
     * and `x_stream_dedup_components` gates (memoized per spool content
@@ -429,31 +414,26 @@ object ExtensionQueries {
     * stream's final pair set), persisted per fixture CONTENT: the pair
     * set is deterministic per sf dir, so the iterative label-propagation
     * loop — formerly half the gate's cost, re-paid by every JVM that ran
-    * the query — is computed once and keyed by an order-free fingerprint
-    * of the pairs. A fingerprint mismatch (changed fixture, changed
-    * sketch family) recomputes; a missing /tmp recomputes; the gate's
-    * semantics — streamed labels == batch labels on exactly these pairs
-    * — are unchanged, only where the batch side comes from.
+    * the query — is computed once, keyed by an order-free fingerprint of
+    * the pairs (the staging variant) and by the code that computes it. A
+    * changed pair set (changed fixture, changed sketch family) or a
+    * changed build recomputes; the gate's semantics — streamed labels ==
+    * batch labels on exactly these pairs — are unchanged, only where the
+    * batch side comes from.
     */
   private def batchComponentsRef(s: SparkSession, dir: String,
       streamed: DataFrame): DataFrame = {
-    val base = s"/tmp/graft_stream_minhash/${Staging.tag(dir)}_compref"
     val fpRow = streamed.agg(
       count(lit(1)).cast("string").as("n"),
       coalesce(sum(conv(substring(md5(concat_ws(":", col("id_a"), col("id_b"))),
         1, 8), 16, 10).cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
         .cast("string").as("h")).head()
-    val fp = s"${fpRow.getString(0)}:${fpRow.getString(1)}"
-    val fpFile = new java.io.File(s"$base/_FINGERPRINT")
-    val ok = new java.io.File(s"$base/ref/_SUCCESS").exists() &&
-      fpFile.exists() &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == fp
-    if (!ok) {
+    val base = Staging.once("compref", dir,
+        s"_${fpRow.getString(0)}_${fpRow.getString(1)}") { base =>
       val nodes = streamed.select(col("id_a").as("id"))
         .unionByName(streamed.select(col("id_b").as("id"))).distinct()
       Dedup.connectedComponents(nodes, "id", streamed)
         .write.mode("overwrite").parquet(s"$base/ref")
-      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
     }
     graft.util.TinyParquet.openStore(s, s"$base/ref")
   }
@@ -479,35 +459,25 @@ object ExtensionQueries {
     * half of the 16-vector gate corpus in two arrival slices. Fixture
     * prep, untimed.
     */
-  def stageEmbSpool(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_stream_emb/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    val emb = Tables.embeddings(s, dir)
-      .filter(col("vec_id") >= 8 && col("vec_id") < 16)
-      .select(col("vec_id"), col("embedding"))
-    new java.io.File(tmp).mkdirs()
-    stageSpoolFile(emb.filter(col("vec_id") < 12), tmp, 0)
-    stageSpoolFile(emb.filter(col("vec_id") >= 12), tmp, 1)
-    done.createNewFile()
-    tmp
-  }
+  def stageEmbSpool(s: SparkSession, dir: String): String =
+    Staging.once("stream_emb", dir) { tmp =>
+      val emb = Tables.embeddings(s, dir)
+        .filter(col("vec_id") >= 8 && col("vec_id") < 16)
+        .select(col("vec_id"), col("embedding"))
+      stageSpoolFile(emb.filter(col("vec_id") < 12), tmp, 0)
+      stageSpoolFile(emb.filter(col("vec_id") >= 12), tmp, 1)
+    }
 
   /** Documents spool for the streaming inverted-index append: the odd
     * half of the corpus in two arrival slices. Fixture prep, untimed.
     */
-  def stageTextSpool(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_stream_text/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    val docs = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-    new java.io.File(tmp).mkdirs()
-    stageSpoolFile(docs.filter(col("doc_id") % 4 === 1), tmp, 0)
-    stageSpoolFile(docs.filter(col("doc_id") % 4 === 3), tmp, 1)
-    done.createNewFile()
-    tmp
-  }
+  def stageTextSpool(s: SparkSession, dir: String): String =
+    Staging.once("stream_text", dir) { tmp =>
+      val docs = Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("text"))
+      stageSpoolFile(docs.filter(col("doc_id") % 4 === 1), tmp, 0)
+      stageSpoolFile(docs.filter(col("doc_id") % 4 === 3), tmp, 1)
+    }
 
   /** Session gap shared by the batch and incremental sessionize queries. */
   private val SessGapMs = 4L * 3600 * 1000
@@ -526,42 +496,35 @@ object ExtensionQueries {
     * exists because events arrived; only its arrival ORDER is synthesized
     * here, via explicit per-file mtimes.
     */
-  def stageSessionSpool(s: SparkSession, dir: String, nSlices: Int = 2): String = {
-    val tmp = s"/tmp/graft_stream_sess/${Staging.tag(dir)}_n$nSlices"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .localCheckpoint(eager = true) // consumed nSlices+2 times below
-    val us = unix_micros(col("ts"))
-    val bounds = ev.select(percentile_approx(us,
-        typedLit((1 until nSlices).map(_.toDouble / nSlices)), lit(10000)).as("b"))
-      .head().getSeq[Long](0)
-    val maxRow = ev.agg(max(us)).head()
-    if (maxRow.isNullAt(0))
-      sys.error(s"stageSessionSpool: events table under $dir is empty — " +
-        "cannot stage a session spool with no events")
-    val maxUs = maxRow.getLong(0)
-    val slice = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(us > b, 1).otherwise(0)
+  def stageSessionSpool(s: SparkSession, dir: String, nSlices: Int = 2): String =
+    Staging.once("stream_sess", dir, s"_n$nSlices") { tmp =>
+      val ev = streamEvents(s, dir)
+        .localCheckpoint(eager = true) // consumed nSlices+2 times below
+      val us = unix_micros(col("ts"))
+      val bounds = ev.select(percentile_approx(us,
+          typedLit((1 until nSlices).map(_.toDouble / nSlices)), lit(10000)).as("b"))
+        .head().getSeq[Long](0)
+      val maxRow = ev.agg(max(us)).head()
+      if (maxRow.isNullAt(0))
+        sys.error(s"stageSessionSpool: events table under $dir is empty — " +
+          "cannot stage a session spool with no events")
+      val maxUs = maxRow.getLong(0)
+      val slice = bounds.foldLeft(lit(0)) { (acc, b) =>
+        acc + when(us > b, 1).otherwise(0)
+      }
+      val delayUs = 35L * 24 * 3600 * 1000000L // = SessWatermarkDelay
+      val sentinels = Seq(maxUs + delayUs + 2 * SessGapMs * 1000,
+        maxUs + delayUs + 3 * SessGapMs * 1000)
+      import s.implicits._
+      val slices: Seq[org.apache.spark.sql.DataFrame] =
+        (0 until nSlices).map(i => ev.filter(slice === i)) ++
+          sentinels.zipWithIndex.map { case (ts, i) =>
+            Seq((-1L - i, new java.sql.Timestamp(ts / 1000), -1L, "sentinel", 0.0))
+              .toDF("event_id", "ts", "user_id", "event_type", "value")
+              .withColumn("ts", timestamp_micros(lit(ts)))
+          }
+      slices.zipWithIndex.foreach { case (df, i) => stageSpoolFile(df, tmp, i) }
     }
-    val delayUs = 35L * 24 * 3600 * 1000000L // = SessWatermarkDelay
-    val sentinels = Seq(maxUs + delayUs + 2 * SessGapMs * 1000,
-      maxUs + delayUs + 3 * SessGapMs * 1000)
-    import s.implicits._
-    val dirFile = new java.io.File(tmp)
-    dirFile.mkdirs()
-    val slices: Seq[org.apache.spark.sql.DataFrame] =
-      (0 until nSlices).map(i => ev.filter(slice === i)) ++
-        sentinels.zipWithIndex.map { case (ts, i) =>
-          Seq((-1L - i, new java.sql.Timestamp(ts / 1000), -1L, "sentinel", 0.0))
-            .toDF("event_id", "ts", "user_id", "event_type", "value")
-            .withColumn("ts", timestamp_micros(lit(ts)))
-        }
-    slices.zipWithIndex.foreach { case (df, i) => stageSpoolFile(df, tmp, i) }
-    done.createNewFile()
-    tmp
-  }
 
   /** Write one spool slice as a single parquet file `spool_NNN.parquet`
     * under `tmp`, with mtime = slice order (the file source processes
@@ -593,24 +556,18 @@ object ExtensionQueries {
     * events table, so a SQL oracle can replay both the final table and
     * the created/updated split.
     */
-  def stageUpsertSpool(s: SparkSession, dir: String, nSlices: Int = 3): String = {
-    val tmp = s"/tmp/graft_stream_upsert/${Staging.tag(dir)}_n$nSlices"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    new java.io.File(tmp).mkdirs()
-    (0 until nSlices).foreach { i =>
-      val slice = ev.filter(col("event_id") % nSlices === i)
-        .withColumn("__rn", row_number().over(Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("__rn") === 1).drop("__rn")
-      stageSpoolFile(slice, tmp, i)
+  def stageUpsertSpool(s: SparkSession, dir: String, nSlices: Int = 3): String =
+    Staging.once("stream_upsert", dir, s"_n$nSlices") { tmp =>
+      import org.apache.spark.sql.expressions.Window
+      val ev = streamEvents(s, dir)
+      (0 until nSlices).foreach { i =>
+        val slice = ev.filter(col("event_id") % nSlices === i)
+          .withColumn("__rn", row_number().over(Window.partitionBy(col("user_id"))
+            .orderBy(col("ts").desc, col("event_id").desc)))
+          .filter(col("__rn") === 1).drop("__rn")
+        stageSpoolFile(slice, tmp, i)
+      }
     }
-    done.createNewFile()
-    tmp
-  }
 
   private val docsWithCopiesSql =
     """(SELECT doc_id, text FROM documents
@@ -2340,40 +2297,28 @@ object ExtensionQueries {
     * documents corpus (Sennrich procedure, deterministic — frequency
     * ties break lexicographically), persisted as a (rank, lft, rgt)
     * parquet table — the trained-tokenizer artifact, built once like
-    * the ANN index tables. The marker carries the recipe version.
+    * the ANN index tables.
     */
-  def stageBpeModel(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_bpe/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_BPE_DONE_v1_m200")
-    if (done.exists()) return tmp
-    val d = new java.io.File(tmp)
-    if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
-    val model = graft.ext.Bpe.learn(Tables.documents(s, dir), "text",
-      numMerges = 200)
-    import s.implicits._
-    model.merges.zipWithIndex
-      .map { case ((a, b), r) => (r, a, b) }
-      .toDF("rank", "lft", "rgt")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/merges")
-    done.createNewFile()
-    tmp
-  }
+  def stageBpeModel(s: SparkSession, dir: String): String =
+    Staging.once("bpe", dir) { tmp =>
+      val model = graft.ext.Bpe.learn(Tables.documents(s, dir), "text",
+        numMerges = 200)
+      import s.implicits._
+      model.merges.zipWithIndex
+        .map { case ((a, b), r) => (r, a, b) }
+        .toDF("rank", "lft", "rgt")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/merges")
+    }
 
   /** Input prep (idempotent): the trained unigram-LM vocabulary (piece,
     * logp) — the SentencePiece-style artifact beside the BPE merges.
     */
-  def stageUnigramModel(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_unigram/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_UNI_DONE_v1_l4v4096")
-    if (done.exists()) return tmp
-    val d = new java.io.File(tmp)
-    if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
-    val model = graft.ext.Unigram.learn(Tables.documents(s, dir), "text",
-      maxPieceLen = 4, minCount = 2, emIters = 3, maxVocab = 4096)
-    graft.ext.Unigram.save(model, s, s"$tmp/vocab")
-    done.createNewFile()
-    tmp
-  }
+  def stageUnigramModel(s: SparkSession, dir: String): String =
+    Staging.once("unigram", dir) { tmp =>
+      val model = graft.ext.Unigram.learn(Tables.documents(s, dir), "text",
+        maxPieceLen = 4, minCount = 2, emIters = 3, maxVocab = 4096)
+      graft.ext.Unigram.save(model, s, s"$tmp/vocab")
+    }
 
   /** Unigram-LM (SentencePiece-style) token counting (r13 VERDICT #7):
     * the EM training stays engine-side (not SQL) but its artifact — the
@@ -3187,11 +3132,7 @@ object ExtensionQueries {
     """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
       |       count(*) AS n_events, round(sum(value), 2) AS sum_value
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-    val tmp = stageOnce(
-      Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")),
-      s"/tmp/graft_stream/${Staging.tag(dir)}")
-    EventStreams.runWindowedAggOnce(s, tmp, "graft_stream_win")
+    EventStreams.runWindowedAggOnce(s, eventSpool(s, dir), "graft_stream_win")
   }
 
   /** Streaming exact-dedup through the REAL streaming path: events with
@@ -3202,11 +3143,7 @@ object ExtensionQueries {
   val streamDedup = q("x_stream_dedup",
     """SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
       |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val tmp = stageOnce(ev.unionByName(ev), // planted replays
-      s"/tmp/graft_stream_dup/${Staging.tag(dir)}")
-    EventStreams.runDedupOnce(s, tmp, "graft_stream_dedup")
+    EventStreams.runDedupOnce(s, replaySpool(s, dir), "graft_stream_dedup")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
   }
@@ -3387,56 +3324,48 @@ object ExtensionQueries {
     * monitor, and each batch's EXPECTED counters recomputed from a
     * one-shot frozen-quantizer encode of the prefix corpus (streamed
     * state == prefix encode, the x_knn_pq_append invariant), persisted
-    * beside the log.
+    * beside the log. Under the returned root: the index `idx/` (its
+    * `recall_log/` is the monitor's), the stream checkpoint `ckpt/`, the
+    * prefix scratch indexes `prefix<batch>/` and the counters `expected/`.
     */
-  def stageStreamRecall(s: SparkSession, dir: String): String = {
-    val idx = s"/tmp/graft_stream_recall/${Staging.tag(dir)}_idx"
-    val done = new java.io.File(s"${idx}_DONE_v1")
-    if (done.exists()) return idx
-    val ckpt = s"${idx}_ckpt"
-    Seq(idx, ckpt).foreach { p =>
-      val f = new java.io.File(p)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+  def stageStreamRecall(s: SparkSession, dir: String): String =
+    Staging.once("stream_recall", dir) { root =>
+      val idx = s"$root/idx"
+      val emb16 = Tables.embeddings(s, dir).filter(col("vec_id") < 16)
+      val spool = stageEmbSpool(s, dir)
+      val queries = emb16.filter(col("vec_id") < 5)
+        .localCheckpoint(eager = true)
+      AnnIndex.buildIvfPq(emb16.filter(col("vec_id") < 8), "vec_id", "embedding",
+        idx, nlist = 4, m = 8, ksub = 8, iters = 1, keepVectors = true)
+      graft.streaming.DocStreams.runIvfPqAppendWithRecallOnce(s, spool, idx,
+        s"$root/ckpt", queries, k = 5, nprobe = 2)
+      val streamed = AnnIndex.readIvfPq(s, idx)
+      Seq(0L -> (col("vec_id") < 12), 1L -> lit(true)).map {
+        case (bid, pred) =>
+          val scratch = s"$root/prefix$bid"
+          val prefix = emb16.filter(pred)
+          AnnIndex.buildIvfPq(prefix, "vec_id", "embedding",
+            scratch, nlist = 4, m = 8, ksub = 8, iters = 1, keepVectors = true,
+            coarseIn = Some(streamed.coarse), modelIn = Some(
+              Similarity.PqModel(streamed.codebooks,
+                Similarity.pqEncode(prefix, "vec_id", "embedding",
+                  streamed.codebooks, streamed.m, streamed.sub),
+                streamed.m, streamed.sub)))
+          val (h, p) = AnnIndex.ivfPqRecallCounters(s, scratch, queries,
+            "vec_id", "embedding", k = 5, nprobe = 2)
+          val rq = if (p == 0L) 0L else math.floor(h.toDouble / p * 1e6).toLong
+          s.range(1).select(lit(bid).as("batch_id"), lit(h).as("hits"),
+            lit(p).as("possible"), lit(rq).as("recall_q"))
+      }.reduce(_ unionByName _)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/expected")
     }
-    val emb16 = Tables.embeddings(s, dir).filter(col("vec_id") < 16)
-    val spool = stageEmbSpool(s, dir)
-    val queries = emb16.filter(col("vec_id") < 5)
-      .localCheckpoint(eager = true)
-    AnnIndex.buildIvfPq(emb16.filter(col("vec_id") < 8), "vec_id", "embedding",
-      idx, nlist = 4, m = 8, ksub = 8, iters = 1, keepVectors = true)
-    graft.streaming.DocStreams.runIvfPqAppendWithRecallOnce(s, spool, idx,
-      ckpt, queries, k = 5, nprobe = 2)
-    val streamed = AnnIndex.readIvfPq(s, idx)
-    Seq(0L -> (col("vec_id") < 12), 1L -> lit(true)).map {
-      case (bid, pred) =>
-        val scratch = s"${idx}_prefix$bid"
-        val f = new java.io.File(scratch)
-        if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-        val prefix = emb16.filter(pred)
-        AnnIndex.buildIvfPq(prefix, "vec_id", "embedding",
-          scratch, nlist = 4, m = 8, ksub = 8, iters = 1, keepVectors = true,
-          coarseIn = Some(streamed.coarse), modelIn = Some(
-            Similarity.PqModel(streamed.codebooks,
-              Similarity.pqEncode(prefix, "vec_id", "embedding",
-                streamed.codebooks, streamed.m, streamed.sub),
-              streamed.m, streamed.sub)))
-        val (h, p) = AnnIndex.ivfPqRecallCounters(s, scratch, queries,
-          "vec_id", "embedding", k = 5, nprobe = 2)
-        val rq = if (p == 0L) 0L else math.floor(h.toDouble / p * 1e6).toLong
-        s.range(1).select(lit(bid).as("batch_id"), lit(h).as("hits"),
-          lit(p).as("possible"), lit(rq).as("recall_q"))
-    }.reduce(_ unionByName _)
-      .coalesce(1).write.mode("overwrite").parquet(s"${idx}_expected")
-    done.createNewFile()
-    idx
-  }
 
   val streamRecall = q("x_stream_recall",
     "SELECT true AS stream_recall_ok") { (s, dir) =>
-    val idx = stageStreamRecall(s, dir)
-    val logged = graft.util.TinyParquet.openStore(s, s"$idx/recall_log")
+    val root = stageStreamRecall(s, dir)
+    val logged = graft.util.TinyParquet.openStore(s, s"$root/idx/recall_log")
       .select(col("batch_id"), col("hits"), col("possible"), col("recall_q"))
-    val expected = graft.util.TinyParquet.openStore(s, s"${idx}_expected")
+    val expected = graft.util.TinyParquet.openStore(s, s"$root/expected")
     logged.withColumn("__a", lit(1))
       .join(expected.withColumn("__b", lit(1)),
         Seq("batch_id", "hits", "possible", "recall_q"), "full")
@@ -3512,12 +3441,8 @@ object ExtensionQueries {
     """SELECT c_mktsegment, count(*) AS n_events, round(sum(value), 2) AS sum_value
       |FROM events JOIN customer ON user_id = c_custkey
       |GROUP BY 1""".stripMargin) { (s, dir) =>
-    val tmp = stageOnce(
-      Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")),
-      s"/tmp/graft_stream/${Staging.tag(dir)}")
     val dim = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
-    EventStreams.runEnrichedAggOnce(s, tmp, dim, "c_custkey", "c_mktsegment",
+    EventStreams.runEnrichedAggOnce(s, eventSpool(s, dir), dim, "c_custkey", "c_mktsegment",
       "graft_stream_enriched")
   }
 
@@ -6406,29 +6331,23 @@ object ExtensionQueries {
     * Quartile batches make the per-file doc_id spans tight, so the
     * gate's range predicate genuinely prunes.
     */
-  def stageStreamManifest(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_streammanifest/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_DONE_v1")
-    if (done.exists()) return tmp
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .localCheckpoint(eager = true)
-    val n = docs.count()
-    val qsize = math.max(1L, (n + 3) / 4)
-    val spool = s"$tmp/spool"
-    new java.io.File(spool).mkdirs()
-    (0 until 4).foreach { i =>
-      stageSpoolFile(docs.filter(col("doc_id") >= i * qsize &&
-        col("doc_id") < (i + 1) * qsize), spool, i)
+  def stageStreamManifest(s: SparkSession, dir: String): String =
+    Staging.once("streammanifest", dir) { tmp =>
+      val docs = Tables.documents(s, dir)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .localCheckpoint(eager = true)
+      val n = docs.count()
+      val qsize = math.max(1L, (n + 3) / 4)
+      val spool = s"$tmp/spool"
+      new java.io.File(spool).mkdirs()
+      (0 until 4).foreach { i =>
+        stageSpoolFile(docs.filter(col("doc_id") >= i * qsize &&
+          col("doc_id") < (i + 1) * qsize), spool, i)
+      }
+      graft.streaming.DocStreams.runManifestAppendOnce(s, spool, s"$tmp/table",
+        s"$tmp/ckpt", "doc_id long, lang string, n_chars long",
+        statsCols = Seq("doc_id"), keyCols = Seq("doc_id"))
     }
-    graft.streaming.DocStreams.runManifestAppendOnce(s, spool, s"$tmp/table",
-      s"$tmp/ckpt", "doc_id long, lang string, n_chars long",
-      statsCols = Seq("doc_id"), keyCols = Seq("doc_id"))
-    done.createNewFile()
-    tmp
-  }
 
   /** Streaming manifest maintenance — the data-skipping layer kept
     * CURRENT while the table grows: the staged table exists only through
@@ -6619,8 +6538,6 @@ object ExtensionQueries {
       StoreRef("text_inv", "text", s"$cf/text_inv"),
       StoreRef("text_pos", "text", s"$cf/text_pos"),
       StoreRef("dedup_sigs", "dedup", s"$cf/dedup_store"))
-    // staged BEFORE the parallel block: fixture staging is memoized but
-    // not designed for concurrent first-touch from sibling threads
     val pt = PipelineQueries.stagePretrain(s, dir)
     // the five scope audits are independent deterministic fleets — run
     // them CONCURRENTLY (each fsck call materializes its per-store rows
@@ -6666,32 +6583,26 @@ object ExtensionQueries {
     * three different families' rewrites (ann codes, positional text,
     * dedup signatures).
     */
-  def stageSweepFixtures(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_sweep/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_SWEEP_DONE_v1")
-    if (done.exists()) return tmp
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
-    val ti = stageTextIndex(s, dir)
-    val cf = stageCascadeFixtures(s, dir)
-    val ai = stageAnnIndexes(s, dir)
-    Seq(s"$ti/inv" -> "inv", s"$ti/inv_maint" -> "inv_maint",
-        s"$ai/pq_del16" -> "pq_del16", s"$cf/text_pos" -> "text_pos",
-        s"$cf/dedup_store" -> "dedup_store").foreach { case (from, name) =>
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(from), new java.io.File(s"$tmp/$name"))
+  def stageSweepFixtures(s: SparkSession, dir: String): String =
+    Staging.once("sweep", dir) { tmp =>
+      val ti = stageTextIndex(s, dir)
+      val cf = stageCascadeFixtures(s, dir)
+      val ai = stageAnnIndexes(s, dir)
+      Seq(s"$ti/inv" -> "inv", s"$ti/inv_maint" -> "inv_maint",
+          s"$ai/pq_del16" -> "pq_del16", s"$cf/text_pos" -> "text_pos",
+          s"$cf/dedup_store" -> "dedup_store").foreach { case (from, name) =>
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(from), new java.io.File(s"$tmp/$name"))
+      }
+      graft.ext.StoreMaintenance.sweep(s, Seq(
+          graft.ext.StoreRef("inv", "text", s"$tmp/inv"),
+          graft.ext.StoreRef("inv_maint", "text", s"$tmp/inv_maint"),
+          graft.ext.StoreRef("pq_del16", "ann", s"$tmp/pq_del16"),
+          graft.ext.StoreRef("pos_takedown", "text", s"$tmp/text_pos"),
+          graft.ext.StoreRef("dedup_sigs", "dedup", s"$tmp/dedup_store")),
+        threshold = 0.1)
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/report")
     }
-    graft.ext.StoreMaintenance.sweep(s, Seq(
-        graft.ext.StoreRef("inv", "text", s"$tmp/inv"),
-        graft.ext.StoreRef("inv_maint", "text", s"$tmp/inv_maint"),
-        graft.ext.StoreRef("pq_del16", "ann", s"$tmp/pq_del16"),
-        graft.ext.StoreRef("pos_takedown", "text", s"$tmp/text_pos"),
-        graft.ext.StoreRef("dedup_sigs", "dedup", s"$tmp/dedup_store")),
-      threshold = 0.1)
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/report")
-    done.createNewFile()
-    tmp
-  }
 
   /** Fleet maintenance sweep — the dashboard's actuator
     * ([[graft.ext.StoreMaintenance.sweep]]): one call measures
@@ -6782,12 +6693,10 @@ object ExtensionQueries {
     * is a no-op on every surface), so the staged fixture stays valid
     * across runs without rebuilding.
     */
-  def stageCascadeFixtures(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_cascade/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_CASCADE_DONE_v4_staged_refs")
-    if (done.exists()) return tmp
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
+  def stageCascadeFixtures(s: SparkSession, dir: String): String =
+    Staging.once("cascade", dir)(buildCascadeFixtures(s, dir, _))
+
+  private def buildCascadeFixtures(s: SparkSession, dir: String, tmp: String): Unit = {
     val docs = cascadeDocs(s, dir).localCheckpoint(eager = true)
     val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 64)
       .select(col("vec_id"), col("embedding"))
@@ -6874,8 +6783,6 @@ object ExtensionQueries {
       .join(broadcast(refLabels), Seq("id"), "left")
       .select(col("id"), coalesce(col("__rc"), col("id")).as("component"))
       .write.mode("overwrite").parquet(s"$refDir/comps")
-    done.createNewFile()
-    tmp
   }
 
   /** Cross-store cascading delete — "forget these ids EVERYWHERE", the

@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Build every /tmp-staged test INPUT once, outside any timed or dumped
   * query: the archives a user would have uploaded, the files a stream
   * would have delivered, the curated bucketed/partitioned/JSONL layouts a
-  * warehouse maintains ahead of queries. All helpers are idempotent
-  * (content-fingerprinted paths + completion markers), so queries that
-  * call them directly stay correct standalone — this just moves the
-  * one-time fixture generation out of the first measured run.
+  * warehouse maintains ahead of queries. Every helper stages through
+  * [[Staging.once]] (a root keyed by the sf dir's content fingerprint and
+  * the compiled code's digest), so queries that call them directly stay
+  * correct standalone — this just moves the one-time fixture generation
+  * out of the first measured run.
   */
 object InputPrep {
   /** Each stage is isolated: in round 9 a single failing stage

@@ -57,15 +57,13 @@ object PipelineQueries {
   /** Stage the composed pipeline once per sf dir: run
     * [[graft.ext.Curation.pretrain]] (the single-execution composition),
     * persist the admitted and packed views, then export the packed
-    * sequences as the fixed shard set. Memoized behind a versioned
-    * marker like every shared run; listed in [[InputPrep.sharedRuns]]
+    * sequences as the fixed shard set. Staged once per data and code
+    * ([[Staging.once]]); listed in [[InputPrep.sharedRuns]]
     * so the one execution is timed on its own bench line, not inside
     * whichever gate happens to run first.
     */
-  def stagePretrain(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_pretrain/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_DONE_v16_incr")
-    if (!done.exists()) {
+  def stagePretrain(s: SparkSession, dir: String): String =
+    Staging.once("pretrain", dir) { tmp =>
       val docs = Tables.documents(s, dir)
       val res = graft.ext.Curation.pretrain(
         corpus = pretrainCorpus(s, dir),
@@ -94,10 +92,7 @@ object PipelineQueries {
         s"$tmp/shards_incr")
       graft.ext.ShardExport.exportIncremental(s, packedFull, Shards,
         s"$tmp/shards_incr")
-      done.createNewFile()
     }
-    tmp
-  }
 
   // --------------------------------------------------------------- SQL
   /** The whole funnel as one CTE chain (no leading WITH; the caller
@@ -264,12 +259,8 @@ object PipelineQueries {
     * originals — merges and revocations really happen), driven through
     * [[graft.streaming.DocStreams.runCorpusAdmitOnce]].
     */
-  def stageCorpusAdmit(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_corpusadmit/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_DONE_v17_stream_shards")
-    if (!done.exists()) {
-      val tmpDir = new java.io.File(tmp)
-      if (tmpDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpDir)
+  def stageCorpusAdmit(s: SparkSession, dir: String): String =
+    Staging.once("corpusadmit", dir) { tmp =>
       val spool = s"$tmp/spool"
       new java.io.File(spool).mkdirs()
       val corpus = pretrainCorpus(s, dir)
@@ -308,10 +299,7 @@ object PipelineQueries {
         s"$tmp/shards_stream")
       graft.ext.ShardExport.exportIncremental(s, packedStream, Shards,
         s"$tmp/shards_stream")
-      done.createNewFile()
     }
-    tmp
-  }
 
   /** Streaming corpus admission gate: the streamed store's FINAL
     * admitted view, hash-matched against the batch flagship PREFIX

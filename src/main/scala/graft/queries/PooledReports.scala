@@ -88,47 +88,11 @@ object PooledReports {
   def wrap(d: QueryDef): QueryDef =
     if (PooledGateNames(d.name)) d.copy(fn = pooled(d.name)(d.fn)) else d
 
-  /** Digest of the compiled code the pool was built by: name:len:mtime of
-    * every file under the class-source location (the classes dir when run
-    * from sbt, the jar entry otherwise). Folded into [[root]] so an edited
-    * pooled-gate implementation ABANDONS the stale pool instead of serving
-    * it (r20 VERDICT item 2 / ADVICE: a warm /tmp pool otherwise serves
-    * the OLD frame after a code change — a loud-but-confusing oracle
-    * failure for an output-changing edit, silent staleness for an
-    * output-preserving one).
+  /** Code- and data-keyed ([[Staging.root]]): an edited pooled-gate
+    * implementation or regenerated testdata abandons the stale pool
+    * instead of serving it.
     */
-  private[queries] def codeTag: String = codeTagMemo
-  private lazy val codeTagMemo: String = {
-    val src = Option(getClass.getProtectionDomain.getCodeSource)
-      .flatMap(cs => Option(cs.getLocation)).map(u => new java.io.File(u.toURI))
-    src match {
-      case Some(f) if f.isDirectory => digestTree(f)
-      case Some(f) => digest(s"${f.getName}:${f.length}:${f.lastModified}")
-      case None => "nosrc"
-    }
-  }
-
-  /** Stable digest of a directory tree's (relative path, length, mtime)
-    * listing — the same fingerprint idea as [[Staging.tag]], over code
-    * instead of data. Extracted for the spec: two trees that differ in
-    * any file's content-length or mtime must tag differently.
-    */
-  private[queries] def digestTree(dir: java.io.File): String = {
-    val base = dir.toPath
-    def walk(f: java.io.File): Seq[String] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(s"${base.relativize(f.toPath)}:${f.length}:${f.lastModified}")
-    digest(walk(dir).mkString("|"))
-  }
-
-  private def digest(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-
-  private def root(sfDir: String) =
-    s"/tmp/graft_pool/${Staging.tag(sfDir)}_$codeTag"
+  private def root(sfDir: String) = Staging.root("pool", sfDir)
 
   /** Delete the pool root for `sfDir` — the bench calls this before its
     * timed run so the rep of record is cold-pool BY CONSTRUCTION (r20

@@ -1052,25 +1052,11 @@ object QualityQueries {
   }
 
   /** Input prep (idempotent): the positional index over documents. */
-  def stagePositionalIndex(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_posindex/${Staging.tag(dir)}"
-    if (!new java.io.File(s"$tmp/positions/_SUCCESS").exists())
-      graft.ext.TextIndex.buildPositional(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        "doc_id", "text", tmp, parts = 8)
-    tmp
-  }
+  def stagePositionalIndex(s: SparkSession, dir: String): String =
+    Staging.once("posindex", dir)(graft.ext.TextIndex.buildPositional(
+      Tables.documents(s, dir).select(col("doc_id"), col("text")),
+      "doc_id", "text", _, parts = 8))
 
-  /** Events split into 3 deterministic arrival slices. Fixture prep,
-    * untimed; the `_SPOOL_DONE` marker makes re-staging a no-op.
-    */
-  /** Plain events in TWO hash-keyed arrival slices — two is the minimum
-    * that proves store incrementality (batch 1 bootstraps the delta
-    * store, batch 2 exercises re-minimization against it) and every
-    * further slice only re-pays the fixed micro-batch machinery cost,
-    * the measured dominator of gate wall time (the stageDocSpool
-    * argument, applied to the event side). Fixture prep, untimed.
-    */
   /** Streaming SCD2 maintenance through the real streaming path (r13
     * VERDICT #6, the history family's streaming leg): the event log
     * arrives over the shared 2-slice spool — hash-sliced, so a user's
@@ -1121,22 +1107,24 @@ object QualityQueries {
           lit(true))).as("stream_scd2_ok"))
   }
 
-  private def stageEventSpool2(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_stream_events2/${Staging.tag(dir)}"
-    val done = new java.io.File(s"$tmp/_SPOOL_DONE")
-    if (done.exists()) return tmp
-    val e = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .localCheckpoint(eager = true)
-    new java.io.File(tmp).mkdirs()
-    (0 until 2).foreach { i =>
-      ExtensionQueries.stageSpoolFile(
-        e.filter(pmod(xxhash64(col("event_id")), lit(2)) === i), tmp, i)
+  /** Plain events in TWO hash-keyed arrival slices — two is the minimum
+    * that proves store incrementality (batch 1 bootstraps the delta
+    * store, batch 2 exercises re-minimization against it) and every
+    * further slice only re-pays the fixed micro-batch machinery cost,
+    * the measured dominator of gate wall time (the stageDocSpool
+    * argument, applied to the event side). Fixture prep, untimed.
+    */
+  private def stageEventSpool2(s: SparkSession, dir: String): String =
+    Staging.once("stream_events2", dir) { tmp =>
+      val e = Tables.events(s, dir)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+          col("value"))
+        .localCheckpoint(eager = true)
+      (0 until 2).foreach { i =>
+        ExtensionQueries.stageSpoolFile(
+          e.filter(pmod(xxhash64(col("event_id")), lit(2)) === i), tmp, i)
+      }
     }
-    done.createNewFile()
-    tmp
-  }
 
   /** URL canonicalization dedup (the web-corpus key): three planted
     * per-doc variants — case-shuffled host, explicit default port,

@@ -18,12 +18,6 @@ object RankingQueries {
   private def q(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame) =
     QueryDef(name, fn, Some(oracle))
 
-  private def stageOnce(df: => DataFrame, tmp: String): String = {
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
-      df.write.mode("overwrite").parquet(tmp)
-    tmp
-  }
-
   /** One MEMOIZED stream run per fixture for the store-maintaining
     * streams this family's gates read (the [[InputPrep.sharedRuns]]
     * discipline, r14): the spool staging and the micro-batch machinery
@@ -37,18 +31,11 @@ object RankingQueries {
   private val streamStoreRuns =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def eventSpool(s: SparkSession, dir: String): String =
-    stageOnce(
-      Tables.events(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          col("value")),
-      s"/tmp/graft_stream/${Staging.tag(dir)}")
-
   private[queries] def btWinMatrixStore(s: SparkSession, dir: String): String =
     streamStoreRuns.computeIfAbsent("bt:" + Staging.tag(dir), _ => {
       val store = s"/tmp/graft_btstore/${Staging.tag(dir)}"
       val alt = concat(lit("t"), (col("user_id") % 5).cast("string"))
-      EventStreams.runWinMatrixOnce(s, eventSpool(s, dir), store,
+      EventStreams.runWinMatrixOnce(s, ExtensionQueries.eventSpool(s, dir), store,
         winner = when(col("value") > 50, col("event_type")).otherwise(alt),
         loser = when(col("value") > 50, alt).otherwise(col("event_type")),
         rowFilter = col("value").isNotNull)
@@ -58,7 +45,7 @@ object RankingQueries {
   private[queries] def labelCountsStore(s: SparkSession, dir: String): String =
     streamStoreRuns.computeIfAbsent("lbl:" + Staging.tag(dir), _ => {
       val store = s"/tmp/graft_lblstore/${Staging.tag(dir)}"
-      EventStreams.runLabelCountsOnce(s, eventSpool(s, dir), store,
+      EventStreams.runLabelCountsOnce(s, ExtensionQueries.eventSpool(s, dir), store,
         item = col("event_id") % 300,
         annotator = col("user_id"),
         label = col("event_type"))
@@ -68,7 +55,7 @@ object RankingQueries {
   private[queries] def aucHistogramStore(s: SparkSession, dir: String): String =
     streamStoreRuns.computeIfAbsent("auc:" + Staging.tag(dir), _ => {
       val store = s"/tmp/graft_aucstore/${Staging.tag(dir)}"
-      EventStreams.runScoreHistogramOnce(s, eventSpool(s, dir), store,
+      EventStreams.runScoreHistogramOnce(s, ExtensionQueries.eventSpool(s, dir), store,
         group = col("event_type"),
         score = round(col("value") * 100, 0).cast("long"),
         label = col("user_id") % 3 === 0,
@@ -777,7 +764,7 @@ object RankingQueries {
   private[queries] def ssjStore(s: SparkSession, dir: String): String =
     streamStoreRuns.computeIfAbsent("ssj:" + Staging.tag(dir), _ => {
       val out = s"/tmp/graft_ssjoin/${Staging.tag(dir)}"
-      EventStreams.runStreamStreamJoinOnce(s, eventSpool(s, dir),
+      EventStreams.runStreamStreamJoinOnce(s, ExtensionQueries.eventSpool(s, dir),
           s"graft_stream_ssjoin_${Staging.tag(dir)}")
         .write.mode("overwrite").parquet(out)
       out

@@ -53,35 +53,32 @@ object ScaleQueries {
     * exchange-free plan; this query asserts result parity with the plain
     * join the oracle replays.
     */
-  /** Input prep (idempotent): write the bucketed layouts once per
-    * (sf dir, content fingerprint) and register the external tables —
-    * the curated layout a warehouse would maintain AHEAD of queries.
+  /** Input prep (idempotent): write the bucketed layouts once per data
+    * and code ([[Staging.once]]) and register the external tables in this
+    * session — the curated layout a warehouse would maintain AHEAD of
+    * queries.
     */
   def stageBucketed(s: SparkSession, dir: String): Unit = {
-    val tag = Staging.tag(dir)
-    def prep(table: String, path: String, keyCol: String, write: => Unit,
-        ddlCols: String): Unit = {
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      if (new java.io.File(s"$path/_SUCCESS").exists())
-        s.sql(s"""CREATE TABLE $table ($ddlCols) USING parquet
-                 |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO 16 BUCKETS
-                 |LOCATION '$path'""".stripMargin)
-      else write
+    val tables = Seq(
+      ("graft_orders_b", "orders", "o_orderkey", "o_orderkey BIGINT, o_orderpriority STRING",
+        () => Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"))),
+      ("graft_lineitem_b", "lineitem", "l_orderkey", "l_orderkey BIGINT, l_extendedprice DOUBLE",
+        () => Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice"))))
+    val root = Staging.once("bucketed", dir) { root =>
+      tables.foreach { case (table, sub, keyCol, _, df) =>
+        s.sql(s"DROP TABLE IF EXISTS $table")
+        df().write.mode("overwrite").format("parquet")
+          .bucketBy(16, keyCol).sortBy(keyCol)
+          .option("path", s"$root/$sub")
+          .saveAsTable(table)
+      }
     }
-    prep("graft_orders_b", s"/tmp/graft_bucketed/$tag/orders", "o_orderkey",
-      Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"/tmp/graft_bucketed/$tag/orders")
-        .saveAsTable("graft_orders_b"),
-      "o_orderkey BIGINT, o_orderpriority STRING")
-    prep("graft_lineitem_b", s"/tmp/graft_bucketed/$tag/lineitem", "l_orderkey",
-      Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"/tmp/graft_bucketed/$tag/lineitem")
-        .saveAsTable("graft_lineitem_b"),
-      "l_orderkey BIGINT, l_extendedprice DOUBLE")
+    tables.foreach { case (table, sub, keyCol, ddlCols, _) =>
+      s.sql(s"DROP TABLE IF EXISTS $table")
+      s.sql(s"""CREATE TABLE $table ($ddlCols) USING parquet
+               |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO 16 BUCKETS
+               |LOCATION '$root/$sub'""".stripMargin)
+    }
   }
 
   val bucketedJoin = q("x_bucketed_join",
@@ -102,27 +99,17 @@ object ScaleQueries {
     * the plan); this query asserts the layout round-trips values exactly —
     * partition columns come back from directory names, not file data.
     */
-  /** Input prep (idempotent): the partitioned events layout. _SUCCESS (not
-    * bare directory existence): a crash mid-write must not leave a partial
-    * dataset that later runs silently reuse.
-    */
-  def stagePartitioned(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_part/${Staging.tag(dir)}"
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.partitionBy("event_type").mode("overwrite").parquet(tmp)
-    tmp
-  }
+  /** Input prep (idempotent): the partitioned events layout. */
+  def stagePartitioned(s: SparkSession, dir: String): String =
+    Staging.once("part", dir)(Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .write.partitionBy("event_type").mode("overwrite").parquet(_))
 
   /** Input prep (idempotent): documents as JSON lines. */
-  def stageJsonl(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_jsonl/${Staging.tag(dir)}"
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
-      Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-        .write.mode("overwrite").json(tmp)
-    tmp
-  }
+  def stageJsonl(s: SparkSession, dir: String): String =
+    Staging.once("jsonl", dir)(Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"), col("source"))
+      .write.mode("overwrite").json(_))
 
   val partitionedScan = q("x_partitioned_scan",
     """SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
@@ -148,13 +135,10 @@ object ScaleQueries {
   }
 
   /** Input prep (idempotent): documents as ORC. */
-  def stageOrc(s: SparkSession, dir: String): String = {
-    val tmp = s"/tmp/graft_orc/${Staging.tag(dir)}"
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
-      Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-        .write.mode("overwrite").orc(tmp)
-    tmp
-  }
+  def stageOrc(s: SparkSession, dir: String): String =
+    Staging.once("orc", dir)(Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"), col("source"))
+      .write.mode("overwrite").orc(_))
 
   /** Columnar-format interop: the documents table written and read back
     * as ORC (Spark's other first-class columnar format — predicate
@@ -237,17 +221,13 @@ object ScaleQueries {
 
   /** Input prep (idempotent): documents deliberately shattered into 64
     * small files, then compacted by the real operator. */
-  def stageCompacted(s: SparkSession, dir: String): String = {
-    val base = s"/tmp/graft_layout/${Staging.tag(dir)}"
-    val dst = s"$base/compacted"
-    if (!new java.io.File(s"$dst/_SUCCESS").exists()) {
-      val frag = s"$base/frag"
+  def stageCompacted(s: SparkSession, dir: String): String =
+    Staging.once("compacted", dir) { base =>
       Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-        .repartition(64).write.mode("overwrite").parquet(frag)
-      graft.ext.Layout.compactParquet(s, frag, dst, targetBytes = 4L << 20)
-    }
-    dst
-  }
+        .repartition(64).write.mode("overwrite").parquet(s"$base/frag")
+      graft.ext.Layout.compactParquet(s, s"$base/frag", s"$base/compacted",
+        targetBytes = 4L << 20)
+    } + "/compacted"
 
   /** Small-file compaction roundtrip: the 64-way shattered documents
     * table compacted to ~4 MB files by [[graft.ext.Layout.compactParquet]]
@@ -266,10 +246,8 @@ object ScaleQueries {
     * per-file min/max stats manifest written beside it — the persisted
     * layout whose payoff [[zonePrunedScan]] gates.
     */
-  def stageZordered(s: SparkSession, dir: String): String = {
-    val base = s"/tmp/graft_layout/${Staging.tag(dir)}"
-    val dst = s"$base/zordered"
-    if (!new java.io.File(s"$dst/_MANIFEST_DONE_v2_keys").exists()) {
+  def stageZordered(s: SparkSession, dir: String): String =
+    Staging.once("zordered", dir) { dst =>
       val o = Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
         pmod(col("o_custkey"), lit(1024)).as("xd"),
@@ -283,10 +261,7 @@ object ScaleQueries {
       // everything — the fingerprint is what skips files)
       graft.ext.Layout.writeManifest(s, dst, Seq("xd", "yd"),
         keyCols = Seq("o_orderkey"), keyBits = 256)
-      new java.io.File(s"$dst/_MANIFEST_DONE_v2_keys").createNewFile()
     }
-    dst
-  }
 
   /** Point lookup through the per-file KEY fingerprint: three order
     * keys fetched from the z-ordered layout by pruning to the files

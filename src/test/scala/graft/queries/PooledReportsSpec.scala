@@ -14,7 +14,7 @@ class PooledReportsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def poolPath(name: String) =
-    s"/tmp/graft_pool/${Staging.tag(dir)}_${PooledReports.codeTag}/$name"
+    s"/tmp/graft_pool/${Staging.tag(dir)}_${Staging.codeTag}/$name"
 
   test("wrap is the identity for non-pooled gates") {
     val d = ParityQueries.all.head
@@ -64,17 +64,17 @@ class PooledReportsSpec extends SparkSpec {
     val f = new java.io.File(t, "A.class")
     java.nio.file.Files.write(f.toPath, "one".getBytes)
     f.setLastModified(1000000L)
-    val tag1 = PooledReports.digestTree(t)
+    val tag1 = Staging.digestTree(t)
     java.nio.file.Files.write(f.toPath, "four".getBytes) // length changes
     f.setLastModified(1000000L)
-    val tag2 = PooledReports.digestTree(t)
+    val tag2 = Staging.digestTree(t)
     tag2 should not be tag1
     f.setLastModified(2000000L) // mtime-only change (same length)
-    val tag3 = PooledReports.digestTree(t)
+    val tag3 = Staging.digestTree(t)
     tag3 should not be tag2
     // and the live root embeds the live code tag
-    PooledReports.codeTag should fullyMatch regex "[0-9a-f]{12}|nosrc"
-    poolPath("x").contains(PooledReports.codeTag) shouldBe true
+    Staging.codeTag should fullyMatch regex "[0-9a-f]{12}|nosrc"
+    poolPath("x").contains(Staging.codeTag) shouldBe true
   }
 
   test("ensureAll surfaces a failed build by name; the others still stage") {
