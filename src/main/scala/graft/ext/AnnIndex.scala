@@ -38,6 +38,18 @@ import graft.ext.Similarity.{PqModel, pqLut, probeClusters, topKPerQuery}
   *   _next_seq   next maintenance sequence number ([[nextSeq]])
   * }}}
   *
+  * Every layout's rows are encoded in ONE place, its encoder in the
+  * private layout table: the encoder turns a frozen model (coarse
+  * centroids, codebooks, SQ bounds or `_dim`) and new rows into the
+  * layout's row-table frames, and one row writer stamps `__seq` and
+  * writes them with the layout's partitioning. A build trains the model
+  * and writes the corpus through them at seq 0, [[append]] reads the
+  * model back and writes the new rows at [[nextSeq]], [[compact]]
+  * rewrites the live rows through the same writer, and the streamed
+  * IVF×PQ append stages the encoder's frames
+  * ([[graft.streaming.DocStreams.runIvfPqAppendOnce]]). The IVF family's
+  * query paths share one probed scan ([[probe]]).
+  *
   * Maintenance model (FAISS `remove_ids`/`add` semantics): every stored
   * row carries the maintenance sequence number `__seq` it was written at
   * (0 for the initial build). [[deleteIds]] appends (id, seq) tombstones;
@@ -55,7 +67,7 @@ import graft.ext.Similarity.{PqModel, pqLut, probeClusters, topKPerQuery}
   * discard — the caller must serialize maintenance against rebuilds of
   * one index (a lock/lease around the maintenance window); appends and
   * deletes among themselves are append-only and need only the id-
-  * uniqueness discipline documented on [[appendPq]].
+  * uniqueness discipline documented on [[append]].
   */
 object AnnIndex {
 
@@ -84,7 +96,7 @@ object AnnIndex {
     * sidecar; compaction/rebuild swaps the whole index dir, so the
     * sidecar resets together with the tombstone log it numbers.
     */
-  private[ext] def nextSeq(spark: SparkSession, dir: String): Long = {
+  private[graft] def nextSeq(spark: SparkSession, dir: String): Long = {
     val f = s"$dir/_next_seq"
     if (graft.util.Hfs.exists(spark, f))
       graft.util.Hfs.readString(spark, f).trim.toLong
@@ -160,44 +172,158 @@ object AnnIndex {
   }
 
   // ------------------------------------------------------- layout table
-  /** The storage decisions one layout makes — everything the maintenance
-    * verbs ([[append]], [[update]], [[applyDiff]], [[compact]],
-    * [[deleteIds]], the debt/health counters) need to know about it:
+  /** The storage decisions one layout makes — everything the build,
+    * maintenance verbs ([[append]], [[update]], [[applyDiff]],
+    * [[compact]], [[deleteIds]]) and the debt/health counters need to
+    * know about it:
     *
     *   - `nested`: the sub-directory that holds a composed layout's row
     *     tables AND tombstones ([[storeDir]]);
     *   - `rows`: the row tables, primary first (the one debt, health and
     *     fsck measure), each with whether it is `__cluster`-partitioned;
-    *   - `frozen`: side tables and sidecars [[compact]] carries verbatim;
-    *   - `encode`: the frozen-quantizer append of new rows.
+    *   - `frozen`: side tables and sidecars [[compact]] carries verbatim
+    *     (the [[Frozen]] model);
+    *   - `encode`: the layout's one encoder — new rows against a frozen
+    *     model, as (row table, frame) pairs in the on-disk column shape
+    *     without `__seq` ([[writeRows]] stamps it). Composed and graph
+    *     layouts encode through their nested index and [[GraphAnn]].
     */
   private final case class Layout(nested: Option[String] = None,
       rows: Seq[(String, Boolean)] = Nil, frozen: Seq[String] = Nil,
-      encode: (SparkSession, String, DataFrame, String, String) => Unit)
+      encode: (Frozen, DataFrame, String, String) => Seq[(String, DataFrame)] =
+        (_, _, _, _) => Nil)
 
   private val layouts: Map[String, Layout] = Map(
     "pq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("codebooks"),
-      encode = appendPq),
+      encode = (f, rows, id, vec) => Seq("codes" -> f.codes.getOrElse(
+        Similarity.pqEncode(rows, id, vec, f.codebooks, f.m, f.sub)))),
     "ivf" -> Layout(rows = Seq("vectors" -> true), frozen = Seq("coarse"),
-      encode = appendIvf),
+      encode = (f, rows, id, vec) => Seq("vectors" ->
+        Similarity.assign(rows, (id, vec), f.coarse).select(
+          qcol(id).cast("long").as("__id"), qcol(vec).as("__vec"), col("__cluster")))),
     "ivfpq" -> Layout(rows = Seq("codes" -> true, "vectors" -> true),
-      frozen = Seq("coarse", "codebooks"), encode = appendIvfPq),
+      frozen = Seq("coarse", "codebooks"), encode = ivfPqRows),
     "sq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("bounds"),
-      encode = appendSq),
+      encode = (f, rows, id, vec) =>
+        Seq("codes" -> Similarity.sqEncode(rows, id, vec, f.bounds.get))),
     "ivfsq" -> Layout(rows = Seq("codes" -> true),
-      frozen = Seq("coarse", "bounds"), encode = appendIvfSq),
+      frozen = Seq("coarse", "bounds"), encode = (f, rows, id, vec) => Seq("codes" ->
+        Similarity.sqEncode(rows, id, vec, f.bounds.get).join(clusterOf(f, rows, id, vec),
+          Seq("__id")))),
     "bq" -> Layout(rows = Seq("codes" -> false), frozen = Seq("_dim"),
-      encode = appendBq),
-    "pcapq" -> Layout(nested = Some("pq"), encode = appendRotated),
-    "opq" -> Layout(nested = Some("pq"), encode = appendRotated),
-    "opqivfpq" -> Layout(nested = Some("ivfpq"), encode = appendRotated),
+      encode = (f, rows, id, vec) => Seq("codes" -> rows.select(
+        qcol(id).cast("long").as("__id"),
+        Similarity.signSketch(qcol(vec), f.dim).as("__sig"), qcol(vec).as("__vec")))),
+    "pcapq" -> Layout(nested = Some("pq")),
+    "opq" -> Layout(nested = Some("pq")),
+    "opqivfpq" -> Layout(nested = Some("ivfpq")),
     // compaction is GraphAnn's own (edge repair / fresh-region fold)
-    "graph" -> Layout(rows = Seq("vectors" -> false), encode = GraphAnn.append))
+    "graph" -> Layout(rows = Seq("vectors" -> false)))
 
   private def layoutOf(spark: SparkSession, dir: String): (String, Layout) = {
     val name = readLayout(spark, dir)
     (name, layouts.getOrElse(name, throw new IllegalStateException(
       s"$dir has unknown index layout '$name'")))
+  }
+
+  /** A layout's FROZEN model — what its encoder reads besides the new
+    * rows: the `coarse`/`codebooks` side tables, the SQ `bounds`, the BQ
+    * `_dim`, and the `meta` geometry. A build assembles it from what it
+    * just trained; [[frozenModel]] reads it back. `codes` carries the
+    * corpus codes a PQ training already produced ([[Similarity.pqModel]],
+    * [[Similarity.pqResidualModel]]), which the encoder then passes on
+    * instead of encoding those rows a second time. `keepVectors`: an
+    * IVF×PQ index that also stores its exact vectors.
+    */
+  private[graft] final case class Frozen(layout: String,
+      tables: Map[String, DataFrame] = Map.empty, m: Int = 0, sub: Int = 0,
+      nlist: Int = -1, residual: Boolean = false,
+      bounds: Option[Similarity.SqBounds] = None, dim: Int = 0,
+      keepVectors: Boolean = false, codes: Option[DataFrame] = None) {
+    def coarse: DataFrame = tables("coarse")
+    def codebooks: DataFrame = tables("codebooks")
+  }
+
+  /** The frozen model of a built row-table layout, read from `dir`:
+    * driver-side metadata reads and lazily opened side tables — no Spark
+    * job.
+    */
+  private[graft] def frozenModel(spark: SparkSession, dir: String): Frozen = {
+    val (name, layout) = layoutOf(spark, dir)
+    val (m, sub, nlist, residual) = readMeta(spark, dir)
+    def has(f: String) = layout.frozen.contains(f)
+    Frozen(name,
+      Seq("coarse", "codebooks").filter(has)
+        .map(t => t -> graft.util.TinyParquet.openStore(spark, s"$dir/$t")).toMap,
+      m, sub, nlist, residual,
+      bounds = if (has("bounds")) Some(readBounds(spark, dir)) else None,
+      dim = if (has("_dim")) readDim(spark, dir) else 0,
+      keepVectors = name == "ivfpq" && graft.util.Hfs.exists(spark, s"$dir/vectors"))
+  }
+
+  /** `rows` encoded by their layout's encoder against `model`. */
+  private[graft] def encode(model: Frozen, rows: DataFrame, idCol: String,
+      vecCol: String): Seq[(String, DataFrame)] =
+    layouts(model.layout).encode(model, rows, idCol, vecCol)
+
+  /** The one row writer: stamps `__seq` on encoded row-table frames and
+    * writes each table under `dir` with the partitioning the layout table
+    * records (parquet append into a `__cluster`-partitioned table lands
+    * new rows in their cluster directories, so partition pruning keeps
+    * working). Build writes at seq 0 with `overwrite`, [[append]] at
+    * [[nextSeq]] with `append`, [[compact]] rewrites the live rows at 0,
+    * and the streamed IVF×PQ append stages its batches through it.
+    */
+  private[graft] def writeRows(dir: String, layout: String,
+      frames: Seq[(String, DataFrame)], seq: Long, mode: String): Unit = {
+    val clustered = layouts(layout).rows.toMap
+    frames.foreach { case (t, rows) =>
+      val w = rows.withColumn("__seq", lit(seq)).write.mode(mode)
+      (if (clustered(t)) w.partitionBy("__cluster") else w).parquet(s"$dir/$t")
+    }
+  }
+
+  /** A build's write: `meta`, the freshly trained model's side tables,
+    * then the whole corpus through the encoder and the row writer at
+    * seq 0.
+    */
+  private def install(dir: String, model: Frozen, corpus: DataFrame,
+      idCol: String, vecCol: String): Unit = {
+    val spark = corpus.sparkSession
+    writeMeta(spark, dir, model.m, model.sub, model.nlist, model.residual, model.layout)
+    model.tables.foreach { case (t, df) => df.write.mode("overwrite").parquet(s"$dir/$t") }
+    model.bounds.foreach(writeBounds(spark, dir, _))
+    if (model.dim > 0) graft.util.Hfs.writeString(spark, s"$dir/_dim", model.dim.toString)
+    writeRows(dir, model.layout, encode(model, corpus, idCol, vecCol), 0L, "overwrite")
+  }
+
+  /** Each row's coarse cluster against the frozen centroids:
+    * (`__id`, `__cluster`).
+    */
+  private def clusterOf(f: Frozen, rows: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    Similarity.assign(rows, (idCol, vecCol), f.coarse)
+      .select(qcol(idCol).cast("long").as("__id"), col("__cluster"))
+
+  /** The IVF×PQ encoder: one assignment against the frozen coarse
+    * quantizer, codes against the frozen codebooks (or the training's own
+    * codes), and the exact vectors when the index keeps them. A residual
+    * model quantizes coarse-centroid residuals, not raw vectors —
+    * raw-encoded codes would silently mix the two score spaces inside one
+    * codes table.
+    */
+  private def ivfPqRows(f: Frozen, rows: DataFrame, idCol: String,
+      vecCol: String): Seq[(String, DataFrame)] = {
+    val assigned = Similarity.assign(rows, (idCol, vecCol), f.coarse)
+    val codes =
+      if (f.residual) f.codes.getOrElse(Similarity.pqResidualEncode(assigned,
+        idCol, vecCol, f.coarse, f.codebooks, f.m, f.sub))
+      else f.codes.getOrElse(Similarity.pqEncode(rows, idCol, vecCol,
+          f.codebooks, f.m, f.sub))
+        .join(clusterOf(f, rows, idCol, vecCol), Seq("__id"))
+    Seq("codes" -> codes) ++ (if (!f.keepVectors) Nil else Seq("vectors" ->
+      assigned.select(qcol(idCol).cast("long").as("__id"), qcol(vecCol).as("__vec"),
+        col("__cluster"))))
   }
 
   /** The directory that OWNS a store's row tables and tombstone log: a
@@ -301,15 +427,6 @@ object AnnIndex {
   }
 
   // ----------------------------------------------------------- flat PQ
-  /** Persist a trained PQ model (codebooks + corpus codes) as parquet. */
-  def writePq(model: PqModel, dir: String): Unit = {
-    val spark = model.centroids.sparkSession
-    writeMeta(spark, dir, model.m, model.sub, nlist = -1)
-    model.centroids.write.mode("overwrite").parquet(s"$dir/codebooks")
-    model.codes.withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$dir/codes")
-  }
-
   /** Train + encode + persist in one call (the index-build job).
     * `modelIn` supplies an already-trained model (codebooks + codes of
     * THIS corpus at this geometry) and skips training entirely — the
@@ -319,9 +436,12 @@ object AnnIndex {
     */
   def buildPq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
       m: Int, ksub: Int, iters: Int = 2, maxTrainRows: Int = 0,
-      modelIn: Option[PqModel] = None): Unit =
-    writePq(modelIn.getOrElse(
-      Similarity.pqModel(corpus, idCol, vecCol, m, ksub, iters, maxTrainRows)), dir)
+      modelIn: Option[PqModel] = None): Unit = {
+    val model = modelIn.getOrElse(
+      Similarity.pqModel(corpus, idCol, vecCol, m, ksub, iters, maxTrainRows))
+    install(dir, Frozen("pq", Map("codebooks" -> model.centroids), model.m,
+      model.sub, codes = Some(model.codes)), corpus, idCol, vecCol)
+  }
 
   /** Load a persisted PQ index as a [[Similarity.PqModel]] — drop-in for
     * `pqScores`/`pqTopK` query paths, with zero training cost.
@@ -378,16 +498,11 @@ object AnnIndex {
         * the kmeans; the shared-training shape of [[buildPq]]'s modelIn.
         */
       coarseIn: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
     val coarse = coarseIn.getOrElse(
       Similarity.trainCentroids(corpus, idCol, vecCol, nlist, iters,
         maxTrainRows))
-    writeMeta(spark, dir, m = 0, sub = 0, nlist)
-    coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-    Similarity.assign(corpus, (idCol, vecCol), coarse)
-      .select(qcol(idCol).cast("long").as("__id"), qcol(vecCol).as("__vec"),
-        lit(0L).as("__seq"), col("__cluster"))
-      .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/vectors")
+    install(dir, Frozen("ivf", Map("coarse" -> coarse), nlist = nlist),
+      corpus, idCol, vecCol)
   }
 
   def readIvf(spark: SparkSession, dir: String): IvfIndex = {
@@ -417,25 +532,55 @@ object AnnIndex {
   def ivfTopK(spark: SparkSession, index: IvfIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       where: Column = lit(true)): DataFrame = {
-    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
-      qcol(vecCol).as("__qv"))
-    // probe selection LOCALIZED: ONE collect (queries × nprobe rows,
-    // bounded by construction) serves both the partition filter and the
-    // join side — the old eager-checkpoint-then-distinct-collect shape
-    // paid two sequential driver jobs, and the local relation broadcasts
-    // with no upstream stage at all
-    val (probeRows, probes) = localized(probeClusters(q, index.coarse, nprobe))
-    val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
-    val vectors = liveOnly(spark, index.dir,
-      graft.util.TinyParquet.openStore(spark, index.vectorsPath)
-        .filter(col("__cluster").isin(probed.map(Int.box): _*))
-        .filter(where))
-    val scored = vectors
-      .join(broadcast(probes), Seq("__cluster"))
-      .filter(col("query_id") =!= col("__id"))
+    val scored = probe(spark, index.dir, index.coarse, queries, idCol, vecCol, nprobe)
+      .pairs(index.vectorsPath, where, None, withQuery = true)
       .select(col("query_id"), col("__id").as("neighbor_id"),
         Similarity.cosine(col("__qv"), col("__vec")).as("cosine"))
     topKPerQuery(scored, "cosine", "neighbor_id", k)
+  }
+
+  /** One query batch probed against a cluster-partitioned store — the
+    * scan every IVF-family query path shares. `q` is the batch as
+    * (`query_id`, `__qv`); `probes` its top-nprobe clusters as a LOCAL
+    * relation (`query_id`, `__qv`, `__cluster`): one collect (queries ×
+    * nprobe rows, bounded by construction) serves the partition filter,
+    * the join side and the residual offsets, and the local relation
+    * broadcasts with no upstream stage at all; `clusters` the distinct
+    * probed cluster ids.
+    */
+  private final case class Probe(spark: SparkSession, dir: String, q: DataFrame,
+      probes: DataFrame, clusters: Array[Int]) {
+
+    /** The live rows of the `__cluster`-partitioned table at `path` in
+      * the probed cluster directories only: an `isin` PartitionFilter, so
+      * the parquet source reads nothing else, with `where` applied inside
+      * the pruned scan (FILTERED SEARCH, [[ivfTopK]]) and tombstones
+      * subtracted at the `asOf` horizon ([[liveAsOf]]).
+      */
+    def live(path: String, where: Column = lit(true),
+        asOf: Option[Long] = None): DataFrame =
+      liveAsOf(spark, dir, graft.util.TinyParquet.openStore(spark, path)
+        .filter(col("__cluster").isin(clusters.map(Int.box): _*))
+        .filter(where), asOf)
+
+    /** [[live]] joined to the broadcast probes on `__cluster`, self-pairs
+      * dropped: every (query, stored row) pair the batch scores. The
+      * probe side carries `__qv` only `withQuery`.
+      */
+    def pairs(path: String, where: Column, asOf: Option[Long],
+        withQuery: Boolean): DataFrame =
+      live(path, where, asOf)
+        .join(broadcast(if (withQuery) probes
+          else probes.select(col("query_id"), col("__cluster"))), Seq("__cluster"))
+        .filter(col("query_id") =!= col("__id"))
+  }
+
+  private def probe(spark: SparkSession, dir: String, coarse: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String, nprobe: Int): Probe = {
+    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
+      qcol(vecCol).as("__qv"))
+    val (rows, probes) = localized(probeClusters(q, coarse, nprobe))
+    Probe(spark, dir, q, probes, rows.map(_.getAs[Int]("__cluster")).distinct.sorted)
   }
 
   // ------------------------------------------------------------ IVF×PQ
@@ -471,36 +616,23 @@ object AnnIndex {
         * silently mix score spaces, so it always trains its own).
         */
       modelIn: Option[PqModel] = None): Unit = {
-    val spark = corpus.sparkSession
     val coarse = coarseIn.getOrElse(
       Similarity.trainCentroids(corpus, idCol, vecCol, nlist, iters,
         maxTrainRows))
-    val assigned = Similarity.assign(corpus, (idCol, vecCol), coarse)
-    if (byResidual) {
-      val (codebooks, codes, sub) = Similarity.pqResidualModel(assigned,
+    val model = if (byResidual) {
+      val (codebooks, codes, sub) = Similarity.pqResidualModel(
+        Similarity.assign(corpus, (idCol, vecCol), coarse),
         idCol, vecCol, coarse, m, ksub, iters, maxTrainRows)
-      writeMeta(spark, dir, m, sub, nlist, residual = true)
-      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-      codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
-      codes.withColumn("__seq", lit(0L))
-        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/codes")
+      Frozen("ivfpq", Map("coarse" -> coarse, "codebooks" -> codebooks), m, sub,
+        nlist, residual = true, codes = Some(codes))
     } else {
-      val clusterOf = assigned
-        .select(qcol(idCol).cast("long").as("__id"), col("__cluster"))
-      val model = modelIn.getOrElse(
+      val pq = modelIn.getOrElse(
         Similarity.pqModel(corpus, idCol, vecCol, m, ksub, iters,
           maxTrainRows))
-      writeMeta(spark, dir, model.m, model.sub, nlist)
-      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-      model.centroids.write.mode("overwrite").parquet(s"$dir/codebooks")
-      model.codes.join(clusterOf, Seq("__id")).withColumn("__seq", lit(0L))
-        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/codes")
+      Frozen("ivfpq", Map("coarse" -> coarse, "codebooks" -> pq.centroids),
+        pq.m, pq.sub, nlist, codes = Some(pq.codes))
     }
-    if (keepVectors)
-      assigned
-        .select(qcol(idCol).cast("long").as("__id"), qcol(vecCol).as("__vec"),
-          lit(0L).as("__seq"), col("__cluster"))
-        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/vectors")
+    install(dir, model.copy(keepVectors = keepVectors), corpus, idCol, vecCol)
   }
 
   def readIvfPq(spark: SparkSession, dir: String): IvfPqIndex = {
@@ -531,14 +663,13 @@ object AnnIndex {
         * maintenance epoch ≤ S. None = live view.
         */
       asOf: Option[Long] = None): DataFrame = {
-    val (scored, _, _) =
+    val (scored, _) =
       adcScored(spark, index, queries, idCol, vecCol, nprobe, where, asOf)
     topKPerQuery(scored, "cosine_pq", "neighbor_id", k)
   }
 
   /** The shared ADC scoring pipeline of [[ivfPqTopK]] and
-    * [[ivfPqTopKRefined]]: returns (scored pairs, probed cluster ids,
-    * broadcastable (query_id, __qv) frame).
+    * [[ivfPqTopKRefined]]: returns (scored pairs, the batch's [[Probe]]).
     *
     * Residual indexes (`by_residual=true`) ride the SAME machinery: the
     * LUT sum then reconstructs ⟨q̂, r⟩ instead of ⟨q̂, v̂⟩, and the missing
@@ -560,29 +691,16 @@ object AnnIndex {
   private def adcScored(spark: SparkSession, index: IvfPqIndex,
       queries: DataFrame, idCol: String, vecCol: String,
       nprobe: Int, where: Column = lit(true),
-      asOf: Option[Long] = None): (DataFrame, Array[Int], DataFrame) = {
-    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
-      qcol(vecCol).as("__qv"))
-    // probe selection LOCALIZED (see ivfTopK): one collect serves the
-    // partition filter, the ADC join side and the residual offsets
-    val (probeRows, probesFull) =
-      localized(probeClusters(q, index.coarse, nprobe))
-    val probes = probesFull.select(col("query_id"), col("__cluster"))
-    val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
-    val codes = liveAsOf(spark, index.dir,
-      graft.util.TinyParquet.openStore(spark, index.codesPath)
-        .filter(col("__cluster").isin(probed.map(Int.box): _*))
-        .filter(where), asOf)
-    val adc = codes
-      .join(broadcast(probes), Seq("__cluster"))
-      .filter(col("query_id") =!= col("__id"))
+      asOf: Option[Long] = None): (DataFrame, Probe) = {
+    val p = probe(spark, index.dir, index.coarse, queries, idCol, vecCol, nprobe)
+    val adc = p.pairs(index.codesPath, where, asOf, withQuery = false)
       .join(broadcast(pqLut(queries, idCol, vecCol, index.codebooks,
         index.m, index.sub)), Seq("query_id", "__j", "__code"))
     val scored =
       if (index.residual)
         adc.groupBy(col("query_id"), col("__cluster"), col("__id"))
           .agg(sum(col("__p")).as("__adc"))
-          .join(broadcast(Similarity.residualOffsets(probesFull, index.coarse)),
+          .join(broadcast(Similarity.residualOffsets(p.probes, index.coarse)),
             Seq("query_id", "__cluster"))
           .select(col("query_id"), col("__id").as("neighbor_id"),
             (col("__adc") + col("__off")).as("cosine_pq"))
@@ -590,7 +708,7 @@ object AnnIndex {
         adc.groupBy(col("query_id"), col("__id"))
           .agg(sum(col("__p")).as("cosine_pq"))
           .withColumnRenamed("__id", "neighbor_id")
-    (scored, probed, q)
+    (scored, p)
   }
 
   /** IVF×PQ top-k with an EXACT re-rank epilogue (the FAISS refine /
@@ -618,14 +736,12 @@ object AnnIndex {
     // `where` constrains the SHORTLIST (applied in the codes scan); the
     // exact re-rank joins by shortlist id, so the predicate holds
     // transitively without re-evaluating against the vectors table
-    val (scored, probed, q) =
+    val (scored, p) =
       adcScored(spark, index, queries, idCol, vecCol, nprobe, where)
     val shortlist = topKPerQuery(scored, "cosine_pq", "neighbor_id", k * refine)
       .select(col("query_id"), col("neighbor_id"))
-      .join(q, Seq("query_id")) // attach the query vector (both tiny)
-    val vectors = liveOnly(spark, index.dir,
-      graft.util.TinyParquet.openStore(spark, s"${index.dir}/vectors")
-        .filter(col("__cluster").isin(probed.map(Int.box): _*)))
+      .join(p.q, Seq("query_id")) // attach the query vector (both tiny)
+    val vectors = p.live(s"${index.dir}/vectors")
       .select(col("__id").as("neighbor_id"), col("__vec"))
     val exact = vectors.join(broadcast(shortlist), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -671,15 +787,9 @@ object AnnIndex {
         * min/max aggregation; the shared-training shape of
         * [[buildPq]].modelIn.
         */
-      boundsIn: Option[Similarity.SqBounds] = None): Unit = {
-    val spark = corpus.sparkSession
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = "sq")
-    val b = boundsIn.getOrElse(Similarity.sqTrainBounds(corpus, vecCol))
-    writeBounds(spark, dir, b)
-    Similarity.sqEncode(corpus, idCol, vecCol, b)
-      .withColumn("__seq", lit(0L))
-      .write.mode("overwrite").parquet(s"$dir/codes")
-  }
+      boundsIn: Option[Similarity.SqBounds] = None): Unit =
+    install(dir, Frozen("sq", bounds = Some(boundsIn.getOrElse(
+      Similarity.sqTrainBounds(corpus, vecCol)))), corpus, idCol, vecCol)
 
   def readSq(spark: SparkSession, dir: String): SqIndex =
     SqIndex(readBounds(spark, dir),
@@ -691,23 +801,6 @@ object AnnIndex {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val idx = readSq(spark, dir)
     Similarity.sqTopKWithCodes(queries, idCol, vecCol, idx.bounds, idx.codes, k)
-  }
-
-  /** [[append]] for the SQ layout: encode against the FROZEN bounds.
-    * Appended vectors outside the trained per-dimension range CLAMP —
-    * the analytic error bound covers build-corpus rows only; rebuild on
-    * the usual cadence (same caller contract as every append, including
-    * the duplicate-id rule above).
-    */
-  def appendSq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    // only the bounds are needed — a full readSq would also probe
-    // tombstones and open the codes schema just to discard that view
-    val b = readBounds(spark, dir)
-    val seq = nextSeq(spark, dir)
-    Similarity.sqEncode(rows, idCol, vecCol, b)
-      .withColumn("__seq", lit(seq))
-      .write.mode("append").parquet(s"$dir/codes")
   }
 
   // --------------------------------------------------- rotated layouts
@@ -735,13 +828,6 @@ object AnnIndex {
   final case class RotatedIndex(rotation: Array[Array[Double]], pqDir: String,
       dir: String)
 
-  private def writeRotation(spark: SparkSession, dir: String,
-      r: Array[Array[Double]]): Unit = {
-    import spark.implicits._
-    r.indices.map(i => (i, r(i).toSeq)).toDF("__i", "__row")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
-  }
-
   private def readRotation(spark: SparkSession, dir: String): Array[Array[Double]] =
     // dim rows of (int, list<double>) — driver-side tiny read, no Spark job
     graft.util.TinyParquet.readRows(spark, s"$dir/rotation")
@@ -762,8 +848,11 @@ object AnnIndex {
     */
   private def rotatedRoot(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, layout: String, r: Array[Array[Double]]): DataFrame = {
-    writeMeta(corpus.sparkSession, dir, m = 0, sub = 0, nlist = -1, layout = layout)
-    writeRotation(corpus.sparkSession, dir, r)
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = layout)
+    r.indices.map(i => (i, r(i).toSeq)).toDF("__i", "__row")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
     rotate(corpus, idCol, vecCol, r)
   }
 
@@ -836,16 +925,6 @@ object AnnIndex {
       "__rid", "__rvec", k, nprobe, where)
   }
 
-  /** The rotated layouts' [[append]]: rotate through the frozen rotation
-    * and forward to the nested index's own append.
-    */
-  private def appendRotated(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val idx = readRotated(spark, dir)
-    append(spark, idx.pqDir, rotate(rows, idCol, vecCol, idx.rotation),
-      "__rid", "__rvec")
-  }
-
   // ------------------------------------------------------------ flat BQ
   /** A loaded binary-quantization index: one codes table on disk holding
     * (__id, __sig array&lt;long&gt;, __vec, __seq) — the 1-bit/dim sign
@@ -870,13 +949,7 @@ object AnnIndex {
   def buildBq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
       dim: Int): Unit = {
     require(dim > 0, s"dim must be positive: $dim")
-    val spark = corpus.sparkSession
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = "bq")
-    graft.util.Hfs.writeString(spark, s"$dir/_dim", dim.toString)
-    corpus.select(qcol(idCol).cast("long").as("__id"),
-        Similarity.signSketch(qcol(vecCol), dim).as("__sig"),
-        qcol(vecCol).as("__vec"), lit(0L).as("__seq"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
+    install(dir, Frozen("bq", dim = dim), corpus, idCol, vecCol)
   }
 
   def readBq(spark: SparkSession, dir: String): BqIndex = {
@@ -913,20 +986,6 @@ object AnnIndex {
       k, shortlist)
   }
 
-  /** [[append]] for the BQ layout — nothing is trained, so append ==
-    * rebuild exactly (no quantization drift; same duplicate-id caller
-    * contract as every append).
-    */
-  def appendBq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val dim = readDim(spark, dir)
-    val seq = nextSeq(spark, dir)
-    rows.select(qcol(idCol).cast("long").as("__id"),
-        Similarity.signSketch(qcol(vecCol), dim).as("__sig"),
-        qcol(vecCol).as("__vec"), lit(seq).as("__seq"))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
   // --------------------------------------------------------- IVF × SQ8
   /** A loaded IVF×SQ index: coarse centroids + bounds in hand, byte
     * codes left ON DISK partitioned by coarse cluster. The practical
@@ -950,20 +1009,12 @@ object AnnIndex {
       coarseIn: Option[DataFrame] = None,
       /** Already-computed exact bounds — see [[buildSq]].boundsIn. */
       boundsIn: Option[Similarity.SqBounds] = None): Unit = {
-    val spark = corpus.sparkSession
-    writeMeta(spark, dir, m = 0, sub = 0, nlist = nlist, layout = "ivfsq")
     val coarse = coarseIn.getOrElse(
       Similarity.trainCentroids(corpus, idCol, vecCol, nlist,
         iters, maxTrainRows))
-    coarse.write.mode("overwrite").parquet(s"$dir/coarse")
-    val b = boundsIn.getOrElse(Similarity.sqTrainBounds(corpus, vecCol))
-    writeBounds(spark, dir, b)
-    val assigned = Similarity.assign(corpus, (idCol, vecCol), coarse)
-      .select(qcol(idCol).cast("long").as("__id"), col("__cluster"))
-    Similarity.sqEncode(corpus, idCol, vecCol, b)
-      .join(assigned, Seq("__id"))
-      .withColumn("__seq", lit(0L))
-      .write.mode("overwrite").partitionBy("__cluster").parquet(s"$dir/codes")
+    install(dir, Frozen("ivfsq", Map("coarse" -> coarse), nlist = nlist,
+      bounds = Some(boundsIn.getOrElse(Similarity.sqTrainBounds(corpus, vecCol)))),
+      corpus, idCol, vecCol)
   }
 
   def readIvfSq(spark: SparkSession, dir: String): IvfSqIndex = {
@@ -988,41 +1039,13 @@ object AnnIndex {
   def ivfSqTopK(spark: SparkSession, index: IvfSqIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       where: Column = lit(true)): DataFrame = {
-    val q = queries.select(qcol(idCol).cast("long").as("query_id"),
-      qcol(vecCol).as("__qv"))
-    // probe selection LOCALIZED (see ivfTopK): one collect, no checkpoint
-    val (probeRows, probes) = localized(
-      probeClusters(q, index.coarse, nprobe)
-        .select(col("query_id"), col("__cluster")))
-    val probed = probeRows.map(_.getAs[Int]("__cluster")).distinct.sorted
-    val codes = liveOnly(spark, index.dir,
-      graft.util.TinyParquet.openStore(spark, index.codesPath)
-        .filter(col("__cluster").isin(probed.map(Int.box): _*))
-        .filter(where))
-    val scored = codes
-      .join(broadcast(probes), Seq("__cluster"))
-      .filter(col("query_id") =!= col("__id"))
+    val scored = probe(spark, index.dir, index.coarse, queries, idCol, vecCol, nprobe)
+      .pairs(index.codesPath, where, None, withQuery = false)
       .join(broadcast(Similarity.sqQueryFrame(queries, idCol, vecCol,
         index.bounds)), Seq("query_id"))
       .select(col("query_id"), col("__id").as("neighbor_id"),
         Similarity.sqScoreExpr.as("cosine_sq"))
     topKPerQuery(scored, "cosine_sq", "neighbor_id", k)
-  }
-
-  /** [[append]] for the IVF×SQ layout: assign against the FROZEN
-    * coarse centroids, encode against the FROZEN bounds, append into the
-    * cluster partitions (same clamp caveat as [[appendSq]]).
-    */
-  def appendIvfSq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val index = readIvfSq(spark, dir)
-    val seq = nextSeq(spark, dir)
-    val assigned = Similarity.assign(rows, (idCol, vecCol), index.coarse)
-      .select(qcol(idCol).cast("long").as("__id"), col("__cluster"))
-    Similarity.sqEncode(rows, idCol, vecCol, index.bounds)
-      .join(assigned, Seq("__id"))
-      .withColumn("__seq", lit(seq))
-      .write.mode("append").partitionBy("__cluster").parquet(s"$dir/codes")
   }
 
   // ------------------------------------------- compaction / rebuild
@@ -1048,20 +1071,15 @@ object AnnIndex {
     if (name == "graph") return GraphAnn.compact(spark, owner)
     val (m, sub, nlist, residual) = readMeta(spark, owner)
     val live = layout.rows.collect {
-      case (t, clustered) if graft.util.Hfs.exists(spark, s"$owner/$t") =>
-        (t, clustered, liveOnly(spark, owner,
-          graft.util.TinyParquet.openStore(spark, s"$owner/$t"))
-          .withColumn("__seq", lit(0L)))
+      case (t, _) if graft.util.Hfs.exists(spark, s"$owner/$t") =>
+        t -> liveOnly(spark, owner, graft.util.TinyParquet.openStore(spark, s"$owner/$t"))
     }
     // the same tombstones govern every row table: primary live ⇒ all live
-    requireLive(live.head._3, owner)
+    requireLive(live.head._2, owner)
     val tmp = owner + ".compact-" + System.nanoTime()
     writeMeta(spark, tmp, m, sub, nlist, residual, name)
     layout.frozen.foreach(f => graft.util.Hfs.copy(spark, s"$owner/$f", s"$tmp/$f"))
-    live.foreach { case (t, clustered, rows) =>
-      val w = rows.write.mode("overwrite")
-      (if (clustered) w.partitionBy("__cluster") else w).parquet(s"$tmp/$t")
-    }
+    writeRows(tmp, name, live, 0L, "overwrite")
     graft.operators.Upsert.swapDirs(tmp, owner)
   }
 
@@ -1117,28 +1135,21 @@ object AnnIndex {
     * for itself.
     */
   def tombstoneDebt(spark: SparkSession, dir: String): Double = {
-    val (total, live) = storeCounts(spark, dir)
+    val r = storeCountsDf(spark, dir).head()
+    val (total, live) = (r.getLong(0), r.getLong(1))
     if (total == 0L) 0.0 else (total - live).toDouble / total
   }
 
-  /** (total stored rows, live rows) of a layout's main table — the
-    * integer numerators behind [[tombstoneDebt]] and [[healthReport]].
-    * Rows are the table's PHYSICAL grain (exploded per subvector for
-    * PQ-coded layouts): that is what every scan pays, which is what the
-    * debt policy prices.
-    */
-  private def storeCounts(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = storeCountsDf(spark, dir).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** [[storeCounts]] as a LAZY one-row (`__total`, `__live`) frame — the
-    * building block that lets fleet dashboards ([[healthReport]], the
-    * sweep/fsck callers) assemble ONE plan over every store instead of
-    * serializing a blocking counter job per store: a fleet over a dozen
-    * tiny stores was paying seconds of pure per-job scheduling floor
-    * (r21 baseline: x_index_health 118 stages / 3.1 s wall at 1.3 cpu-s).
-    * The eager tuple form above keeps the policy callers' contract.
+  /** (total stored rows, live rows) of a layout's main table as a LAZY
+    * one-row (`__total`, `__live`) frame — the integer numerators behind
+    * [[tombstoneDebt]] and [[healthReport]]. Rows are the table's
+    * PHYSICAL grain (exploded per subvector for PQ-coded layouts): that
+    * is what every scan pays, which is what the debt policy prices. The
+    * lazy form lets fleet dashboards ([[healthReport]], the sweep/fsck
+    * callers) assemble ONE plan over every store instead of serializing
+    * a blocking counter job per store: a fleet over a dozen tiny stores
+    * was paying seconds of pure per-job scheduling floor (r21 baseline:
+    * x_index_health 118 stages / 3.1 s wall at 1.3 cpu-s).
     */
   private def storeCountsDf(spark: SparkSession, dir: String): DataFrame =
     storeCountsWithDeltaDf(spark, dir).select(col("__total"), col("__live"))
@@ -1166,10 +1177,10 @@ object AnnIndex {
     } else main.withColumn("__delta", lit(0L))
   }
 
-  /** [[storeCounts]] with the main table named explicitly — shared with
-    * the non-ANN tombstone consumers (the text-index layouts), whose
-    * main table lives at a layout-specific path but whose tombstone
-    * discipline is this one.
+  /** [[storeCountsDf]]'s counts, eager, with the main table named
+    * explicitly — shared with the non-ANN tombstone consumers (the
+    * text-index layouts), whose main table lives at a layout-specific
+    * path but whose tombstone discipline is this one.
     */
   private[ext] def tableCounts(spark: SparkSession, dir: String,
       table: String): (Long, Long) = {
@@ -1275,19 +1286,22 @@ object AnnIndex {
   // ----------------------------------------------------- incremental append
   /** Append new corpus rows to a persisted index (any layout) WITHOUT
     * retraining — the maintenance operation between periodic rebuilds.
-    * Dispatches on the stored layout to its encoder ([[appendPq]],
-    * [[appendIvf]], [[appendIvfPq]], [[appendSq]], [[appendIvfSq]],
-    * [[appendBq]], [[GraphAnn.append]]); rotated layouts rotate the batch
-    * and forward to their nested index. Codebooks
-    * (and for the IVF layouts the coarse quantizer) are FROZEN: new
-    * vectors are assigned/encoded against the stored tables and their
-    * codes/vectors appended to the on-disk layout (parquet append
-    * respects the cluster partitioning, so new rows land in their
-    * cluster directories and partition pruning keeps working). Encoding
-    * is deterministic given the codebooks, so append(build(A), B)
-    * equals encode(A∪B) against A's codebooks EXACTLY — the
-    * `x_knn_pq_append` gate pins it. Quantization quality drifts as the
-    * data distribution moves away from the training sample; that is the
+    * The stored layout's encoder (layout table) encodes the rows against
+    * the FROZEN model read back from the index — codebooks, and for the
+    * IVF layouts the coarse quantizer; SQ bounds, where appended values
+    * outside the trained per-dimension range CLAMP — and the row writer
+    * appends them at [[nextSeq]] into the on-disk layout (new rows land
+    * in their cluster directories, so partition pruning keeps working).
+    * An IVF×PQ index built with `keepVectors` also gets the rows' exact
+    * vectors, so the refine path stays complete. Rotated layouts rotate
+    * the batch through the stored rotation and forward to their nested
+    * index; graph stores append through [[GraphAnn.append]].
+    *
+    * The build writes its corpus through the SAME encoder and writer, so
+    * append(build(A), B) equals encode(A∪B) against A's model EXACTLY —
+    * the `x_knn_pq_append` gate pins it; BQ trains nothing, so there
+    * append == rebuild. Quantization quality drifts as the data
+    * distribution moves away from the training sample; that is the
     * standard trade (FAISS `add` semantics) — rebuild on your cadence,
     * append in between. Caller owns id uniqueness across appends and
     * must serialize maintenance against rebuilds of the same index
@@ -1304,108 +1318,30 @@ object AnnIndex {
     */
   def append(spark: SparkSession, dir: String, rows: DataFrame,
       idCol: String, vecCol: String): Unit =
-    layoutOf(spark, dir)._2.encode(spark, dir, rows, idCol, vecCol)
+    appendAs(spark, dir, rows, idCol, vecCol, None)
 
-  /** [[append]] for the flat-PQ layout: encode against the frozen
-    * codebooks.
-    */
-  def appendPq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val model = readPq(spark, dir)
-    val seq = nextSeq(spark, dir)
-    Similarity.pqEncode(rows, idCol, vecCol, model.centroids, model.m, model.sub)
-      .withColumn("__seq", lit(seq))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  /** [[append]] for the IVF-flat layout: assign against the frozen
-    * coarse centroids, append into the cluster partitions.
-    */
+  /** [[append]] to an IVF-flat index; any other layout is refused. */
   def appendIvf(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val index = readIvf(spark, dir)
-    val seq = nextSeq(spark, dir)
-    Similarity.assign(rows, (idCol, vecCol), index.coarse)
-      .select(qcol(idCol).cast("long").as("__id"), qcol(vecCol).as("__vec"),
-        lit(seq).as("__seq"), col("__cluster"))
-      .write.mode("append").partitionBy("__cluster").parquet(index.vectorsPath)
-  }
+      idCol: String, vecCol: String): Unit =
+    appendAs(spark, dir, rows, idCol, vecCol, Some("ivf"))
 
-  /** [[append]] for the IVF×PQ layout: frozen coarse quantizer AND
-    * frozen codebooks; one assign + one encode of the new rows, appended
-    * into the cluster partitions. An index built with `keepVectors` also
-    * gets the rows' exact vectors appended, so the refine path stays
-    * complete.
-    */
+  /** [[append]] to an IVF×PQ index; any other layout is refused. */
   def appendIvfPq(spark: SparkSession, dir: String, rows: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val (codes, vectors) = ivfPqAppendFrames(spark, dir, rows, idCol, vecCol)
-    codes.write.mode("append").partitionBy("__cluster").parquet(s"$dir/codes")
-    vectors.foreach(_.write.mode("append").partitionBy("__cluster")
-      .parquet(s"$dir/vectors"))
-  }
+      idCol: String, vecCol: String): Unit =
+    appendAs(spark, dir, rows, idCol, vecCol, Some("ivfpq"))
 
-  /** The encode half of [[appendIvfPq]] without the writes: (codes frame,
-    * vectors frame when the index keeps refine vectors), both already in
-    * their on-disk column shape with the append's `__seq` attached. The
-    * streaming append stages these under a per-batch generation and
-    * publishes atomically ([[graft.streaming.DocStreams.runIvfPqAppendOnce]]);
-    * the batch form above just appends them in place.
-    */
-  private[graft] def ivfPqAppendFrames(spark: SparkSession, dir: String,
-      rows: DataFrame, idCol: String, vecCol: String): (DataFrame, Option[DataFrame]) =
-    ivfPqAppendFrames(spark, dir, ivfPqAppendContext(spark, dir), rows, idCol, vecCol)
-
-  /** The per-run constants of a frozen-quantizer append stream: the
-    * loaded index with its small quantizer tables CHECKPOINTED (per-batch
-    * encodes then read blocks, not parquet) and the refine-vectors flag.
-    * A maintenance stream loads this once instead of re-reading
-    * meta/coarse/codebooks every micro-batch; sound because maintenance
-    * ops are serialized against the stream by the caller contract
-    * (object doc), so nothing the context caches can change mid-run.
-    * The sequence number is deliberately NOT hoisted: it is one sidecar
-    * file read per batch ([[nextSeq]]), and re-reading it keeps a
-    * contract-violating mid-stream delete merely forbidden rather than
-    * silently row-losing (a hoisted seq would stamp a later re-append
-    * BELOW the intervening tombstone and the update would vanish).
-    */
-  private[graft] final case class AppendContext(index: IvfPqIndex,
-      keepVectors: Boolean)
-
-  private[graft] def ivfPqAppendContext(spark: SparkSession,
-      dir: String): AppendContext = {
-    val idx = readIvfPq(spark, dir)
-    AppendContext(
-      idx.copy(coarse = idx.coarse.localCheckpoint(eager = true),
-        codebooks = idx.codebooks.localCheckpoint(eager = true)),
-      graft.util.Hfs.exists(spark, s"$dir/vectors"))
-  }
-
-  private[graft] def ivfPqAppendFrames(spark: SparkSession, dir: String,
-      ctx: AppendContext,
-      rows: DataFrame, idCol: String, vecCol: String): (DataFrame, Option[DataFrame]) = {
-    val index = ctx.index
-    val seq = nextSeq(spark, dir)
-    val assigned = Similarity.assign(rows, (idCol, vecCol), index.coarse)
-    // a residual index's frozen model quantizes coarse-centroid
-    // residuals, not raw vectors — appending raw-encoded codes would
-    // silently mix the two score spaces inside one codes table
-    val codes = (if (index.residual)
-        Similarity.pqResidualEncode(assigned, idCol, vecCol, index.coarse,
-          index.codebooks, index.m, index.sub)
-      else
-        Similarity.pqEncode(rows, idCol, vecCol, index.codebooks,
-            index.m, index.sub)
-          .join(assigned.select(qcol(idCol).cast("long").as("__id"),
-            col("__cluster")), Seq("__id"))
-      ).withColumn("__seq", lit(seq))
-    val vectors =
-      if (ctx.keepVectors)
-        Some(assigned
-          .select(qcol(idCol).cast("long").as("__id"), qcol(vecCol).as("__vec"),
-            lit(seq).as("__seq"), col("__cluster")))
-      else None
-    (codes, vectors)
+  private def appendAs(spark: SparkSession, dir: String, rows: DataFrame,
+      idCol: String, vecCol: String, expected: Option[String]): Unit = {
+    val (name, layout) = layoutOf(spark, dir)
+    require(expected.forall(_ == name),
+      s"$dir is a '$name' index, not '${expected.getOrElse("")}'")
+    layout.nested match {
+      case Some(n) => append(spark, s"$dir/$n",
+        rotate(rows, idCol, vecCol, readRotation(spark, dir)), "__rid", "__rvec")
+      case None if name == "graph" => GraphAnn.append(spark, dir, rows, idCol, vecCol)
+      case None => writeRows(dir, name,
+        encode(frozenModel(spark, dir), rows, idCol, vecCol), nextSeq(spark, dir), "append")
+    }
   }
 
   // ------------------------------------------------------ delete / update
@@ -1453,17 +1389,6 @@ object AnnIndex {
     val (dels, upserts) = diffSplit(diff, keyCol, rows, idCol)
     deleteIds(spark, dir, dels, keyCol)
     append(spark, dir, upserts, idCol, vecCol)
-  }
-
-  /** Build-and-query convenience for tests/gates: stages the index under
-    * `dir` and answers one query batch through the pruned path.
-    */
-  def ivfPqTopKVia(dir: String, queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, nlist: Int, nprobe: Int,
-      m: Int, ksub: Int, iters: Int = 2, maxTrainRows: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    buildIvfPq(corpus, idCol, vecCol, dir, nlist, m, ksub, iters, maxTrainRows)
-    ivfPqTopK(spark, readIvfPq(spark, dir), queries, idCol, vecCol, k, nprobe)
   }
 
   // --------------------------------------------------- recall reporting

@@ -172,14 +172,11 @@ object Classify {
     spark.conf.set(aqeKey, "false")
     spark.conf.set(shufKey, "1")
     try {
-      for (i <- 0 until iters) {
-        val t0 = System.nanoTime()
+      for (_ <- 0 until iters) {
         val wdf = spark.createDataFrame(
           java.util.Collections.singletonList(
             org.apache.spark.sql.Row.fromSeq(w.toSeq)), wSchema)
         val g = f.crossJoin(broadcast(wdf)).agg(aggs.head, aggs.tail: _*).head()
-        if (sys.env.contains("GRAFT_LR_TRACE"))
-          System.err.println(f"[lr] iter $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
         // exact-arithmetic update, same expression shape as the oracle:
         // w' = w − lr · ((G / scale) / n)
         for (j <- w.indices)

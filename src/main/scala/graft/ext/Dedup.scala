@@ -68,17 +68,9 @@ object Dedup {
     * The pairs are evaluated ONCE: projected to long `(a, b)` edges,
     * minus rows with a null endpoint or a == b (a null never equi-joins
     * and a self-loop moves no label, so neither makes a loser), and
-    * eagerly checkpointed. Where the graph is resolved depends on its
-    * size against `cap` = `spark.sql.autoBroadcastJoinThreshold` / 16
-    * (two longs per edge — the size Spark already lets the driver
-    * collect and broadcast):
-    *   - ≤ cap edges: one `limit(cap + 1)` collect (it scans partitions
-    *     incrementally, so a huge graph costs at most cap + 1 rows), then
-    *     union-find on the driver over primitive arrays. The losers come
-    *     back as a local relation: no further job before the caller's
-    *     action. The driver's share is bounded by the threshold.
-    *   - more than cap edges, or a threshold ≤ 0: [[connectedComponents]]
-    *     over the checkpointed edges, with nothing on the driver.
+    * eagerly checkpointed, then resolved by [[minIdLabels]] — on the
+    * driver when the edges fit a broadcast, where the losers come back as
+    * a local relation with no further job before the caller's action.
     */
   def nearDuplicateLosers(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
@@ -87,6 +79,31 @@ object Dedup {
       .select(qcol(aCol).cast("long").as("a"), qcol(bCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .localCheckpoint(eager = true) // the pairs' one evaluation
+    import spark.implicits._
+    minIdLabels(edges)
+      .map(_.filter(col("id") =!= col("component")).select(col("id").as("__nid")))
+      .getOrElse(Seq.empty[Long].toDF("__nid"))
+  }
+
+  /** Min-id component labels (`id`, `component`: long) of every endpoint
+    * of a two-column long edge frame — [[connectedComponents]]' label
+    * contract over the edges' own nodes. Where the graph is resolved
+    * depends on its size against `cap` =
+    * `spark.sql.autoBroadcastJoinThreshold` / 16 (two longs per edge —
+    * the size Spark already lets the driver collect and broadcast):
+    *   - ≤ cap edges: one `limit(cap + 1)` collect (it scans partitions
+    *     incrementally, so a huge graph costs at most cap + 1 rows), then
+    *     union-find on the driver over primitive arrays; the labels come
+    *     back as a local relation in id order. The driver's share is
+    *     bounded by the threshold.
+    *   - more than cap edges, or a threshold ≤ 0: [[connectedComponents]]
+    *     over `edges`, with nothing on the driver.
+    * None when the collect finds no edge at all (the distributed path
+    * answers an empty graph with an empty frame instead).
+    */
+  private[graft] def minIdLabels(edges: DataFrame, maxIter: Int = 20): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    val Array(a, b) = edges.columns
     val cap = math.min(
       org.apache.spark.sql.GraftSqlBridge.broadcastThreshold(spark) / 16,
       Int.MaxValue - 1L).toInt
@@ -94,27 +111,25 @@ object Dedup {
       if (cap <= 0) None
       else Some(edges.limit(cap + 1).collect()).filter(_.length <= cap)
     small match {
+      case Some(rows) if rows.isEmpty => None
       case Some(rows) =>
-        spark.createDataset(minIdLosers(rows).toSeq)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF("__nid")
+        import spark.implicits._
+        val (ids, roots) = unionFind(rows)
+        Some(ids.zip(roots).toSeq.toDF("id", "component"))
       case None =>
-        val nodes = edges.select(col("a").as("__nid"))
-          .unionByName(edges.select(col("b").as("__nid")))
-          .distinct()
-        // connectedComponents normalizes its output columns to (id, component)
-        connectedComponents(nodes, "__nid", edges, "a", "b")
-          .filter(col("id") =!= col("component"))
-          .select(col("id").as("__nid"))
+        val nodes = edges.select(qcol(a).as("id"))
+          .unionByName(edges.select(qcol(b).as("id"))).distinct()
+        Some(connectedComponents(nodes, "id", edges, a, b, maxIter))
     }
   }
 
-  /** Union-find over collected (a, b) long edges: every endpoint whose
-    * component root — its minimum id — is not itself. Nodes are indexed
-    * by binary search into the sorted distinct endpoints, so index order
-    * is id order and linking the larger root under the smaller keeps
-    * every root its component's minimum.
+  /** Union-find over collected (a, b) long edges: (the sorted distinct
+    * endpoints, each one's component minimum). Nodes are indexed by
+    * binary search into the sorted endpoints, so index order is id order
+    * and linking the larger root under the smaller keeps every root its
+    * component's minimum.
     */
-  private def minIdLosers(edges: Array[org.apache.spark.sql.Row]): Array[Long] = {
+  private def unionFind(edges: Array[org.apache.spark.sql.Row]): (Array[Long], Array[Long]) = {
     val ends = new Array[Long](2 * edges.length)
     var i = 0
     while (i < edges.length) {
@@ -141,7 +156,7 @@ object Dedup {
       val rb = find(java.util.Arrays.binarySearch(ids, e.getLong(1)))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    (0 until m).filter(k => find(k) != k).map(ids(_)).toArray
+    (ids, Array.tabulate(m)(k => ids(find(k))))
   }
 
   // ------------------------------------------------------------ minhash

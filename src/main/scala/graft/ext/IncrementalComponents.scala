@@ -61,19 +61,16 @@ object IncrementalComponents {
 
   /** Merge one batch of candidate pairs into the persisted labels.
     *
-    * The touched subgraph is usually micro-batch-sized, so components run
-    * on the DRIVER by default: one bounded collect of the subgraph edges
-    * (≤ `maxDriverEdges`, the same bounded-collect discipline as the ANN
-    * probed-cluster sets) and an in-memory union-find replace the
+    * The touched subgraph is usually micro-batch-sized, so its labels
+    * come from [[Dedup.minIdLabels]]: one bounded collect of the subgraph
+    * edges and an in-memory union-find on the driver replace the
     * multi-round distributed label propagation — ~3 Spark actions per
-    * update instead of ~10. A merge that drags in more than
-    * `maxDriverEdges` subgraph edges falls back to the distributed
-    * [[Dedup.connectedComponents]] automatically; both paths append the
-    * same canonical min-id labels.
+    * update instead of ~10 — and a subgraph past the broadcast cap falls
+    * back to [[Dedup.connectedComponents]] automatically; both paths
+    * append the same canonical min-id labels.
     */
   def update(spark: SparkSession, compsDir: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b", maxIter: Int = 20,
-      maxDriverEdges: Int = 100000): Unit = {
+      aCol: String = "id_a", bCol: String = "id_b", maxIter: Int = 20): Unit = {
     val edges = pairs
       .select(qcol(aCol).cast("long").as("u"), qcol(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
@@ -116,18 +113,10 @@ object IncrementalComponents {
           .filter(col("u") =!= col("v"))
         (edges.unionByName(memberEdges), readNextSeq(spark, compsDir))
       }
-    val sample = subEdges.limit(maxDriverEdges + 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (sample.isEmpty) return
-    val labels =
-      if (sample.length <= maxDriverEdges) {
-        import spark.implicits._
-        unionFind(sample).toSeq.toDF("id", "component").coalesce(1)
-      } else {
-        val nodes = subEdges.select(col("u").as("id"))
-          .unionByName(subEdges.select(col("v").as("id"))).distinct()
-        Dedup.connectedComponents(nodes, "id", subEdges, "u", "v", maxIter)
-      }
+    val labels = Dedup.minIdLabels(subEdges, maxIter) match {
+      case Some(l) => l.coalesce(1) // one file per label generation
+      case None => return
+    }
     val stamped = labels.withColumn("__seq", lit(seq))
     if (exists) {
       // counter FIRST, labels second: a crash between the two leaves a
@@ -157,33 +146,5 @@ object IncrementalComponents {
     else
       graft.util.TinyParquet.openStore(spark, compsDir).agg(max(col("__seq")))
         .head().getLong(0) + 1L
-  }
-
-  /** In-memory union-find with path halving + union-by-min: every node
-    * maps to the minimum id reachable in its component — the exact label
-    * contract of [[Dedup.connectedComponents]].
-    */
-  private[graft] def unionFind(edges: Array[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) {
-        val p = parent(r)
-        parent(r) = parent.getOrElse(p, p) // path halving
-        r = parent(r)
-      }
-      r
-    }
-    edges.foreach { case (u, v) =>
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) {
-        val (lo, hi) = if (ru < rv) (ru, rv) else (rv, ru)
-        parent(hi) = lo
-      }
-      parent.getOrElseUpdate(u, find(u))
-      parent.getOrElseUpdate(v, find(v))
-    }
-    val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-    nodes.iterator.map(n => n -> find(n)).toMap
   }
 }

@@ -63,16 +63,6 @@ object ExtensionQueries {
     Staging.once("annindex", dir)(buildAnnIndexes(s, dir, _))
 
   private def buildAnnIndexes(s: SparkSession, dir: String, tmp: String): Unit = {
-    // per-fixture wall attribution for the cold-staging budget, opt-in
-    // (SPARK_GRAFT_STAGE_TIMING=1) so tuning rounds see WHICH build to cut
-    val timeIt = sys.env.get("SPARK_GRAFT_STAGE_TIMING").contains("1")
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (timeIt) System.err.println(
-        f"[staging] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     // independent fixture chains run CONCURRENTLY: the corpus here is
     // ~10³ sample rows through dozens of small chained stages, so each
     // chain is scheduler latency, not compute — Spark's scheduler accepts
@@ -82,10 +72,10 @@ object ExtensionQueries {
     // [[graft.util.Par.all]] carries the settle-all discipline (every
     // task completes before the first failure propagates — an orphaned
     // build's late parquet commit must never land inside a fresh
-    // rebuild); this wrapper adds the per-fixture name + timing
+    // rebuild); this wrapper adds the per-fixture name to a failure
     def inParallel(tasks: (String, () => Unit)*): Unit = {
       graft.util.Par.all(4)(tasks.map { case (n, f) => () =>
-        try timed(n)(f())
+        try f()
         catch { case e: Throwable =>
           throw new RuntimeException(s"fixture build '$n' failed", e)
         }
@@ -259,7 +249,7 @@ object ExtensionQueries {
       "bq_maint16" -> (() => {
         AnnIndex.buildBq(emb8, "vec_id", "embedding", s"$tmp/bq_maint16",
           dim = 64)
-        AnnIndex.appendBq(s, s"$tmp/bq_maint16",
+        AnnIndex.append(s, s"$tmp/bq_maint16",
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
         AnnIndex.deleteIds(s, s"$tmp/bq_maint16",
           emb16.filter(col("vec_id").isin(3, 11)), "vec_id")
@@ -288,7 +278,7 @@ object ExtensionQueries {
       "pq_append16" -> (() => {
         AnnIndex.buildPq(emb8, "vec_id", "embedding", s"$tmp/pq_append16",
           m = 8, ksub = 8, iters = 1, modelIn = Some(pqm8))
-        AnnIndex.appendPq(s, s"$tmp/pq_append16",
+        AnnIndex.append(s, s"$tmp/pq_append16",
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
       }),
       // delete/update-maintenance fixture (x_knn_pq_delete): build on the
@@ -314,7 +304,7 @@ object ExtensionQueries {
       "pq_del16" -> (() => {
         AnnIndex.buildPq(emb8, "vec_id", "embedding", s"$tmp/pq_del16",
           m = 8, ksub = 8, iters = 1, modelIn = Some(pqm8))
-        AnnIndex.appendPq(s, s"$tmp/pq_del16",
+        AnnIndex.append(s, s"$tmp/pq_del16",
           emb16.filter(col("vec_id") >= 8), "vec_id", "embedding")
         AnnIndex.applyDiff(s, s"$tmp/pq_del16",
           emb16.filter(col("vec_id").isin(3, 11))
@@ -6772,13 +6762,12 @@ object ExtensionQueries {
         maxBucketSize = 1000000)
       .localCheckpoint(eager = true) // pairs ref + label ref share it
     refPairs.write.mode("overwrite").parquet(s"$refDir/pairs")
-    // label reference: bounded driver union-find over the (tiny) pair
-    // set, padded to one row per survivor; CascadeDeleteSpec pins the
-    // rebuild against the full distributed connectedComponents
-    val refLabels = graft.ext.IncrementalComponents.unionFind(
-        refPairs.select(col("id_a"), col("id_b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))))
-      .toSeq.toDF("id", "__rc")
+    // label reference: the min-id labels of the (tiny) pair set, padded
+    // to one row per survivor; CascadeDeleteSpec pins the rebuild against
+    // the full distributed connectedComponents
+    val refLabels = Dedup.minIdLabels(refPairs.select(col("id_a"), col("id_b")))
+      .getOrElse(Seq.empty[(Long, Long)].toDF("id", "component"))
+      .withColumnRenamed("component", "__rc")
     survivors.select(col("doc_id").as("id"))
       .join(broadcast(refLabels), Seq("id"), "left")
       .select(col("id"), coalesce(col("__rc"), col("id")).as("component"))

@@ -579,22 +579,12 @@ object DocStreams {
           c => first(c))
         .select(col("id_a"), col("id_b"))
         .localCheckpoint(eager = true) // probe + labeling share one execution
-      // bounded driver union-find first (the IncrementalComponents.update
-      // discipline — the live pair set is candidate-sized); distributed
-      // components only when it overflows the cap
-      val maxDriverEdges = 100000
-      val sample = live.limit(maxDriverEdges + 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labels =
-        if (sample.length <= maxDriverEdges) {
-          import spark.implicits._
-          graft.ext.IncrementalComponents.unionFind(sample).toSeq
-            .toDF("id", "component").coalesce(1)
-        } else {
-          val nodes = live.select(col("id_a").as("id"))
-            .unionByName(live.select(col("id_b").as("id"))).distinct()
-          graft.ext.Dedup.connectedComponents(nodes, "id", live, "id_a", "id_b")
-        }
+      // driver union-find when the live pair set fits the broadcast cap
+      // (it is candidate-sized), distributed components otherwise
+      val labels = graft.ext.Dedup.minIdLabels(live).getOrElse {
+        import spark.implicits._
+        Seq.empty[(Long, Long)].toDF("id", "component")
+      }.coalesce(1)
       val tmp = compsPath + ".rebuild-" + System.nanoTime()
       labels.withColumn("__seq", lit(0L))
         .write.mode("overwrite").parquet(tmp)
@@ -909,8 +899,9 @@ object DocStreams {
   }
 
   /** Streaming ANN index maintenance: embedding batches arriving on a
-    * spool are appended into a persisted IVF×PQ index
-    * ([[graft.ext.AnnIndex.appendIvfPq]]) one micro-batch at a time —
+    * spool are appended into a persisted IVF×PQ index one micro-batch at
+    * a time, through the layout's encoder and row writer
+    * ([[graft.ext.AnnIndex.append]]) —
     * the index-side half of a streaming ingestion pipeline (the table
     * side is `EventStreams.runUpsertOnce`). Quantizers stay FROZEN, so
     * the post-stream index equals a one-shot encode of everything ever
@@ -972,12 +963,7 @@ object DocStreams {
         s"nlist=${meta("nlist")})")
     requirePairedCheckpoint(spark, indexDir, checkpointDir)
     StreamConf.withWidth(spark) {
-      // the quantizers are FROZEN for the life of the run and maintenance
-      // is serialized against the stream (caller contract) — load the
-      // index + refine-flag ONCE instead of re-reading
-      // meta/coarse/codebooks from parquet every micro-batch (the seq
-      // stays a per-batch sidecar read — AppendContext doc)
-      val ctx = graft.ext.AnnIndex.ivfPqAppendContext(spark, indexDir)
+      val model = frozenForRun(spark, indexDir)
       val stream = spark.readStream
         .schema(s"$idCol long, $vecCol array<float>")
         .option("maxFilesPerTrigger", "1")
@@ -986,7 +972,7 @@ object DocStreams {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           if (!Hfs.exists(spark, s"$indexDir/_batch_$batchId"))
-            appendBatchExactlyOnce(spark, indexDir, ctx, batch.toDF(), batchId,
+            appendBatchExactlyOnce(spark, indexDir, model, batch.toDF(), batchId,
               idCol, vecCol)
           ()
         }
@@ -1033,7 +1019,7 @@ object DocStreams {
     requirePairedCheckpoint(spark, indexDir, checkpointDir)
     val probes = probeQueries.localCheckpoint(eager = true)
     StreamConf.withWidth(spark) {
-      val ctx = graft.ext.AnnIndex.ivfPqAppendContext(spark, indexDir)
+      val model = frozenForRun(spark, indexDir)
       val q = spark.readStream
         .schema(s"$idCol long, $vecCol array<float>")
         .option("maxFilesPerTrigger", "1")
@@ -1042,7 +1028,7 @@ object DocStreams {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           if (!Hfs.exists(spark, s"$indexDir/_batch_$batchId")) {
-            appendBatchExactlyOnce(spark, indexDir, ctx, batch.toDF(), batchId,
+            appendBatchExactlyOnce(spark, indexDir, model, batch.toDF(), batchId,
               idCol, vecCol, touchMarker = false)
             val (hits, possible) = graft.ext.AnnIndex.ivfPqRecallCounters(
               spark, indexDir, probes, idCol, vecCol, k, nprobe)
@@ -1069,31 +1055,48 @@ object DocStreams {
     }
   }
 
+  /** The index's frozen model for one append run. The quantizers are
+    * FROZEN for the life of the run and maintenance is serialized against
+    * the stream (caller contract, [[graft.ext.AnnIndex]] object doc), so
+    * the model is read ONCE with its small quantizer tables checkpointed:
+    * per-batch encodes then read blocks, not parquet. The sequence number
+    * is deliberately NOT hoisted: it is one sidecar file read per batch
+    * ([[graft.ext.AnnIndex.nextSeq]]), and re-reading it keeps a
+    * contract-violating mid-stream delete merely forbidden rather than
+    * silently row-losing (a hoisted seq would stamp a later re-append
+    * BELOW the intervening tombstone and the update would vanish).
+    */
+  private def frozenForRun(spark: SparkSession,
+      indexDir: String): graft.ext.AnnIndex.Frozen = {
+    val model = graft.ext.AnnIndex.frozenModel(spark, indexDir)
+    model.copy(tables = model.tables.map { case (t, df) =>
+      t -> df.localCheckpoint(eager = true) })
+  }
+
   /** One batch's staged-generation append (unmarked batches only): sweep
     * any leftovers of a crashed attempt, stage the encoded batch under an
-    * invisible dir, publish via deterministic renames, mark last.
+    * invisible dir through the index's row writer, publish via
+    * deterministic renames, mark last.
     */
   private def appendBatchExactlyOnce(spark: SparkSession, indexDir: String,
-      ctx: graft.ext.AnnIndex.AppendContext, batch: DataFrame, batchId: Long,
+      model: graft.ext.AnnIndex.Frozen, batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, touchMarker: Boolean = true): Unit = {
+    import graft.ext.AnnIndex
     import graft.util.Hfs
     val staged = s"$indexDir/.staged_batch_$batchId"
     val prefix = s"b$batchId"
     Hfs.delete(spark, staged)
     sweepPublished(spark, s"$indexDir/codes", prefix)
     sweepPublished(spark, s"$indexDir/vectors", prefix)
-    val (codes, vectors) = graft.ext.AnnIndex.ivfPqAppendFrames(
-      spark, indexDir, ctx, batch, idCol, vecCol)
     // one part per touched cluster, not one per (task × cluster): every
     // staged file becomes a publish rename against the live index, paid
     // per batch forever (same small-file discipline as the dedup store)
-    codes.coalesce(1).write.mode("overwrite").partitionBy("__cluster")
-      .parquet(s"$staged/codes")
-    vectors.foreach(_.coalesce(1).write.mode("overwrite").partitionBy("__cluster")
-      .parquet(s"$staged/vectors"))
-    publishStaged(spark, s"$staged/codes", s"$indexDir/codes", prefix)
-    if (vectors.isDefined)
-      publishStaged(spark, s"$staged/vectors", s"$indexDir/vectors", prefix)
+    val frames = AnnIndex.encode(model, batch, idCol, vecCol)
+      .map { case (t, rows) => t -> rows.coalesce(1) }
+    AnnIndex.writeRows(staged, model.layout, frames,
+      AnnIndex.nextSeq(spark, indexDir), "overwrite")
+    frames.foreach { case (t, _) =>
+      publishStaged(spark, s"$staged/$t", s"$indexDir/$t", prefix) }
     Hfs.delete(spark, staged)
     // callers composing more per-batch work into the same transaction
     // (the recall monitor) mark AFTER their own publish instead

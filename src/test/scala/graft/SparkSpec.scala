@@ -14,6 +14,22 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The per-JVM root every spec temp dir lives under; a shutdown hook
+    * deletes it, so a suite run leaves nothing behind in the system temp
+    * dir.
+    */
+  private lazy val tempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_specs")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh empty directory named `prefix…` under the per-JVM root —
+    * the one way specs get scratch space.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(tempRoot, prefix)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -139,7 +139,7 @@ class EngineSpec extends SparkSpec {
     // 3,000 rows over 300 keys, each key's occurrences spread over the
     // whole file; the multi-relation and the component assembly shuffle
     // the rows before the dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_lastwins")
+    val dir = graft.SparkSpec.tempDir("graft_lastwins")
     val csvPath = dir.resolve("people.csv")
     val names = Seq("India", "United States", "China")
     java.nio.file.Files.write(csvPath, ("fullName,address.street,countries\n" +
@@ -182,7 +182,7 @@ class EngineSpec extends SparkSpec {
         case "api::country.country" => (countryTable, "id")
         case "api::person.person" => (stored, "fullName")
       })
-      val dir = java.nio.file.Files.createTempDirectory("graft_ragged").toString + "/out"
+      val dir = graft.SparkSpec.tempDir("graft_ragged").toString + "/out"
       graft.operators.Exporter.writeCsv(eng.exportCsv("api::person.person"), dir)
       val back = spark.read.option("header", true).option("escape", "\"").csv(dir)
         .orderBy("fullName").collect()

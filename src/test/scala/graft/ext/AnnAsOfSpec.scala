@@ -25,7 +25,7 @@ class AnnAsOfSpec extends SparkSpec {
     val base = vecs(0L until 16L, 41)
     AnnIndex.buildPq(base.filter(col("vec_id") < 8), "vec_id", "embedding",
       dir, m = 4, ksub = 8, iters = 1)
-    AnnIndex.appendPq(spark, dir, base.filter(col("vec_id") >= 8),
+    AnnIndex.append(spark, dir, base.filter(col("vec_id") >= 8),
       "vec_id", "embedding")
     AnnIndex.deleteIds(spark, dir, Seq(3L, 11L).toDF("vec_id"), "vec_id")
     AnnIndex.update(spark, dir, vecs(Seq(6L), 99), "vec_id", "embedding")

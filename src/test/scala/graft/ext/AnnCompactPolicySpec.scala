@@ -16,7 +16,7 @@ class AnnCompactPolicySpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }

@@ -3,6 +3,7 @@ package graft.ext
 import java.io.File
 
 import graft.SparkSpec
+import graft.functions.Cols.qcol
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,6 +15,11 @@ import org.apache.spark.sql.functions._
   * live set (less the query's own id), an updated id must be served once
   * per query (a second live generation would show as a duplicate row or a
   * corrupted sum), and compaction must not change the served top-k.
+  *
+  * Every layout also writes exactly what its former hand-written build
+  * and append bodies wrote — kept below as spec-local references — table
+  * by table, and a streamed IVF×PQ append writes what the batch append
+  * of the same rows writes.
   */
 class AnnMaintenanceSpec extends SparkSpec {
   import spark.implicits._
@@ -87,7 +93,7 @@ class AnnMaintenanceSpec extends SparkSpec {
       nested = Some("ivfpq")))
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete(); d.getAbsolutePath
   }
 
@@ -197,5 +203,289 @@ class AnnMaintenanceSpec extends SparkSpec {
     an[Exception] should be thrownBy AnnIndex.compact(spark, dir)
     listing(dir) shouldBe noMeta
     siblings shouldBe before
+  }
+
+  // ------------------------------------------- build + append references
+  // The per-layout build and append bodies as they were written before
+  // every layout shared one encoder and one row writer; each must agree
+  // with the shared path table by table.
+  private val (m, ksub, nlist) = (4, 8, 4)
+
+  private def writeBounds(dir: String, b: Similarity.SqBounds): Unit =
+    b.vmin.indices.map(i => (i, b.vmin(i), b.vmax(i))).toDF("__pos", "vmin", "vmax")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds")
+
+  private def rotate(rows: DataFrame, r: Array[Array[Double]]): DataFrame =
+    rows.select(qcol("vec_id").as("__rid"),
+      Similarity.rotateExpr(qcol("embedding"), r).as("__rvec"))
+
+  private def refRotatedRoot(c: DataFrame, dir: String, layout: String,
+      r: Array[Array[Double]]): DataFrame = {
+    AnnIndex.writeMeta(spark, dir, m = 0, sub = 0, nlist = -1, layout = layout)
+    r.indices.map(i => (i, r(i).toSeq)).toDF("__i", "__row")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
+    rotate(c, r)
+  }
+
+  private def refBuildPq(c: DataFrame, id: String, vec: String, dir: String): Unit = {
+    val model = Similarity.pqModel(c, id, vec, m, ksub, 1)
+    AnnIndex.writeMeta(spark, dir, model.m, model.sub, nlist = -1)
+    model.centroids.write.mode("overwrite").parquet(s"$dir/codebooks")
+    model.codes.withColumn("__seq", lit(0L))
+      .write.mode("overwrite").parquet(s"$dir/codes")
+  }
+
+  private def refAppendPq(dir: String, rows: DataFrame, id: String, vec: String): Unit = {
+    val model = AnnIndex.readPq(spark, dir)
+    val seq = AnnIndex.nextSeq(spark, dir)
+    Similarity.pqEncode(rows, id, vec, model.centroids, model.m, model.sub)
+      .withColumn("__seq", lit(seq))
+      .write.mode("append").parquet(s"$dir/codes")
+  }
+
+  private def refBuildIvfPq(c: DataFrame, id: String, vec: String, dir: String,
+      keepVectors: Boolean, byResidual: Boolean): Unit = {
+    val coarse = Similarity.trainCentroids(c, id, vec, nlist, 1)
+    val assigned = Similarity.assign(c, (id, vec), coarse)
+    if (byResidual) {
+      val (codebooks, codes, sub) = Similarity.pqResidualModel(assigned,
+        id, vec, coarse, m, ksub, 1, 0)
+      AnnIndex.writeMeta(spark, dir, m, sub, nlist, residual = true)
+      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
+      codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
+      codes.withColumn("__seq", lit(0L))
+        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/codes")
+    } else {
+      val clusterOf = assigned.select(qcol(id).cast("long").as("__id"), col("__cluster"))
+      val model = Similarity.pqModel(c, id, vec, m, ksub, 1)
+      AnnIndex.writeMeta(spark, dir, model.m, model.sub, nlist)
+      coarse.write.mode("overwrite").parquet(s"$dir/coarse")
+      model.centroids.write.mode("overwrite").parquet(s"$dir/codebooks")
+      model.codes.join(clusterOf, Seq("__id")).withColumn("__seq", lit(0L))
+        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/codes")
+    }
+    if (keepVectors)
+      assigned.select(qcol(id).cast("long").as("__id"), qcol(vec).as("__vec"),
+          lit(0L).as("__seq"), col("__cluster"))
+        .write.partitionBy("__cluster").mode("overwrite").parquet(s"$dir/vectors")
+  }
+
+  private def refAppendIvfPq(dir: String, rows: DataFrame, id: String, vec: String): Unit = {
+    val index = AnnIndex.readIvfPq(spark, dir)
+    val seq = AnnIndex.nextSeq(spark, dir)
+    val assigned = Similarity.assign(rows, (id, vec), index.coarse)
+    val codes = (if (index.residual)
+        Similarity.pqResidualEncode(assigned, id, vec, index.coarse,
+          index.codebooks, index.m, index.sub)
+      else
+        Similarity.pqEncode(rows, id, vec, index.codebooks, index.m, index.sub)
+          .join(assigned.select(qcol(id).cast("long").as("__id"), col("__cluster")),
+            Seq("__id"))).withColumn("__seq", lit(seq))
+    codes.write.mode("append").partitionBy("__cluster").parquet(s"$dir/codes")
+    if (new File(s"$dir/vectors").exists())
+      assigned.select(qcol(id).cast("long").as("__id"), qcol(vec).as("__vec"),
+          lit(seq).as("__seq"), col("__cluster"))
+        .write.mode("append").partitionBy("__cluster").parquet(s"$dir/vectors")
+  }
+
+  /** (layout, shared-path build, reference build, reference append). */
+  private val references: Seq[(String, (DataFrame, String) => Unit,
+      (DataFrame, String) => Unit, (String, DataFrame) => Unit)] = Seq(
+    ("pq",
+      (c, d) => AnnIndex.buildPq(c, "vec_id", "embedding", d, m, ksub, iters = 1),
+      (c, d) => refBuildPq(c, "vec_id", "embedding", d),
+      (d, r) => refAppendPq(d, r, "vec_id", "embedding")),
+    ("ivf",
+      (c, d) => AnnIndex.buildIvf(c, "vec_id", "embedding", d, nlist, iters = 1),
+      (c, d) => {
+        val coarse = Similarity.trainCentroids(c, "vec_id", "embedding", nlist, 1)
+        AnnIndex.writeMeta(spark, d, m = 0, sub = 0, nlist)
+        coarse.write.mode("overwrite").parquet(s"$d/coarse")
+        Similarity.assign(c, ("vec_id", "embedding"), coarse)
+          .select(col("vec_id").cast("long").as("__id"), col("embedding").as("__vec"),
+            lit(0L).as("__seq"), col("__cluster"))
+          .write.partitionBy("__cluster").mode("overwrite").parquet(s"$d/vectors")
+      },
+      (d, r) => {
+        val index = AnnIndex.readIvf(spark, d)
+        val seq = AnnIndex.nextSeq(spark, d)
+        Similarity.assign(r, ("vec_id", "embedding"), index.coarse)
+          .select(col("vec_id").cast("long").as("__id"), col("embedding").as("__vec"),
+            lit(seq).as("__seq"), col("__cluster"))
+          .write.mode("append").partitionBy("__cluster").parquet(index.vectorsPath)
+      }),
+    ("ivfpq",
+      (c, d) => AnnIndex.buildIvfPq(c, "vec_id", "embedding", d, nlist, m, ksub, iters = 1),
+      (c, d) => refBuildIvfPq(c, "vec_id", "embedding", d, false, false),
+      (d, r) => refAppendIvfPq(d, r, "vec_id", "embedding")),
+    ("ivfpq keepVectors",
+      (c, d) => AnnIndex.buildIvfPq(c, "vec_id", "embedding", d, nlist, m, ksub,
+        iters = 1, keepVectors = true),
+      (c, d) => refBuildIvfPq(c, "vec_id", "embedding", d, true, false),
+      (d, r) => refAppendIvfPq(d, r, "vec_id", "embedding")),
+    ("ivfpq byResidual keepVectors",
+      (c, d) => AnnIndex.buildIvfPq(c, "vec_id", "embedding", d, nlist, m, ksub,
+        iters = 1, keepVectors = true, byResidual = true),
+      (c, d) => refBuildIvfPq(c, "vec_id", "embedding", d, true, true),
+      (d, r) => refAppendIvfPq(d, r, "vec_id", "embedding")),
+    ("sq",
+      (c, d) => AnnIndex.buildSq(c, "vec_id", "embedding", d),
+      (c, d) => {
+        AnnIndex.writeMeta(spark, d, m = 0, sub = 0, nlist = -1, layout = "sq")
+        val b = Similarity.sqTrainBounds(c, "embedding")
+        writeBounds(d, b)
+        Similarity.sqEncode(c, "vec_id", "embedding", b).withColumn("__seq", lit(0L))
+          .write.mode("overwrite").parquet(s"$d/codes")
+      },
+      (d, r) => {
+        val b = AnnIndex.readSq(spark, d).bounds
+        val seq = AnnIndex.nextSeq(spark, d)
+        Similarity.sqEncode(r, "vec_id", "embedding", b).withColumn("__seq", lit(seq))
+          .write.mode("append").parquet(s"$d/codes")
+      }),
+    ("ivfsq",
+      (c, d) => AnnIndex.buildIvfSq(c, "vec_id", "embedding", d, nlist, iters = 1),
+      (c, d) => {
+        AnnIndex.writeMeta(spark, d, m = 0, sub = 0, nlist = nlist, layout = "ivfsq")
+        val coarse = Similarity.trainCentroids(c, "vec_id", "embedding", nlist, 1)
+        coarse.write.mode("overwrite").parquet(s"$d/coarse")
+        val b = Similarity.sqTrainBounds(c, "embedding")
+        writeBounds(d, b)
+        val assigned = Similarity.assign(c, ("vec_id", "embedding"), coarse)
+          .select(col("vec_id").cast("long").as("__id"), col("__cluster"))
+        Similarity.sqEncode(c, "vec_id", "embedding", b).join(assigned, Seq("__id"))
+          .withColumn("__seq", lit(0L))
+          .write.mode("overwrite").partitionBy("__cluster").parquet(s"$d/codes")
+      },
+      (d, r) => {
+        val index = AnnIndex.readIvfSq(spark, d)
+        val seq = AnnIndex.nextSeq(spark, d)
+        val assigned = Similarity.assign(r, ("vec_id", "embedding"), index.coarse)
+          .select(col("vec_id").cast("long").as("__id"), col("__cluster"))
+        Similarity.sqEncode(r, "vec_id", "embedding", index.bounds)
+          .join(assigned, Seq("__id")).withColumn("__seq", lit(seq))
+          .write.mode("append").partitionBy("__cluster").parquet(s"$d/codes")
+      }),
+    ("bq",
+      (c, d) => AnnIndex.buildBq(c, "vec_id", "embedding", d, dim),
+      (c, d) => {
+        AnnIndex.writeMeta(spark, d, m = 0, sub = 0, nlist = -1, layout = "bq")
+        graft.util.Hfs.writeString(spark, s"$d/_dim", dim.toString)
+        c.select(col("vec_id").cast("long").as("__id"),
+            Similarity.signSketch(col("embedding"), dim).as("__sig"),
+            col("embedding").as("__vec"), lit(0L).as("__seq"))
+          .write.mode("overwrite").parquet(s"$d/codes")
+      },
+      (d, r) => {
+        val bqDim = AnnIndex.readBq(spark, d).dim
+        val seq = AnnIndex.nextSeq(spark, d)
+        r.select(col("vec_id").cast("long").as("__id"),
+            Similarity.signSketch(col("embedding"), bqDim).as("__sig"),
+            col("embedding").as("__vec"), lit(seq).as("__seq"))
+          .write.mode("append").parquet(s"$d/codes")
+      }),
+    ("pcapq",
+      (c, d) => AnnIndex.buildPcaPq(c, "vec_id", "embedding", d, dim, m, ksub, iters = 1),
+      (c, d) => refBuildPq(refRotatedRoot(c, d, "pcapq",
+          Similarity.pcaRotation(c, "vec_id", "embedding", dim, maxTrainRows = 4096)),
+        "__rid", "__rvec", s"$d/pq"),
+      (d, r) => refAppendPq(s"$d/pq", rotate(r, AnnIndex.readRotated(spark, d).rotation),
+        "__rid", "__rvec")),
+    ("opq",
+      (c, d) => AnnIndex.buildOpq(c, "vec_id", "embedding", d, dim, m, ksub,
+        iters = 1, opqIters = 1),
+      (c, d) => refBuildPq(refRotatedRoot(c, d, "opq",
+          Similarity.opqRotation(c, "vec_id", "embedding", dim, m, ksub, 1,
+            maxTrainRows = 1024)), "__rid", "__rvec", s"$d/pq"),
+      (d, r) => refAppendPq(s"$d/pq", rotate(r, AnnIndex.readRotated(spark, d).rotation),
+        "__rid", "__rvec")),
+    ("opqivfpq",
+      (c, d) => AnnIndex.buildOpqIvfPq(c, "vec_id", "embedding", d, dim, nlist, m,
+        ksub, iters = 1, opqIters = 1),
+      (c, d) => refBuildIvfPq(refRotatedRoot(c, d, "opqivfpq",
+          Similarity.opqRotation(c, "vec_id", "embedding", dim, m, ksub, 1,
+            maxTrainRows = 1024)), "__rid", "__rvec", s"$d/ivfpq", false, false),
+      (d, r) => refAppendIvfPq(s"$d/ivfpq",
+        rotate(r, AnnIndex.readRotated(spark, d).rotation), "__rid", "__rvec")))
+
+  /** Every table under `dir` (a directory holding a `_SUCCESS` marker),
+    * relative to `dir`, plus every other file that is not part of one —
+    * the sidecars.
+    */
+  private def tablesAndSidecars(dir: String): (Seq[String], Seq[String]) = {
+    val root = new File(dir).toPath
+    val files = java.nio.file.Files.walk(root).iterator()
+    var tables = Seq.empty[String]
+    var all = Seq.empty[java.nio.file.Path]
+    while (files.hasNext) {
+      val p = files.next()
+      if (p.toFile.isFile) all :+= p
+      if (p.getFileName.toString == "_SUCCESS") tables :+= root.relativize(p.getParent).toString
+    }
+    val sidecars = all.map(root.relativize).filterNot(f =>
+      tables.exists(t => f.startsWith(t)) || f.getFileName.toString.endsWith(".crc"))
+    (tables.sorted, sidecars.map(_.toString).sorted)
+  }
+
+  /** Table-by-table equality of two index dirs: the same tables and
+    * sidecars, each table with the same schema, the same rows (`__seq`
+    * and the `__cluster` partition column included) and the same
+    * `__cluster` directories, each sidecar with the same content.
+    */
+  private def assertSameTables(got: String, want: String, clue: String): Unit = {
+    val (gotTables, gotSidecars) = tablesAndSidecars(got)
+    val (wantTables, wantSidecars) = tablesAndSidecars(want)
+    withClue(s"$clue: ") {
+      gotTables shouldBe wantTables
+      gotSidecars shouldBe wantSidecars
+      gotSidecars.foreach { f =>
+        withClue(s"$f: ") {
+          graft.util.Hfs.readString(spark, s"$got/$f") shouldBe
+            graft.util.Hfs.readString(spark, s"$want/$f")
+        }
+      }
+      gotTables.foreach { t =>
+        withClue(s"$t: ") {
+          val (g, w) = (spark.read.parquet(s"$got/$t"), spark.read.parquet(s"$want/$t"))
+          g.schema shouldBe w.schema
+          g.collect().map(_.toString).sorted shouldBe w.collect().map(_.toString).sorted
+          def clusters(d: String) = new File(d).list().filter(_.startsWith("__cluster=")).sorted.toSeq
+          clusters(s"$got/$t") shouldBe clusters(s"$want/$t")
+        }
+      }
+    }
+  }
+
+  for ((name, build, refBuild, refAppend) <- references)
+    test(s"$name: build and append write what the per-layout reference bodies wrote") {
+      val (dir, ref) = (tmpDir("graft_annenc"), tmpDir("graft_annenc_ref"))
+      build(ids(0, 24), dir)
+      refBuild(ids(0, 24), ref)
+      assertSameTables(dir, ref, s"$name after build")
+      // a delete first, so the append lands at a non-zero seq
+      Seq(dir, ref).foreach(d =>
+        AnnIndex.deleteIds(spark, d, corpus.filter($"vec_id" === 3), "vec_id"))
+      AnnIndex.append(spark, dir, ids(24, 32), "vec_id", "embedding")
+      refAppend(ref, ids(24, 32))
+      assertSameTables(dir, ref, s"$name after append")
+    }
+
+  test("a streamed IVF×PQ append writes what the batch append of the same rows writes") {
+    val (streamed, batch) = (tmpDir("graft_annenc_stream"), tmpDir("graft_annenc_batch"))
+    Seq(streamed, batch).foreach { d =>
+      AnnIndex.buildIvfPq(ids(0, 24), "vec_id", "embedding", d, nlist, m, ksub,
+        iters = 1, keepVectors = true, byResidual = true)
+      AnnIndex.deleteIds(spark, d, corpus.filter($"vec_id" === 3), "vec_id")
+    }
+    val spool = tmpDir("graft_annenc_spool")
+    ids(24, 32).coalesce(1).write.parquet(spool)
+    graft.streaming.DocStreams.runIvfPqAppendOnce(spark, spool, streamed,
+      tmpDir("graft_annenc_ckpt"))
+    AnnIndex.append(spark, batch, ids(24, 32), "vec_id", "embedding")
+    // the stream's own bookkeeping (batch marker, checkpoint pairing) is
+    // not part of the index
+    Seq("_batch_0", "_stream_checkpoint").foreach(f =>
+      new File(s"$streamed/$f").delete() shouldBe true)
+    assertSameTables(streamed, batch, "streamed vs batch")
   }
 }

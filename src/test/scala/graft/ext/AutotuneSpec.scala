@@ -15,7 +15,7 @@ class AutotuneSpec extends SparkSpec {
     val corpus = (0L until 40L)
       .map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tune").toString + "/ivf"
+    val dir = graft.SparkSpec.tempDir("graft_tune").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir, nlist = 4, iters = 1)
     (dir, corpus.filter($"vec_id" < 5))
   }

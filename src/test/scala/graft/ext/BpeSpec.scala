@@ -34,7 +34,7 @@ class BpeSpec extends SparkSpec {
 
   test("saved merges load back identical; tokenization survives the round-trip") {
     val model = Bpe.learn(paperCorpus, "text", numMerges = 5)
-    val path = java.nio.file.Files.createTempDirectory("graft_bpe").toString + "/merges.txt"
+    val path = graft.SparkSpec.tempDir("graft_bpe").toString + "/merges.txt"
     Bpe.saveMerges(model, path)
     val loaded = Bpe.loadMerges(path)
     loaded shouldBe model
@@ -112,7 +112,7 @@ class BpeSpec extends SparkSpec {
     val learned = ByteLevel.learn(Seq("aa aa aa bb").toDF("text"), "text", numMerges = 2)
     learned.merges shouldBe Vector(("a", "a"), (G, "aa"))
     // a byte-level list round-trips through the shared merges.txt format
-    val path = java.nio.file.Files.createTempDirectory("graft_bpe").toString + "/bl_merges.txt"
+    val path = graft.SparkSpec.tempDir("graft_bpe").toString + "/bl_merges.txt"
     Bpe.saveMerges(learned, path)
     Bpe.loadMerges(path).merges shouldBe learned.merges
     // '#' is a legitimate byte-level symbol (markdown headings): only the
@@ -152,7 +152,7 @@ class BpeSpec extends SparkSpec {
     // with 'er'/'est' assembled by the later ranks
     toks shouldBe Seq("the", "\u0120low", "er", "\u0120low", "est", "\u0120low")
     // and the loaded model round-trips byte-for-byte through save/load
-    val copy = java.nio.file.Files.createTempDirectory("graft_bpe_fx").toString + "/m.txt"
+    val copy = graft.SparkSpec.tempDir("graft_bpe_fx").toString + "/m.txt"
     Bpe.saveMerges(model, copy)
     Bpe.loadMerges(copy).merges shouldBe model.merges
   }

@@ -17,7 +17,7 @@ class BqIndexSpec extends SparkSpec {
   }
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }
@@ -42,7 +42,7 @@ class BqIndexSpec extends SparkSpec {
     val c = corpus(40)
     val dir = tmpDir("bqapp")
     AnnIndex.buildBq(c.filter($"vec_id" < 20), "vec_id", "embedding", dir, dim = 64)
-    AnnIndex.appendBq(spark, dir, c.filter($"vec_id" >= 20), "vec_id", "embedding")
+    AnnIndex.append(spark, dir, c.filter($"vec_id" >= 20), "vec_id", "embedding")
     val dir2 = tmpDir("bqone")
     AnnIndex.buildBq(c, "vec_id", "embedding", dir2, dim = 64)
     val q = c.filter($"vec_id" < 3)

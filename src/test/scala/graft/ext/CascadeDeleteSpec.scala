@@ -21,7 +21,7 @@ class CascadeDeleteSpec extends SparkSpec {
     Array.tabulate(8)(i => math.sin(seed * 31 + i + 1).toFloat).toSeq
 
   private def stageSpool(slices: Seq[Seq[(Long, String)]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cascade_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_cascade_spool").toString
     slices.zipWithIndex.foreach { case (rows, i) =>
       val stage = s"$dir/.stage_$i"
       rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(stage)
@@ -35,7 +35,7 @@ class CascadeDeleteSpec extends SparkSpec {
   }
 
   private def buildFixture(): (String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_cascade").toString
+    val root = graft.SparkSpec.tempDir("graft_cascade").toString
     val emb = docs.map { case (id, _) => (id, vec(id.toInt)) }
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
@@ -130,7 +130,7 @@ class CascadeDeleteSpec extends SparkSpec {
       CascadeTargets(annIndexes = Seq(s"$root2/pq"),
         textIndexes = Seq(s"$root2/inv"), dedupStores = Seq(store2)))
     // streamed: the same ids arrive as two takedown batches
-    val spool = java.nio.file.Files.createTempDirectory("graft_takedown").toString
+    val spool = graft.SparkSpec.tempDir("graft_takedown").toString
     Seq(Seq(2L), Seq(4L)).zipWithIndex.foreach { case (ids, i) =>
       val stage = s"$spool/.stage_$i"
       ids.toDF("doc_id").coalesce(1).write.mode("overwrite").parquet(stage)
@@ -208,8 +208,7 @@ class CascadeDeleteSpec extends SparkSpec {
     // the corpus key into null — the anti-join never matched, every row
     // survived, and forget() reported success while deleting nothing
     val rows = (1 to 40).map(i => (s"$i", i.toLong)).toDF("k", "v")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_q_forget_nat").toString + "/qs"
+    val store = graft.SparkSpec.tempDir("graft_q_forget_nat").toString + "/qs"
     EventStreams.rebuildQuantileStore(spark, store, rows, col("k"), col("v"), 8)
     val target = QuantileStoreTarget(store, rows, "k", col("v"), 8)
     CascadeDelete.forget(spark, (1 to 20).map(_.toLong).toDF("doc_id"),
@@ -223,8 +222,7 @@ class CascadeDeleteSpec extends SparkSpec {
     // and ids that cannot be represented in a LONG-keyed store's key
     // type refuse loudly instead of silently keeping every row
     val numRows = (1 to 10).map(i => (i.toLong, i.toLong)).toDF("k", "v")
-    val numStore = java.nio.file.Files
-      .createTempDirectory("graft_q_forget_bad").toString + "/qs"
+    val numStore = graft.SparkSpec.tempDir("graft_q_forget_bad").toString + "/qs"
     EventStreams.rebuildQuantileStore(spark, numStore, numRows,
       col("k"), col("v"), 8)
     val e = intercept[IllegalArgumentException] {

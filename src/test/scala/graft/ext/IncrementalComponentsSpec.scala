@@ -10,7 +10,7 @@ class IncrementalComponentsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("incremental updates equal batch components on the union, through cross-generation merges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_comps").toString + "/c"
+    val dir = graft.SparkSpec.tempDir("graft_inc_comps").toString + "/c"
     // batch 1: two separate clusters
     IncrementalComponents.update(spark, dir,
       Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b"))
@@ -34,7 +34,7 @@ class IncrementalComponentsSpec extends SparkSpec {
   }
 
   test("generation counter rides the _next_seq sidecar; pre-sidecar stores adopt it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_comps").toString + "/c"
+    val dir = graft.SparkSpec.tempDir("graft_inc_comps").toString + "/c"
     IncrementalComponents.update(spark, dir, Seq((1L, 2L)).toDF("id_a", "id_b"))
     IncrementalComponents.update(spark, dir, Seq((2L, 3L)).toDF("id_a", "id_b"))
     // two generations written → the sidecar holds the NEXT seq (2)
@@ -51,7 +51,7 @@ class IncrementalComponentsSpec extends SparkSpec {
   }
 
   test("readWithNodes pads isolated nodes; empty updates are no-ops") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_comps").toString + "/c"
+    val dir = graft.SparkSpec.tempDir("graft_inc_comps").toString + "/c"
     // empty update against a missing store: nothing written, read-side safe
     IncrementalComponents.update(spark, dir, Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
     IncrementalComponents.readWithNodes(spark, dir,

@@ -14,7 +14,7 @@ class LayoutSpec extends SparkSpec {
       (((x >> b) & 1) << (2 * b)) | (((y >> b) & 1) << (2 * b + 1))).sum
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    graft.SparkSpec.tempDir(name).toString
 
   test("zOrder2 matches the reference Morton interleave bit for bit") {
     val cases = Seq((0L, 0L), (1L, 0L), (0L, 1L), (5L, 9L), (1023L, 1L),

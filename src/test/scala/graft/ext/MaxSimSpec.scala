@@ -34,7 +34,7 @@ class MaxSimSpec extends SparkSpec {
   }
 
   test("exhaustive probing + full candidate depth equals brute-force MaxSim exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_maxsim").toString + "/idx"
+    val dir = graft.SparkSpec.tempDir("graft_maxsim").toString + "/idx"
     AnnIndex.buildIvf(tokVecs, "__id", "__vec", dir, nlist = 4, iters = 1)
     // nprobe = nlist and candPerToken = |corpus tokens|: both stage-1
     // approximations vanish, so the two-stage serve must equal brute force
@@ -50,7 +50,7 @@ class MaxSimSpec extends SparkSpec {
   }
 
   test("deleted docs vanish from MaxSim serving (liveness reaches stage 2)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_maxsim").toString + "/idx"
+    val dir = graft.SparkSpec.tempDir("graft_maxsim").toString + "/idx"
     AnnIndex.buildIvf(tokVecs, "__id", "__vec", dir, nlist = 4, iters = 1)
     val before = MaxSim.maxSimTopK(spark, dir, queryToks,
         "qdoc", "__qtok", "__vec", k = 5, nprobe = 4, candPerToken = 48, cap = 64)

@@ -11,7 +11,7 @@ class MiningSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }

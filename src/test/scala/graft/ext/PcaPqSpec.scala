@@ -23,7 +23,7 @@ class PcaPqSpec extends SparkSpec {
   }
 
   private def tmpDir(name: String): String = {
-    val dd = java.nio.file.Files.createTempDirectory(name).toFile
+    val dd = graft.SparkSpec.tempDir(name).toFile
     dd.delete(); dd.getAbsolutePath
   }
 

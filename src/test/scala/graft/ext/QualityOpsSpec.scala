@@ -317,7 +317,7 @@ class QualityOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(19)
     val corpus = (0 until 32).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fbq").toString + "/bq"
+    val dir = graft.SparkSpec.tempDir("graft_fbq").toString + "/bq"
     AnnIndex.buildBq(corpus, "vec_id", "embedding", dir, dim = 8)
     val q = corpus.filter($"vec_id" < 2)
     val served = AnnIndex.bqTopK(spark, dir, q, "vec_id", "embedding",
@@ -334,7 +334,7 @@ class QualityOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val corpus = (0 until 32).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fivf").toString + "/ivf"
+    val dir = graft.SparkSpec.tempDir("graft_fivf").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir, nlist = 4, iters = 1)
     val q = corpus.filter($"vec_id" < 2)
     val served = AnnIndex.ivfTopK(spark, AnnIndex.readIvf(spark, dir), q,

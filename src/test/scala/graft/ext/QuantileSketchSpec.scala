@@ -78,15 +78,13 @@ class QuantileSketchSpec extends SparkSpec {
   test("reading a missing or all-filtered store is an empty summary, not a crash") {
     import graft.streaming.EventStreams
     // a store with zero published batches has no deltas/ path at all
-    val missing = java.nio.file.Files
-      .createTempDirectory("graft_qs_missing").toString + "/never_published"
+    val missing = graft.SparkSpec.tempDir("graft_qs_missing").toString + "/never_published"
     val s0 = EventStreams.readQuantileSketch(spark, missing, K)
     s0.level shouldBe 0
     s0.items.count() shouldBe 0L
     // and a store whose rowFilter excluded every row has deltas but a
     // NULL max(min_lvl) — an empty level-0 summary, not a getInt crash
-    val empty = java.nio.file.Files
-      .createTempDirectory("graft_qs_empty").toString
+    val empty = graft.SparkSpec.tempDir("graft_qs_empty").toString
     Seq.empty[(Int, Long, Int)].toDF("__lvl", "__v", "min_lvl")
       .write.parquet(s"$empty/deltas")
     val s1 = EventStreams.readQuantileSketch(spark, empty, K)
@@ -96,8 +94,7 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("deletion = rebuild from survivors; idempotent; crash-replay heals") {
     import graft.streaming.EventStreams
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_qs_forget").toString + "/store"
+    val store = graft.SparkSpec.tempDir("graft_qs_forget").toString + "/store"
     val df = corpus(900).localCheckpoint(true)
     // generation 0: the full corpus
     EventStreams.rebuildQuantileStore(spark, store, df, col("id"), col("v"), K)

@@ -92,7 +92,7 @@ class RerankSpec extends SparkSpec {
       (i.toLong, Array.tabulate(6)(j =>
         (math.sin(i * 7 + j * 3).toFloat + (if (j == i % 6) 2f else 0f))))
     }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mmr_ivf").toFile
+    val dir = graft.SparkSpec.tempDir("graft_mmr_ivf").toFile
     dir.delete()
     AnnIndex.buildIvf(emb, "vec_id", "embedding", dir.getAbsolutePath,
       nlist = 4, iters = 2)

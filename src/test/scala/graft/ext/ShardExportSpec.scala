@@ -10,7 +10,7 @@ class ShardExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }

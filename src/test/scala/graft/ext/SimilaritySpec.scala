@@ -100,12 +100,14 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivf-pq (persisted, cluster-partitioned) with full probes and lossless codes matches brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     val brute = Similarity.bruteForceTopK(corpus.filter($"vec_id" === 0), corpus,
       "vec_id", "embedding", 3).orderBy("rank")
       .select("neighbor_id").as[Long].collect().toSeq
-    val ivfpq = AnnIndex.ivfPqTopKVia(dir, corpus.filter($"vec_id" === 0), corpus,
-      "vec_id", "embedding", 3, nlist = 2, nprobe = 2, m = 2, ksub = 5, iters = 1)
+    AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", dir, nlist = 2, m = 2,
+      ksub = 5, iters = 1)
+    val ivfpq = AnnIndex.ivfPqTopK(spark, AnnIndex.readIvfPq(spark, dir),
+        corpus.filter($"vec_id" === 0), "vec_id", "embedding", 3, nprobe = 2)
       .orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
     ivfpq shouldBe brute // both approximation axes disabled ⇒ exact
     // the on-disk layout IS cluster-partitioned (directory-per-cluster)
@@ -115,9 +117,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted pq index round-trips: loaded model equals the in-memory one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     val model = Similarity.pqModel(corpus, "vec_id", "embedding", m = 2, ksub = 3, iters = 2)
-    AnnIndex.writePq(model, dir)
+    AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 3,
+      modelIn = Some(model))
     val loaded = AnnIndex.readPq(spark, dir)
     loaded.m shouldBe model.m
     loaded.sub shouldBe model.sub
@@ -133,12 +136,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("append to persisted indexes: frozen-codebook encode, pruning intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    val base = graft.SparkSpec.tempDir("graft_annidx").toString
     val a = corpus.filter($"vec_id" < 3)
     val b = corpus.filter($"vec_id" >= 3)
     // PQ: appended codes == one-shot encode of the union vs frozen codebooks
     AnnIndex.buildPq(a, "vec_id", "embedding", s"$base/pq", m = 2, ksub = 3, iters = 1)
-    AnnIndex.appendPq(spark, s"$base/pq", b, "vec_id", "embedding")
+    AnnIndex.append(spark, s"$base/pq", b, "vec_id", "embedding")
     val model = AnnIndex.readPq(spark, s"$base/pq")
     val expect = Similarity.pqEncode(corpus, "vec_id", "embedding",
       model.centroids, model.m, model.sub)
@@ -163,7 +166,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("residual ivf-pq: lossless geometry equals brute force; append and compact stay in residual space") {
-    val base = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    val base = graft.SparkSpec.tempDir("graft_annidx").toString
     val dir = s"$base/ivfpq_res"
     // ksub = corpus size ⇒ every RESIDUAL subvector its own centroid, and
     // the ⟨q̂,ĉ⟩ + ⟨q̂,r⟩ decomposition is exact ⇒ must equal brute force
@@ -201,7 +204,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("atomic index rebuild: swap replaces whole generations, recovers a crashed swap") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     val a = corpus.filter($"vec_id" < 3)
     // first rebuild: target doesn't exist yet — plain install
     AnnIndex.rebuild(dir)(
@@ -253,7 +256,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted ivf-flat index: pruned path equals the in-memory form") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir, nlist = 2, iters = 1)
     val index = AnnIndex.readIvf(spark, dir)
     index.nlist shouldBe 2
@@ -275,7 +278,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("tombstone delete: served top-k equals frozen-codebook encode of the surviving corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     AnnIndex.deleteIds(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
     val model = AnnIndex.readPq(spark, dir)
@@ -297,7 +300,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("update supersedes its tombstone: exactly the new encoding is live, no double count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     // re-embed id 2 with a different vector (near id 0's direction)
     val newRow = Seq((2L, Array(0.95f, 0.05f))).toDF("vec_id", "embedding")
@@ -321,7 +324,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("rebuild compacts tombstones: the fresh generation serves deleted ids again") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.rebuild(dir)(
       AnnIndex.buildPq(corpus, "vec_id", "embedding", _, m = 2, ksub = 5, iters = 1))
     AnnIndex.deleteIds(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
@@ -333,7 +336,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivf-flat and ivf-pq delete through the pruned query paths") {
-    val base = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    val base = graft.SparkSpec.tempDir("graft_annidx").toString
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", s"$base/ivf", nlist = 2, iters = 1)
     AnnIndex.deleteIds(spark, s"$base/ivf", Seq(1L).toDF("vec_id"), "vec_id")
     val brute = Similarity.bruteForceTopK(corpus.filter($"vec_id" === 0),
@@ -354,7 +357,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("refined ivf-pq: exact re-rank of an exhaustive shortlist equals brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     // DELIBERATELY lossy quantization (ksub 2 < corpus 5): the ADC ranking
     // degrades, but refine with a shortlist covering the corpus re-scores
     // with exact cosine — the final top-k must equal brute force anyway
@@ -376,7 +379,7 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "embedding", 3, nprobe = 2, refine = 2)
       .orderBy("rank").collect().toSeq shouldBe bruteDel
     // an index without kept vectors refuses loudly
-    val noVec = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/nv"
+    val noVec = graft.SparkSpec.tempDir("graft_annidx").toString + "/nv"
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", noVec,
       nlist = 2, m = 2, ksub = 2, iters = 1)
     val e = intercept[IllegalArgumentException] {
@@ -387,7 +390,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("tombstone debt measures dead weight and compactIfNeeded routes high-debt indexes to compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     // no tombstone log: debt short-circuits to zero, policy is a no-op
     AnnIndex.tombstoneDebt(spark, dir) shouldBe 0.0
@@ -411,7 +414,7 @@ class SimilaritySpec extends SparkSpec {
       "vec_id", "embedding", 4).orderBy("rank").collect().toSeq shouldBe before
     AnnIndex.compactIfNeeded(spark, dir) shouldBe false
     // IVF-flat measures debt on its vectors table and routes to compactIvf
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
+    val dir3 = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir3, nlist = 2, iters = 1)
     AnnIndex.deleteIds(spark, dir3, Seq(1L, 3L).toDF("vec_id"), "vec_id")
     AnnIndex.tombstoneDebt(spark, dir3) shouldBe 0.4 +- 1e-9
@@ -426,7 +429,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("maintenance seq rides the _next_seq sidecar; pre-sidecar indexes adopt it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     // first delete: tombstones at seq 0, the sidecar records the next
     // number — every later maintenance op is ONE tiny file read, not a
@@ -435,7 +438,7 @@ class SimilaritySpec extends SparkSpec {
     graft.util.Hfs.readString(spark, s"$dir/_next_seq").trim shouldBe "1"
     // appends read the counter without bumping it: the numbering stays
     // byte-identical to the scan-derived path in every history
-    AnnIndex.appendPq(spark, dir,
+    AnnIndex.append(spark, dir,
       Seq((9L, Array(0.6f, 0.8f))).toDF("vec_id", "embedding"), "vec_id", "embedding")
     graft.util.Hfs.readString(spark, s"$dir/_next_seq").trim shouldBe "1"
     // pre-sidecar adoption: with the sidecar gone the next delete falls
@@ -452,7 +455,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("tombstone debt reads pre-tombstone-layout tables (no __seq column) as generation 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/legacy"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/legacy"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     // simulate an index written before the tombstone layout: strip __seq
     // from the stored codes (liveOnly's documented legacy shape)
@@ -468,7 +471,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("compaction drops dead rows physically, keeps the served ranking, resets the tombstone log") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/pq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/pq"
     AnnIndex.buildPq(corpus, "vec_id", "embedding", dir, m = 2, ksub = 5, iters = 1)
     AnnIndex.deleteIds(spark, dir, Seq(1L).toDF("vec_id"), "vec_id")
     // re-embed id 2: two generations on disk, one live
@@ -487,7 +490,7 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.deleteIds(spark, dir, Seq(2L).toDF("vec_id"), "vec_id")
     AnnIndex.readPq(spark, dir).codes.select("__id").distinct().count() shouldBe 3
     // ivf-pq layout (with refine vectors): same contract
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir2 = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", dir2,
       nlist = 2, m = 2, ksub = 5, iters = 1, keepVectors = true)
     AnnIndex.deleteIds(spark, dir2, Seq(1L).toDF("vec_id"), "vec_id")
@@ -501,7 +504,7 @@ class SimilaritySpec extends SparkSpec {
       corpus.filter($"vec_id" === 0), "vec_id", "embedding", 3, nprobe = 2)
       .orderBy("rank").collect().toSeq shouldBe ivfBefore
     // ivf-flat layout: same contract
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
+    val dir3 = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir3, nlist = 2, iters = 1)
     AnnIndex.deleteIds(spark, dir3, Seq(1L).toDF("vec_id"), "vec_id")
     AnnIndex.compact(spark, dir3)
@@ -516,7 +519,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("compaction guards: wrong layout refused; fully-tombstoned index stays readable") {
-    val base = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    val base = graft.SparkSpec.tempDir("graft_annidx").toString
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", s"$base/ivfpq",
       nlist = 2, m = 2, ksub = 5, iters = 1, keepVectors = true)
     AnnIndex.buildPq(corpus, "vec_id", "embedding", s"$base/pq", m = 2, ksub = 5, iters = 1)
@@ -545,7 +548,7 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.deleteIds(spark, s"$base/pq", corpus.select("vec_id"), "vec_id")
     an[IllegalArgumentException] should be thrownBy AnnIndex.compact(spark, s"$base/pq")
     AnnIndex.readPq(spark, s"$base/pq").codes.count() shouldBe 0
-    AnnIndex.appendPq(spark, s"$base/pq",
+    AnnIndex.append(spark, s"$base/pq",
       corpus.filter($"vec_id" < 2), "vec_id", "embedding")
     AnnIndex.readPq(spark, s"$base/pq").codes.select("__id").distinct().count() shouldBe 2
     // after the re-append the index has live rows again — compaction now
@@ -555,7 +558,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("insert-only diff (empty delete set) leaves maintenance healthy — no NPE on the empty tombstone table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", dir,
       nlist = 2, m = 2, ksub = 5, iters = 1)
     import spark.implicits._
@@ -574,7 +577,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("applyDiffIvfPq routes a snapshotDiff frame: delete/update/insert end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     AnnIndex.buildIvfPq(corpus, "vec_id", "embedding", dir,
       nlist = 2, m = 2, ksub = 5, iters = 1)
     val diff = Seq((1L, "delete"), (2L, "update"), (5L, "insert"))
@@ -595,7 +598,7 @@ class SimilaritySpec extends SparkSpec {
     served shouldBe ref
     // the same diff routed to an IVF-flat index: exact vectors, so full
     // probes must serve brute force over the post-diff corpus
-    val dirIvf = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
+    val dirIvf = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivf"
     AnnIndex.buildIvf(corpus, "vec_id", "embedding", dirIvf, nlist = 2, iters = 1)
     AnnIndex.applyDiff(spark, dirIvf, diff, "vec_id", newRows, "vec_id", "embedding")
     val servedIvf = AnnIndex.ivfTopK(spark, AnnIndex.readIvf(spark, dirIvf),

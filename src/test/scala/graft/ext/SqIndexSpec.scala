@@ -70,7 +70,7 @@ class SqIndexSpec extends SparkSpec {
 
   test("build/read/topK roundtrip ranks like in-memory scoring") {
     val c = corpus(32)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     AnnIndex.buildSq(c, "vec_id", "embedding", s"$base/sq")
     val idx = AnnIndex.readSq(spark, s"$base/sq")
     idx.bounds.dim shouldBe 8
@@ -88,7 +88,7 @@ class SqIndexSpec extends SparkSpec {
 
   test("IVF×SQ full probe equals flat SQ row-for-row; pruning returns a subset") {
     val c = corpus(48)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     AnnIndex.buildSq(c, "vec_id", "embedding", s"$base/sq")
     AnnIndex.buildIvfSq(c, "vec_id", "embedding", s"$base/ivfsq", nlist = 4, iters = 1)
     val q = c.filter($"vec_id" < 3)
@@ -118,7 +118,7 @@ class SqIndexSpec extends SparkSpec {
 
   test("SQ maintenance: update supersedes, debt routes to compactSq, log resets") {
     val c = corpus(24)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     AnnIndex.buildSq(c, "vec_id", "embedding", s"$base/sq")
     // delete a third of the corpus: debt crosses the 0.25 default
     AnnIndex.deleteIds(spark, s"$base/sq", (0L until 8L).toDF("vec_id"), "vec_id")
@@ -142,7 +142,7 @@ class SqIndexSpec extends SparkSpec {
 
   test("IVF×SQ maintenance: CDC diff applies, compaction keeps pruned equality") {
     val c = corpus(32)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     AnnIndex.buildIvfSq(c.filter($"vec_id" < 24), "vec_id", "embedding",
       s"$base/ivfsq", nlist = 4, iters = 1)
     // CDC: insert 24..31, delete 0..5, update 6 to 7's embedding
@@ -174,7 +174,7 @@ class SqIndexSpec extends SparkSpec {
 
   test("pre-layout meta derives its kind from (m, nlist) — old indexes still route") {
     val c = corpus(24)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     AnnIndex.buildPq(c, "vec_id", "embedding", s"$base/pq", m = 2, ksub = 4, iters = 1)
     // rewrite the meta WITHOUT the layout column — the pre-round-10 shape
     val old = spark.read.parquet(s"$base/pq/meta")
@@ -192,11 +192,11 @@ class SqIndexSpec extends SparkSpec {
 
   test("append against frozen bounds equals one-shot encode; delete tombstones") {
     val c = corpus(32)
-    val base = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val base = graft.SparkSpec.tempDir("graft_sq").toString
     val a = c.filter($"vec_id" < 16)
     val bRows = c.filter($"vec_id" >= 16)
     AnnIndex.buildSq(a, "vec_id", "embedding", s"$base/sq")
-    AnnIndex.appendSq(spark, s"$base/sq", bRows, "vec_id", "embedding")
+    AnnIndex.append(spark, s"$base/sq", bRows, "vec_id", "embedding")
     val idx = AnnIndex.readSq(spark, s"$base/sq")
     idx.codes.count() shouldBe 32
     // frozen-bounds determinism: appended codes == one-shot encode of the

@@ -17,7 +17,7 @@ class TextIndexSpec extends SparkSpec {
   private val queries = Seq((0L, "spark window"), (1L, "scan join"))
 
   private def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }

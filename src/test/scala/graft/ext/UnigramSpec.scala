@@ -54,7 +54,7 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("save/load roundtrip preserves the model bit for bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_uni").toString + "/vocab"
+    val dir = graft.SparkSpec.tempDir("graft_uni").toString + "/vocab"
     Unigram.save(hand, spark, dir)
     Unigram.load(spark, dir).pieces shouldBe hand.pieces
   }

@@ -17,7 +17,7 @@ class CsvLeniencySpec extends SparkSpec {
       .csv(path)
 
   private def write(content: String): String = {
-    val f = Files.createTempFile("graft_csv", ".csv")
+    val f = graft.SparkSpec.tempDir("graft_csv").resolve("in.csv")
     Files.writeString(f, content)
     f.toString
   }

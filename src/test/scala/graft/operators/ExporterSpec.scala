@@ -49,7 +49,7 @@ class ExporterSpec extends SparkSpec {
   }
 
   test("writeCsv emits RFC doubled-quote escaping and round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_out").toString + "/out"
+    val dir = graft.SparkSpec.tempDir("graft_csv_out").toString + "/out"
     val df = Seq(("a,b", "He said \"hi\""), ("plain", "x")).toDF("c1", "c2")
     Exporter.writeCsv(df, dir)
     val raw = spark.read.text(dir).as[String].collect().mkString("\n")

@@ -162,7 +162,7 @@ class SkewSpec extends SparkSpec {
     val docs = (0L until 60L).map { i =>
       (i, ("the word " * 20) + (if (i % 7 == 0) "the target phrase here" else "filler end"))
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_pos").toString + "/p"
+    val dir = graft.SparkSpec.tempDir("graft_skew_pos").toString + "/p"
     graft.ext.TextIndex.buildPositional(docs, "doc_id", "text", dir, parts = 4)
     val hits = graft.ext.TextIndex.phraseOccurrences(spark, dir,
         Seq("the", "target", "phrase"))

@@ -40,7 +40,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("writeSwap(MergeResult) default: counters read AFTER the swap are the pre-swap truth") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
     val target = spark.read.parquet(dir)
     val incoming = Seq((2L, "b2"), (3L, "c")).toDF("id", "v")
@@ -54,7 +54,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("writeSwap(MergeResult) opt-out: unread counters fail loudly after the swap") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
     val target = spark.read.parquet(dir)
     val incoming = Seq((1L, "x"), (2L, "b")).toDF("id", "v")
@@ -63,7 +63,7 @@ class UpsertSpec extends SparkSpec {
     val e = intercept[IllegalStateException] { r.created }
     e.getMessage should include("writeSwap")
     // counters read BEFORE an opted-out swap stay valid afterwards
-    val dir2 = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir2 = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir2)
     val r2 = Upsert.merge(spark.read.parquet(dir2), incoming, "id", upsert = true)
     r2.updated shouldBe 1
@@ -73,7 +73,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("append mode: counters stay readable after an opted-out swap (no target dependence)") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
     val target = spark.read.parquet(dir)
     val incoming = Seq((2L, "b"), (3L, "c")).toDF("id", "v")
@@ -87,7 +87,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("writeSwap atomically replaces the table directory") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "old")).toDF("id", "v").write.parquet(dir)
     val merged = Seq((1L, "new"), (2L, "b")).toDF("id", "v")
     Upsert.writeSwap(spark, merged, dir)
@@ -130,7 +130,7 @@ class UpsertSpec extends SparkSpec {
 
   test("restoreIfCrashed recovers a swap that died between its two moves") {
     // crashed-swap state: dir is GONE, .bak holds the only generation
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "survivor")).toDF("id", "v").write.parquet(dir + ".bak")
     Upsert.restoreIfCrashed(dir)
     spark.read.parquet(dir).collect().map(_.getString(1)).toSeq shouldBe Seq("survivor")
@@ -157,7 +157,7 @@ class UpsertSpec extends SparkSpec {
     // the data-loss scenario from the crash-recovery doc: .bak is the only
     // copy; a later writeSwap must restore it (so the lazy merge reads it)
     // rather than deleting it as a leftover
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/table"
+    val dir = graft.SparkSpec.tempDir("graft_upsert").toString + "/table"
     Seq((1L, "old")).toDF("id", "v").write.parquet(dir + ".bak")
     // build the merge against the RESTORED table path, as a recovered
     // caller would (restoreIfCrashed first, then read)

@@ -115,7 +115,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("ivf-pq indexed query path: nprobe is parquet partition pruning, no sort-merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpq"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -127,7 +127,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("ivf-sq indexed query path: nprobe is parquet partition pruning, no sort-merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfsq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfsq"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -139,7 +139,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("ivf-flat indexed query path: nprobe is parquet partition pruning, no sort-merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivf"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivf"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -151,7 +151,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("maxsim serving: stage 1 partition-prunes, no cartesian or nested-loop join anywhere") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/maxsim"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/maxsim"
     // 16 docs × 4 token vectors each, ids = doc·64 + pos
     val tokVecs = (0 until 16).flatMap(doc => (0 until 4).map(p =>
       (doc.toLong * 64 + p,
@@ -179,7 +179,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("filtered ivf search: the metadata predicate evaluates at the pruned scan, before the score join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/fivf"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/fivf"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -204,7 +204,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("filtered ivf-pq search: the metadata predicate evaluates at the pruned codes scan, before the ADC join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/fivfpq"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/fivfpq"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -231,7 +231,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("refined ivf-pq query path: BOTH index scans are partition-pruned, no corpus shuffle join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/ivfpqr"
+    val dir = graft.SparkSpec.tempDir("graft_annidx").toString + "/ivfpqr"
     val corpus = (0 until 64).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")
@@ -478,7 +478,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("inverted-index BM25: the postings scan is partition-pruned to the query terms' buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inv").toString + "/inv"
+    val dir = graft.SparkSpec.tempDir("graft_inv").toString + "/inv"
     val docs = (1 to 60).map(i => (i.toLong, s"tok${i % 9} tok${i % 5} shared"))
       .toDF("doc_id", "text")
     graft.ext.TextIndex.build(docs, "doc_id", "text", dir, parts = 8)
@@ -539,7 +539,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("graph-ANN serving: the beam broadcasts into the stored tables — they never shuffle") {
-    val base = java.nio.file.Files.createTempDirectory("graft_graph_plan").toString
+    val base = graft.SparkSpec.tempDir("graft_graph_plan").toString
     val corpus = (0 until 40).map(i =>
       (i.toLong, Array.tabulate(4)(j => (0.1f * ((i * 3 + j) % 7)) + 0.1f)))
       .toDF("vec_id", "embedding")
@@ -576,7 +576,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("graph-ANN fresh region: delta serving broadcasts the delta — stored tables never shuffle") {
-    val base = java.nio.file.Files.createTempDirectory("graft_graphd_plan").toString
+    val base = graft.SparkSpec.tempDir("graft_graphd_plan").toString
     val corpus = (0 until 40).map(i =>
       (i.toLong, Array.tabulate(4)(j => (0.1f * ((i * 3 + j) % 7)) + 0.1f)))
       .toDF("vec_id", "embedding")
@@ -606,7 +606,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("fsck: the store side is id-projected before the audit join — no payload columns move") {
-    val base = java.nio.file.Files.createTempDirectory("graft_fsck_plan").toString
+    val base = graft.SparkSpec.tempDir("graft_fsck_plan").toString
     val docs = (1 to 60).map(i => (i.toLong, s"text about topic ${i % 7}"))
       .toDF("doc_id", "text")
     graft.ext.TextIndex.build(docs, "doc_id", "text", s"$base/inv", parts = 2)
@@ -621,7 +621,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("indexed bitext mining: both kNN legs partition-prune, no cartesian anywhere") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mine_plan").toString
+    val base = graft.SparkSpec.tempDir("graft_mine_plan").toString
     def side(off: Long) = (0 until 64).map(i =>
       (i * 2L + off, Array.tabulate(8)(d => ((i * 7 + d * 3 + off) % 13 - 6).toFloat)))
       .toDF("vec_id", "embedding")

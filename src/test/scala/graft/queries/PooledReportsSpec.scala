@@ -60,7 +60,7 @@ class PooledReportsSpec extends SparkSpec {
     // fingerprint over the class tree, so two trees differing in one
     // file's length or mtime must tag differently (a recompile always
     // changes at least one class file's mtime)
-    val t = java.nio.file.Files.createTempDirectory("graft_codetag").toFile
+    val t = graft.SparkSpec.tempDir("graft_codetag").toFile
     val f = new java.io.File(t, "A.class")
     java.nio.file.Files.write(f.toPath, "one".getBytes)
     f.setLastModified(1000000L)

@@ -16,7 +16,7 @@ import org.scalatest.matchers.should.Matchers
   */
 class StagingSpec extends AnyFunSuite with Matchers {
 
-  private val base = Files.createTempDirectory("graft_staging_spec").toFile
+  private val base = graft.SparkSpec.tempDir("graft_staging_spec").toFile
   private val sf = { val d = new File(base, "sf0"); d.mkdirs(); d.getPath }
   private def root(code: String, family: String = "fix") =
     Staging.rootIn(base.getPath, code, family, sf, "")

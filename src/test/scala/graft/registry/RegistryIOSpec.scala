@@ -6,7 +6,7 @@ import java.nio.file.Files
 class RegistryIOSpec extends SparkSpec {
 
   test("registry JSON round-trip preserves types, constraints, components") {
-    val dir = Files.createTempDirectory("graft_reg").toString + "/catalog"
+    val dir = graft.SparkSpec.tempDir("graft_reg").toString + "/catalog"
     RegistryIO.save(spark, Fixtures.registry, dir)
     val loaded = RegistryIO.load(spark, dir)
 

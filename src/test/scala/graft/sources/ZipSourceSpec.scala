@@ -38,7 +38,7 @@ class ZipSourceSpec extends SparkSpec {
   }
 
   test("readZips scans a directory of archives distributed") {
-    val dir = Files.createTempDirectory("graft_zip").toFile
+    val dir = graft.SparkSpec.tempDir("graft_zip").toFile
     val f1 = new FileOutputStream(s"$dir/a.zip"); f1.write(makeZip("x.csv" -> "1,2", "img/y.png" -> "YY")); f1.close()
     val f2 = new FileOutputStream(s"$dir/b.zip"); f2.write(makeZip("z.pdf" -> "ZZZ")); f2.close()
     val df = ZipSource.readZips(spark, dir.getAbsolutePath)

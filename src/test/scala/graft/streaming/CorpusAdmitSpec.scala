@@ -51,7 +51,7 @@ class CorpusAdmitSpec extends SparkSpec {
   }
 
   private def tmp(name: String) =
-    java.nio.file.Files.createTempDirectory(name).toString
+    graft.SparkSpec.tempDir(name).toString
 
   private def admitted(store: String): Set[Long] =
     DocStreams.readAdmitted(spark, store).as[Long].collect().toSet

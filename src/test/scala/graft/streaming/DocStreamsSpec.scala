@@ -15,7 +15,7 @@ class DocStreamsSpec extends SparkSpec {
   )
 
   private def stageSpool(slices: Seq[Seq[(Long, String)]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_doc_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_doc_spool").toString
     slices.zipWithIndex.foreach { case (rows, i) =>
       val stage = s"$dir/.stage_$i"
       rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(stage)
@@ -30,7 +30,7 @@ class DocStreamsSpec extends SparkSpec {
 
   test("incremental minhash near-dup equals the batch form: within-batch and cross-batch pairs") {
     val spool = stageSpool(Seq(docs.take(3), docs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_mh_store").toString + "/s"
     val streamed = DocStreams.runMinhashDedupOnce(spark, spool, store,
         numHashes = 32, bands = 8, shingleSize = 3, minEstJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -55,7 +55,7 @@ class DocStreamsSpec extends SparkSpec {
       (4L, "totally unrelated words about other things entirely here"),
       (2L, base))
     val spool = stageSpool(Seq(sdocs.take(3), sdocs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_sh_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_sh_store").toString + "/s"
     val streamed = DocStreams.runSimhashDedupOnce(spark, spool, store, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     val batch = Dedup.simhashPairs(sdocs.toDF("doc_id", "text"), "doc_id", "text",
@@ -73,7 +73,7 @@ class DocStreamsSpec extends SparkSpec {
 
   test("store compaction: pairs/sigs/comps views identical, per-batch file accretion collapsed") {
     val spool = stageSpool(Seq(docs.take(3), docs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_compact").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_mh_compact").toString + "/s"
     val streamed = DocStreams.runMinhashDedupOnce(spark, spool, store,
         numHashes = 32, bands = 8, shingleSize = 3, minEstJaccard = 0.5,
         withComponents = true)
@@ -116,11 +116,11 @@ class DocStreamsSpec extends SparkSpec {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)), (2L, Array(0.0f, 1.0f)),
       (3L, Array(-1.0f, 0.0f)), (4L, Array(0.7f, 0.7f)), (5L, Array(0.5f, 0.8f)),
     ).toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft_stream_idx").toString + "/ivfpq"
+    val idx = graft.SparkSpec.tempDir("graft_stream_idx").toString + "/ivfpq"
     AnnIndex.buildIvfPq(corpus.filter($"vec_id" < 3), "vec_id", "embedding",
       idx, nlist = 2, m = 2, ksub = 3, iters = 1)
     // spool the other half as two arrival files
-    val spool = java.nio.file.Files.createTempDirectory("graft_emb_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_emb_spool").toString
     Seq(Seq(3L, 4L), Seq(5L)).zipWithIndex.foreach { case (ids, i) =>
       val stage = s"$spool/.stage_$i"
       corpus.filter($"vec_id".isin(ids: _*)).coalesce(1)
@@ -131,7 +131,7 @@ class DocStreamsSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath, tgt.toPath)
       tgt.setLastModified(1600000000000L + i * 60000L)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString + "/c"
+    val ckpt = graft.SparkSpec.tempDir("graft_stream_ckpt").toString + "/c"
     DocStreams.runIvfPqAppendOnce(spark, spool, idx, ckpt)
     val index = AnnIndex.readIvfPq(spark, idx)
     val queries = corpus.filter($"vec_id" === 0)
@@ -158,10 +158,10 @@ class DocStreamsSpec extends SparkSpec {
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)), (2L, Array(0.0f, 1.0f)),
       (3L, Array(-1.0f, 0.0f)), (4L, Array(0.7f, 0.7f)), (5L, Array(0.5f, 0.8f)),
     ).toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft_crash_idx").toString + "/ivfpq"
+    val idx = graft.SparkSpec.tempDir("graft_crash_idx").toString + "/ivfpq"
     AnnIndex.buildIvfPq(corpus.filter($"vec_id" < 3), "vec_id", "embedding",
       idx, nlist = 2, m = 2, ksub = 3, iters = 1)
-    val spool = java.nio.file.Files.createTempDirectory("graft_crash_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_crash_spool").toString
     Seq(Seq(3L, 4L), Seq(5L)).zipWithIndex.foreach { case (ids, i) =>
       val stage = s"$spool/.stage_$i"
       corpus.filter($"vec_id".isin(ids: _*)).coalesce(1)
@@ -172,7 +172,7 @@ class DocStreamsSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath, tgt.toPath)
       tgt.setLastModified(1600000000000L + i * 60000L)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ckpt").toString + "/c"
+    val ckpt = graft.SparkSpec.tempDir("graft_crash_ckpt").toString + "/c"
     DocStreams.runIvfPqAppendOnce(spark, spool, idx, ckpt)
 
     def servedTop(): Seq[org.apache.spark.sql.Row] = {
@@ -227,12 +227,12 @@ class DocStreamsSpec extends SparkSpec {
       (3L, "spark spark window"), (4L, "join window join scan"),
       (5L, "merge scan spark"), (6L, "window window join"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ti_idx").toString + "/inv"
+    val idx = graft.SparkSpec.tempDir("graft_ti_idx").toString + "/inv"
     TextIndex.build(corpus.filter($"doc_id" <= 2), "doc_id", "text", idx, parts = 4)
     val spool = stageSpool(Seq(
       Seq((3L, "spark spark window"), (4L, "join window join scan")),
       Seq((5L, "merge scan spark"), (6L, "window window join"))))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ti_ckpt").toString + "/c"
+    val ckpt = graft.SparkSpec.tempDir("graft_ti_ckpt").toString + "/c"
     DocStreams.runTextIndexAppendOnce(spark, spool, idx, ckpt)
     val q = Seq((0L, "spark window"), (1L, "scan join")).toDF("qid", "qtext")
     def served() = TextIndex.bm25TopKIndexed(spark, idx, q, "qid", "qtext", 6)
@@ -274,13 +274,13 @@ class DocStreamsSpec extends SparkSpec {
       (3L, "big data again today"), (4L, "nothing here"),
       (5L, "more big data rows"), (6L, "filler text"))
       .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_pos_idx").toString + "/p"
+    val idx = graft.SparkSpec.tempDir("graft_pos_idx").toString + "/p"
     TextIndex.buildPositional(corpus.filter($"doc_id" <= 2), "doc_id", "text",
       idx, parts = 4)
     val spool = stageSpool(Seq(
       Seq((3L, "big data again today"), (4L, "nothing here")),
       Seq((5L, "more big data rows"), (6L, "filler text"))))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pos_ckpt").toString + "/c"
+    val ckpt = graft.SparkSpec.tempDir("graft_pos_ckpt").toString + "/c"
     DocStreams.runPositionalAppendOnce(spark, spool, idx, ckpt)
     def served() = TextIndex.phraseOccurrences(spark, idx, Seq("big", "data"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -318,7 +318,7 @@ class DocStreamsSpec extends SparkSpec {
       (3L, "big data again today"), (4L, "nothing here"),
       (5L, "more big data rows"), (6L, "filler text"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_combo").toString
+    val root = graft.SparkSpec.tempDir("graft_combo").toString
     val idx = s"$root/inv"
     val pidx = s"$root/pos"
     val base = corpus.filter($"doc_id" <= 2)
@@ -362,7 +362,7 @@ class DocStreamsSpec extends SparkSpec {
   test("streaming dedup maintains duplicate clusters: incremental components equal the batch form") {
     import graft.ext.IncrementalComponents
     val spool = stageSpool(Seq(docs.take(3), docs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_mh_store").toString + "/s"
     val streamed = DocStreams.runMinhashDedupOnce(spark, spool, store,
       numHashes = 32, bands = 8, shingleSize = 3, minEstJaccard = 0.5,
       withComponents = true)
@@ -382,7 +382,7 @@ class DocStreamsSpec extends SparkSpec {
 
   test("the per-batch store scan is partition-pruned to the batch's __pb values") {
     val spool = stageSpool(Seq(docs.take(3), docs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_mh_store").toString + "/s"
     DocStreams.runMinhashDedupOnce(spark, spool, store,
       numHashes = 32, bands = 8, shingleSize = 3, minEstJaccard = 0.5)
     // replay the scan one batch would plan: a literal subset of __pb values
@@ -404,7 +404,7 @@ class DocStreamsSpec extends SparkSpec {
   test("streaming CMS deltas: summed store equals batch counters; crash-replay lands once") {
     import org.apache.spark.sql.functions.{col, explode}
     val spool = stageSpool(Seq(docs.take(2), docs.slice(2, 3), docs.drop(3)))
-    val store = java.nio.file.Files.createTempDirectory("graft_cms_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_cms_store").toString + "/s"
     DocStreams.runCmsAppendOnce(spark, spool, store, depth = 4, width = 16)
 
     def counters() = DocStreams.readCmsCounters(spark, store)
@@ -456,7 +456,7 @@ class DocStreamsSpec extends SparkSpec {
     val spool = stageSpool(Seq(Seq(
       (10L, "one two three four five six"),
       (11L, "seven eight nine ten eleven twelve"))))
-    val store = java.nio.file.Files.createTempDirectory("graft_mh_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_mh_store").toString + "/s"
     val out = DocStreams.runMinhashDedupOnce(spark, spool, store,
       numHashes = 32, bands = 8, shingleSize = 3, minEstJaccard = 0.5)
     out.collect() shouldBe empty

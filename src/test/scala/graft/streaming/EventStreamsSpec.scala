@@ -76,7 +76,7 @@ class EventStreamsSpec extends SparkSpec {
     // sentinel far past every end+gap (watermark delay 1h in this spec)
     val sent1 = Seq(EventStreams.Event(-1L, ts("2024-02-01 00:00:00"), -1L, "s", 0.0))
     val sent2 = Seq(EventStreams.Event(-2L, ts("2024-02-01 01:00:00"), -1L, "s", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_sess_spool").toString
     Seq(f1, f2, sent1, sent2).zipWithIndex.foreach { case (evs, i) =>
       val stage = s"$dir/.stage_$i"
       evs.toDS().toDF().coalesce(1).write.mode("overwrite").parquet(stage)
@@ -112,7 +112,7 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Event(11L, ts("2024-01-01 05:00:00"), 8L, "a", 32.0)) // straggler
     val sent1 = Seq(EventStreams.Event(-1L, ts("2024-03-01 00:00:00"), -1L, "s", 0.0))
     val sent2 = Seq(EventStreams.Event(-2L, ts("2024-03-02 00:00:00"), -1L, "s", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_ooo").toString
+    val dir = graft.SparkSpec.tempDir("graft_sess_ooo").toString
     Seq(f1, f2, sent1, sent2).zipWithIndex.foreach { case (evs, i) =>
       val stage = s"$dir/.stage_$i"
       evs.toDS().toDF().coalesce(1).write.mode("overwrite").parquet(stage)
@@ -163,7 +163,7 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Event(20L, ts("2024-01-01 00:01:00"), 1L, "view", 0.0),
       EventStreams.Event(21L, ts("2024-01-01 00:05:00"), 2L, "click", 0.0),
       EventStreams.Event(22L, ts("2024-01-01 00:05:00"), 3L, "view", 0.0))
-    val spool = java.nio.file.Files.createTempDirectory("graft_funnel_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_funnel_spool").toString
     writeSpool(spool, Seq(b1, b2))
     val reach = EventStreams.runFunnelOnce(spark, spool, "funnel_spec",
         Seq("view", "click"))
@@ -194,7 +194,7 @@ class EventStreamsSpec extends SparkSpec {
     val b2 = Seq(
       EventStreams.Event(20L, ts("2024-01-01 00:03:00"), 1L, "B", 0.0),
       EventStreams.Event(21L, ts("2024-01-01 00:03:00"), 2L, "A", 0.0))
-    val spool = java.nio.file.Files.createTempDirectory("graft_scd2_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_scd2_spool").toString
     writeSpool(spool, Seq(b1, b2))
     val streamed = EventStreams.runScd2Once(spark, spool, "scd2_spec")
       .collect()
@@ -225,9 +225,9 @@ class EventStreamsSpec extends SparkSpec {
     val evs = (0 until 120).map(i => EventStreams.Event(
       i.toLong, ts(f"2024-01-01 00:${i % 60}%02d:00"),
       (i * 7 % 97).toLong, if (i % 2 == 0) "a" else "b", 1.0))
-    val spool = java.nio.file.Files.createTempDirectory("graft_kmv_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_kmv_spool").toString
     writeSpool(spool, Seq(evs.take(40), evs.slice(40, 80), evs.drop(80)))
-    val store = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString + "/s"
+    val store = graft.SparkSpec.tempDir("graft_kmv_store").toString + "/s"
     EventStreams.runKmvAppendOnce(spark, spool, store, "event_type", "user_id", k = 8)
     def streamed() = EventStreams.readKmvEstimates(spark, store, "event_type", 8)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -260,7 +260,7 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Event(3L, ts("2024-01-01 06:00:00"), 7L, "a", 4.0)) // new session
     val sent1 = Seq(EventStreams.Event(-1L, ts("2024-02-01 00:00:00"), -1L, "s", 0.0))
     val sent2 = Seq(EventStreams.Event(-2L, ts("2024-02-01 01:00:00"), -1L, "s", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_tws").toString
+    val dir = graft.SparkSpec.tempDir("graft_sess_tws").toString
     writeSpool(dir, Seq(f1, f2, sent1, sent2))
     val cols = Seq("user_id", "start", "end", "n_events", "total_value")
     val tws = EventStreams.runSessionizeTwsOnce(spark, dir, "sess_spec_tws",
@@ -282,7 +282,7 @@ class EventStreamsSpec extends SparkSpec {
     val f2 = Seq(
       EventStreams.Event(3L, ts("2024-01-01 01:00:00"), 2L, "b", 4.0),
       EventStreams.Event(4L, ts("2024-01-01 01:01:00"), 3L, "b", 8.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_upsert_spool").toString
     Seq(f1, f2).zipWithIndex.foreach { case (evs, i) =>
       val stage = s"$dir/.stage_$i"
       evs.toDS().toDF().coalesce(1).write.mode("overwrite").parquet(stage)
@@ -292,7 +292,7 @@ class EventStreamsSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath, tgt.toPath)
       tgt.setLastModified(1600000000000L + i * 60000L)
     }
-    val table = java.nio.file.Files.createTempDirectory("graft_upsert_tbl").toString + "/t"
+    val table = graft.SparkSpec.tempDir("graft_upsert_tbl").toString + "/t"
     val (created, updated) = EventStreams.runUpsertOnce(spark, dir, table, "user_id")
     created shouldBe 3L
     updated shouldBe 1L
@@ -338,7 +338,7 @@ class EventStreamsSpec extends SparkSpec {
       EventStreams.Event(11L, ts("2024-01-01 01:10:00"), 8L, "view", 0.0), // click precedes
       EventStreams.Event(21L, ts("2024-01-01 02:20:00"), 9L, "view", 0.0),
       EventStreams.Event(22L, ts("2024-01-01 02:30:00"), 9L, "click", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_ssj_spool").toString
     Seq(f1, f2).zipWithIndex.foreach { case (evs, i) =>
       val stage = s"$dir/.stage_$i"
       evs.toDS().toDF().coalesce(1).write.mode("overwrite").parquet(stage)
@@ -366,7 +366,7 @@ class EventStreamsSpec extends SparkSpec {
     val f2 = Seq(
       EventStreams.Event(4L, ts("2024-01-01 00:03:00"), 0L, "view", 70.0),
       EventStreams.Event(5L, ts("2024-01-01 00:04:00"), 1L, "click", 20.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_btm_spool").toString
+    val dir = graft.SparkSpec.tempDir("graft_btm_spool").toString
     Seq(f1, f2).zipWithIndex.foreach { case (evs, i) =>
       val stage = s"$dir/.stage_$i"
       evs.toDS().toDF().coalesce(1).write.mode("overwrite").parquet(stage)
@@ -375,7 +375,7 @@ class EventStreamsSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath,
         new java.io.File(dir, f"spool_$i%03d.parquet").toPath)
     }
-    val store = java.nio.file.Files.createTempDirectory("graft_btm_store").toString
+    val store = graft.SparkSpec.tempDir("graft_btm_store").toString
     val alt = concat(lit("t"), (col("user_id") % 5).cast("string"))
     val winner = when(col("value") > 50, col("event_type")).otherwise(alt)
     val loser = when(col("value") > 50, alt).otherwise(col("event_type"))
@@ -403,8 +403,7 @@ class EventStreamsSpec extends SparkSpec {
     // replaying a pre-rebuild batch would re-publish deleted items into
     // the fresh store — unless the publish carries its run-start
     // generation and the store's stamp has moved past it
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_gen_store").toString + "/kmv"
+    val store = graft.SparkSpec.tempDir("graft_gen_store").toString + "/kmv"
     val d0 = Seq(("a", 1L), ("a", 2L)).toDF("__g", "__h")
     val gen0 = DocStreams.storeGeneration(spark, store)
     gen0 shouldBe 0L

@@ -18,7 +18,7 @@ class StreamRecallSpec extends SparkSpec {
   }
 
   private def stageSpool(slices: Seq[Seq[Long]], all: Map[Long, Array[Float]]): String = {
-    val spool = java.nio.file.Files.createTempDirectory("graft_rec_spool").toString
+    val spool = graft.SparkSpec.tempDir("graft_rec_spool").toString
     slices.zipWithIndex.foreach { case (ids, i) =>
       val stage = s"$spool/.s$i"
       ids.map(id => (id, all(id))).toDF("vec_id", "embedding")
@@ -36,11 +36,11 @@ class StreamRecallSpec extends SparkSpec {
   test("recall log: one row per batch, final row equals a direct measurement, crash-replay converges") {
     val base = vecs(0L until 24L, 31)
     val all = base.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val idx = java.nio.file.Files.createTempDirectory("graft_rec_idx").toString + "/i"
+    val idx = graft.SparkSpec.tempDir("graft_rec_idx").toString + "/i"
     AnnIndex.buildIvfPq(base.filter($"vec_id" < 12), "vec_id", "embedding",
       idx, nlist = 2, m = 4, ksub = 8, iters = 1, keepVectors = true)
     val spool = stageSpool(Seq((12L until 18L), (18L until 24L)), all)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rec_ckpt").toString + "/c"
+    val ckpt = graft.SparkSpec.tempDir("graft_rec_ckpt").toString + "/c"
     val probes = base.filter($"vec_id" < 4).localCheckpoint(true)
     def run(): Unit = DocStreams.runIvfPqAppendWithRecallOnce(spark, spool,
       idx, ckpt, probes, k = 3, nprobe = 1)

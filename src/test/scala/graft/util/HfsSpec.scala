@@ -11,7 +11,7 @@ import graft.SparkSpec
 class HfsSpec extends SparkSpec {
 
   test("writeString creates, overwrites in place, and leaves no temp file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hfs").toString
+    val dir = graft.SparkSpec.tempDir("graft_hfs").toString
     val p = s"$dir/marker.txt"
     Hfs.writeString(spark, p, "first")
     Hfs.readString(spark, p) shouldBe "first"
@@ -23,7 +23,7 @@ class HfsSpec extends SparkSpec {
   }
 
   test("exists/touch/delete/list/mkdirs/rename round-trip on a local scheme") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hfs").toString
+    val dir = graft.SparkSpec.tempDir("graft_hfs").toString
     Hfs.exists(spark, s"$dir/a") shouldBe false
     Hfs.touch(spark, s"$dir/a")
     Hfs.exists(spark, s"$dir/a") shouldBe true

@@ -21,7 +21,7 @@ class OpenStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(name: String): String = {
-    val d = Files.createTempDirectory(name).toFile
+    val d = graft.SparkSpec.tempDir(name).toFile
     d.delete()
     d.getAbsolutePath
   }

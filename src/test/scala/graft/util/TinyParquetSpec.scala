@@ -17,7 +17,7 @@ import graft.SparkSpec
 class TinyParquetSpec extends SparkSpec {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("tinyparquet").toString
+    graft.SparkSpec.tempDir("tinyparquet").toString
 
   test("one-row meta with int/boolean/string columns round-trips") {
     import spark.implicits._
